@@ -12,12 +12,6 @@ def nullif_zero(c: Column) -> Column:
     return F.nullif(c, F.lit(0.0))
 
 
-def scrub_nonfinite(c: Column) -> Column:
-    """inf/-inf/NaN → null (build_mtf_context_h4_v1.py:166,
-    run_ml_m15_v1.py:162)."""
-    return F.when(F.isnan(c) | (F.abs(c) == float("inf")), F.lit(None)).otherwise(c)
-
-
 def clip(c: Column, lo: float, hi: float) -> Column:
     """np.clip (build_h1_regime_router_v2.py:121)."""
     return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
@@ -26,10 +20,6 @@ def clip(c: Column, lo: float, hi: float) -> Column:
 def sigmoid(c: Column) -> Column:
     """Logistic sigmoid (run_ml_m15_v1.py:62-64)."""
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-c))
-
-
-def safe_div(num: Column, den: Column) -> Column:
-    return num / nullif_zero(den)
 
 
 def round_half_away(c: Column, scale: int) -> Column:

@@ -28,10 +28,6 @@ def w_ordered(by: Sequence[str], order: Sequence[str | Column]) -> WindowSpec:
     return Window.partitionBy(*by).orderBy(*order)
 
 
-def w_rows(by: Sequence[str], order: Sequence[str | Column], start: int, end: int) -> WindowSpec:
-    return w_ordered(by, order).rowsBetween(start, end)
-
-
 # --- lag / lead family (W1-W3) ---------------------------------------------
 
 def lag_col(col: str | Column, n: int, by: Sequence[str], order: Sequence[str | Column]) -> Column:

@@ -83,16 +83,3 @@ def asof_join_backward(
     for src, dst in out_names.items():
         out = out.withColumn(dst, F.col("__asof_filled").getField(src))
     return out.drop("__asof_payload", "__asof_filled", "__asof_side")
-
-
-def assert_asof_coherence(
-    joined: DataFrame, left_ts: str, carried_right_ts: str
-) -> None:
-    """Post-join anti-lookahead assertion: no carried right timestamp may
-    exceed the left timestamp (build_h1_regime_router_v2.py:259-262,
-    build_joined_m1_long_v1.py:85-87)."""
-    n_bad = joined.filter(F.col(carried_right_ts) > F.col(left_ts)).count()
-    if n_bad:
-        raise AssertionError(
-            f"as-of coherence violated: {n_bad} rows with {carried_right_ts} > {left_ts}"
-        )

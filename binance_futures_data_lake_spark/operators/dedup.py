@@ -38,13 +38,3 @@ def dedup_keep_last(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def duplicate_stats(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Duplicate detection report (integrity_checks.py:51, verify_all.py:285):
-    one row per duplicated key with its multiplicity."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .filter(F.col("n_rows") > 1)
-    )

@@ -5,63 +5,34 @@ Reference: missing minutes via ``pd.date_range(min,max).difference(present)``
 and consolidation of missing minutes into contiguous [start,end] ranges
 (gaps_report.py:13-29).
 
-Spark-first: the expected grid is GENERATED per key with
-``sequence() + explode`` (never materialized as a stored table), missing
-buckets fall out of a ``left_anti`` join, and range consolidation is the
-classic gaps-and-islands trick — for a regular grid, ``bucket_index −
-row_number`` is constant within a contiguous missing run, so one window +
-one groupBy consolidates. Everything shuffles only on the key column.
+Spark-first: the grid is never generated. Each row snaps to its grid
+bucket, and one ``lag`` over a key's present buckets gives the number of
+grid points missing before it (``grid_steps``). ``missing_ranges`` turns
+those counts into [start, end] ranges; ``maintenance.audit_klines`` sums
+them inside its single audit pass. Everything shuffles only on the key
+column, and the cost is proportional to rows present, not elapsed time.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def expected_grid(
-    df: DataFrame,
-    step_minutes: int | float,
-    by: Sequence[str],
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-key dense grid from min(ts) to max(ts) at ``step_minutes``.
+def grid_steps(by: Sequence[str], us: Column, step_us: int) -> tuple[Column, Column]:
+    """Per row: ``us`` (epoch µs) snapped down to its ``step_us`` grid
+    bucket, and the number of grid points missing between the key's
+    previous present bucket and this one — positive only across a gap,
+    ``-1`` on a repeated bucket, null on the key's first row.
 
-    Grid points are the observed min/max per key, stepped by the interval —
-    identical to ``pd.date_range(tmin, tmax, freq=step)``.
+    Snapping first makes duplicate and off-grid inputs degrade to bucket
+    semantics rather than breaking the recurrence.
     """
-    step_us = int(step_minutes * 60_000_000)
-    bounds = df.groupBy(*by).agg(
-        F.min(ts_col).alias("__t0"), F.max(ts_col).alias("__t1")
-    )
-    return bounds.select(
-        *by,
-        F.explode(
-            F.sequence(
-                F.unix_micros("__t0"),
-                F.unix_micros("__t1"),
-                F.lit(step_us),
-            )
-        ).alias("__us"),
-    ).select(*by, F.timestamp_micros(F.col("__us")).alias(ts_col))
-
-
-def missing_buckets(
-    df: DataFrame,
-    step_minutes: int | float,
-    by: Sequence[str],
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Grid points with no observed row — the anti-join gap list.
-
-    The right side is deliberately NOT de-duplicated: left_anti semantics
-    ignore right-side multiplicity, so a distinct() there is a pure extra
-    shuffle. When the input is already (key, bucket)-unique, the grid
-    bounds and the anti-join probe both reuse the same exchange."""
-    grid = expected_grid(df, step_minutes, by, ts_col)
-    return grid.join(df.select(*by, ts_col), on=[*by, ts_col], how="left_anti")
+    bucket = F.floor(us / F.lit(step_us)) * F.lit(step_us)
+    prev = F.lag(bucket).over(Window.partitionBy(*by).orderBy(bucket))
+    return bucket, ((bucket - prev) / F.lit(step_us)).cast("long") - F.lit(1)
 
 
 def missing_ranges(
@@ -76,35 +47,23 @@ def missing_ranges(
     Output: key cols + gap_start, gap_end, n_missing.
 
     A run of missing grid points is exactly the open interval between two
-    CONSECUTIVE present buckets, so one ``lag`` over the present rows
-    yields every range directly: gap = [prev+step, cur−step] wherever
-    cur − prev > step. Identical output to the generate-grid + anti-join
-    + islands construction (present min/max bound the grid, so there are
-    no boundary gaps), but with ONE shuffle (the per-key window) and —
-    decisive at 100 TB — no grid materialization: ``sequence()`` over a
-    key's [min, max] span emits rows proportional to elapsed TIME
-    (a years-sparse key explodes to 500k+ rows regardless of data volume),
-    while this shape's cost is proportional to rows present. Timestamps
-    snap to the grid first, so duplicate and off-grid inputs degrade to
-    bucket semantics rather than breaking the recurrence (duplicate
-    buckets produce diff = 0 pairs, which the filter drops).
+    consecutive present buckets, so ``grid_steps`` yields every range
+    directly: [cur − n·step, cur − step] wherever n > 0 points are missing
+    before ``cur``. Present min/max bound the grid, so there are no
+    boundary gaps, and one shuffle (the per-key window) replaces the
+    generate-grid + anti-join + islands construction, whose ``sequence()``
+    emits rows proportional to elapsed time (a years-sparse key explodes to
+    500k+ rows regardless of data volume).
     """
     step_us = int(step_minutes * 60_000_000)
-    w = Window.partitionBy(*by).orderBy("__us")
-    snapped = df.select(
-        *by,
-        (F.floor(F.unix_micros(F.col(ts_col)) / F.lit(step_us)) * F.lit(step_us)).alias("__us"),
-    )
-    diff = F.col("__us") - F.lag("__us").over(w)
+    bucket, missing = grid_steps(by, F.unix_micros(F.col(ts_col)), step_us)
     return (
-        snapped.withColumn("__diff", diff)
-        .filter(F.col("__diff") > F.lit(step_us))
+        df.select(*by, bucket.alias("__us"), missing.alias("n_missing"))
+        .filter(F.col("n_missing") > 0)
         .select(
             *by,
-            F.timestamp_micros(F.col("__us") - F.col("__diff") + F.lit(step_us)).alias(
-                "gap_start"
-            ),
+            F.timestamp_micros(F.col("__us") - F.col("n_missing") * step_us).alias("gap_start"),
             F.timestamp_micros(F.col("__us") - F.lit(step_us)).alias("gap_end"),
-            ((F.col("__diff") / F.lit(step_us)).cast("long") - F.lit(1)).alias("n_missing"),
+            "n_missing",
         )
     )

@@ -2,19 +2,23 @@
 
 The reference has no unit tests; correctness is enforced by data-quality
 audit programs (src/bfdl/transforms/verify_all.py:247-338,
-integrity_checks.py:26-85, audit_derived.py:98-162). Those invariants are
-re-expressed here as ONE aggregation pass per table + the gap machinery:
+integrity_checks.py:26-85, audit_derived.py:98-162). ``audit_klines``
+re-expresses those invariants as per-row flags from window functions over
+one partitioning by symbol (ordered by open_time_ms, and by grid bucket
+for the gap count):
 
 - zero duplicate (symbol, open_time_ms) keys
 - strict per-symbol time monotonicity
-- zero missing grid steps; rows == expected grid rows
+- zero missing grid steps (``gaps.grid_steps``); rows == expected grid rows
 - ts == open_time_ms (the anti-lookahead re-derivation check,
   compact_staging.py:86-87)
 - OHLC bar invariants (FIXTURES.md conventions): low <= min(o,c),
   high >= max(o,c), taker <= volume, volumes >= 0
 
-Everything is a distributed aggregation: one shuffle on symbol, tiny
-result to the driver. Exit-code semantics (verify_all.py:341-348) map to
+then sums them in a per-symbol aggregate, which also yields each symbol's
+expected grid rows. The aggregate reuses the window's partitioning, so the
+audit is one shuffle on symbol and two Spark jobs; the driver adds up one
+small row per symbol. Exit-code semantics (verify_all.py:341-348) map to
 ``ok`` booleans per check.
 """
 
@@ -25,7 +29,18 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from binance_futures_data_lake_spark.operators.gaps import missing_ranges
+from binance_futures_data_lake_spark.operators.gaps import grid_steps, missing_ranges
+
+REPORT_COUNTS = (
+    "n_rows",
+    "expected_rows",
+    "n_duplicate_keys",
+    "n_non_monotonic",
+    "n_off_grid_steps",
+    "n_missing_grid_rows",
+    "n_ts_mismatch",
+    "n_bar_invariant_violations",
+)
 
 
 def audit_klines(
@@ -36,65 +51,52 @@ def audit_klines(
     """Full temporal + schema integrity audit; returns a report dict.
 
     ``step_ms`` is 60_000 for M1, n·60_000 for derived TFs
-    (audit_derived.py grid: step = n_minutes * 60_000).
+    (audit_derived.py grid: step = n_minutes * 60_000). Missing grid rows
+    are read from ``ts`` (from ``open_time_ms`` when there is no ``ts``);
+    ``n_ts_mismatch`` and ``n_bar_invariant_violations`` are None when the
+    frame lacks ``ts`` or ``low``.
     """
     by = list(by)
-    key = [*by, "open_time_ms"]
-
-    dup_count = (
-        df.groupBy(*key).count().filter(F.col("count") > 1).count()
+    t = F.col("open_time_ms")
+    w = Window.partitionBy(*by).orderBy(t)
+    prev, pos = F.lag(t).over(w), F.row_number().over(w)
+    # rows of one key are adjacent in t order: count a key at its 2nd row
+    second_of_key = (
+        (pos > 1) & t.eqNullSafe(prev) & ~((pos > 2) & t.eqNullSafe(F.lag(t, 2).over(w)))
     )
-
-    w = Window.partitionBy(*by).orderBy("open_time_ms")
-    with_prev = df.select(*key).withColumn("__prev", F.lag("open_time_ms").over(w))
-    non_monotonic = with_prev.filter(
-        F.col("__prev").isNotNull() & (F.col("open_time_ms") <= F.col("__prev"))
-    ).count()
-    off_grid_steps = with_prev.filter(
-        F.col("__prev").isNotNull()
-        & ((F.col("open_time_ms") - F.col("__prev")) % step_ms != 0)
-    ).count()
-
-    bounds = df.groupBy(*by).agg(
-        F.min("open_time_ms").alias("t0"),
-        F.max("open_time_ms").alias("t1"),
-        F.count(F.lit(1)).alias("n_rows"),
+    us = F.unix_micros("ts") if "ts" in df.columns else t * 1000
+    _, missing = grid_steps(by, us, step_ms * 1000)
+    flags = {
+        "n_duplicate_keys": F.when(second_of_key, 1),
+        "n_non_monotonic": F.when(prev.isNotNull() & (t <= prev), 1),
+        "n_off_grid_steps": F.when(prev.isNotNull() & ((t - prev) % step_ms != 0), 1),
+        "n_missing_grid_rows": F.when(missing > 0, missing),
+    }
+    if "ts" in df.columns:
+        flags["n_ts_mismatch"] = F.when(F.unix_millis("ts") != t, 1)
+    if "low" in df.columns:
+        flags["n_bar_invariant_violations"] = F.when(
+            (F.col("low") > F.least("open", "close"))
+            | (F.col("high") < F.greatest("open", "close"))
+            | (F.col("taker_buy_base") > F.col("volume_base"))
+            | (F.col("volume_base") < 0)
+            | (F.col("n_trades") < 0),
+            1,
+        )
+    per_symbol = (
+        df.select(*by, t, *(c.alias(k) for k, c in flags.items()))
+        .groupBy(*by)
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            ((F.max(t) - F.min(t)) / step_ms + 1).cast("long").alias("expected_rows"),
+            *(F.sum(k).alias(k) for k in flags),
+        )
+        .collect()
     )
-    per_symbol = bounds.select(
-        *by,
-        "n_rows",
-        ((F.col("t1") - F.col("t0")) / step_ms + 1).cast("long").alias("expected_rows"),
-    )
-    totals = per_symbol.agg(
-        F.sum("n_rows").alias("n_rows"), F.sum("expected_rows").alias("expected_rows")
-    ).first()
-
-    ts_mismatch = df.filter(
-        F.unix_millis("ts") != F.col("open_time_ms")
-    ).count() if "ts" in df.columns else None
-
-    bar_violations = df.filter(
-        (F.col("low") > F.least("open", "close"))
-        | (F.col("high") < F.greatest("open", "close"))
-        | (F.col("taker_buy_base") > F.col("volume_base"))
-        | (F.col("volume_base") < 0)
-        | (F.col("n_trades") < 0)
-    ).count() if "low" in df.columns else None
-
-    gaps = missing_ranges(
-        df.select(*by, "ts"), step_ms / 60_000.0, by
-    )
-    gap_rows = gaps.agg(F.sum("n_missing")).first()[0] or 0
-
+    counted = ("n_rows", "expected_rows", *flags)
     report = {
-        "n_rows": int(totals["n_rows"] or 0),
-        "expected_rows": int(totals["expected_rows"] or 0),
-        "n_duplicate_keys": int(dup_count),
-        "n_non_monotonic": int(non_monotonic),
-        "n_off_grid_steps": int(off_grid_steps),
-        "n_missing_grid_rows": int(gap_rows),
-        "n_ts_mismatch": None if ts_mismatch is None else int(ts_mismatch),
-        "n_bar_invariant_violations": None if bar_violations is None else int(bar_violations),
+        k: int(sum(r[k] or 0 for r in per_symbol)) if k in counted else None
+        for k in REPORT_COUNTS
     }
     report["ok"] = (
         report["n_duplicate_keys"] == 0

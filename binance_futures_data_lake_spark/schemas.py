@@ -3,14 +3,11 @@
 The reference declares its 15-column M1 kline schema twice (construction:
 src/bfdl/collectors/klines_m1.py:108-134; validation contract:
 src/bfdl/transforms/verify_all.py:38-54). We declare it once as a Spark
-``StructType`` and re-apply it defensively at every boundary, the way the
-reference re-casts dtypes (scripts/research/build_m5_from_m1.py:40-54).
+``StructType``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --- canonical raw M1 kline schema (ref verify_all.py:38-54) ---------------
@@ -34,8 +31,6 @@ KLINES_M1_SCHEMA = T.StructType(
     ]
 )
 
-KLINE_COLS = [f.name for f in KLINES_M1_SCHEMA.fields]
-
 # --- driver testdata schemas (TESTDATA.md) ---------------------------------
 EVENTS_SCHEMA = T.StructType(
     [
@@ -47,49 +42,3 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def conform_klines(df: DataFrame) -> DataFrame:
-    """Cast/arrange a frame to the canonical kline schema.
-
-    Mirrors the defensive re-cast idiom of the reference
-    (build_m5_from_m1.py:40-54): unknown extra columns are dropped, missing
-    ones raise, and ``ts`` is re-derived from ``open_time_ms`` — the
-    anti-lookahead invariant (compact_staging.py:86-87: "ts = open_time_ms").
-    """
-    missing = [c for c in KLINE_COLS if c not in df.columns and c != "ts"]
-    if missing:
-        raise ValueError(f"klines frame missing columns: {missing}")
-    out = df
-    if "open_time_ms" in out.columns:
-        out = out.withColumn("ts", F.timestamp_millis(F.col("open_time_ms")))
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in KLINES_M1_SCHEMA.fields]
-    )
-
-
-def resolve_ts_col(df: DataFrame, candidates: tuple[str, ...] = ("ts", "t", "time", "timestamp", "open_time", "date", "datetime")) -> str:
-    """Tolerant timestamp-column discovery for the research surface.
-
-    The reference clones an ``auto_detect_ts_col`` helper across ~15 scripts
-    (scripts/research/build_mtf_context_h4_v1.py:15-23); here it is one
-    schema-driven function: prefer a candidate by name, else the first
-    timestamp-typed column.
-    """
-    cols = {c.lower(): c for c in df.columns}
-    for cand in candidates:
-        if cand in cols:
-            return cols[cand]
-    for f in df.schema.fields:
-        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
-            return f.name
-    raise ValueError(f"no timestamp column found among {df.columns}")
-
-
-def resolve_vol_col(df: DataFrame, candidates: tuple[str, ...] = ("volume_base", "volume", "vol", "volume_quote", "qty")) -> str:
-    """Volume-column alias detection (ref build_mtf_context_h4_v1.py:34-38)."""
-    cols = {c.lower(): c for c in df.columns}
-    for cand in candidates:
-        if cand in cols:
-            return cols[cand]
-    raise ValueError(f"no volume column found among {df.columns}")

@@ -1,5 +1,5 @@
-"""Partitioned parquet lake: layout, staged append, compaction, merge-write,
-checkpoints (SURVEY §2.1 S3-S14).
+"""Partitioned parquet lake: layout, staged append, compaction, partition
+upsert, checkpoints (SURVEY §2.1 S3-S14).
 
 Reference physical model (src/bfdl/collectors/klines_m1.py:35,146-199;
 src/bfdl/transforms/compact_staging.py, aggregate_tf.py:122-179):
@@ -14,10 +14,11 @@ Spark-first redesign rather than translation:
   ``partitionBy("symbol","year","month")`` — partition pruning and footer
   min/max skipping are free;
 - the reference's per-file staged append + dedup-keep-last + tmp-rename
-  trio is an ACID upsert; without Delta in this container we implement it
-  as staging-append + merge-compaction using **dynamic partition
-  overwrite** (only partitions that received new keys are rewritten —
-  at 100 TB a daily merge touches current-month partitions only);
+  trio is an ACID upsert; without Delta we implement it as staging-append
+  + ``upsert_partitions``, a merge using **dynamic partition overwrite**
+  (only partitions that received new keys are rewritten — at 100 TB a
+  daily merge touches current-month partitions only). The streaming sink
+  (``streaming.pipeline.parquet_upsert``) shares the same upsert;
 - "keep last" precedence is explicit (``__precedence`` column), fixing the
   reference's order-dependent ``keep="last"`` (SURVEY §7.2);
 - checkpoints stay sidecar JSON for parity (a Delta table would subsume).
@@ -25,10 +26,13 @@ Spark-first redesign rather than translation:
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,10 +55,16 @@ def staging_path(root: str) -> str:
 
 
 def write_canonical(df: DataFrame, root: str, mode: str = "overwrite") -> None:
-    """Hive-partitioned canonical write (S9 + layout of §1.2)."""
+    """Hive-partitioned canonical write (S9 + layout of §1.2).
+
+    ``overwrite`` replaces only the (symbol, year, month) partitions ``df``
+    covers (dynamic partition overwrite, as a writer option): re-aggregating
+    some symbols leaves the others in place, and a table can be rewritten
+    from a read of itself."""
     (
         with_partition_cols(df)
         .write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*PARTITION_COLS)
         .parquet(canonical_path(root))
     )
@@ -74,18 +84,29 @@ def stage_append(df: DataFrame, root: str) -> None:
 
 def read_lake(spark: SparkSession, root: str, with_staging: bool = False) -> DataFrame:
     """Recursive scan with partition discovery (S4); staging union optional."""
-    canon = canonical_path(root)
-    parts = []
-    if _exists(spark, canon):
-        parts.append(spark.read.parquet(canon))
-    if with_staging and _exists(spark, staging_path(root)):
-        parts.append(spark.read.parquet(staging_path(root)))
+    parts = [_read_data(spark, canonical_path(root))]
+    if with_staging:
+        parts.append(_read_data(spark, staging_path(root)))
+    parts = [p for p in parts if p is not None]
     if not parts:
         raise FileNotFoundError(f"empty lake at {root}")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
     return out
+
+
+def _read_data(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when it holds no data files
+    (staging keeps its directories after a compaction deletes the files)."""
+    if not _exists(spark, path):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return None
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -95,74 +116,75 @@ def _exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
+def upsert_partitions(
+    spark: SparkSession,
+    path: str,
+    new_df: DataFrame,
+    keys: Sequence[str],
+    partition_cols: Sequence[str],
+) -> int:
+    """Keyed upsert into a Hive-partitioned parquet table (S12/S13): the
+    table's partitions that ``new_df`` touches are unioned with it, deduped
+    new-wins (an explicit ``__precedence``, not union order), and replaced
+    by dynamic partition overwrite, one file per partition. The merge cost
+    is proportional to the new rows' partition span, not the table size.
+
+    The overwrite mode is a writer option, so the session conf is left as
+    it was. Returns the number of rows in ``new_df``.
+    """
+    touched = new_df.groupBy(*partition_cols).count().collect()
+    n_new = sum(r["count"] for r in touched)
+    if n_new == 0:
+        return 0
+    merged = new_df.withColumn("__precedence", F.lit(1))
+    if _exists(spark, path):
+        in_touched = F.lit(False)
+        for r in touched:
+            in_touched = in_touched | functools.reduce(
+                operator.and_, (F.col(c).eqNullSafe(r[c]) for c in partition_cols)
+            )
+        existing = spark.read.parquet(path).filter(in_touched)
+        merged = existing.withColumn("__precedence", F.lit(0)).unionByName(merged)
+    result = dedup_keep_last(merged, list(keys), ["__precedence"]).drop("__precedence")
+    (
+        result.repartition(*[F.col(c) for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+    return n_new
+
+
 def compact_staging(
     spark: SparkSession,
     root: str,
     keys: Sequence[str] = ("symbol", "open_time_ms"),
 ) -> int:
     """Fold staging into canonical with staging-wins dedup
-    (compact_staging.py:44-111).
+    (compact_staging.py:44-111; S14, one file per (symbol, year, month) as
+    in compact_months.py:13-75). Returns the number of staged rows folded.
 
-    Only partitions present in staging are rewritten (dynamic partition
-    overwrite) — the merge cost is proportional to the NEW data's partition
-    span, not the lake size. Returns number of staged rows folded.
+    Only the staged files the fold read are deleted afterwards, so a page
+    staged while the fold runs waits for the next compaction instead of
+    being lost. A crash between the canonical write and the delete leaves
+    staging in place; the next compaction folds it again to the same rows.
     """
-    stag = staging_path(root)
-    if not _exists(spark, stag):
+    staged = _read_data(spark, staging_path(root))
+    if staged is None:
         return 0
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    staged = spark.read.parquet(stag)
-    n_staged = staged.count()
-    if n_staged == 0:
-        return 0
-    canon = canonical_path(root)
-    if _exists(spark, canon):
-        existing = spark.read.parquet(canon)
-        # prune: only canonical partitions that staging touches participate
-        touched = [
-            tuple(r) for r in staged.select(*PARTITION_COLS).distinct().collect()
-        ]
-        cond = F.lit(False)
-        for sym, y, m in touched:
-            cond = cond | (
-                (F.col("symbol") == sym) & (F.col("year") == y) & (F.col("month") == m)
-            )
-        overlap = existing.filter(cond)
-        merged = overlap.withColumn("__precedence", F.lit(0)).unionByName(
-            staged.withColumn("__precedence", F.lit(1))
-        )
-    else:
-        merged = staged.withColumn("__precedence", F.lit(1))
-    result = dedup_keep_last(merged, list(keys), ["__precedence"]).drop("__precedence")
-    # one output file per (symbol, year, month) — the reference's part-000
-    # compaction contract (compact_months.py:13-75)
-    (
-        result.repartition(*[F.col(c) for c in PARTITION_COLS])
-        .write.mode("overwrite")
-        .partitionBy(*PARTITION_COLS)
-        .parquet(canon)
-    )
-    _delete(spark, stag)
+    files = staged.inputFiles()
+    n_staged = upsert_partitions(spark, canonical_path(root), staged, keys, PARTITION_COLS)
+    _delete(spark, files)
     return n_staged
 
 
-def merge_upsert(
-    spark: SparkSession,
-    root: str,
-    new_df: DataFrame,
-    keys: Sequence[str] = ("symbol", "open_time_ms"),
-) -> None:
-    """Month merge-write (S13: aggregate_tf.py:164-179, backfill_*): read
-    overlapping partitions + union + dedup(new wins) + dynamic-overwrite."""
-    stage_append(new_df, root)
-    compact_staging(spark, root, keys)
-
-
-def _delete(spark: SparkSession, path: str) -> None:
+def _delete(spark: SparkSession, paths: Sequence[str]) -> None:
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).delete(p, True)
+    for path in paths:
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(conf).delete(p, False)
 
 
 # --- sidecar metadata / checkpoints (S2, S11) ------------------------------

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from binance_futures_data_lake_spark.functions.scalars import round6
 from binance_futures_data_lake_spark.schemas import EVENTS_SCHEMA
+from binance_futures_data_lake_spark.sources.lake import upsert_partitions
 
 
 def stream_events(
@@ -157,34 +158,13 @@ def parquet_upsert(
     new_df: DataFrame,
     keys: Sequence[str],
     part_ts_col: str = "bucket_ts",
-) -> None:
-    """Generic keyed upsert into a day-partitioned parquet table: union the
-    touched day partitions with the new rows, dedup new-wins, dynamic-
-    overwrite only those partitions. The streaming analogue of the lake's
-    staging-wins compaction (compact_staging.py:44-111) — merge cost is
-    proportional to the new data's partition span, not table size."""
-    from binance_futures_data_lake_spark.operators.dedup import dedup_keep_last
-
-    new_p = new_df.withColumn("p_day", F.to_date(part_ts_col))
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    exists = hpath.getFileSystem(hconf).exists(hpath)
-    if exists:
-        days = [r.p_day for r in new_p.select("p_day").distinct().collect()]
-        overlap = spark.read.parquet(path).filter(F.col("p_day").isin(days))
-        merged = overlap.withColumn("__prec", F.lit(0)).unionByName(
-            new_p.withColumn("__prec", F.lit(1))
-        )
-        result = dedup_keep_last(merged, list(keys), ["__prec"]).drop("__prec")
-    else:
-        result = dedup_keep_last(
-            new_p.withColumn("__prec", F.lit(1)), list(keys), ["__prec"]
-        ).drop("__prec")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    result.repartition(F.col("p_day")).write.mode(
-        "overwrite" if exists else "errorifexists"
-    ).partitionBy("p_day").parquet(path)
+) -> int:
+    """Keyed new-wins upsert into a parquet table partitioned by the day of
+    ``part_ts_col`` (``p_day``) — ``lake.upsert_partitions``, the same
+    merge the lake's staging compaction runs. Returns the rows upserted."""
+    return upsert_partitions(
+        spark, path, new_df.withColumn("p_day", F.to_date(part_ts_col)), keys, ["p_day"]
+    )
 
 
 def foreach_batch_upsert(
@@ -202,8 +182,6 @@ def foreach_batch_upsert(
     """
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         parquet_upsert(batch_df.sparkSession, root, batch_df, keys, part_ts_col)
 
     return _sink

@@ -56,6 +56,16 @@ def test_lake_roundtrip_compact_and_audit(spark, tmp_root):
     assert report2["ok"], report2
 
 
+def test_write_canonical_replaces_only_covered_partitions(spark, tmp_root):
+    df = synthetic_klines_m1(spark, symbols=("AAA", "BBB"), n_minutes=60)
+    lake.write_canonical(df, tmp_root)
+    # rewrite AAA from a read of the table itself; BBB must stay
+    aaa = lake.read_lake(spark, tmp_root).filter(F.col("symbol") == "AAA")
+    lake.write_canonical(aaa.drop("year", "month").limit(10), tmp_root)
+    counts = dict(lake.read_lake(spark, tmp_root).groupBy("symbol").count().collect())
+    assert counts == {"AAA": 10, "BBB": 60}
+
+
 def test_gap_detection_on_holed_grid(spark, tmp_root):
     df = synthetic_klines_m1(spark, symbols=("AAA",), n_minutes=1440)
     # carve two known holes: minutes [100, 110) and [500, 503)
@@ -204,3 +214,174 @@ def test_load_events_utc_instants_without_tz_side_effect(spark):
         assert spark.conf.get("spark.sql.session.timeZone") == "America/New_York"
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+# --- audit_klines defect fixture ---------------------------------------------
+
+T0_MS = 1_704_067_200_000  # 2024-01-01 00:00 UTC
+MIN_MS = 60_000
+
+
+def _bars(spark, rows):
+    """Klines frame from (symbol, minute, ts_minute, low) rows; every bar is
+    valid except where ``low`` is set above min(open, close) = 100.0."""
+    data = [
+        (s, T0_MS + int(m * MIN_MS), T0_MS + int(tm * MIN_MS), 100.0, 101.0, low,
+         100.5, 10.0, 4.0, 7)
+        for s, m, tm, low in rows
+    ]
+    return spark.createDataFrame(
+        data,
+        "symbol string, open_time_ms long, ts_ms long, open double, high double, "
+        "low double, close double, volume_base double, taker_buy_base double, "
+        "n_trades long",
+    ).withColumn("ts", F.timestamp_millis("ts_ms")).drop("ts_ms")
+
+
+def _defect_frame(spark):
+    aaa = [0, 1, 2, 3, 3, 3, 4, 5, 8, 9, 9.5]  # key 3 tripled, hole 6-7, off-grid 9.5
+    return _bars(
+        spark,
+        [("AAA", m, m, 99.0) for m in aaa]
+        + [("BBB", 0, 0, 99.0), ("BBB", 1, 1, 99.0),
+           ("BBB", 2, 3, 99.0),     # ts one minute past open_time_ms
+           ("BBB", 3, 3, 99.0),
+           ("BBB", 4, 4, 102.0)],   # low above the body
+    )
+
+
+DEFECTS = {
+    "n_rows": 16,
+    "expected_rows": 10 + 5,         # AAA spans 9.5 min -> 10 grid rows
+    "n_duplicate_keys": 1,
+    "n_non_monotonic": 2,            # the tripled key's two extra rows
+    "n_off_grid_steps": 1,
+    "n_missing_grid_rows": 2 + 1,    # AAA 6-7; BBB's shifted ts leaves minute 2 empty
+    "n_ts_mismatch": 1,
+    "n_bar_invariant_violations": 1,
+    "ok": False,
+}
+
+
+def test_audit_klines_pins_every_defect(spark):
+    df = _defect_frame(spark)
+    assert audit_klines(df) == DEFECTS
+    assert audit_klines(df.drop("low")) == {**DEFECTS, "n_bar_invariant_violations": None}
+    assert audit_klines(df.limit(0)) == {
+        **{k: 0 for k in DEFECTS}, "ok": True,
+    }
+
+
+def test_audit_klines_five_minute_grid(spark):
+    df = _bars(spark, [("AAA", m, m, 99.0) for m in (0, 5, 10, 20, 20, 21)])
+    assert audit_klines(df, step_ms=5 * MIN_MS) == {
+        "n_rows": 6,
+        "expected_rows": 5,          # 21 min span -> 5.2 grid rows, truncated
+        "n_duplicate_keys": 1,
+        "n_non_monotonic": 1,
+        "n_off_grid_steps": 1,       # 20 -> 21
+        "n_missing_grid_rows": 1,    # the 15-minute bucket
+        "n_ts_mismatch": 0,
+        "n_bar_invariant_violations": 0,
+        "ok": False,
+    }
+
+
+def test_audit_klines_without_ts_reads_the_grid_from_open_time(spark):
+    df = _defect_frame(spark).drop("ts", "low")
+    assert audit_klines(df) == {
+        **DEFECTS,
+        "n_missing_grid_rows": 2,    # BBB's open times are complete
+        "n_ts_mismatch": None,
+        "n_bar_invariant_violations": None,
+    }
+
+
+def test_audit_klines_runs_in_two_jobs(spark):
+    import uuid
+
+    df = _defect_frame(spark)
+    sc = spark.sparkContext
+    group = f"audit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "audit_klines")
+    try:
+        audit_klines(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+# --- compaction under faults ---------------------------------------------------
+
+def _rows(spark, root):
+    return sorted(
+        tuple(r) for r in
+        lake.read_lake(spark, root).select("symbol", "open_time_ms", "close").collect()
+    )
+
+
+def test_compaction_keeps_rows_staged_during_the_fold(spark, tmp_root, monkeypatch):
+    df = synthetic_klines_m1(spark, symbols=("AAA",), n_minutes=120)
+    t0 = df.agg(F.min("open_time_ms")).first()[0]
+    first = df.filter(F.col("open_time_ms") < t0 + 60 * MIN_MS)
+    late = df.filter(F.col("open_time_ms") >= t0 + 60 * MIN_MS)
+    lake.stage_append(first, tmp_root)
+
+    real_delete = lake._delete
+
+    def racing_delete(*args):
+        # a poll page lands after the fold listed staging, before the delete
+        monkeypatch.setattr(lake, "_delete", real_delete)
+        lake.stage_append(late, tmp_root)
+        real_delete(*args)
+
+    monkeypatch.setattr(lake, "_delete", racing_delete)
+    assert lake.compact_staging(spark, tmp_root) == 60
+    assert lake.read_lake(spark, tmp_root).count() == 60
+    assert lake.compact_staging(spark, tmp_root) == 60  # the late page survived
+    assert lake.read_lake(spark, tmp_root).count() == 120
+    assert lake.compact_staging(spark, tmp_root) == 0   # no data files left
+    assert lake.read_lake(spark, tmp_root, with_staging=True).count() == 120
+
+
+def test_compaction_converges_after_crash_before_staging_delete(spark, tmp_root, monkeypatch):
+    df = synthetic_klines_m1(spark, symbols=("AAA", "BBB"), n_minutes=120)
+    lake.write_canonical(df, tmp_root)
+    t0 = df.agg(F.min("open_time_ms")).first()[0]
+    patch = df.filter(F.col("open_time_ms") < t0 + 30 * MIN_MS).withColumn(
+        "close", F.col("close") + 1.0
+    )
+    lake.stage_append(patch, tmp_root)
+
+    def crash(*args):
+        raise OSError("crash between the canonical write and the staging delete")
+
+    monkeypatch.setattr(lake, "_delete", crash)
+    with pytest.raises(OSError):
+        lake.compact_staging(spark, tmp_root)
+    after_crash = _rows(spark, tmp_root)
+    monkeypatch.undo()
+
+    assert lake.compact_staging(spark, tmp_root) == 2 * 30  # staging re-folded
+    assert _rows(spark, tmp_root) == after_crash            # staging-wins is idempotent
+    assert len(after_crash) == 2 * 120
+    assert lake.compact_staging(spark, tmp_root) == 0
+
+
+def test_upserts_leave_session_conf_unchanged(spark, tmp_root):
+    from binance_futures_data_lake_spark.streaming.pipeline import parquet_upsert
+
+    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    before = dict(spark.conf.getAll)
+    df = synthetic_klines_m1(spark, symbols=("AAA",), n_minutes=60)
+    lake.stage_append(df, tmp_root)
+    assert lake.compact_staging(spark, tmp_root) == 60
+    assert dict(spark.conf.getAll) == before
+
+    bars = df.select("symbol", "open_time_ms", F.col("ts").alias("bucket_ts"), "close")
+    sink = tmp_root + "/bars"
+    parquet_upsert(spark, sink, bars, ["symbol", "open_time_ms"])
+    parquet_upsert(spark, sink, bars.withColumn("close", F.col("close") + 1.0),
+                   ["symbol", "open_time_ms"])
+    assert dict(spark.conf.getAll) == before
+    assert spark.read.parquet(sink).count() == 60
