@@ -371,7 +371,7 @@ def hll_registers(
     a MAX MONOID: ``registers(A ∪ B) = max-merge(registers(A),
     registers(B))`` per (group, bucket), which is what makes the
     streaming twin's batch-addressed delta state exact
-    (streaming/pipeline.py hll_delta_sink / read_hll_state — the CMS
+    (streaming/pipeline.py sketch_delta_sink / read_sketch_state — the CMS
     sum-monoid argument with max for sum). ≤ ``|groups|·m`` rows."""
     if m not in HLL_ALPHA:
         raise ValueError(f"m must be one of {sorted(HLL_ALPHA)}, got {m}")
@@ -464,7 +464,7 @@ def kmv_state(
     ``hv``). KMV sets are a monoid under "union, dedup, keep k
     smallest", so ``state(A ∪ B) = merge(state(A), state(B))`` — what
     makes the streaming twin's batch-addressed delta state exact
-    (streaming/pipeline.py kmv_delta_sink / read_kmv_state; the CMS/HLL
+    (streaming/pipeline.py sketch_delta_sink / read_sketch_state; the CMS/HLL
     argument with k-smallest-union for sum/max). ≤ ``|groups|·k`` rows;
     duplicate-insensitive (same value → same hash → dedup collapses
     it).
@@ -512,7 +512,7 @@ def kmv_estimate_from_state(
     k: int = 64,
 ) -> DataFrame:
     """Estimate from CAPPED KMV state — :func:`kmv_state` output or
-    ``read_kmv_state``'s merge, both of which already hold ≤ k hashes
+    ``read_sketch_state``'s merge, both of which already hold ≤ k hashes
     per group (the input contract; re-ranking here would pay a redundant
     per-group sort exchange on by-construction-capped rows):
     ``n̂ = (k−1)/h_(k)``, exact count when the state holds fewer than k

@@ -50,22 +50,9 @@ def widen_narrow_scan(df: DataFrame) -> DataFrame:
     retry-deterministic (sortBeforeRepartition, SPARK-23207) and every
     consumer here is key-aggregated or key-joined, so results are
     row-order-independent.
-
-    ``spark.bfdl.text.minPartitions`` overrides the threshold; ``0``
-    disables the widening entirely.
     """
     spark = df.sparkSession
-    try:
-        conf_v = spark.conf.get("spark.bfdl.text.minPartitions", None)
-    except Exception:
-        conf_v = None
-    width = (
-        int(conf_v)
-        if conf_v is not None
-        else spark.sparkContext.defaultParallelism
-    )
-    if width <= 0:
-        return df
+    width = spark.sparkContext.defaultParallelism
     # "Too narrow" is a SIZE test, not a split-count test: split counts
     # overstate parallelism when one row group holds all the rows (the
     # other splits are empty), so compare the relation's estimated bytes
@@ -78,8 +65,8 @@ def widen_narrow_scan(df: DataFrame) -> DataFrame:
         )
     except Exception:
         return df
-    split_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
-                              128 * 1024 * 1024)
+    # the split size the file scan itself uses (already parsed by Spark)
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     if size >= width * split_bytes:
         return df
     # No partition-count backstop: asking the RDD for its partition count
@@ -91,26 +78,6 @@ def widen_narrow_scan(df: DataFrame) -> DataFrame:
     # incremental_corpus_dedup's plan is byte-identical with and without
     # the backstop).
     return df.repartition(width)
-
-
-def _conf_bytes(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf ("1m", "128MB", "134217728")."""
-    try:
-        raw = str(spark.conf.get(key)).strip().lower()
-    except Exception:
-        return default
-    mult = 1
-    for suf, m in (("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
-                   ("k", 1024), ("m", 1024**2), ("g", 1024**3),
-                   ("b", 1)):
-        if raw.endswith(suf):
-            raw = raw[: -len(suf)]
-            mult = m
-            break
-    try:
-        return int(raw) * mult
-    except ValueError:
-        return default
 
 
 def words(col, lowercase: bool = True):

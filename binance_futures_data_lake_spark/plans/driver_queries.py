@@ -3335,43 +3335,61 @@ def q_retrieval_pipeline(spark, sf_dir):
                           id_col="vec_id", vec_col="embedding")
 
 
-def _staged_event_chunks(spark, sf_dir) -> tuple[str, str]:
-    """Stage the events table as 3 time-ordered parquet chunks in a temp
-    dir (Spark-side filtered writes — no driver materialization), so an
-    availableNow file stream's watermark advances across micro-batches.
-    Returns ``(work_dir, source_dir)``; the caller owns cleanup."""
+def _staged_stream(chunks, start, read) -> DataFrame:
+    """Run one availableNow stream over staged chunk files and return
+    its materialized result — the lifecycle every streaming query shares.
+
+    Each frame of ``chunks`` becomes one parquet file (``coalesce(1)``)
+    under ``<work>/src`` with its mtime pinned to ``1_700_000_000 + i``:
+    the file source orders files by mtime, so a ``maxFilesPerTrigger=1``
+    stream reads one chunk per micro-batch, in list order.
+    ``start(src, work)`` starts the query, whose sinks, state and
+    checkpoint live under ``work``; once it finishes, ``read(work)``
+    builds the answer, and ``localCheckpoint`` detaches it from the
+    files. ``work`` is removed however the run ends."""
     import glob
     import os
     import shutil
     import tempfile
-    import time
 
     work = tempfile.mkdtemp(prefix="bfdl_stream_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    # EVENTS_SCHEMA declares ts as long nanos (the raw TIMESTAMP(NANOS)
-    # physical type); emit the chunks in that shape with an integer div.
-    ev = load_events(spark, sf_dir).withColumn(
+    try:
+        src = os.path.join(work, "src")
+        os.makedirs(src)
+        for i, chunk in enumerate(chunks):
+            stage = os.path.join(work, f"stage-{i}")
+            chunk.coalesce(1).write.parquet(stage)
+            dst = os.path.join(src, f"chunk-{i}.parquet")
+            shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
+            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        q = start(src, work)
+        if not q.awaitTermination(600):
+            q.stop()
+            raise TimeoutError("streaming query did not finish within 600 s")
+        return read(work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _raw_events(spark, sf_dir) -> DataFrame:
+    """The events table in its stream's file shape: EVENTS_SCHEMA
+    declares ts as long nanos (the raw TIMESTAMP(NANOS) physical type),
+    emitted with an integer div."""
+    return load_events(spark, sf_dir).withColumn(
         "ts", (F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)).cast("long")
     )
-    cuts = ev.select(
+
+
+def _event_time_chunks(spark, sf_dir) -> list[DataFrame]:
+    """The events table as 3 time-ordered chunks (cut at the 40th and
+    80th ts percentiles), so an availableNow file stream's watermark
+    advances across micro-batches."""
+    ev = _raw_events(spark, sf_dir)
+    c0, c1 = ev.select(
         F.percentile_approx("ts", [0.4, 0.8], 10000).alias("c")
     ).first()["c"]
-    bounds = [(None, cuts[0]), (cuts[0], cuts[1]), (cuts[1], None)]
-    for i, (lo, hi) in enumerate(bounds):
-        chunk = ev
-        if lo is not None:
-            chunk = chunk.filter(F.col("ts") > F.lit(lo))
-        if hi is not None:
-            chunk = chunk.filter(F.col("ts") <= F.lit(hi))
-        stage = os.path.join(work, f"stage-{i}")
-        chunk.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        p = os.path.join(src, f"chunk-{i}.parquet")
-        shutil.move(part, p)
-        mtime = time.time() - (3 - i) * 60
-        os.utime(p, (mtime, mtime))
-    return work, src
+    ts = F.col("ts")
+    return [ev.filter(ts <= c0), ev.filter((ts > c0) & (ts <= c1)), ev.filter(ts > c1)]
 
 
 @register(
@@ -3409,30 +3427,25 @@ def q_streaming_ohlcv_bars(spark, sf_dir):
     """SURVEY §2.10 end-to-end: file stream → watermarked tumbling-window
     OHLCV (append mode = emit-on-close) → foreachBatch keyed upsert.
     Runs availableNow on a temp copy of the events table split into 3
-    time-ordered chunks (_staged_event_chunks) so the watermark advances
+    time-ordered chunks (_event_time_chunks) so the watermark advances
     across micro-batches."""
     import os
-    import shutil
 
     from binance_futures_data_lake_spark.streaming.pipeline import run_ohlcv_ingest
 
-    work, src = _staged_event_chunks(spark, sf_dir)
-    sink = os.path.join(work, "lake")
-    q = run_ohlcv_ingest(
-        spark, src, sink, os.path.join(work, "ckpt"),
-        minutes=60, key_cols=("event_type",), watermark="30 minutes",
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("streaming ingest did not finish within 600 s")
-    out = spark.read.parquet(sink).select(
-        "event_type", "bucket_ts", "open", "high", "low", "close",
-        r6(F.col("volume")).alias("volume"), "n_ticks",
-    )
-    out = out.cache()
-    out.count()  # materialize before the temp dir can be reclaimed
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    def start(src, work):
+        return run_ohlcv_ingest(
+            spark, src, os.path.join(work, "lake"), os.path.join(work, "ckpt"),
+            minutes=60, key_cols=("event_type",), watermark="30 minutes",
+        )
+
+    def read(work):
+        return spark.read.parquet(os.path.join(work, "lake")).select(
+            "event_type", "bucket_ts", "open", "high", "low", "close",
+            r6(F.col("volume")).alias("volume"), "n_ticks",
+        )
+
+    return _staged_stream(_event_time_chunks(spark, sf_dir), start, read)
 
 
 # Deterministic pixel-model CTE chain (shared by media_image_features and
@@ -3795,6 +3808,19 @@ def q_incremental_corpus_dedup(spark, sf_dir):
                              num_hashes=16, bands=8, shingle_n=3)
 
 
+def _timed_docs(spark, sf_dir) -> DataFrame:
+    """The documents table with a synthesized event time of one doc per
+    minute from 2024-01-01 UTC (instant arithmetic, independent of the
+    session timezone), in the streamed document schema."""
+    return load_table(spark, "documents", sf_dir).select(
+        "doc_id",
+        F.timestamp_micros(
+            F.lit(1704067200000000) + F.col("doc_id") * F.lit(60_000_000)
+        ).alias("ts"),
+        "text", "lang", "source",
+    )
+
+
 @register(
     "streaming_doc_quality",
     cache_plan=False,  # runs a stream + temp dir per call
@@ -3842,60 +3868,64 @@ def q_streaming_doc_quality(spark, sf_dir):
     (the oracle reads each document once via DISTINCT). Event time is
     synthesized as one doc per minute from 2024-01-01 UTC — instant
     arithmetic (timestamp_micros), independent of session timezone."""
-    import glob
     import os
-    import shutil
-    import tempfile
 
     from binance_futures_data_lake_spark.streaming.pipeline import (
         run_doc_quality_ingest,
     )
 
-    work = tempfile.mkdtemp(prefix="bfdl_docstream_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    docs = load_table(spark, "documents", sf_dir).select(
-        "doc_id",
-        F.timestamp_micros(
-            F.lit(1704067200000000) + F.col("doc_id") * F.lit(60_000_000)
-        ).alias("ts"),
-        "text", "lang", "source",
-    )
+    docs = _timed_docs(spark, sf_dir)
     n_docs = docs.count()
-    cuts = [int(n_docs * 0.4), int(n_docs * 0.8)]
-    bounds = [(None, cuts[0]), (cuts[0], cuts[1]), (cuts[1], None)]
-    for i, (lo, hi) in enumerate(bounds):
-        chunk = docs
-        if lo is not None:
-            chunk = chunk.filter(F.col("doc_id") >= F.lit(lo))
-        if hi is not None:
-            chunk = chunk.filter(F.col("doc_id") < F.lit(hi))
-        # re-deliver every 10th doc inside its own chunk: the streaming
-        # dedup state must collapse it or n_docs inflates and hash fails
-        chunk = chunk.unionByName(chunk.filter(F.col("doc_id") % 10 == 0))
-        stage = os.path.join(work, f"stage-{i}")
-        chunk.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(src, f"chunk-{i}.parquet"))
-    # try/finally so a timeout or stream failure doesn't leak the staged
-    # parquet + checkpoint dir; the result is LOCALIZED (collect +
-    # createDataFrame) rather than cached, because cached blocks can be
-    # evicted and would then recompute from the deleted temp files
-    try:
-        sink = os.path.join(work, "lake")
-        q = run_doc_quality_ingest(
-            spark, src, sink, os.path.join(work, "ckpt"), watermark="30 minutes"
+    c0, c1 = int(n_docs * 0.4), int(n_docs * 0.8)
+    d = F.col("doc_id")
+    chunks = [docs.filter(d < c0), docs.filter((d >= c0) & (d < c1)), docs.filter(d >= c1)]
+    # re-deliver every 10th doc inside its own chunk: the streaming
+    # dedup state must collapse it or n_docs inflates and hash fails
+    chunks = [c.unionByName(c.filter(d % 10 == 0)) for c in chunks]
+
+    def start(src, work):
+        return run_doc_quality_ingest(
+            spark, src, os.path.join(work, "lake"), os.path.join(work, "ckpt"),
+            watermark="30 minutes",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("streaming ingest did not finish within 600 s")
-        out = spark.read.parquet(sink).select(
+
+    def read(work):
+        return spark.read.parquet(os.path.join(work, "lake")).select(
             "lang", "bucket_ts", "n_docs", "n_keep", "sum_tok"
         )
-        rows = out.collect()  # bounded: |langs| × |hour buckets|
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _staged_stream(chunks, start, read)
+
+
+def _crawl_drop_stream(spark, sf_dir, init_state, run_stream, cols) -> DataFrame:
+    """The incremental-dedup stream shared by the MinHash and SimHash
+    tiers: docs with doc_id % 5 != 0 seed the persisted state via
+    ``init_state(base, state_root)``; the rest arrive as three crawl
+    drops (``(doc_id div 5) % 3``), drop 2 re-delivering half of drop 0
+    against the GROWN index. ``run_stream(spark, src, state, out, ckpt)``
+    runs the ingest; the answer is its decision rows' ``cols``."""
+    import os
+
+    docs = _timed_docs(spark, sf_dir)
+    new = docs.filter(F.col("doc_id") % 5 == 0)
+    drops = [new.filter(F.expr("(doc_id div 5) % 3") == i) for i in range(3)]
+    drops[2] = drops[2].unionByName(new.filter(F.expr("(doc_id div 5) % 6") == 0))
+
+    def start(src, work):
+        state = os.path.join(work, "state")
+        init_state(docs.filter(F.col("doc_id") % 5 != 0), state)
+        return run_stream(
+            spark, src, state, os.path.join(work, "out"), os.path.join(work, "ckpt")
+        )
+
+    def read(work):
+        return (
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(os.path.join(work, "out"))
+            .select(*cols)
+        )
+
+    return _staged_stream(drops, start, read)
 
 
 def _incr_dedup_layer_sql(c: int, e: str, n: str) -> str:
@@ -4038,62 +4068,21 @@ def q_streaming_incremental_dedup(spark, sf_dir):
     kept doc re-classifies as exact_dup OF ITSELF). The oracle replays
     the three layers against base ∪ kept-so-far — the exact state
     content (streaming/pipeline.py run_incremental_dedup_stream)."""
-    import os
-    import shutil
-    import tempfile
+    import functools
 
     from binance_futures_data_lake_spark.streaming.pipeline import (
         init_dedup_state,
         run_incremental_dedup_stream,
     )
 
-    work = tempfile.mkdtemp(prefix="bfdl_incrdedup_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        docs = load_table(spark, "documents", sf_dir).select(
-            "doc_id",
-            F.timestamp_micros(
-                F.lit(1704067200000000) + F.col("doc_id") * F.lit(60_000_000)
-            ).alias("ts"),
-            "text", "lang", "source",
-        )
-        new = docs.filter(F.col("doc_id") % 5 == 0)
-        chunk_of = F.expr("(doc_id div 5) % 3")
-        redeliver = F.expr("(doc_id div 5) % 6") == 0
-        import glob
-
-        for i in range(3):
-            chunk = new.filter(chunk_of == i)
-            if i == 2:  # re-deliver half of drop 0 against the GROWN index
-                chunk = chunk.unionByName(new.filter(redeliver))
-            stage = os.path.join(work, f"stage-{i}")
-            chunk.coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(src, f"chunk-{i}.parquet")
-            shutil.move(part, dst)
-            # file-source batches follow modification time; pin the order
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-        state = os.path.join(work, "state")
-        init_dedup_state(docs.filter(F.col("doc_id") % 5 != 0), state)
-        out_root = os.path.join(work, "out")
-        q = run_incremental_dedup_stream(
-            spark, src, state, out_root, os.path.join(work, "ckpt"),
+    return _crawl_drop_stream(
+        spark, sf_dir, init_dedup_state,
+        functools.partial(
+            run_incremental_dedup_stream,
             threshold=0.5, num_hashes=16, bands=8, shingle_n=3,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("incremental dedup stream did not finish in 600 s")
-        out = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(out_root)
-            .select("batch", "doc_id", "status", "match_id", "jaccard")
-        )
-        rows = out.collect()  # bounded: one row per delivered doc instance
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        ("batch", "doc_id", "status", "match_id", "jaccard"),
+    )
 
 
 def _streaming_simhash_sql() -> str:
@@ -4185,61 +4174,18 @@ def q_streaming_simhash_dedup(spark, sf_dir):
     re-classifies as near_dup at hamming 0 of itself). The oracle
     replays the three layers brute-force against base ∪ kept-so-far
     (streaming/pipeline.py run_incremental_simhash_stream)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+    import functools
 
     from binance_futures_data_lake_spark.streaming.pipeline import (
         init_simhash_state,
         run_incremental_simhash_stream,
     )
 
-    work = tempfile.mkdtemp(prefix="bfdl_incrsim_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        docs = load_table(spark, "documents", sf_dir).select(
-            "doc_id",
-            F.timestamp_micros(
-                F.lit(1704067200000000) + F.col("doc_id") * F.lit(60_000_000)
-            ).alias("ts"),
-            "text", "lang", "source",
-        )
-        new = docs.filter(F.col("doc_id") % 5 == 0)
-        chunk_of = F.expr("(doc_id div 5) % 3")
-        redeliver = F.expr("(doc_id div 5) % 6") == 0
-        for i in range(3):
-            chunk = new.filter(chunk_of == i)
-            if i == 2:  # re-deliver half of drop 0 against the GROWN index
-                chunk = chunk.unionByName(new.filter(redeliver))
-            stage = os.path.join(work, f"stage-{i}")
-            chunk.coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(src, f"chunk-{i}.parquet")
-            shutil.move(part, dst)
-            # file-source batches follow modification time; pin the order
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-        state = os.path.join(work, "state")
-        init_simhash_state(docs.filter(F.col("doc_id") % 5 != 0), state)
-        out_root = os.path.join(work, "out")
-        q = run_incremental_simhash_stream(
-            spark, src, state, out_root, os.path.join(work, "ckpt"),
-            max_hamming=3, bits=32,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("incremental simhash stream did not finish in 600 s")
-        out = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(out_root)
-            .select("batch", "doc_id", "status", "match_id", "hamming")
-        )
-        rows = out.collect()  # bounded: one row per delivered doc instance
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _crawl_drop_stream(
+        spark, sf_dir, init_simhash_state,
+        functools.partial(run_incremental_simhash_stream, max_hamming=3, bits=32),
+        ("batch", "doc_id", "status", "match_id", "hamming"),
+    )
 
 
 @register(
@@ -7751,27 +7697,22 @@ def q_streaming_sessionization(spark, sf_dir):
     sessions whose gap-padded end the final watermark passed — stream/
     batch parity for stateful merging windows."""
     import os
-    import shutil
 
     from binance_futures_data_lake_spark.streaming.pipeline import run_session_ingest
 
-    work, src = _staged_event_chunks(spark, sf_dir)
-    sink = os.path.join(work, "lake")
-    q = run_session_ingest(
-        spark, src, sink, os.path.join(work, "ckpt"),
-        gap="30 minutes", watermark="30 minutes",
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("streaming sessionization did not finish within 600 s")
-    out = spark.read.parquet(sink).select(
-        "user_id", "session_start", "session_end", "n_events",
-        r6(F.col("sum_value")).alias("sum_value"),
-    )
-    out = out.cache()
-    out.count()  # materialize before the temp dir can be reclaimed
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    def start(src, work):
+        return run_session_ingest(
+            spark, src, os.path.join(work, "lake"), os.path.join(work, "ckpt"),
+            gap="30 minutes", watermark="30 minutes",
+        )
+
+    def read(work):
+        return spark.read.parquet(os.path.join(work, "lake")).select(
+            "user_id", "session_start", "session_end", "n_events",
+            r6(F.col("sum_value")).alias("sum_value"),
+        )
+
+    return _staged_stream(_event_time_chunks(spark, sf_dir), start, read)
 
 
 # PQ-ADC CTE chain (shared by pq_ann_topk and the re-ranked tier): grid
@@ -8564,34 +8505,41 @@ def q_corpus_release_diff(spark, sf_dir):
     )
 
 
-def _staged_mod4_chunks(spark, sf_dir: str, work: str) -> str:
-    """Stage events rows with event_id % 4 in {1,2,3} as three
-    mtime-ordered chunk files under ``work/src`` — one micro-batch each
-    for a maxFilesPerTrigger=1 stream; the % 4 == 0 quarter is the
-    caller's seed history. Shared by all three streaming-sketch queries
-    (CMS/HLL/KMV). EVENTS_SCHEMA declares ts as long nanos; chunks are
-    emitted in that shape with an integer div (the _staged_event_chunks
-    rule)."""
-    import glob
+def _sketch_stream_query(spark, sf_dir, family, params, estimate) -> DataFrame:
+    """The streaming-sketch ingest shared by the CMS/HLL/KMV queries: the
+    event history (event_id % 4 == 0) seeds the persisted ``family``
+    state, the other three quarters stream as three
+    ``maxFilesPerTrigger=1`` micro-batches (event_id % 4 == 1, 2, 3), each
+    writing its OWN batch-addressed delta sketch, and
+    ``estimate(merged, events)`` turns the merge-on-read state into the
+    answer (streaming/pipeline.py init_sketch_state / run_sketch_stream /
+    read_sketch_state). ``params`` are the sketch build's."""
     import os
-    import shutil
 
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    ev = load_events(spark, sf_dir)
-    raw = ev.withColumn(
-        "ts",
-        (F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)).cast("long"),
+    from binance_futures_data_lake_spark.streaming.pipeline import (
+        init_sketch_state,
+        read_sketch_state,
+        run_sketch_stream,
     )
-    for i in range(3):
-        chunk = raw.filter(F.col("event_id") % 4 == i + 1)
-        stage = os.path.join(work, f"stage-{i}")
-        chunk.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(src, f"chunk-{i}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    return src
+
+    ev = load_events(spark, sf_dir)
+    raw = _raw_events(spark, sf_dir)
+    chunks = [raw.filter(F.col("event_id") % 4 == i) for i in (1, 2, 3)]
+
+    def start(src, work):
+        state = os.path.join(work, "state")
+        history = ev.filter(F.col("event_id") % 4 == 0)
+        init_sketch_state(family, history, state, value_col="user_id", **params)
+        return run_sketch_stream(
+            family, spark, src, state, os.path.join(work, "ckpt"),
+            value_col="user_id", **params,
+        )
+
+    def read(work):
+        state = os.path.join(work, "state")
+        return estimate(read_sketch_state(family, spark, state, params.get("k", 64)), ev)
+
+    return _staged_stream(chunks, start, read)
 
 
 def _streaming_cms_sql(depth: int = 3, width: int = 32, probes: int = 20) -> str:
@@ -8643,37 +8591,12 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     (seed, bucket)) probed for users 0-19 next to exact counts.
     Stream/batch parity IS the mergeability theorem: merged deltas must
     equal one batch build over all events, which is what the oracle
-    replays (streaming/pipeline.py init_cms_state / cms_delta_sink /
-    read_cms_state)."""
-    import os
-    import shutil
-    import tempfile
-
+    replays."""
     from binance_futures_data_lake_spark.operators.sketch import cms_estimate
-    from binance_futures_data_lake_spark.streaming.pipeline import (
-        init_cms_state,
-        read_cms_state,
-        run_cms_stream,
-    )
 
     depth, width, probes = 3, 32, 20
-    work = tempfile.mkdtemp(prefix="bfdl_cms_stream_")
-    try:
-        src = _staged_mod4_chunks(spark, sf_dir, work)
-        ev = load_events(spark, sf_dir)
-        state = os.path.join(work, "state")
-        init_cms_state(
-            ev.filter(F.col("event_id") % 4 == 0), state,
-            value_col="user_id", depth=depth, width=width,
-        )
-        q = run_cms_stream(
-            spark, src, state, os.path.join(work, "ckpt"),
-            value_col="user_id", depth=depth, width=width,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("CMS stream did not finish within 600 s")
-        merged = read_cms_state(spark, state)
+
+    def estimate(merged, ev):
         items = spark.range(probes).select(F.col("id").alias("item"))
         est = cms_estimate(merged, items, "item", depth, width)
         exact = (
@@ -8681,16 +8604,15 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
             .groupBy(F.col("user_id").alias("item"))
             .agg(F.count(F.lit(1)).alias("n_exact"))
         )
-        out = (
+        return (
             est.join(exact, "item", "left")
             .fillna({"n_exact": 0})
             .select("item", "n_exact", "cms_estimate")
         )
-        out = out.cache()
-        out.count()  # materialize before the temp dirs are reclaimed
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _sketch_stream_query(
+        spark, sf_dir, "cms", {"depth": depth, "width": width}, estimate
+    )
 
 
 def _bpe_merges_sql(n_merges: int = 5, final: str | None = None) -> str:
@@ -8825,50 +8747,24 @@ def q_streaming_hll_distinct(spark, sf_dir):
     set (no state read at ingest, no dropDuplicates — max is order- and
     duplicate-insensitive); the answer is merge-on-read (max per
     (event_type, bucket)) fed to the estimate, next to the exact count
-    (streaming/pipeline.py init_hll_state / hll_delta_sink /
-    read_hll_state + operators/sketch.py hll_estimate_from_registers)."""
-    import os
-    import shutil
-    import tempfile
-
+    (_sketch_stream_query + operators/sketch.py
+    hll_estimate_from_registers)."""
     from binance_futures_data_lake_spark.operators.sketch import (
         hll_estimate_from_registers,
     )
-    from binance_futures_data_lake_spark.streaming.pipeline import (
-        init_hll_state,
-        read_hll_state,
-        run_hll_stream,
-    )
 
-    work = tempfile.mkdtemp(prefix="bfdl_hll_stream_")
-    try:
-        src = _staged_mod4_chunks(spark, sf_dir, work)
-        ev = load_events(spark, sf_dir)
-        state = os.path.join(work, "state")
-        init_hll_state(
-            ev.filter(F.col("event_id") % 4 == 0), state,
-            value_col="user_id", by=["event_type"], m=64,
-        )
-        q = run_hll_stream(
-            spark, src, state, os.path.join(work, "ckpt"),
-            value_col="user_id", by=["event_type"], m=64,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("HLL stream did not finish within 600 s")
-        merged = read_hll_state(spark, state, by=["event_type"])
+    def estimate(merged, ev):
         est = hll_estimate_from_registers(merged, by=["event_type"], m=64)
         exact = ev.groupBy("event_type").agg(
             F.count_distinct("user_id").alias("n_exact")
         )
-        out = est.join(exact, "event_type").select(
+        return est.join(exact, "event_type").select(
             "event_type", "n_exact", "hll_estimate"
         )
-        out = out.cache()
-        out.count()  # materialize before the temp dirs are reclaimed
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _sketch_stream_query(
+        spark, sf_dir, "hll", {"by": ["event_type"], "m": 64}, estimate
+    )
 
 
 @register(
@@ -8914,50 +8810,24 @@ def q_streaming_kmv_distinct(spark, sf_dir):
     dropDuplicates — same value, same hash, distinct collapses it); the
     answer is merge-on-read (union → dedup → keep 64 smallest per
     event_type) fed to the (k−1)/h_(k) estimate next to the exact count
-    (streaming/pipeline.py init_kmv_state / kmv_delta_sink /
-    read_kmv_state + operators/sketch.py kmv_estimate_from_state)."""
-    import os
-    import shutil
-    import tempfile
-
+    (_sketch_stream_query + operators/sketch.py
+    kmv_estimate_from_state)."""
     from binance_futures_data_lake_spark.operators.sketch import (
         kmv_estimate_from_state,
     )
-    from binance_futures_data_lake_spark.streaming.pipeline import (
-        init_kmv_state,
-        read_kmv_state,
-        run_kmv_stream,
-    )
 
-    work = tempfile.mkdtemp(prefix="bfdl_kmv_stream_")
-    try:
-        src = _staged_mod4_chunks(spark, sf_dir, work)
-        ev = load_events(spark, sf_dir)
-        state = os.path.join(work, "state")
-        init_kmv_state(
-            ev.filter(F.col("event_id") % 4 == 0), state,
-            value_col="user_id", by=["event_type"], k=64,
-        )
-        q = run_kmv_stream(
-            spark, src, state, os.path.join(work, "ckpt"),
-            value_col="user_id", by=["event_type"], k=64,
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("KMV stream did not finish within 600 s")
-        merged = read_kmv_state(spark, state, by=["event_type"], k=64)
+    def estimate(merged, ev):
         est = kmv_estimate_from_state(merged, by=["event_type"], k=64)
         exact = ev.groupBy("event_type").agg(
             F.count_distinct("user_id").alias("n_exact")
         )
-        out = est.join(exact, "event_type").select(
+        return est.join(exact, "event_type").select(
             "event_type", "n_exact", "kmv_estimate"
         )
-        out = out.cache()
-        out.count()  # materialize before the temp dirs are reclaimed
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _sketch_stream_query(
+        spark, sf_dir, "kmv", {"by": ["event_type"], "k": 64}, estimate
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,17 @@ Reference → Spark mapping implemented here:
                                                      streaming checkpointLocation
 - sticky regime state machine (W17)               → ``applyInPandasWithState``
 
+Every ``run_*`` entry point starts its query through one helper,
+``_start_available_now`` (append mode, availableNow trigger, foreachBatch
+sink, checkpointLocation). Persisted state that outlives a query — the
+dedup/simhash indexes and the CMS/HLL/KMV sketches — is one protocol: a
+``b-base`` dir plus one batch-addressed ``b-%05d`` delta per micro-batch,
+merged on read and folded by :func:`compact_state` under a commit marker.
+The three sketch families share one table (``_SKETCH_FAMILIES``: build,
+merge, in-batch dedup key) and four functions over it:
+:func:`init_sketch_state`, :func:`sketch_delta_sink`,
+:func:`read_sketch_state` and :func:`run_sketch_stream`.
+
 Batch/stream parity is the test contract: the streaming windowed bars must
 equal the batch ``tick_ohlcv`` result for every window the watermark has
 closed (tests/test_streaming.py).
@@ -25,13 +36,42 @@ idempotent (upsert) sink.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from binance_futures_data_lake_spark.functions.scalars import round6
+from binance_futures_data_lake_spark.operators.sketch import (
+    cms_build,
+    hll_registers,
+    kmv_state,
+)
 from binance_futures_data_lake_spark.schemas import EVENTS_SCHEMA
 from binance_futures_data_lake_spark.sources.lake import upsert_partitions
+
+
+def _file_stream(
+    spark: SparkSession, schema, path: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+def _start_available_now(stream_df: DataFrame, checkpoint_dir: str, sink):
+    """Start ``stream_df`` in append mode into the foreachBatch ``sink``
+    with the availableNow trigger (process everything pending, then stop
+    — the cron-job shape of hourly_job.zsh); the checkpoint makes a
+    restart resume after the last committed micro-batch."""
+    return (
+        stream_df.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .foreachBatch(sink)
+        .start()
+    )
 
 
 def stream_events(
@@ -41,10 +81,7 @@ def stream_events(
 ) -> DataFrame:
     """File-source stream over events parquet (the micro-batch stand-in for
     the reference's REST poll loop — each new file ≙ one poll response)."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(path)
+    df = _file_stream(spark, EVENTS_SCHEMA, path, max_files_per_trigger)
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -202,14 +239,10 @@ def run_ohlcv_ingest(
     bars = windowed_ohlcv_stream(
         stream_events(spark, source_path), minutes, key_cols, watermark=watermark
     )
-    q = (
-        bars.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(foreach_batch_upsert(sink_root, keys=[*key_cols, "bucket_ts"]))
-        .start()
+    return _start_available_now(
+        bars, checkpoint_dir,
+        foreach_batch_upsert(sink_root, keys=[*key_cols, "bucket_ts"]),
     )
-    return q
 
 
 def session_stream(
@@ -284,18 +317,11 @@ def run_session_ingest(
     sess = session_stream(
         stream_events(spark, source_path), gap=gap, watermark=watermark
     )
-    return (
-        sess.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(
-            foreach_batch_upsert(
-                sink_root,
-                keys=("user_id", "session_start"),
-                part_ts_col="session_start",
-            )
-        )
-        .start()
+    return _start_available_now(
+        sess, checkpoint_dir,
+        foreach_batch_upsert(
+            sink_root, keys=("user_id", "session_start"), part_ts_col="session_start"
+        ),
     )
 
 
@@ -368,10 +394,7 @@ def stream_docs(
         T.StructField("lang", T.StringType()),
         T.StructField("source", T.StringType()),
     ])
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _file_stream(spark, schema, path, max_files_per_trigger)
 
 
 def doc_quality_stream(
@@ -426,14 +449,9 @@ def run_doc_quality_ingest(
     foreachBatch keyed upsert, availableNow trigger (process pending,
     stop) — identical shape to :func:`run_ohlcv_ingest`."""
     bars = doc_quality_stream(stream_docs(spark, source_path), watermark)
-    q = (
-        bars.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(foreach_batch_upsert(sink_root, keys=["lang", "bucket_ts"]))
-        .start()
+    return _start_available_now(
+        bars, checkpoint_dir, foreach_batch_upsert(sink_root, keys=["lang", "bucket_ts"])
     )
-    return q
 
 
 # ---------------------------------------------------------------------------
@@ -504,8 +522,9 @@ def _read_state(
 # delta dirs grow one per micro-batch forever and merge-on-read unions
 # every delta ever written — fine for the bounded availableNow replay
 # the tests pin, but a long-running deployment needs a periodic fold.
-# Because every family's merge is its own monoid (union for the dedup
-# indexes, sum for CMS, max for HLL, k-smallest-union for KMV), fold ==
+# Every family's merge is its own monoid (union for the dedup indexes,
+# sum for CMS, max for HLL, k-smallest-union for KMV), and a sketch
+# family's fold IS its reader's merge (``_SKETCH_FAMILIES``), so fold ==
 # read: compaction writes exactly what merge-on-read would compute.
 # ---------------------------------------------------------------------------
 
@@ -538,14 +557,11 @@ def _finish_compaction(spark: SparkSession, family_dir: str) -> bool:
         # holds the complete fold, so finish deleting the folded dirs it
         # supersedes, then promote it
         inp = fs.open(marker)
-        buf = bytearray()
-        while True:
-            b = inp.read()
-            if b < 0:
-                break
-            buf.append(b)
-        inp.close()
-        for name in json.loads(bytes(buf).decode("utf-8"))["folded"]:
+        try:
+            payload = jvm.org.apache.commons.io.IOUtils.toString(inp, "UTF-8")
+        finally:
+            inp.close()
+        for name in json.loads(payload)["folded"]:
             d = P(family_dir, name)
             if fs.exists(d):
                 fs.delete(d, True)
@@ -612,41 +628,51 @@ def compact_state_dir(
     return {"dir": family_dir, "folded": len(dirs)}
 
 
-def _fold_cms(df: DataFrame) -> DataFrame:
-    return df.groupBy("seed", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
+def _merge_cms(df: DataFrame, k: int) -> DataFrame:
+    by = [c for c in df.columns if c != "cnt"]
+    return df.groupBy(*by).agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
-def _fold_hll(df: DataFrame) -> DataFrame:
+def _merge_hll(df: DataFrame, k: int) -> DataFrame:
     by = [c for c in df.columns if c != "mx"]
     return df.groupBy(*by).agg(F.max("mx").alias("mx"))
 
 
-def _fold_kmv(k: int):
-    def fold(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
+def _merge_kmv(df: DataFrame, k: int) -> DataFrame:
+    from pyspark.sql import Window
 
-        by = [c for c in df.columns if c != "hv"]
-        w = Window.partitionBy(*by).orderBy("hv")
-        return (
-            df.distinct()
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .select(*df.columns)
-        )
-
-    return fold
+    by = [c for c in df.columns if c != "hv"]
+    w = Window.partitionBy(*by).orderBy("hv")
+    return (
+        df.distinct()
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select(*df.columns)
+    )
 
 
-#: subdir-name → fold. None = identity union (rows disjoint across
-#: deltas by the sinks' replay-exclusion / rep-uniqueness discipline).
-_STATE_FAMILY_FOLDS = {
-    "corpus": None,
-    "sig": None,
-    "exact": None,
-    "sim": None,
-    "cms": _fold_cms,
-    "hll": _fold_hll,
+#: sketch family → (build, merge, in-batch dedup key). ``build(df,
+#: value_col, **params)`` is the batch sketch (operators/sketch.py);
+#: ``merge(df, k)`` is its monoid over the union of ``b-*`` dirs — sum
+#: per (seed, bucket) for CMS counters, max per (group, bucket) for HLL
+#: registers, keep-k-smallest distinct hashes per group for KMV (``k``
+#: is ignored by the unbounded sum/max monoids). The group columns come
+#: from the state's own columns. The same ``merge`` is both the
+#: merge-on-read (:func:`read_sketch_state`) and the compaction fold
+#: (:func:`compact_state`), so fold == read by construction. Only CMS
+#: dedups redelivered rows within a batch: counters are the one
+#: duplicate-sensitive monoid (a repeated value cannot move a max or a
+#: k-smallest hash set).
+_SKETCH_FAMILIES = {
+    "cms": (cms_build, _merge_cms, "event_id"),
+    "hll": (hll_registers, _merge_hll, None),
+    "kmv": (kmv_state, _merge_kmv, None),
 }
+
+#: the disjoint-row dedup/simhash index families fold by plain union
+#: (rows are disjoint across deltas by the sinks' replay-exclusion and
+#: rep-uniqueness discipline)
+_UNION_FAMILIES = ("corpus", "sig", "exact", "sim")
 
 
 def compact_state(
@@ -659,15 +685,17 @@ def compact_state(
     """Compact every state family under ``state_root`` (the maintenance
     op of the streaming tier — VERDICT r8 missing #2): folds each known
     subdir's ``b-*`` deltas into one ``b-base`` with that family's
-    monoid. ``families=None`` autodetects the known subdirs present
-    (``corpus/sig/exact`` for dedup roots, ``sim``, ``cms``, ``hll``,
-    ``kmv``). ``kmv_k`` must be ≥ the ingest k (folding tighter loses
-    tail hashes a wider read would want; the reader re-ranks with its
-    own k anyway). See :func:`compact_state_dir` for the quiesce
-    contract and crash-safety protocol."""
+    monoid — the sketch families' ``merge`` from ``_SKETCH_FAMILIES``,
+    plain union for the index families. ``families=None`` autodetects
+    the known subdirs present (``corpus/sig/exact`` for dedup roots,
+    ``sim``, ``cms``, ``hll``, ``kmv``). ``kmv_k`` must be ≥ the ingest
+    k (folding tighter loses tail hashes a wider read would want; the
+    reader re-ranks with its own k anyway). See
+    :func:`compact_state_dir` for the quiesce contract and crash-safety
+    protocol."""
     import os
 
-    known = set(_STATE_FAMILY_FOLDS) | {"kmv"}
+    known = {*_UNION_FAMILIES, *_SKETCH_FAMILIES}
     if families is None:
         fs, jvm = _state_fs(spark, state_root)
         P = jvm.org.apache.hadoop.fs.Path
@@ -683,7 +711,9 @@ def compact_state(
     for fam in families:
         if fam not in known:
             raise ValueError(f"unknown state family {fam!r}; known: {sorted(known)}")
-        fold = _fold_kmv(kmv_k) if fam == "kmv" else _STATE_FAMILY_FOLDS[fam]
+        fold = None
+        if fam in _SKETCH_FAMILIES:
+            fold = functools.partial(_SKETCH_FAMILIES[fam][1], k=kmv_k)
         results[fam] = compact_state_dir(
             spark, os.path.join(state_root, fam), fold, before_batch
         )
@@ -859,19 +889,13 @@ def run_incremental_dedup_stream(
     trigger. ``maxFilesPerTrigger=1`` makes each staged crawl drop its
     own micro-batch, so cross-drop redelivery exercises the GROWN index
     — the state written by batch N decides batch N+1."""
-    docs = stream_docs(spark, source_path, max_files_per_trigger)
-    q = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(
-            incremental_dedup_sink(
-                state_root, out_root, threshold, num_hashes, bands, shingle_n
-            )
-        )
-        .start()
+    return _start_available_now(
+        stream_docs(spark, source_path, max_files_per_trigger),
+        checkpoint_dir,
+        incremental_dedup_sink(
+            state_root, out_root, threshold, num_hashes, bands, shingle_n
+        ),
     )
-    return q
 
 
 def init_simhash_state(
@@ -1019,311 +1043,108 @@ def run_incremental_simhash_stream(
     fingerprint index (see :func:`incremental_simhash_sink`), availableNow
     trigger. ``maxFilesPerTrigger=1`` makes each staged crawl drop its own
     micro-batch, so cross-drop redelivery exercises the GROWN index."""
-    docs = stream_docs(spark, source_path, max_files_per_trigger)
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(
-            incremental_simhash_sink(state_root, out_root, max_hamming, bits)
-        )
-        .start()
+    return _start_available_now(
+        stream_docs(spark, source_path, max_files_per_trigger),
+        checkpoint_dir,
+        incremental_simhash_sink(state_root, out_root, max_hamming, bits),
     )
 
 
-def init_cms_state(
+# ---------------------------------------------------------------------------
+# Streaming sketch tier: seeded sketch state + one batch-addressed delta
+# sketch per micro-batch, merged on read. Every family in
+# ``_SKETCH_FAMILIES`` is a commutative monoid, so ingest never reads
+# state and exactly-once is plain path idempotence.
+# ---------------------------------------------------------------------------
+
+
+def init_sketch_state(
+    family: str,
     corpus: DataFrame,
     state_root: str,
     value_col: str = "user_id",
-    depth: int = 3,
-    width: int = 32,
+    **params,
 ) -> None:
-    """Seed the persistent Count–Min state from the existing stream
-    history: one ``depth × width`` counter table under
-    ``state_root/cms/b-base``. Ingest batches add batch-addressed delta
-    sketches (same dir discipline as :func:`init_dedup_state`); because
-    CMS counters are trivially mergeable (sum per (seed, bucket)), the
-    live sketch is a MERGE-ON-READ over the dirs — ingest never reads
-    state at all."""
+    """Seed the persistent ``family`` sketch state from the existing
+    stream history: ``build(corpus, value_col, **params)`` under
+    ``state_root/<family>/b-base`` (``params``: ``depth, width`` for
+    CMS, ``by, m`` for HLL, ``by, k`` for KMV). Ingest batches add
+    batch-addressed delta sketches beside it (the dir discipline of
+    :func:`init_dedup_state`)."""
     import os
 
-    from binance_futures_data_lake_spark.operators.sketch import cms_build
-
-    cms_build(corpus, value_col, depth, width).write.mode("overwrite").parquet(
-        os.path.join(state_root, "cms", "b-base")
+    build = _SKETCH_FAMILIES[family][0]
+    build(corpus, value_col, **params).write.mode("overwrite").parquet(
+        os.path.join(state_root, family, "b-base")
     )
 
 
-def cms_delta_sink(
+def sketch_delta_sink(
+    family: str,
     state_root: str,
     value_col: str = "user_id",
-    depth: int = 3,
-    width: int = 32,
-    id_col: str = "event_id",
+    **params,
 ):
-    """foreachBatch sink for :func:`run_cms_stream` — the streaming twin
-    of the batch CMS build (operators/sketch.py cms_build), and the
-    simplest exactly-once shape in the streaming family BECAUSE the
-    sketch is a commutative monoid: each micro-batch writes its OWN
-    delta sketch to a batch-addressed path (``cms/b-%05d``) and nothing
-    ever reads prior state during ingest. A crash-replayed batch
-    recomputes the identical ≤ depth·width-row delta and overwrites the
-    same path — idempotent by construction, with no replay-exclusion
-    machinery needed (contrast :func:`incremental_dedup_sink`, whose
-    state reads must exclude the current batch). In-batch at-least-once
-    redelivery collapses via ``dropDuplicates(id_col)``; cross-file
-    delivery is exactly-once from the file source itself."""
+    """foreachBatch sink for :func:`run_sketch_stream` — the streaming
+    twin of the batch sketch build: each micro-batch writes its OWN delta
+    sketch to ``<family>/b-%05d`` and nothing ever reads prior state
+    during ingest. A crash-replayed batch recomputes the identical delta
+    and overwrites the same path — idempotent by construction, with no
+    replay-exclusion machinery (contrast :func:`incremental_dedup_sink`,
+    whose state reads must exclude the current batch). In-batch
+    at-least-once redelivery collapses on the family's dedup key (CMS:
+    ``event_id``); HLL and KMV need none. Cross-file delivery is
+    exactly-once from the file source itself."""
     import os
 
-    from binance_futures_data_lake_spark.operators.sketch import cms_build
+    build, _, dedup_key = _SKETCH_FAMILIES[family]
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bid = int(batch_id)
-        b = batch_df.dropDuplicates([id_col])
-        cms_build(b, value_col, depth, width).write.mode("overwrite").parquet(
-            os.path.join(state_root, "cms", f"b-{bid:05d}")
+        if dedup_key is not None:
+            batch_df = batch_df.dropDuplicates([dedup_key])
+        build(batch_df, value_col, **params).write.mode("overwrite").parquet(
+            os.path.join(state_root, family, f"b-{int(batch_id):05d}")
         )
 
     return _sink
 
 
-def read_cms_state(
+def read_sketch_state(
+    family: str,
     spark: SparkSession,
     state_root: str,
+    k: int = 64,
 ) -> DataFrame:
-    """Merge-on-read of the persisted CMS: sum counters per
-    (seed, bucket) across ``b-base`` and every batch delta. Because the
-    sketch is a sum monoid, merged-counters == the counters of a single
-    batch build over base ∪ all delivered rows — the mergeability
-    theorem IS the stream/batch parity contract (asserted exactly in
-    tests and by the driver oracle)."""
+    """Merge-on-read of the persisted ``family`` sketch: the family's
+    monoid over ``b-base`` and every batch delta (``k``: the KMV keep
+    size). Because the sketch is a monoid, the merged state == ONE batch
+    build over base ∪ all delivered rows — the mergeability theorem IS
+    the stream/batch parity contract (asserted exactly in tests and by
+    the streaming queries' DuckDB oracles)."""
     import os
 
-    sk = _read_state(spark, os.path.join(state_root, "cms"))
-    return sk.groupBy("seed", "bucket").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
+    merge = _SKETCH_FAMILIES[family][1]
+    return merge(_read_state(spark, os.path.join(state_root, family)), k)
 
 
-def run_cms_stream(
+def run_sketch_stream(
+    family: str,
     spark: SparkSession,
     source_path: str,
     state_root: str,
     checkpoint_dir: str,
     value_col: str = "user_id",
-    depth: int = 3,
-    width: int = 32,
     max_files_per_trigger: int | None = 1,
+    **params,
 ):
-    """Event file stream → per-batch CMS delta sketches under
-    ``state_root/cms`` (see :func:`cms_delta_sink`), availableNow
-    trigger — the streaming heavy-hitters ingest: constant state per
-    batch (≤ depth·width rows), merge-on-read, no stateful operator and
-    no watermark needed because the sketch is order-insensitive."""
-    ev = stream_events(spark, source_path, max_files_per_trigger)
-    return (
-        ev.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(cms_delta_sink(state_root, value_col, depth, width))
-        .start()
-    )
-
-
-def init_hll_state(
-    corpus: DataFrame,
-    state_root: str,
-    value_col: str = "user_id",
-    by: Sequence[str] = ("event_type",),
-    m: int = 64,
-) -> None:
-    """Seed the persistent HyperLogLog state from the existing stream
-    history: sparse registers (by-cols + bucket + max-rho) under
-    ``state_root/hll/b-base`` — the CMS dir discipline
-    (:func:`init_cms_state`) applied to the distinct sketch. Registers
-    are a MAX monoid (operators/sketch.py hll_registers), so the live
-    sketch is a merge-on-read max and ingest never reads state."""
-    import os
-
-    from binance_futures_data_lake_spark.operators.sketch import hll_registers
-
-    hll_registers(corpus, value_col, by, m).write.mode("overwrite").parquet(
-        os.path.join(state_root, "hll", "b-base")
-    )
-
-
-def hll_delta_sink(
-    state_root: str,
-    value_col: str = "user_id",
-    by: Sequence[str] = ("event_type",),
-    m: int = 64,
-):
-    """foreachBatch sink for :func:`run_hll_stream` — the streaming twin
-    of the batch HLL build, exactly the :func:`cms_delta_sink` shape with
-    the max monoid for the sum monoid: each micro-batch writes its OWN
-    ≤ |groups|·m-row delta register set to a batch-addressed path
-    (``hll/b-%05d``); a crash-replayed batch recomputes the identical
-    delta and overwrites the same path — idempotent by construction.
-    In-batch at-least-once redelivery needs NO dropDuplicates at all:
-    registers are duplicate-insensitive (max of a max), one step simpler
-    than CMS counters."""
-    import os
-
-    from binance_futures_data_lake_spark.operators.sketch import hll_registers
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bid = int(batch_id)
-        hll_registers(batch_df, value_col, by, m).write.mode("overwrite").parquet(
-            os.path.join(state_root, "hll", f"b-{bid:05d}")
-        )
-
-    return _sink
-
-
-def read_hll_state(
-    spark: SparkSession,
-    state_root: str,
-    by: Sequence[str] = ("event_type",),
-) -> DataFrame:
-    """Merge-on-read of the persisted HLL: max register per
-    (by-cols, bucket) across ``b-base`` and every batch delta. Because
-    registers are a max monoid, merged registers == the registers of ONE
-    batch build over base ∪ all delivered rows — the mergeability
-    theorem IS the stream/batch parity contract (the
-    :func:`read_cms_state` argument, duplicate-insensitive as a bonus:
-    even redelivered rows cannot move a max)."""
-    import os
-
-    reg = _read_state(spark, os.path.join(state_root, "hll"))
-    return reg.groupBy(*by, "bucket").agg(F.max("mx").alias("mx"))
-
-
-def run_hll_stream(
-    spark: SparkSession,
-    source_path: str,
-    state_root: str,
-    checkpoint_dir: str,
-    value_col: str = "user_id",
-    by: Sequence[str] = ("event_type",),
-    m: int = 64,
-    max_files_per_trigger: int | None = 1,
-):
-    """Event file stream → per-batch HLL delta registers under
-    ``state_root/hll`` (see :func:`hll_delta_sink`), availableNow
-    trigger — the streaming distinct-count ingest: constant state per
-    batch (≤ |groups|·m rows), merge-on-read, no stateful operator and
-    no watermark because max is order- AND duplicate-insensitive."""
-    ev = stream_events(spark, source_path, max_files_per_trigger)
-    return (
-        ev.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(hll_delta_sink(state_root, value_col, by, m))
-        .start()
-    )
-
-
-def init_kmv_state(
-    corpus: DataFrame,
-    state_root: str,
-    value_col: str = "user_id",
-    by: Sequence[str] = ("event_type",),
-    k: int = 64,
-) -> None:
-    """Seed the persistent KMV state from the existing stream history:
-    the k smallest distinct value hashes per group under
-    ``state_root/kmv/b-base`` — the CMS/HLL dir discipline applied to
-    the third sketch. KMV sets merge by union + keep-k-smallest
-    (operators/sketch.py kmv_state), so the live sketch is a
-    merge-on-read rank and ingest never reads state."""
-    import os
-
-    from binance_futures_data_lake_spark.operators.sketch import kmv_state
-
-    kmv_state(corpus, value_col, by, k).write.mode("overwrite").parquet(
-        os.path.join(state_root, "kmv", "b-base")
-    )
-
-
-def kmv_delta_sink(
-    state_root: str,
-    value_col: str = "user_id",
-    by: Sequence[str] = ("event_type",),
-    k: int = 64,
-):
-    """foreachBatch sink for :func:`run_kmv_stream` — the streaming twin
-    of the batch KMV build, the :func:`cms_delta_sink` shape with the
-    k-smallest-union monoid: each micro-batch writes its OWN
-    ≤ |groups|·k-row delta state to a batch-addressed path
-    (``kmv/b-%05d``); a crash-replayed batch recomputes the identical
-    delta and overwrites the same path — idempotent by construction.
-    Like HLL (and unlike CMS counters), redelivered rows need NO
-    dropDuplicates: the same value hashes to the same hv and the
-    distinct collapses it."""
-    import os
-
-    from binance_futures_data_lake_spark.operators.sketch import kmv_state
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bid = int(batch_id)
-        kmv_state(batch_df, value_col, by, k).write.mode("overwrite").parquet(
-            os.path.join(state_root, "kmv", f"b-{bid:05d}")
-        )
-
-    return _sink
-
-
-def read_kmv_state(
-    spark: SparkSession,
-    state_root: str,
-    by: Sequence[str] = ("event_type",),
-    k: int = 64,
-) -> DataFrame:
-    """Merge-on-read of the persisted KMV: union ``b-base`` + every
-    delta, dedup hashes, keep the k smallest per group. Mergeability —
-    "the k smallest of a union of per-part k-smallest sets ARE the k
-    smallest of the union" — makes merged state == one batch build over
-    base ∪ all delivered rows; that theorem IS the stream/batch parity
-    contract, as with the CMS and HLL tiers."""
-    import os
-
-    from pyspark.sql import Window
-
-    st = _read_state(spark, os.path.join(state_root, "kmv")).distinct()
-    w = Window.partitionBy(*by).orderBy("hv")
-    return (
-        st.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(*by, "hv")
-    )
-
-
-def run_kmv_stream(
-    spark: SparkSession,
-    source_path: str,
-    state_root: str,
-    checkpoint_dir: str,
-    value_col: str = "user_id",
-    by: Sequence[str] = ("event_type",),
-    k: int = 64,
-    max_files_per_trigger: int | None = 1,
-):
-    """Event file stream → per-batch KMV delta states under
-    ``state_root/kmv`` (see :func:`kmv_delta_sink`), availableNow
-    trigger — constant state per batch (≤ |groups|·k rows),
-    merge-on-read, no stateful operator and no watermark: the
-    k-smallest-union is order- and duplicate-insensitive."""
-    ev = stream_events(spark, source_path, max_files_per_trigger)
-    return (
-        ev.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(kmv_delta_sink(state_root, value_col, by, k))
-        .start()
+    """Event file stream → per-batch ``family`` delta sketches under
+    ``state_root/<family>`` (see :func:`sketch_delta_sink`), availableNow
+    trigger: constant state per batch, merge-on-read, no stateful
+    operator and no watermark, because the sketch is order-insensitive."""
+    return _start_available_now(
+        stream_events(spark, source_path, max_files_per_trigger),
+        checkpoint_dir,
+        sketch_delta_sink(family, state_root, value_col, **params),
     )

@@ -1688,16 +1688,10 @@ def streaming_main() -> None:
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     spark = get_spark("bfdl-streaming-probe")
     from binance_futures_data_lake_spark.streaming.pipeline import (
-        cms_delta_sink,
         compact_state,
-        hll_delta_sink,
-        init_cms_state,
-        init_hll_state,
-        init_kmv_state,
-        kmv_delta_sink,
-        read_cms_state,
-        read_hll_state,
-        read_kmv_state,
+        init_sketch_state,
+        read_sketch_state,
+        sketch_delta_sink,
     )
 
     def batch_frame(bid: int):
@@ -1727,18 +1721,18 @@ def streaming_main() -> None:
             F.lit("u").alias("user_id"),
             F.lit("t0").alias("event_type"),
         )
-        init_cms_state(empty, root)
-        init_hll_state(empty, root)
-        init_kmv_state(empty, root, k=1024)
-        sinks = {
-            "cms": cms_delta_sink(root),
-            "hll": hll_delta_sink(root),
-            "kmv": kmv_delta_sink(root, k=1024),
+        params = {
+            "cms": {"depth": 3, "width": 32},
+            "hll": {"by": ["event_type"], "m": 64},
+            "kmv": {"by": ["event_type"], "k": 1024},
         }
+        for fam, p in params.items():
+            init_sketch_state(fam, empty, root, **p)
+        sinks = [sketch_delta_sink(fam, root, **p) for fam, p in params.items()]
         t0 = time.perf_counter()
         for bid in range(n_batches):
             b = batch_frame(bid)
-            for s in sinks.values():
+            for s in sinks:
                 s(b, bid)
         ingest_sec = round(time.perf_counter() - t0, 2)
         out["ingest_sec_all_families"] = ingest_sec
@@ -1757,19 +1751,19 @@ def streaming_main() -> None:
             t0 = time.perf_counter()
             cms = {
                 (r.seed, r.bucket): r.cnt
-                for r in read_cms_state(spark, root).collect()
+                for r in read_sketch_state("cms", spark, root).collect()
             }
             t["cms_read_sec"] = round(time.perf_counter() - t0, 2)
             t0 = time.perf_counter()
             hll = {
                 (r.event_type, r.bucket): r.mx
-                for r in read_hll_state(spark, root).collect()
+                for r in read_sketch_state("hll", spark, root).collect()
             }
             t["hll_read_sec"] = round(time.perf_counter() - t0, 2)
             t0 = time.perf_counter()
             kmv = sorted(
                 (r.event_type, r.hv)
-                for r in read_kmv_state(spark, root, k=1024).collect()
+                for r in read_sketch_state("kmv", spark, root, k=1024).collect()
             )
             t["kmv_read_sec"] = round(time.perf_counter() - t0, 2)
             return {"walls": t, "cms": cms, "hll": hll, "kmv": kmv}

@@ -15,19 +15,13 @@ from pyspark.sql import functions as F
 from binance_futures_data_lake_spark.streaming.pipeline import (
     compact_state,
     compact_state_dir,
-    init_cms_state,
     init_dedup_state,
-    init_hll_state,
-    init_kmv_state,
     init_simhash_state,
-    cms_delta_sink,
-    hll_delta_sink,
-    kmv_delta_sink,
+    init_sketch_state,
     incremental_dedup_sink,
     incremental_simhash_sink,
-    read_cms_state,
-    read_hll_state,
-    read_kmv_state,
+    read_sketch_state,
+    sketch_delta_sink,
 )
 
 
@@ -48,13 +42,13 @@ def test_compact_sketch_families_fold_is_invisible(spark, tmp_path, events):
     b1 = events.filter("event_id % 4 = 1")
     b2 = events.filter("event_id % 4 = 2")
     b3 = events.filter("event_id % 4 = 3")
-    init_cms_state(seed, root, value_col="user_id", depth=3, width=16)
-    init_hll_state(seed, root, value_col="user_id", by=["event_type"], m=64)
-    init_kmv_state(seed, root, value_col="user_id", by=["event_type"], k=64)
+    init_sketch_state("cms", seed, root, value_col="user_id", depth=3, width=16)
+    init_sketch_state("hll", seed, root, value_col="user_id", by=["event_type"], m=64)
+    init_sketch_state("kmv", seed, root, value_col="user_id", by=["event_type"], k=64)
     sinks = [
-        cms_delta_sink(root, "user_id", depth=3, width=16),
-        hll_delta_sink(root, "user_id", by=["event_type"], m=64),
-        kmv_delta_sink(root, "user_id", by=["event_type"], k=64),
+        sketch_delta_sink("cms", root, "user_id", depth=3, width=16),
+        sketch_delta_sink("hll", root, "user_id", by=["event_type"], m=64),
+        sketch_delta_sink("kmv", root, "user_id", by=["event_type"], k=64),
     ]
     for s in sinks:
         s(b1, 0)
@@ -62,11 +56,11 @@ def test_compact_sketch_families_fold_is_invisible(spark, tmp_path, events):
 
     def snap():
         return (
-            {(r.seed, r.bucket): r.cnt for r in read_cms_state(spark, root).collect()},
+            {(r.seed, r.bucket): r.cnt for r in read_sketch_state("cms", spark, root).collect()},
             {(r.event_type, r.bucket): r.mx
-             for r in read_hll_state(spark, root, by=["event_type"]).collect()},
+             for r in read_sketch_state("hll", spark, root).collect()},
             {(r.event_type, r.hv)
-             for r in read_kmv_state(spark, root, by=["event_type"], k=64).collect()},
+             for r in read_sketch_state("kmv", spark, root, k=64).collect()},
         )
 
     before = snap()
@@ -88,12 +82,12 @@ def test_compact_sketch_families_fold_is_invisible(spark, tmp_path, events):
         for r in cms_build(events, "user_id", 3, 16).collect()
     }
     assert {
-        (r.seed, r.bucket): r.cnt for r in read_cms_state(spark, root).collect()
+        (r.seed, r.bucket): r.cnt for r in read_sketch_state("cms", spark, root).collect()
     } == direct
     # compacting again folds the new delta too and changes nothing
     compact_state(spark, root)
     assert {
-        (r.seed, r.bucket): r.cnt for r in read_cms_state(spark, root).collect()
+        (r.seed, r.bucket): r.cnt for r in read_sketch_state("cms", spark, root).collect()
     } == direct
 
 
@@ -180,12 +174,12 @@ def test_compact_crash_recovery_completes_on_read(spark, tmp_path, events):
     no row lost, no row doubled."""
     root = str(tmp_path / "state")
     seed = events.filter("event_id % 3 = 0")
-    init_cms_state(seed, root, value_col="user_id", depth=3, width=16)
-    sink = cms_delta_sink(root, "user_id", depth=3, width=16)
+    init_sketch_state("cms", seed, root, value_col="user_id", depth=3, width=16)
+    sink = sketch_delta_sink("cms", root, "user_id", depth=3, width=16)
     sink(events.filter("event_id % 3 = 1"), 0)
     sink(events.filter("event_id % 3 = 2"), 1)
     direct = {
-        (r.seed, r.bucket): r.cnt for r in read_cms_state(spark, root).collect()
+        (r.seed, r.bucket): r.cnt for r in read_sketch_state("cms", spark, root).collect()
     }
     fam = os.path.join(root, "cms")
     dirs = ["b-00000", "b-00001", "b-base"]
@@ -202,21 +196,21 @@ def test_compact_crash_recovery_completes_on_read(spark, tmp_path, events):
     shutil.rmtree(os.path.join(fam, "b-00000"))
     # next read self-heals: finishes deletes, promotes tmp, drops marker
     assert {
-        (r.seed, r.bucket): r.cnt for r in read_cms_state(spark, root).collect()
+        (r.seed, r.bucket): r.cnt for r in read_sketch_state("cms", spark, root).collect()
     } == direct
     assert sorted(os.listdir(fam)) == ["b-base"]
     # crash AFTER promote (marker only): recovery must not touch b-base
     with open(os.path.join(fam, "compact-commit"), "w") as f:
         json.dump({"folded": dirs}, f)
     assert {
-        (r.seed, r.bucket): r.cnt for r in read_cms_state(spark, root).collect()
+        (r.seed, r.bucket): r.cnt for r in read_sketch_state("cms", spark, root).collect()
     } == direct
     assert sorted(os.listdir(fam)) == ["b-base"]
 
 
 def test_compact_noop_and_unknown_family(spark, tmp_path, events):
     root = str(tmp_path / "state")
-    init_cms_state(events, root, value_col="user_id", depth=3, width=16)
+    init_sketch_state("cms", events, root, value_col="user_id", depth=3, width=16)
     # single b-base: nothing to fold
     assert compact_state(spark, root) == {
         "cms": {"dir": os.path.join(root, "cms"), "folded": 0}
@@ -226,12 +220,12 @@ def test_compact_noop_and_unknown_family(spark, tmp_path, events):
     # nonexistent root: empty result, no error
     assert compact_state(spark, str(tmp_path / "missing")) == {}
     # kmv folded with a WIDER k keeps enough tail for the reader's k
-    init_kmv_state(events, root, value_col="user_id", by=["event_type"], k=8)
-    sink = kmv_delta_sink(root, "user_id", by=["event_type"], k=8)
+    init_sketch_state("kmv", events, root, value_col="user_id", by=["event_type"], k=8)
+    sink = sketch_delta_sink("kmv", root, "user_id", by=["event_type"], k=8)
     sink(events.filter("event_id % 2 = 1"), 0)
     before = {
         (r.event_type, r.hv)
-        for r in read_kmv_state(spark, root, by=["event_type"], k=8).collect()
+        for r in read_sketch_state("kmv", spark, root, k=8).collect()
     }
     compact_state_dir(
         spark, os.path.join(root, "kmv"),
@@ -239,7 +233,7 @@ def test_compact_noop_and_unknown_family(spark, tmp_path, events):
     )  # identity fold: union only, still correct (reader re-ranks)
     assert {
         (r.event_type, r.hv)
-        for r in read_kmv_state(spark, root, by=["event_type"], k=8).collect()
+        for r in read_sketch_state("kmv", spark, root, k=8).collect()
     } == before
 
 

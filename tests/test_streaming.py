@@ -116,6 +116,26 @@ def test_ingest_restart_is_idempotent(spark, source_dir, tmp_path):
     assert got.select("event_type", "bucket_ts").distinct().count() == n
 
 
+def test_failed_stream_leaves_no_work_dir(spark, tmp_path, monkeypatch):
+    """A registered streaming query whose stream fails must still remove
+    the temp dir it staged its chunks, state and checkpoint in."""
+    import tempfile
+
+    from binance_futures_data_lake_spark.plans.driver_queries import QUERIES
+    from binance_futures_data_lake_spark.streaming import pipeline
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected stream failure")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(pipeline, "run_ohlcv_ingest", fail)
+    monkeypatch.setattr(pipeline, "run_session_ingest", fail)
+    for name in ("streaming_ohlcv_bars", "streaming_sessionization"):
+        with pytest.raises(RuntimeError, match="injected stream failure"):
+            QUERIES[name](spark, SF)
+        assert os.listdir(tmp_path) == [], name
+
+
 def test_dedup_stream_drops_replays(spark, tmp_path):
     src = tmp_path / "dedup_src"
     src.mkdir()
@@ -528,26 +548,26 @@ def test_cms_stream_merge_equals_batch_and_replay_idempotent(spark, tmp_path):
 
     from binance_futures_data_lake_spark.operators.sketch import cms_build
     from binance_futures_data_lake_spark.streaming.pipeline import (
-        cms_delta_sink,
-        init_cms_state,
-        read_cms_state,
+        init_sketch_state,
+        read_sketch_state,
+        sketch_delta_sink,
     )
 
     rows = [(i, i % 7) for i in range(500)]
     all_df = spark.createDataFrame(rows, "event_id long, user_id long")
     state = str(tmp_path / "state")
-    init_cms_state(
-        all_df.filter("event_id % 3 = 0"), state,
+    init_sketch_state(
+        "cms", all_df.filter("event_id % 3 = 0"), state,
         value_col="user_id", depth=3, width=16,
     )
-    sink = cms_delta_sink(state, "user_id", depth=3, width=16)
+    sink = sketch_delta_sink("cms", state, "user_id", depth=3, width=16)
     b1 = all_df.filter("event_id % 3 = 1")
     b2 = all_df.filter("event_id % 3 = 2")
     sink(b1, 0)
     sink(b2, 1)
     merged = {
         (r.seed, r.bucket): r.cnt
-        for r in read_cms_state(spark, state).collect()
+        for r in read_sketch_state("cms", spark, state).collect()
     }
     direct = {
         (r.seed, r.bucket): r.cnt
@@ -560,14 +580,14 @@ def test_cms_stream_merge_equals_batch_and_replay_idempotent(spark, tmp_path):
     sink(b2, 1)
     again = {
         (r.seed, r.bucket): r.cnt
-        for r in read_cms_state(spark, state).collect()
+        for r in read_sketch_state("cms", spark, state).collect()
     }
     assert again == direct
     # in-batch at-least-once redelivery collapses on event_id
     sink(b2.union(b2.limit(50)), 1)
     assert {
         (r.seed, r.bucket): r.cnt
-        for r in read_cms_state(spark, state).collect()
+        for r in read_sketch_state("cms", spark, state).collect()
     } == direct
     # batch dirs are addressed: b-base + one per batch id
     assert sorted(os.listdir(os.path.join(state, "cms"))) == [
@@ -584,24 +604,24 @@ def test_hll_stream_merge_equals_batch_and_duplicate_insensitive(spark, tmp_path
         hll_registers,
     )
     from binance_futures_data_lake_spark.streaming.pipeline import (
-        hll_delta_sink,
-        init_hll_state,
-        read_hll_state,
+        init_sketch_state,
+        read_sketch_state,
+        sketch_delta_sink,
     )
 
     rows = [(i, i % 97, "a" if i % 2 == 0 else "b") for i in range(600)]
     all_df = spark.createDataFrame(rows, "event_id long, user_id long, event_type string")
     state = str(tmp_path / "state")
-    init_hll_state(
-        all_df.filter("event_id % 3 = 0"), state,
+    init_sketch_state(
+        "hll", all_df.filter("event_id % 3 = 0"), state,
         value_col="user_id", by=["event_type"], m=64,
     )
-    sink = hll_delta_sink(state, "user_id", by=["event_type"], m=64)
+    sink = sketch_delta_sink("hll", state, "user_id", by=["event_type"], m=64)
     b1 = all_df.filter("event_id % 3 = 1")
     b2 = all_df.filter("event_id % 3 = 2")
     sink(b1, 0)
     sink(b2, 1)
-    merged_df = read_hll_state(spark, state, by=["event_type"])
+    merged_df = read_sketch_state("hll", spark, state)
     merged = {
         (r.event_type, r.bucket): r.mx for r in merged_df.collect()
     }
@@ -631,7 +651,7 @@ def test_hll_stream_merge_equals_batch_and_duplicate_insensitive(spark, tmp_path
     sink(b2.union(b2.limit(50)), 1)
     assert {
         (r.event_type, r.bucket): r.mx
-        for r in read_hll_state(spark, state, by=["event_type"]).collect()
+        for r in read_sketch_state("hll", spark, state).collect()
     } == direct
     assert sorted(os.listdir(os.path.join(state, "hll"))) == [
         "b-00000", "b-00001", "b-base",
@@ -646,24 +666,24 @@ def test_kmv_stream_merge_equals_batch_and_duplicate_insensitive(spark, tmp_path
         kmv_state,
     )
     from binance_futures_data_lake_spark.streaming.pipeline import (
-        init_kmv_state,
-        kmv_delta_sink,
-        read_kmv_state,
+        init_sketch_state,
+        read_sketch_state,
+        sketch_delta_sink,
     )
 
     rows = [(i, i % 211, "a" if i % 2 == 0 else "b") for i in range(600)]
     all_df = spark.createDataFrame(rows, "event_id long, user_id long, event_type string")
     state = str(tmp_path / "state")
-    init_kmv_state(
-        all_df.filter("event_id % 3 = 0"), state,
+    init_sketch_state(
+        "kmv", all_df.filter("event_id % 3 = 0"), state,
         value_col="user_id", by=["event_type"], k=64,
     )
-    sink = kmv_delta_sink(state, "user_id", by=["event_type"], k=64)
+    sink = sketch_delta_sink("kmv", state, "user_id", by=["event_type"], k=64)
     b1 = all_df.filter("event_id % 3 = 1")
     b2 = all_df.filter("event_id % 3 = 2")
     sink(b1, 0)
     sink(b2, 1)
-    merged_df = read_kmv_state(spark, state, by=["event_type"], k=64)
+    merged_df = read_sketch_state("kmv", spark, state, k=64)
     merged = {(r.event_type, r.hv) for r in merged_df.collect()}
     direct = {
         (r.event_type, r.hv)
@@ -685,7 +705,7 @@ def test_kmv_stream_merge_equals_batch_and_duplicate_insensitive(spark, tmp_path
     sink(b2.union(b2.limit(50)), 1)
     assert {
         (r.event_type, r.hv)
-        for r in read_kmv_state(spark, state, by=["event_type"], k=64).collect()
+        for r in read_sketch_state("kmv", spark, state, k=64).collect()
     } == direct
     assert sorted(os.listdir(os.path.join(state, "kmv"))) == [
         "b-00000", "b-00001", "b-base",

@@ -872,7 +872,7 @@ def test_widen_narrow_scan_guard(spark):
     small to fill the scheduler's width, must NOT appear when the input
     could fill it (simulated by shrinking maxPartitionBytes so
     width x split <= the relation's size estimate — the same inequality
-    a 100 TB scan fails), and conf 0 must disable the widening."""
+    a 100 TB scan fails)."""
     import os
 
     from binance_futures_data_lake_spark.operators.textdedup import (
@@ -890,19 +890,13 @@ def test_widen_narrow_scan_guard(spark):
         # logical optimized plan spells round-robin as `Repartition N, true`
         return "Repartition " in df._jdf.queryExecution().optimizedPlan().toString()
 
-    conf, split = "spark.bfdl.text.minPartitions", "spark.sql.files.maxPartitionBytes"
+    split = "spark.sql.files.maxPartitionBytes"
     old_split = spark.conf.get(split)
     try:
         # narrow input, width 8 => widened
-        spark.conf.set(conf, "8")
         assert has_rr(widen_narrow_scan(docs))
         # "wide" input: width x split covered by the relation's size
         spark.conf.set(split, "1")
         assert not has_rr(widen_narrow_scan(docs))
-        spark.conf.set(split, old_split)
-        # 0 disables
-        spark.conf.set(conf, "0")
-        assert not has_rr(widen_narrow_scan(docs))
     finally:
-        spark.conf.unset(conf)
         spark.conf.set(split, old_split)
