@@ -19,8 +19,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from binance_futures_data_lake_spark import obs  # noqa: E402
 from binance_futures_data_lake_spark.plans import driver_queries as DQ  # noqa: E402
-from binance_futures_data_lake_spark.session import get_spark  # noqa: E402
+from binance_futures_data_lake_spark.session import BENCH_CONFS, get_spark  # noqa: E402
 
 # Representative of the operator families; excludes the quadratic-pair
 # research queries (word_jaccard_pairs) that are correctness-only surface.
@@ -116,14 +117,13 @@ LLM_PIPELINE = [
 ]
 
 
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def _column(runs: dict[str, dict], key: str) -> dict[str, float]:
+    return {n: round(r[key], 4) for n, r in runs.items()}
 
 
-def _timed(fn) -> float:
-    t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
+def _record(run: dict) -> dict:
+    """A run record without its per-stage rows, for BENCH_FULL.json."""
+    return {k: v for k, v in run.items() if k != "stage_rows"}
 
 
 #: Canary floor resolution (r9, ADVICE r8 — no hardcoded host constant):
@@ -242,39 +242,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     canary = load_canary(sf_dir)
-    # Size the session to the benchmark SF, the same call an operator makes
-    # on any deployment: at sf0.1 (~600k-row fact table, <100 MB inputs) a
-    # shuffle needs single-digit partitions, and AQE's per-stage
-    # re-optimization barrier costs more than the skew/coalescing it buys —
-    # measured ~35% of suite wall. Cluster deployments and the verification
-    # driver keep the scale-safe defaults (AQE on; see session.RUNTIME_CONFS).
-    # files.maxPartitionBytes: the default 128 MB split is right when files
-    # ARE 128 MB (the 100 TB deployment); at this bench's ~2-10 MB inputs it
-    # makes every scan a 1-2 task stage while DuckDB parallelizes row groups
-    # across all cores. 1 MB splits restore scan parallelism — the same
-    # knob a cluster job tunes to its input:core ratio (measured ~10-20%
-    # of suite wall here).
-    # constraintPropagation: ~40 ms/query of optimizer constraint inference
-    # that buys nothing on these plans (no inferred-filter wins; measured
-    # ~6% of suite wall). FAIR scheduling only matters for the concurrent
-    # suite-wall metric below — serial passes are unaffected.
-    spark = get_spark(
-        "bfdl-bench",
-        shuffle_partitions=8,
-        overrides={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.files.maxPartitionBytes": "1m",
-            "spark.sql.files.openCostInBytes": "65536",
-            "spark.sql.constraintPropagation.enabled": "false",
-            "spark.scheduler.mode": "FAIR",
-        },
-    )
+    spark = get_spark("bfdl-bench", overrides=BENCH_CONFS)
 
     # warmup: JVM, codegen, parquet footers — and the Python/Arrow worker
     # pool (first applyInPandas pays ~2 s one-time worker startup that would
     # otherwise be billed to the first pandas-kernel query)
-    force(DQ.QUERIES["ohlcv_5m"](spark, sf_dir))
-    force(DQ.QUERIES["ema_per_user"](spark, sf_dir))
+    obs.force(DQ.QUERIES["ohlcv_5m"](spark, sf_dir))
+    obs.force(DQ.QUERIES["ema_per_user"](spark, sf_dir))
 
     # Measured per-job scheduling floor (VERDICT r12 #2/#3): the minimal
     # Spark job this session can run — a count over a 1-row cached frame —
@@ -284,9 +258,7 @@ def main() -> None:
     # diffing); this field makes the floor part of the artifact.
     floor_df = spark.range(0, 1, 1, 1).cache()  # ONE partition: the
     floor_df.count()                            # minimal 1-task job
-    spark_job_floor = min(
-        _timed(lambda: floor_df.count()) for _ in range(7)
-    )
+    spark_job_floor = obs.run(spark, "job_floor", floor_df.count, repeat=7)["best_s"]
     floor_df.unpersist()
 
     # Two passes per query. The first pass pays one-time Catalyst planning +
@@ -295,34 +267,31 @@ def main() -> None:
     # over TBs. The steady-state (second) pass is the headline: it measures
     # the actual scan/shuffle/compute work at this SF. Both are reported.
     cold: dict[str, float] = {}
-    warm: dict[str, float] = {}
     t_all = time.perf_counter()
     for name in HEADLINE:
         t0 = time.perf_counter()
-        force(DQ.QUERIES[name](spark, sf_dir))
+        obs.force(DQ.QUERIES[name](spark, sf_dir))
         cold[name] = round(time.perf_counter() - t0, 4)
     cold_total = round(time.perf_counter() - t_all, 4)
+
     # steady state is best-of-3 per query — single shots are swamped by
     # machine-load noise at these sub-second walls (same policy as
-    # scripts/scale_ratio.py; the DuckDB baseline times the same way)
-    for name in HEADLINE:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            force(DQ.QUERIES[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        warm[name] = round(best, 4)
+    # scripts/scale_ratio.py; the DuckDB baseline times the same way).
+    # Each query's run record (jobs, stages, shuffle/spill bytes) comes
+    # from the same three runs and goes to BENCH_FULL.json.
+    def best_of_3(names: list[str]) -> dict[str, dict]:
+        return {
+            n: obs.run(spark, n, lambda n=n: DQ.QUERIES[n](spark, sf_dir), repeat=3)
+            for n in names
+        }
+
+    warm_runs = best_of_3(HEADLINE)
+    warm = _column(warm_runs, "best_s")
     warm_total = round(sum(warm.values()), 4)
 
     # LLM-pipeline family (separate section; see LLM_PIPELINE comment)
-    llm: dict[str, float] = {}
-    for name in LLM_PIPELINE:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            force(DQ.QUERIES[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        llm[name] = round(best, 4)
+    llm_runs = best_of_3(LLM_PIPELINE)
+    llm = _column(llm_runs, "best_s")
 
     # Concurrent suite wall: all 30 headline plans submitted at once into
     # the shared session (FAIR pool). This is the throughput a deployment
@@ -333,7 +302,7 @@ def main() -> None:
     def suite_pass() -> float:
         t0 = time.perf_counter()
         with ThreadPoolExecutor(len(HEADLINE)) as ex:
-            list(ex.map(lambda n: force(DQ.QUERIES[n](spark, sf_dir)), HEADLINE))
+            list(ex.map(lambda n: obs.force(DQ.QUERIES[n](spark, sf_dir)), HEADLINE))
         return time.perf_counter() - t0
 
     suite_wall = round(min(suite_pass() for _ in range(3)), 4)
@@ -348,8 +317,6 @@ def main() -> None:
     serial_10x = None
     try:
         import importlib.util
-
-        import duckdb
 
         spec = importlib.util.spec_from_file_location(
             "scale_ratio",
@@ -366,57 +333,30 @@ def main() -> None:
         # (8 shuffle partitions — right when shuffles carry a few MB).
         # This section's entire purpose is the data-dominated slope that
         # predicts cluster behavior, so shuffle width scales with the
-        # data: 10× rows → full machine width (a runtime conf, read at
-        # physical planning, so cached plan objects pick it up on next
-        # action). Measured per-process A/B at the replica: the 20M-row
+        # data: 10× rows → one partition per session core (a runtime
+        # conf, read at physical planning, so cached plan objects pick it
+        # up on next action). Measured per-process A/B at the replica: the 20M-row
         # band self-join of simhash_near_pairs is 8.0 s on 8 tasks,
         # 2.8 s on 32. AQE stays off here like the rest of the bench —
         # re-measured at 10×: its per-stage barrier still costs more than
         # coalescing buys (simhash 2.8→3.3 s, range_join 1.5→2.8 s with
         # AQE on; coalescing targets bytes, not the CPU of explode-heavy
         # stages). Cluster deployments keep AQE on for skew/stragglers —
-        # effects a single-process bench cannot exhibit.
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(32, os.cpu_count() or 8))
-        )
+        # effects a single-process bench cannot exhibit. The session's
+        # core count also sets the DuckDB threads, so both engines get
+        # the same cores.
+        cores = spark.sparkContext.defaultParallelism
+        spark.conf.set("spark.sql.shuffle.partitions", str(cores))
 
         # best-of-3 with a median column (VERDICT r5 #4): the r4→r5
         # sub-second "regressions" needed a variance axis to separate
         # contention noise from structural change — best prices the
-        # plan, best-vs-median prices the noise.
-        sp10: dict[str, float] = {}
-        sp10_med: dict[str, float] = {}
-        for name in HEADLINE:
-            force(DQ.QUERIES[name](spark, dst))  # warm (JIT shapes shared)
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                force(DQ.QUERIES[name](spark, dst))
-                runs.append(time.perf_counter() - t0)
-            sp10[name] = round(min(runs), 4)
-            sp10_med[name] = round(sorted(runs)[1], 4)
-
-        from tests.oracle_utils import TABLES
-
-        con = duckdb.connect()
-        con.execute(f"SET threads TO {os.cpu_count()}")
-        for t in TABLES:
-            p = os.path.join(dst, f"{t}.parquet")
-            if os.path.exists(p):
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-                )
-        dk10: dict[str, float] = {}
-        dk10_med: dict[str, float] = {}
-        for name in HEADLINE:
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                con.sql(DQ.ORACLE[name]).fetchall()
-                runs.append(time.perf_counter() - t0)
-            dk10[name] = round(min(runs), 4)
-            dk10_med[name] = round(sorted(runs)[1], 4)
-        con.close()
+        # plan, best-vs-median prices the noise. Both engines get one
+        # warm run per query first (JIT shapes, page cache).
+        sp10_runs = sr.time_spark(spark, dst, HEADLINE)
+        dk10_runs = sr.time_duckdb(dst, HEADLINE, cores)
+        sp10, sp10_med = _column(sp10_runs, "best_s"), _column(sp10_runs, "median_s")
+        dk10, dk10_med = _column(dk10_runs, "best_s"), _column(dk10_runs, "median_s")
 
         sp_total = round(sum(sp10.values()), 4)
         dk_total = round(sum(dk10.values()), 4)
@@ -431,6 +371,7 @@ def main() -> None:
             "duckdb_queries": dk10,
             "spark_queries_median": sp10_med,
             "duckdb_queries_median": dk10_med,
+            "spark_runs": {n: _record(r) for n, r in sp10_runs.items()},
         }
     except Exception as ex:  # keep the one-JSON-line contract no matter what
         serial_10x = {"error": f"{type(ex).__name__}: {ex}"[:300]}
@@ -447,6 +388,7 @@ def main() -> None:
         "llm_total": round(sum(llm.values()), 4),
         "suite_wall_concurrent": suite_wall,
         "serial_10x": serial_10x,
+        "runs": {n: _record(r) for n, r in {**warm_runs, **llm_runs}.items()},
         "load_canary": canary,
         "spark_job_floor_sec": round(spark_job_floor, 4),
         "sf": sf_val,

@@ -331,7 +331,8 @@ def connected_components(
       standard persist/recompute trade.)
     - ``on_round`` (instrumentation only): called after each round with
       ``{"round", "n_edges", "width", "sec"}`` — scale probes attach
-      REST-API shuffle/spill deltas per round; never affects results.
+      ``obs.stage_totals`` shuffle/spill deltas per round; never affects
+      results.
     - ``on_stage`` (instrumentation only, r12 — VERDICT r11 #2): when
       set, each loop round's two halves are FORCED separately (an extra
       ``m.count()`` materializes the node→root map before the relabel

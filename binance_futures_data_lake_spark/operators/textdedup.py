@@ -738,8 +738,10 @@ def exact_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """All pairs with exact shingle-Jaccard >= threshold, via an
-    inverted-index self-join on shingles (never a doc×doc cross join).
+    """All pairs with shingle-Jaccard >= threshold, with shingles compared
+    by 64-bit hash (``xxhash64``): exact unless two distinct shingles of a
+    candidate pair collide. Inverted-index self-join on the shingle hashes
+    (never a doc×doc cross join).
     Ground truth for the MinHash path at test scale; at corpus scale the
     same shape runs on LSH candidates (minhash_dedup_pairs).
 

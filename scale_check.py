@@ -18,13 +18,19 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import sys
+import tempfile
 import time
+
+import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from binance_futures_data_lake_spark import obs  # noqa: E402
 from binance_futures_data_lake_spark.functions import windows as W  # noqa: E402
 from binance_futures_data_lake_spark.functions.ewm import ewm_apply, span_to_alpha  # noqa: E402
 from binance_futures_data_lake_spark.operators.asof import asof_join_backward  # noqa: E402
@@ -34,11 +40,150 @@ from binance_futures_data_lake_spark.session import get_spark  # noqa: E402
 from binance_futures_data_lake_spark.sources.synthetic import synthetic_klines_m1  # noqa: E402
 
 
-def force(df) -> "object":
-    # noop sink computes EVERY column (a bare count() would let Catalyst
-    # prune the derived columns and time only the scan)
-    df.write.format("noop").mode("overwrite").save()
-    return df
+def _h01(*cols):
+    """Deterministic [0,1): xxhash64 folded to a positive residue."""
+    return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
+
+
+def clustered_vectors(spark, n_vecs: int, dim: int = 64, n_latent: int = 32):
+    """The ANN probes' corpus: ``(vec_id, embedding)`` with ``n_latent``
+    clusters of contiguous ids; each coordinate is the cluster's center in
+    [-1, 1) plus up to ±0.35 per-vector noise. Generated in-plan, so an
+    uncached frame regenerates identically on every pass."""
+    block = n_vecs // n_latent
+    clus = F.floor(F.col("vec_id") / block).cast("int")
+    comps = [
+        (
+            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
+            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
+        ).cast("float")
+        for j in range(dim)
+    ]
+    return (
+        spark.range(n_vecs)
+        .select(F.col("id").alias("vec_id"))
+        .withColumn("embedding", F.array(*comps))
+    )
+
+
+def probe_queries(vecs, n_vecs: int, n_latent: int = 32):
+    """The 100 probe queries of a ``clustered_vectors`` corpus: the first
+    20 ids of each of the first 5 clusters."""
+    block = n_vecs // n_latent
+    return vecs.filter(
+        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
+    )
+
+
+def planted_fingerprints(spark, n: int):
+    """``(doc_id, fp)`` 64-bit fingerprints with planted near-duplicates:
+    ids < 100k form 10k groups of 10 (5 identical + 5 one-distinct-bit
+    members), the rest are unique xxhash64 values. Generated in-plan."""
+    member = F.col("id") % 10
+    base = F.xxhash64(
+        F.when(F.col("id") < 100_000, F.floor(F.col("id") / 10))
+        .otherwise(F.col("id"))
+        .cast("long")
+    )
+    # F.shiftleft needs a literal bit count — expression form takes a column
+    flip = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(((id % 10) * 7) % 64 AS INT))")
+    fp = F.when(
+        (F.col("id") < 100_000) & (member >= 5), base.bitwiseXOR(flip)
+    ).otherwise(base)
+    return spark.range(n).select(F.col("id").alias("doc_id"), fp.alias("fp"))
+
+
+def train_sample(vecs, n_vecs: int, cap: int):
+    """Deterministic hash-mod training sample of about ``cap`` rows
+    (replayable, order-free): ``(mod, sample)``."""
+    mod = max(1, n_vecs // cap)
+    return mod, vecs.filter(F.xxhash64("vec_id") % mod == 0) if mod > 1 else vecs
+
+
+def write_grouped_codes(codes, n_groups: int, path: str) -> None:
+    """The grouped IVFPQ index layout: ``partitionBy(cell % n_groups)`` with
+    cells sorted inside each file — fewer, bigger files than one directory
+    per cell; parquet row-group stats skip non-probed cells."""
+    (
+        codes.withColumn("cell_grp", F.col("cell") % n_groups)
+        .repartition("cell_grp")
+        .sortWithinPartitions("cell_grp", "cell")
+        .write.mode("overwrite")
+        .partitionBy("cell_grp")
+        .parquet(path)
+    )
+
+
+def window_features(bars, by: list[str], order: list[str]):
+    """The bar-feature window pass: lag, return, rolling mean/z-score,
+    true range, ATR."""
+    return (
+        bars.withColumn("prev_close", W.lag_col("close", 1, by, order))
+        .withColumn("ret", W.pct_change("close", by, order))
+        .withColumn("roll_mean20", W.rolling_mean("close", 20, by, order, min_periods=20))
+        .withColumn("close_z20", W.rolling_zscore("close", 20, by, order))
+        .withColumn("tr", W.true_range(by, order))
+        .withColumn("atr14", W.atr_sma(14, by, order))
+    )
+
+
+def heap_gb(spark) -> dict:
+    """The driver JVM's used and max heap, GB."""
+    rt = spark._jvm.java.lang.Runtime.getRuntime()
+    return {
+        "heap_used_gb": round((rt.totalMemory() - rt.freeMemory()) / 2**30, 2),
+        "heap_max_gb": round(rt.maxMemory() / 2**30, 2),
+    }
+
+
+def chain_edges(spark, n: int, chain: int):
+    """``(doc_a, doc_b)`` edges linking ids ``0..n-1`` into chains of
+    ``chain`` nodes — the adversarial depth case for label propagation."""
+    return (
+        spark.range(n)
+        .filter(F.col("id") % chain != chain - 1)
+        .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
+    )
+
+
+def chain_mislabels(labels, chain: int) -> int:
+    """Rows of a ``chain_edges`` component labelling whose ``comp`` is not
+    the chain head."""
+    return labels.filter(F.col("comp") != (F.col("id") - F.col("id") % chain)).count()
+
+
+def topk_pairs(topk) -> set:
+    """The ``(q_id, neighbor_id)`` pairs of a top-k frame, collected."""
+    return {(r.q_id, r.neighbor_id) for r in topk.collect()}
+
+
+def du_mb_and_files(path: str) -> tuple[float, int]:
+    """Size in MB of everything under ``path``, and its parquet file count."""
+    tot, nf = 0, 0
+    for root, _, files in os.walk(path):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                nf += 1
+            tot += os.path.getsize(os.path.join(root, fn))
+    return round(tot / 2**20, 1), nf
+
+
+_GB_FIELDS = {
+    "shuffle_read_gb": "shuffle_read_bytes",
+    "shuffle_write_gb": "shuffle_write_bytes",
+    "mem_spill_gb": "memory_spilled_bytes",
+    "disk_spill_gb": "disk_spilled_bytes",
+}
+
+
+def gb(totals: dict, since: dict | None = None) -> dict:
+    """``obs.stage_totals`` shuffle and spill bytes as GB fields, less the
+    totals ``since`` an earlier snapshot."""
+    since = since or {}
+    return {
+        k: round((totals[src] - since.get(src, 0)) / 2**30, 3)
+        for k, src in _GB_FIELDS.items()
+    }
 
 
 def flagship_main() -> None:
@@ -60,26 +205,17 @@ def flagship_main() -> None:
     )
     from binance_futures_data_lake_spark.sources.bucketed import exchange_count
 
-    rt = spark._jvm.java.lang.Runtime.getRuntime()
     stages: dict[str, dict] = {}
 
-    def heap() -> dict:
-        return {
-            "heap_used_gb": round((rt.totalMemory() - rt.freeMemory()) / 2**30, 2),
-            "heap_max_gb": round(rt.maxMemory() / 2**30, 2),
-        }
-
     def stage(name: str, df) -> None:
-        t0 = time.perf_counter()
-        force(df)
-        dt = time.perf_counter() - t0
+        dt = obs.run(spark, name, lambda: df)["best_s"]
         n = df.count()
         stages[name] = {
             "sec": round(dt, 2),
             "rows": n,
             "rows_per_sec": int(n / dt) if dt else None,
             "shuffle_exchanges": exchange_count(df, execute=True),
-            **heap(),
+            **heap_gb(spark),
         }
 
     # 1000 symbols × total/1000 minutes; generation is in-plan (range +
@@ -104,22 +240,7 @@ def flagship_main() -> None:
         asof_join_backward(base, h1, on="ts", by=["symbol"]),
     )
 
-    # planted-group fingerprints, same structure as the 10M probe stage
-    member = F.col("id") % 10
-    fbase = F.xxhash64(
-        F.when(F.col("id") < 100_000, F.floor(F.col("id") / 10))
-        .otherwise(F.col("id"))
-        .cast("long")
-    )
-    flip = F.expr(
-        "shiftleft(CAST(1 AS BIGINT), CAST(((id % 10) * 7) % 64 AS INT))"
-    )
-    fp_col = F.when(
-        (F.col("id") < 100_000) & (member >= 5), fbase.bitwiseXOR(flip)
-    ).otherwise(fbase)
-    fps = spark.range(total_rows).select(
-        F.col("id").alias("doc_id"), fp_col.alias("fp")
-    )
+    fps = planted_fingerprints(spark, total_rows)
     stage(
         "flagship_hamming_band_join",
         hamming_near_pairs(fps, "fp", max_hamming=3, bits=64, n_bands=4),
@@ -140,9 +261,6 @@ def flagship_main() -> None:
     # gram expressions from re-inlining the md5 text generation on every
     # reference (tokenizer expressions are evaluated per reference; a
     # stored column is read once)
-    import shutil
-    import tempfile
-
     sel_dir = tempfile.mkdtemp(prefix="bfdl_dsir_")
     try:
         t0 = time.perf_counter()
@@ -199,37 +317,17 @@ def pq_recall_main() -> None:
         pq_rerank_topk,
     )
 
-    dim, n_latent, ann_k = 64, 32, 10
-    block = n_vecs // n_latent
-
-    def _h01(*cols):
-        return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
-
-    clus = F.floor(F.col("vec_id") / block).cast("int")
-    comps = [
-        (
-            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    ann = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*comps))
-        .cache()
-    )
+    dim, ann_k = 64, 10
+    ann = clustered_vectors(spark, n_vecs, dim).cache()
     ann.count()
-    annq = ann.filter(
-        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-    )
-    truth = {(r.q_id, r.neighbor_id) for r in brute_force_topk(ann, annq, k=ann_k).collect()}
+    annq = probe_queries(ann, n_vecs)
+    truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
 
     rows: list[dict] = []
 
     def measure(name: str, books_name: str, df_thunk, extra: dict) -> None:
         t0 = time.perf_counter()
-        found = {(r.q_id, r.neighbor_id) for r in df_thunk().collect()}
+        found = topk_pairs(df_thunk())
         rows.append({
             "stage": name, "books": books_name,
             "recall_at_10": round(len(found & truth) / len(truth), 4),
@@ -328,34 +426,11 @@ def pq_opq_main() -> None:
         pq_rerank_topk,
     )
 
-    dim, n_latent, ann_k, n_sub = 64, 32, 10, 16
-    block = n_vecs // n_latent
-
-    def _h01(*cols):
-        return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
-
-    clus = F.floor(F.col("vec_id") / block).cast("int")
-    comps = [
-        (
-            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    ann = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*comps))
-        .cache()
-    )
+    dim, ann_k, n_sub = 64, 10, 16
+    ann = clustered_vectors(spark, n_vecs, dim).cache()
     ann.count()
-    annq = ann.filter(
-        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-    )
-    truth = {
-        (r.q_id, r.neighbor_id)
-        for r in brute_force_topk(ann, annq, k=ann_k).collect()
-    }
+    annq = probe_queries(ann, n_vecs)
+    truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
 
     def _splitmix(x: int) -> int:
         z = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
@@ -409,9 +484,7 @@ def pq_opq_main() -> None:
             "embedding", F.array(*[F.col("embedding")[p] for p in perm])
         ).cache()
         pc.count()
-        pq = pc.filter(
-            (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-        )
+        pq = probe_queries(pc, n_vecs)
         t0 = time.perf_counter()
         books = pq_codebooks_lloyd(pc, n_sub=n_sub, ks=256, iters=2)
         book_sec = round(time.perf_counter() - t0, 2)
@@ -421,7 +494,7 @@ def pq_opq_main() -> None:
              lambda: pq_rerank_topk(pc, pq, books, k=ann_k, shortlist=1000)),
         ):
             t0 = time.perf_counter()
-            found = {(r.q_id, r.neighbor_id) for r in thunk().collect()}
+            found = topk_pairs(thunk())
             rows.append({
                 "layout": name, "stage": stage_name,
                 "recall_at_10": round(len(found & truth) / len(truth), 4),
@@ -462,32 +535,10 @@ def pq_ivf_scan_main() -> None:
         pq_residual_codebooks,
     )
 
-    dim, n_latent, ann_k = 64, 32, 10
-    block = n_vecs // n_latent
-
-    def _h01(*cols):
-        return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
-
-    clus = F.floor(F.col("vec_id") / block).cast("int")
-    comps = [
-        (
-            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    ann = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*comps))
-        .cache()
-    )
+    dim, ann_k = 64, 10
+    ann = clustered_vectors(spark, n_vecs, dim).cache()
     ann.count()
-    annq = ann.filter(
-        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-    )
-    import shutil
-    import tempfile
+    annq = probe_queries(ann, n_vecs)
 
     from binance_futures_data_lake_spark.operators.similarity import (
         pq_encode, pq_ivf_adc_codes_topk,
@@ -498,13 +549,6 @@ def pq_ivf_scan_main() -> None:
     cents = list(enumerate(pq_codebooks(ann, n_sub=1, ks=32)[0]))
     res_books = pq_residual_codebooks(ann, cents, n_sub=16, ks=256)
     books_sec = round(time.perf_counter() - t0, 2)
-
-    def du(path: str) -> int:
-        tot = 0
-        for root, _, files in os.walk(path):
-            for fn in files:
-                tot += os.path.getsize(os.path.join(root, fn))
-        return tot
 
     rows = []
 
@@ -530,8 +574,8 @@ def pq_ivf_scan_main() -> None:
         encode_sec = round(time.perf_counter() - t0, 2)
         codes = spark.read.parquet(idx_dir)
         sizes = {
-            "raw_parquet_mb": round(du(raw_dir) / 2**20, 1),
-            "codes_parquet_mb": round(du(idx_dir) / 2**20, 1),
+            "raw_parquet_mb": du_mb_and_files(raw_dir)[0],
+            "codes_parquet_mb": du_mb_and_files(idx_dir)[0],
         }
         run("pq_adc_full_scan_raw",
             lambda: pq_adc_topk(raw, annq, flat_books, k=ann_k))
@@ -587,9 +631,6 @@ def pq_cells_main() -> None:
       inside. File counts, written bytes, write wall, and per-nprobe
       query wall for both.
     """
-    import shutil
-    import tempfile
-
     n_vecs = _arg("--rows", 1_000_000)
     num_cells = _arg("--cells", 1024)
     train_cap = _arg("--train-rows", 262_144)
@@ -606,36 +647,12 @@ def pq_cells_main() -> None:
         pq_residual_codebooks_lloyd,
     )
 
-    dim, n_latent, ann_k = 64, 32, 10
-    block = n_vecs // n_latent
-
-    def _h01(*cols):
-        return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
-
-    clus = F.floor(F.col("vec_id") / block).cast("int")
-    comps = [
-        (
-            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    ann = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*comps))
-        .cache()
-    )
+    dim, ann_k = 64, 10
+    ann = clustered_vectors(spark, n_vecs, dim).cache()
     ann.count()
-    annq = ann.filter(
-        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-    )
+    annq = probe_queries(ann, n_vecs)
 
-    # deterministic training sample (hash-mod: replayable, order-free)
-    mod = max(1, n_vecs // train_cap)
-    train = (
-        ann.filter(F.xxhash64("vec_id") % mod == 0) if mod > 1 else ann
-    )
+    mod, train = train_sample(ann, n_vecs, train_cap)
     n_train = train.count()
     t0 = time.perf_counter()
     cents = ivf_lloyd_centroids(train, num_cells=num_cells, iters=2)
@@ -647,20 +664,8 @@ def pq_cells_main() -> None:
     books_sec = round(time.perf_counter() - t0, 2)
 
     t0 = time.perf_counter()
-    truth = {
-        (r.q_id, r.neighbor_id)
-        for r in brute_force_topk(ann, annq, k=ann_k).collect()
-    }
+    truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
     truth_sec = round(time.perf_counter() - t0, 2)
-
-    def du_and_files(path: str) -> tuple[float, int]:
-        tot, nf = 0, 0
-        for root, _, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    nf += 1
-                tot += os.path.getsize(os.path.join(root, fn))
-        return round(tot / 2**20, 1), nf
 
     enc = pq_encode(ann, cents, res_books)
     layouts: dict[str, dict] = {}
@@ -674,19 +679,15 @@ def pq_cells_main() -> None:
         enc.repartition("cell").write.mode("overwrite") \
             .partitionBy("cell").parquet(idx_cell)
         w1 = round(time.perf_counter() - t0, 2)
-        mb1, nf1 = du_and_files(idx_cell)
+        mb1, nf1 = du_mb_and_files(idx_cell)
         layouts["partition_per_cell"] = {
             "write_sec": w1, "files": nf1, "mb": mb1,
             "partitions": num_cells,
         }
         t0 = time.perf_counter()
-        enc.withColumn("cell_grp", F.col("cell") % n_groups) \
-            .repartition("cell_grp") \
-            .sortWithinPartitions("cell_grp", "cell") \
-            .write.mode("overwrite") \
-            .partitionBy("cell_grp").parquet(idx_grp)
+        write_grouped_codes(enc, n_groups, idx_grp)
         w2 = round(time.perf_counter() - t0, 2)
-        mb2, nf2 = du_and_files(idx_grp)
+        mb2, nf2 = du_mb_and_files(idx_grp)
         layouts["partition_per_group"] = {
             "write_sec": w2, "files": nf2, "mb": mb2,
             "partitions": n_groups,
@@ -699,21 +700,15 @@ def pq_cells_main() -> None:
             if npb > num_cells:
                 continue
             t0 = time.perf_counter()
-            found = {
-                (r.q_id, r.neighbor_id)
-                for r in pq_ivf_adc_codes_topk(
-                    codes_cell, annq, cents, res_books, k=ann_k, nprobe=npb
-                ).collect()
-            }
+            found = topk_pairs(pq_ivf_adc_codes_topk(
+                codes_cell, annq, cents, res_books, k=ann_k, nprobe=npb
+            ))
             sec_cell = round(time.perf_counter() - t0, 2)
             t0 = time.perf_counter()
-            found_g = {
-                (r.q_id, r.neighbor_id)
-                for r in pq_ivf_adc_codes_topk(
-                    codes_grp.drop("cell_grp"), annq, cents, res_books,
-                    k=ann_k, nprobe=npb
-                ).collect()
-            }
+            found_g = topk_pairs(pq_ivf_adc_codes_topk(
+                codes_grp.drop("cell_grp"), annq, cents, res_books,
+                k=ann_k, nprobe=npb
+            ))
             sec_grp = round(time.perf_counter() - t0, 2)
             assert found_g == found  # layout must not change results
             rows.append({
@@ -733,13 +728,10 @@ def pq_cells_main() -> None:
 
         sl = max(1000, n_vecs // 1000)
         t0 = time.perf_counter()
-        found_rr = {
-            (r.q_id, r.neighbor_id)
-            for r in pq_ivf_rerank_topk(
-                ann, annq, cents, res_books, k=ann_k, shortlist=sl,
-                nprobe=16,
-            ).collect()
-        }
+        found_rr = topk_pairs(pq_ivf_rerank_topk(
+            ann, annq, cents, res_books, k=ann_k, shortlist=sl,
+            nprobe=16,
+        ))
         rerank = {
             "nprobe": 16, "shortlist": sl,
             "shortlist_pct_of_corpus": round(100.0 * sl / n_vecs, 3),
@@ -754,13 +746,10 @@ def pq_cells_main() -> None:
         )
 
         t0 = time.perf_counter()
-        found_rc = {
-            (r.q_id, r.neighbor_id)
-            for r in pq_ivf_rerank_codes_topk(
-                ann, codes_cell, annq, cents, res_books, k=ann_k,
-                shortlist=sl, nprobe=16,
-            ).collect()
-        }
+        found_rc = topk_pairs(pq_ivf_rerank_codes_topk(
+            ann, codes_cell, annq, cents, res_books, k=ann_k,
+            shortlist=sl, nprobe=16,
+        ))
         rerank["sec_codes_index"] = round(time.perf_counter() - t0, 2)
         assert found_rc == found_rr  # deployed form is bit-equal
         print(json.dumps({"rerank": rerank}), file=sys.stderr)
@@ -803,11 +792,6 @@ def pq_recipe_main() -> None:
       or commits the measured ceiling curve if the target is
       unreachable at sane cost.
     """
-    import shutil
-    import tempfile
-
-    import numpy as np
-
     n_vecs = _arg("--rows", 1_000_000)
     num_cells = _arg("--cells", max(32, int(round(n_vecs ** 0.5))))
     train_cap = _arg(
@@ -830,35 +814,12 @@ def pq_recipe_main() -> None:
         release_query_table_broadcasts,
     )
 
-    dim, n_latent, ann_k = 64, 32, 10
-    block = n_vecs // n_latent
-
-    def _h01(*cols):
-        return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
-
-    clus = F.floor(F.col("vec_id") / block).cast("int")
-    comps = [
-        (
-            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    ann = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*comps))
-        .cache()
-    )
+    dim, ann_k = 64, 10
+    ann = clustered_vectors(spark, n_vecs, dim).cache()
     ann.count()
-    annq = ann.filter(
-        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-    )
+    annq = probe_queries(ann, n_vecs)
 
-    mod = max(1, n_vecs // train_cap)
-    train = (
-        ann.filter(F.xxhash64("vec_id") % mod == 0) if mod > 1 else ann
-    )
+    mod, train = train_sample(ann, n_vecs, train_cap)
     n_train = train.count()
     t0 = time.perf_counter()
     cents = ivf_lloyd_centroids(train, num_cells=num_cells, iters=2)
@@ -871,23 +832,12 @@ def pq_recipe_main() -> None:
     idx = tempfile.mkdtemp(prefix="bfdl_pqrecipe_")
     try:
         t0 = time.perf_counter()
-        (
-            pq_encode(ann, cents, books)
-            .withColumn("cell_grp", F.col("cell") % n_groups)
-            .repartition("cell_grp")
-            .sortWithinPartitions("cell_grp", "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell_grp")
-            .parquet(idx)
-        )
+        write_grouped_codes(pq_encode(ann, cents, books), n_groups, idx)
         encode_write_sec = round(time.perf_counter() - t0, 2)
         codes_df = spark.read.parquet(idx).drop("cell_grp")
 
         t0 = time.perf_counter()
-        truth = {
-            (r.q_id, r.neighbor_id)
-            for r in brute_force_topk(ann, annq, k=ann_k).collect()
-        }
+        truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
         truth_sec = round(time.perf_counter() - t0, 2)
         truth_ids = list({nid for _, nid in truth})
         cell_of = {
@@ -932,13 +882,10 @@ def pq_recipe_main() -> None:
 
         def run_combo(npb: int, sl: int) -> tuple[set, float]:
             t0 = time.perf_counter()
-            found = {
-                (r.q_id, r.neighbor_id)
-                for r in pq_ivf_rerank_codes_topk(
-                    ann, codes_df, annq, cents, books, k=ann_k,
-                    shortlist=sl, nprobe=npb,
-                ).collect()
-            }
+            found = topk_pairs(pq_ivf_rerank_codes_topk(
+                ann, codes_df, annq, cents, books, k=ann_k,
+                shortlist=sl, nprobe=npb,
+            ))
             sec = round(time.perf_counter() - t0, 2)
             release_query_table_broadcasts()
             return found, sec
@@ -1017,9 +964,6 @@ def pq_build_main() -> None:
       directories is a filesystem antipattern; cell % --groups with
       cells sorted inside each file was the r11 nprobe≥16 winner).
     """
-    import shutil
-    import tempfile
-
     n_vecs = _arg("--rows", 100_000_000)
     num_cells = _arg("--cells", 10_000)
     train_cap = _arg("--train-rows", 1_000_000)
@@ -1037,33 +981,12 @@ def pq_build_main() -> None:
         release_query_table_broadcasts,
     )
 
-    dim, n_latent, ann_k = 64, 32, 10
-    block = n_vecs // n_latent
+    dim, ann_k = 64, 10
+    ann = clustered_vectors(spark, n_vecs, dim)
+    annq = probe_queries(ann, n_vecs)
 
-    def _h01(*cols):
-        return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
-
-    clus = F.floor(F.col("vec_id") / block).cast("int")
-    comps = [
-        (
-            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    ann = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*comps))
-    )
-    annq = ann.filter(
-        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-    )
-
-    mod = max(1, n_vecs // train_cap)
-    train = (
-        ann.filter(F.xxhash64("vec_id") % mod == 0) if mod > 1 else ann
-    ).cache()  # the SAMPLE is cached (≤1M rows); the corpus never is
+    mod, train = train_sample(ann, n_vecs, train_cap)
+    train = train.cache()  # the SAMPLE is cached (≤1M rows); the corpus never is
     n_train = train.count()
 
     t0 = time.perf_counter()
@@ -1082,49 +1005,26 @@ def pq_build_main() -> None:
           file=sys.stderr)
     train.unpersist()
 
-    def du_and_files(path: str) -> tuple[float, int]:
-        tot, nf = 0, 0
-        for root, _, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    nf += 1
-                tot += os.path.getsize(os.path.join(root, fn))
-        return round(tot / 2**20, 1), nf
-
     idx = tempfile.mkdtemp(prefix="bfdl_pqbuild_")
     try:
         t0 = time.perf_counter()
-        (
-            pq_encode(ann, cents, books)
-            .withColumn("cell_grp", F.col("cell") % n_groups)
-            .repartition("cell_grp")
-            .sortWithinPartitions("cell_grp", "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell_grp")
-            .parquet(idx)
-        )
+        write_grouped_codes(pq_encode(ann, cents, books), n_groups, idx)
         encode_write_sec = round(time.perf_counter() - t0, 2)
-        mb, nf = du_and_files(idx)
+        mb, nf = du_mb_and_files(idx)
         print(json.dumps({"stage": "encode_write", "sec": encode_write_sec,
                           "mb": mb, "files": nf}), file=sys.stderr)
         codes_df = spark.read.parquet(idx).drop("cell_grp")
 
         t0 = time.perf_counter()
-        truth = {
-            (r.q_id, r.neighbor_id)
-            for r in brute_force_topk(ann, annq, k=ann_k).collect()
-        }
+        truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
         truth_sec = round(time.perf_counter() - t0, 2)
         print(json.dumps({"stage": "truth", "sec": truth_sec}),
               file=sys.stderr)
 
         t0 = time.perf_counter()
-        found = {
-            (r.q_id, r.neighbor_id)
-            for r in pq_ivf_adc_codes_topk(
-                codes_df, annq, cents, books, k=ann_k, nprobe=npb
-            ).collect()
-        }
+        found = topk_pairs(pq_ivf_adc_codes_topk(
+            codes_df, annq, cents, books, k=ann_k, nprobe=npb
+        ))
         adc_sec = round(time.perf_counter() - t0, 2)
         release_query_table_broadcasts()
         adc_recall = round(len(found & truth) / len(truth), 4)
@@ -1134,13 +1034,10 @@ def pq_build_main() -> None:
         # |Q|·shortlist = 1M rerank rows, the broadcast-semi-join bound)
         sl = 10_000
         t0 = time.perf_counter()
-        found_rr = {
-            (r.q_id, r.neighbor_id)
-            for r in pq_ivf_rerank_codes_topk(
-                ann, codes_df, annq, cents, books, k=ann_k,
-                shortlist=sl, nprobe=npb,
-            ).collect()
-        }
+        found_rr = topk_pairs(pq_ivf_rerank_codes_topk(
+            ann, codes_df, annq, cents, books, k=ann_k,
+            shortlist=sl, nprobe=npb,
+        ))
         rerank_sec = round(time.perf_counter() - t0, 2)
         release_query_table_broadcasts()
         rr_recall = round(len(found_rr & truth) / len(truth), 4)
@@ -1169,8 +1066,8 @@ def pq_build_main() -> None:
 def cc_main() -> None:
     """Instrumented contraction-CC probe (VERDICT r8 #3): the 10k-chain
     adversarial graph at ``--rows`` nodes with PER-ROUND shuffle
-    read/write and spill deltas from the Spark REST status API, so the
-    super-linear-wall question (spill vs plan re-materialization) is
+    read/write and spill deltas from ``obs.stage_totals`` (the status
+    store, read with the UI off), so the super-linear-wall question (spill vs plan re-materialization) is
     answered with numbers instead of an asserted analysis. Timing span
     matches the r8 probe (operator construction through label force), so
     walls are comparable round over round.
@@ -1190,52 +1087,21 @@ def cc_main() -> None:
     os.environ.setdefault(
         "SPARK_DRIVER_MEMORY", "64g" if total_rows > 20_000_000 else "32g"
     )
-    spark = get_spark("bfdl-cc-probe", overrides={"spark.ui.enabled": "true"})
+    spark = get_spark("bfdl-cc-probe")
     from binance_futures_data_lake_spark.operators.graph import (
         connected_components,
     )
 
-    import urllib.request
-
-    def ui_totals() -> dict:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        try:
-            with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages?status=complete"
-            ) as r:
-                st = json.load(r)
-        except Exception:
-            return {}
-        tot = dict.fromkeys(
-            ("shuffle_read_gb", "shuffle_write_gb", "mem_spill_gb", "disk_spill_gb"), 0.0
-        )
-        for s in st:
-            tot["shuffle_read_gb"] += s.get("shuffleReadBytes", 0) / 2**30
-            tot["shuffle_write_gb"] += s.get("shuffleWriteBytes", 0) / 2**30
-            tot["mem_spill_gb"] += s.get("memoryBytesSpilled", 0) / 2**30
-            tot["disk_spill_gb"] += s.get("diskBytesSpilled", 0) / 2**30
-        return {k: round(v, 3) for k, v in tot.items()}
-
-    rt = spark._jvm.java.lang.Runtime.getRuntime()
     n_cc = total_rows
     chain = 10_000
-    cc_edges = (
-        spark.range(n_cc)
-        .filter(F.col("id") % chain != chain - 1)
-        .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
-    )
+    cc_edges = chain_edges(spark, n_cc, chain)
     rounds: list[dict] = []
-    snap = {"prev": ui_totals()}
+    snap = {"prev": obs.stage_totals(spark)}
 
     def on_round(info: dict) -> None:
-        cur = ui_totals()
-        info.update({
-            k: round(cur[k] - snap["prev"].get(k, 0.0), 3) for k in cur
-        })
-        info["heap_used_gb"] = round(
-            (rt.totalMemory() - rt.freeMemory()) / 2**30, 2
-        )
+        cur = obs.stage_totals(spark)
+        info.update(gb(cur, since=snap["prev"]))
+        info["heap_used_gb"] = heap_gb(spark)["heap_used_gb"]
         snap["prev"] = cur
         rounds.append(info)
 
@@ -1244,25 +1110,19 @@ def cc_main() -> None:
         cc_edges, max_iters=30, prepass_flush_nodes=flush_nodes,
         on_round=on_round,
     )
-    force(df)
+    obs.force(df)
     wall = round(time.perf_counter() - t0, 2)
-    label_phase = ui_totals()
-    mislabeled = df.filter(
-        F.col("comp") != (F.col("id") - F.col("id") % chain)
-    ).count()
+    label_phase = gb(obs.stage_totals(spark), since=snap["prev"])
+    mislabeled = chain_mislabels(df, chain)
     print(json.dumps({
         "mode": "cc", "stage": f"contraction_cc_{total_rows // 1_000_000}m_chains",
         "sec": wall, "n_nodes": n_cc, "chain_len": chain,
         "prepass_flush_nodes": flush_nodes,
         "mislabeled": mislabeled,
         "rows_per_sec": int(n_cc / wall) if wall else None,
-        "heap_used_gb": round((rt.totalMemory() - rt.freeMemory()) / 2**30, 2),
-        "heap_max_gb": round(rt.maxMemory() / 2**30, 2),
+        **heap_gb(spark),
         "rounds": rounds,
-        "label_phase_deltas": {
-            k: round(label_phase.get(k, 0.0) - snap["prev"].get(k, 0.0), 3)
-            for k in label_phase
-        },
+        "label_phase_deltas": label_phase,
     }))
     spark.stop()
 
@@ -1289,60 +1149,34 @@ def cc_scattered_main() -> None:
     os.environ.setdefault(
         "SPARK_DRIVER_MEMORY", "64g" if total_rows > 2_000_000 else "32g"
     )
-    spark = get_spark("bfdl-cc-scattered",
-                      overrides={"spark.ui.enabled": "true"})
+    spark = get_spark("bfdl-cc-scattered")
     from binance_futures_data_lake_spark.operators.graph import (
         connected_components,
     )
 
-    import urllib.request
-
-    def _rest_stages() -> list:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        try:
-            with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages?status=complete"
-            ) as r:
-                return json.load(r)
-        except Exception:
-            return []
-
-    def ui_totals() -> dict:
-        tot = dict.fromkeys(
-            ("shuffle_read_gb", "shuffle_write_gb", "mem_spill_gb", "disk_spill_gb"), 0.0
-        )
-        for s in _rest_stages():
-            tot["shuffle_read_gb"] += s.get("shuffleReadBytes", 0) / 2**30
-            tot["shuffle_write_gb"] += s.get("shuffleWriteBytes", 0) / 2**30
-            tot["mem_spill_gb"] += s.get("memoryBytesSpilled", 0) / 2**30
-            tot["disk_spill_gb"] += s.get("diskBytesSpilled", 0) / 2**30
-        return {k: round(v, 3) for k, v in tot.items()}
-
     # --stage-detail (VERDICT r11 #2): attribute each loop round's wall
     # between its two halves (map = edge shuffle + in-partition UF +
     # root-resolution groupBy; relabel = the two label joins + distinct)
-    # and name the dominant SPARK stages inside each half from the REST
-    # API — executorRunTime separates Python-worker compute from
-    # exchange/scheduling cost, which the round wall alone can't see.
+    # and name the dominant SPARK stages inside each half from
+    # obs.stage_totals — executor run time separates Python-worker compute
+    # from exchange/scheduling cost, which the round wall alone can't see.
     stage_detail = "--stage-detail" in sys.argv
     seen_stage_ids: set = set()
     stage_rows: list[dict] = []
 
     def _new_stage_detail() -> list[dict]:
         out = []
-        for s in _rest_stages():
-            sid = (s.get("stageId"), s.get("attemptId"))
-            if sid in seen_stage_ids:
+        for r in obs.stage_totals(spark)["stage_rows"]:
+            if (r["stage_id"], r["attempt_id"]) in seen_stage_ids:
                 continue
-            seen_stage_ids.add(sid)
+            seen_stage_ids.add((r["stage_id"], r["attempt_id"]))
             out.append({
-                "stage_id": s.get("stageId"),
-                "name": (s.get("name") or "").split("\n")[0][:80],
-                "num_tasks": s.get("numTasks"),
-                "executor_run_sec": round(s.get("executorRunTime", 0) / 1e3, 1),
-                "shuffle_read_gb": round(s.get("shuffleReadBytes", 0) / 2**30, 3),
-                "shuffle_write_gb": round(s.get("shuffleWriteBytes", 0) / 2**30, 3),
+                "stage_id": r["stage_id"],
+                "name": r["name"],
+                "num_tasks": r["num_tasks"],
+                "executor_run_sec": round(r["executor_run_ms"] / 1e3, 1),
+                "shuffle_read_gb": round(r["shuffle_read_bytes"] / 2**30, 3),
+                "shuffle_write_gb": round(r["shuffle_write_bytes"] / 2**30, 3),
             })
         out.sort(key=lambda r: -r["executor_run_sec"])
         return out
@@ -1364,18 +1198,13 @@ def cc_scattered_main() -> None:
     )
     n_edges = edges.count()
 
-    rt = spark._jvm.java.lang.Runtime.getRuntime()
     rounds: list[dict] = []
-    snap = {"prev": ui_totals()}
+    snap = {"prev": obs.stage_totals(spark)}
 
     def on_round(info: dict) -> None:
-        cur = ui_totals()
-        info.update({
-            k: round(cur[k] - snap["prev"].get(k, 0.0), 3) for k in cur
-        })
-        info["heap_used_gb"] = round(
-            (rt.totalMemory() - rt.freeMemory()) / 2**30, 2
-        )
+        cur = obs.stage_totals(spark)
+        info.update(gb(cur, since=snap["prev"]))
+        info["heap_used_gb"] = heap_gb(spark)["heap_used_gb"]
         snap["prev"] = cur
         rounds.append(info)
         print(json.dumps(info), file=sys.stderr)
@@ -1385,7 +1214,7 @@ def cc_scattered_main() -> None:
         edges, max_iters=30, driver_max_edges=0, prepass=False,
         on_round=on_round, on_stage=on_stage if stage_detail else None,
     ).cache()
-    force(df)
+    obs.force(df)
     wall = round(time.perf_counter() - t0, 2)
 
     # Spark-side consistency: no edge may cross components
@@ -1400,8 +1229,6 @@ def cc_scattered_main() -> None:
     # driver ground truth: exact union-find replay over the same edges
     t0 = time.perf_counter()
     epdf = edges.toPandas()
-    import numpy as np
-
     ua = epdf["doc_a"].to_numpy()
     ub = epdf["doc_b"].to_numpy()
     parent = np.arange(n, dtype=np.int64)
@@ -1439,7 +1266,7 @@ def cc_scattered_main() -> None:
         "n_components_spark": n_comp_spark,
         "n_components_truth": n_comp_truth,
         "truth_replay_sec": truth_sec,
-        "heap_max_gb": round(rt.maxMemory() / 2**30, 2),
+        "heap_max_gb": heap_gb(spark)["heap_max_gb"],
         "rounds": rounds,
         **({"stages": stage_rows} if stage_detail else {}),
     }))
@@ -1545,8 +1372,6 @@ def ambient_main() -> None:
     th.start()
 
     def cpu_microbench() -> float:
-        import numpy as np
-
         a = np.arange(4_000_000, dtype=np.float64)
         t0 = time.perf_counter()
         for _ in range(20):
@@ -1554,22 +1379,16 @@ def ambient_main() -> None:
         return round(time.perf_counter() - t0, 3)
 
     chain = 10_000
-    cc_edges = (
-        spark.range(total_rows)
-        .filter(F.col("id") % chain != chain - 1)
-        .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
-    )
+    cc_edges = chain_edges(spark, total_rows, chain)
     rep_rows = []
     for rep in range(reps):
         spawned_before = spawns["n"]
         cpu_before = cpu_microbench()
         t0 = time.perf_counter()
         df = connected_components(cc_edges, max_iters=30)
-        force(df)
+        obs.force(df)
         wall = round(time.perf_counter() - t0, 2)
-        mislabeled = df.filter(
-            F.col("comp") != (F.col("id") - F.col("id") % chain)
-        ).count()
+        mislabeled = chain_mislabels(df, chain)
         rep_rows.append({
             "rep": rep, "sec": wall, "mislabeled": mislabeled,
             "workers_spawned_this_rep": spawns["n"] - spawned_before,
@@ -1680,9 +1499,6 @@ def streaming_main() -> None:
     path — the probe skips only the file-source plumbing the pytest tier
     already pins) and are generated in-plan, batch-seeded so replays are
     deterministic."""
-    import shutil
-    import tempfile
-
     n_batches = _arg("--batches", 100)
     rows_per_batch = _arg("--rows-per-batch", 1_000_000)
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
@@ -1738,14 +1554,6 @@ def streaming_main() -> None:
         out["ingest_sec_all_families"] = ingest_sec
         out["ingest_rows_per_sec"] = int(n_batches * rows_per_batch / ingest_sec)
 
-        def state_files() -> int:
-            return sum(
-                1
-                for _dir, _sub, files in os.walk(root)
-                for f in files
-                if f.endswith(".parquet")
-            )
-
         def reads() -> dict:
             t = {}
             t0 = time.perf_counter()
@@ -1773,14 +1581,14 @@ def streaming_main() -> None:
         raise
     try:
         before = reads()
-        out["state_parquet_files_before_fold"] = state_files()
+        out["state_parquet_files_before_fold"] = du_mb_and_files(root)[1]
         out["merge_on_read_before_fold"] = before["walls"]
         t0 = time.perf_counter()
         folded = compact_state(spark, root, kmv_k=1024)
         out["fold_sec"] = round(time.perf_counter() - t0, 2)
         out["folded_families"] = sorted(folded)
         after = reads()
-        out["state_parquet_files_after_fold"] = state_files()
+        out["state_parquet_files_after_fold"] = du_mb_and_files(root)[1]
         out["merge_on_read_after_fold"] = after["walls"]
         assert before["cms"] == after["cms"], "CMS fold changed the sketch"
         assert before["hll"] == after["hll"], "HLL fold changed the registers"
@@ -1804,9 +1612,6 @@ def streaming_dedup_main() -> None:
     row-set equality asserted per family (identity-union monoid — fold
     must change nothing but the file layout). Docs are ~10% exact dups
     of earlier docs, so the classifier path does real work."""
-    import shutil
-    import tempfile
-
     n_batches = _arg("--batches", 30)
     rows_per_batch = _arg("--rows-per-batch", 100_000)
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
@@ -1851,14 +1656,6 @@ def streaming_dedup_main() -> None:
         out["ingest_sec"] = ingest_sec
         out["ingest_docs_per_sec"] = int(n_batches * rows_per_batch / ingest_sec)
 
-        def state_files() -> int:
-            return sum(
-                1
-                for _d, _s, files in os.walk(root)
-                for f in files
-                if f.endswith(".parquet")
-            )
-
         def reads() -> dict:
             # count + order-insensitive content checksum per family:
             # sum(xxhash64(*cols)) wraps deterministically (non-ANSI),
@@ -1877,7 +1674,7 @@ def streaming_dedup_main() -> None:
             return {"walls": walls, "counts": counts, "checksums": sums}
 
         before = reads()
-        out["state_parquet_files_before_fold"] = state_files()
+        out["state_parquet_files_before_fold"] = du_mb_and_files(root)[1]
         out["merge_on_read_before_fold"] = {
             k: before[k] for k in ("walls", "counts")
         }
@@ -1886,7 +1683,7 @@ def streaming_dedup_main() -> None:
         out["fold_sec"] = round(time.perf_counter() - t0, 2)
         out["folded_families"] = sorted(folded)
         after = reads()
-        out["state_parquet_files_after_fold"] = state_files()
+        out["state_parquet_files_after_fold"] = du_mb_and_files(root)[1]
         out["merge_on_read_after_fold"] = {
             k: after[k] for k in ("walls", "counts")
         }
@@ -1923,10 +1720,6 @@ def trading_bucketed_main() -> None:
     ``ds``: the anchored VWAP partitions on it, the feature windows
     lead their order with it. Both stages are then provably ordered:
     zero exchanges, zero Sort nodes, zero spill."""
-    import re
-    import shutil
-    import tempfile
-
     total_rows = _arg("--rows", 100_000_000)
     n_symbols = 100
     n_buckets = 32
@@ -1935,46 +1728,18 @@ def trading_bucketed_main() -> None:
         "SPARK_DRIVER_MEMORY", "64g" if total_rows > 20_000_000 else "32g"
     )
     spark = get_spark("bfdl-scale-bucketed", overrides={
-        "spark.ui.enabled": "true",
         "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
     })
     from binance_futures_data_lake_spark.sources.bucketed import (
         exchange_count, read_bucketed, write_bucketed,
     )
 
-    import urllib.request
-
-    def ui_totals() -> dict:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        try:
-            with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages?status=complete"
-            ) as r:
-                st = json.load(r)
-        except Exception:
-            return {}
-        tot = dict.fromkeys(
-            ("shuffle_read_gb", "shuffle_write_gb", "mem_spill_gb", "disk_spill_gb"), 0.0
-        )
-        for s in st:
-            tot["shuffle_read_gb"] += s.get("shuffleReadBytes", 0) / 2**30
-            tot["shuffle_write_gb"] += s.get("shuffleWriteBytes", 0) / 2**30
-            tot["mem_spill_gb"] += s.get("memoryBytesSpilled", 0) / 2**30
-            tot["disk_spill_gb"] += s.get("diskBytesSpilled", 0) / 2**30
-        return {k: round(v, 3) for k, v in tot.items()}
-
     stages: dict[str, dict] = {}
-    snap = {"prev": ui_totals()}
 
     def stage(name: str, df, extra=None):
-        t0 = time.perf_counter()
-        force(df)
-        dt = time.perf_counter() - t0
+        rec = obs.run(spark, name, lambda: df)
+        dt = rec["best_s"]
         n = df.count()
-        cur = ui_totals()
-        deltas = {k: round(cur[k] - snap["prev"].get(k, 0.0), 3) for k in cur}
-        snap["prev"] = cur
         plan = df._jdf.queryExecution().executedPlan().toString()
         stages[name] = {
             "sec": round(dt, 2),
@@ -1982,7 +1747,7 @@ def trading_bucketed_main() -> None:
             "rows": n,
             "shuffle_exchanges": exchange_count(df, execute=False),
             "sort_nodes": len(re.findall(r"\bSort\b", plan)),
-            **deltas,
+            **gb(rec),
             **(extra or {}),
         }
 
@@ -1999,22 +1764,14 @@ def trading_bucketed_main() -> None:
             sort_cols=["symbol", "ds", "ts"], path=path,
         )
         write_sec = round(time.perf_counter() - t0, 2)
-        snap["prev"] = ui_totals()
         t = read_bucketed(spark, table)
 
         # leading the order with the STORED ds keeps the required
         # ordering (symbol, ds, ts) == the file order — provable, so no
         # Sort node; semantics unchanged (ds is monotone in ts)
         by, order = ["symbol"], ["ds", "ts"]
-        feats = (
-            t.withColumn("prev_close", W.lag_col("close", 1, by, order))
-            .withColumn("ret", W.pct_change("close", by, order))
-            .withColumn("roll_mean20", W.rolling_mean("close", 20, by, order, min_periods=20))
-            .withColumn("close_z20", W.rolling_zscore("close", 20, by, order))
-            .withColumn("tr", W.true_range(by, order))
-            .withColumn("atr14", W.atr_sma(14, by, order))
-        )
-        stage("window_features_bucketed", feats, {"write_sec": write_sec})
+        stage("window_features_bucketed", window_features(t, by, order),
+              {"write_sec": write_sec})
         vwap = t.withColumn(
             "vwap_d",
             W.anchored_vwap("close", "volume_base", by, ["ts"],
@@ -2085,84 +1842,49 @@ def main() -> None:
     os.environ.setdefault(
         "SPARK_DRIVER_MEMORY", "64g" if total_rows > 20_000_000 else "32g"
     )
-    spark = get_spark("bfdl-scale", overrides={"spark.ui.enabled": "true"})
-
-    import urllib.request
-
-    def ui_totals() -> dict:
-        """Cumulative shuffle/spill from the REST status API (the cc_main
-        instrumentation) — per-stage deltas name super-linear walls
-        (sort spill vs plan change) with numbers instead of hypotheses."""
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        try:
-            with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages?status=complete"
-            ) as r:
-                st = json.load(r)
-        except Exception:
-            return {}
-        tot = dict.fromkeys(
-            ("shuffle_read_gb", "shuffle_write_gb", "mem_spill_gb", "disk_spill_gb"), 0.0
-        )
-        for s in st:
-            tot["shuffle_read_gb"] += s.get("shuffleReadBytes", 0) / 2**30
-            tot["shuffle_write_gb"] += s.get("shuffleWriteBytes", 0) / 2**30
-            tot["mem_spill_gb"] += s.get("memoryBytesSpilled", 0) / 2**30
-            tot["disk_spill_gb"] += s.get("diskBytesSpilled", 0) / 2**30
-        return {k: round(v, 3) for k, v in tot.items()}
-
+    spark = get_spark("bfdl-scale")
     stages: dict[str, dict] = {}
-    ui_snap = {"prev": ui_totals()}
 
     def stage(name: str, thunk):
-        t0 = time.perf_counter()
-        df = thunk()
-        dt = time.perf_counter() - t0
-        n = df.count()  # outside the timer; pruned count is cheap
-        cur = ui_totals()
-        deltas = {
-            k: round(cur[k] - ui_snap["prev"].get(k, 0.0), 3) for k in cur
-        }
-        ui_snap["prev"] = cur
+        """Time ``thunk`` (plan build + force) with its shuffle/spill
+        totals — per-stage numbers name super-linear walls (sort spill vs
+        plan change) instead of hypotheses. Returns the built frame."""
+        built = {}
+
+        def build():
+            built["df"] = thunk()
+            return built["df"]
+
+        rec = obs.run(spark, name, build)
+        dt = rec["best_s"]
+        n = built["df"].count()  # outside the timer; pruned count is cheap
         stages[name] = {
             "sec": round(dt, 2),
             "rows_per_sec": int(n / dt) if dt else None,
             "rows": n,
-            **deltas,
+            **gb(rec),
         }
-        return n
+        return built["df"]
 
     symbols = tuple(f"SYM{i:03d}" for i in range(n_symbols))
     m1 = synthetic_klines_m1(spark, symbols=symbols, n_minutes=n_minutes, trend_amp=0.05)
 
-    n = stage("generate_m1", lambda: force(m1))
+    stage("generate_m1", lambda: m1)
+    n = stages["generate_m1"]["rows"]
     m1c = m1.cache()
     m1c.count()
 
     by, order = ["symbol"], ["ts"]
-    stage("resample_m5_complete", lambda: force(resample_bars(m1c, 5, by)))
+    stage("resample_m5_complete", lambda: resample_bars(m1c, 5, by))
 
-    def features():
-        d = (
-            m1c.withColumn("prev_close", W.lag_col("close", 1, by, order))
-            .withColumn("ret", W.pct_change("close", by, order))
-            .withColumn("roll_mean20", W.rolling_mean("close", 20, by, order, min_periods=20))
-            .withColumn("close_z20", W.rolling_zscore("close", 20, by, order))
-            .withColumn("tr", W.true_range(by, order))
-            .withColumn("atr14", W.atr_sma(14, by, order))
-            .withColumn(
-                "vwap_d",
-                W.anchored_vwap("close", "volume_base", by, order, anchor=F.to_date("ts")),
-            )
-        )
-        return force(d)
-
-    stage("window_features", features)
+    stage("window_features", lambda: window_features(m1c, by, order).withColumn(
+        "vwap_d",
+        W.anchored_vwap("close", "volume_base", by, order, anchor=F.to_date("ts")),
+    ))
     stage(
         "ewm_bucketed",
-        lambda: force(ewm_apply(m1c.select("symbol", "ts", "close"),
-                                {"ema20": ("close", span_to_alpha(20.0))}, by, order)),
+        lambda: ewm_apply(m1c.select("symbol", "ts", "close"),
+                          {"ema20": ("close", span_to_alpha(20.0))}, by, order),
     )
 
     h1 = resample_bars(m1c, 60, by).select(
@@ -2173,14 +1895,14 @@ def main() -> None:
         j = asof_join_backward(
             m1c.select("symbol", "ts", "close"), h1, on="ts", by=by,
         )
-        return force(j)
+        return j
 
     stage("asof_m1_from_h1", asof)
     stage(
         "dedup_keep_last",
-        lambda: force(dedup_keep_last(
+        lambda: dedup_keep_last(
             m1c.unionByName(m1c.limit(100_000)), ["symbol", "open_time_ms"], ["ts"]
-        )),
+        ),
     )
 
     # --trading-only (VERDICT r9 #3): stop after the reference's own
@@ -2208,13 +1930,13 @@ def main() -> None:
     def cascade():
         h1b = resample_bars(m5_bars, 60, by, complete_only=False, base_minutes=5)
         d1b = resample_bars(h1b, 1440, by, complete_only=False, base_minutes=60)
-        return force(d1b)
+        return d1b
 
     stage("rollup_cascade_m5_to_d1", cascade)
 
     def gaps():
         holey = m1c.filter(((F.col("open_time_ms") / 60000).cast("long")) % 97 != 0)
-        return force(missing_ranges(holey.select("symbol", "ts"), 1, by))
+        return missing_ranges(holey.select("symbol", "ts"), 1, by)
 
     stage("gap_ranges_lag_based", gaps)
 
@@ -2232,7 +1954,7 @@ def main() -> None:
             m1c.select("symbol", "ts", "close"), iv, "ts", "w_start", "w_end",
             by=["symbol"], bucket="1 days",
         )
-        return force(j)
+        return j
 
     stage("interval_join_bucketed", rjoin)
 
@@ -2240,9 +1962,6 @@ def main() -> None:
     # then the fact-fact join on the bucket key plans with ZERO shuffle
     # exchanges (the 100 TB lever sources/bucketed.py documents; asserted
     # green in tests/test_bucketed.py, recorded per-run here)
-    import shutil
-    import tempfile
-
     from binance_futures_data_lake_spark.sources.bucketed import (
         exchange_count,
         write_bucketed,
@@ -2274,7 +1993,7 @@ def main() -> None:
         bj = spark.table("sc_klines_b").join(
             spark.table("sc_mark_b"), on=["symbol", "open_time_ms"]
         )
-        stage("bucketed_colocated_join", lambda: force(bj))
+        stage("bucketed_colocated_join", lambda: bj)
         # executes once more (untimed) so AQE's FINAL plan is inspected
         stages["bucketed_colocated_join"]["shuffle_exchanges"] = exchange_count(bj)
     finally:
@@ -2284,10 +2003,10 @@ def main() -> None:
 
     stage(
         "kmv_distinct_sketch",
-        lambda: force(kmv_distinct(
+        lambda: kmv_distinct(
             m1c.select("symbol", (F.col("open_time_ms") % 1_000_003).alias("v")),
             "v", by=["symbol"], k=256,
-        )),
+        ),
     )
 
     # multimodal kernel probe: media rows scale with --rows (default 100k
@@ -2306,7 +2025,7 @@ def main() -> None:
     )
     media = synthetic_media(docs, kind="image").cache()
     media.count()
-    stage("image_features_vectorized", lambda: force(image_features(media)))
+    stage("image_features_vectorized", lambda: image_features(media))
 
     # audio kernel probe (r4): same media-row count through the WAV
     # encode -> decode -> reduceat clip-stats path
@@ -2314,7 +2033,7 @@ def main() -> None:
 
     amedia = synthetic_media(docs, kind="audio").cache()
     amedia.count()
-    stage("audio_features_vectorized", lambda: force(audio_features(amedia)))
+    stage("audio_features_vectorized", lambda: audio_features(amedia))
     amedia.unpersist()
     media.unpersist()
 
@@ -2350,11 +2069,11 @@ def main() -> None:
         .cache()
     )
     corpus.count()
-    stage("pack_sequences_chunk", lambda: force(pack_sequences(corpus, 2048)))
-    stage("pack_sequences_nextfit", lambda: force(pack_sequences_nextfit(corpus, 2048)))
+    stage("pack_sequences_chunk", lambda: pack_sequences(corpus, 2048))
+    stage("pack_sequences_nextfit", lambda: pack_sequences_nextfit(corpus, 2048))
     stage(
         "scrub_cross_doc_spans",
-        lambda: force(scrub_cross_doc_spans(corpus, span_tokens=8, min_docs=2)),
+        lambda: scrub_cross_doc_spans(corpus, span_tokens=8, min_docs=2),
     )
     corpus.unpersist()
 
@@ -2389,7 +2108,7 @@ def main() -> None:
     lam = dsir_fit(sel, F.col("source") < "2", n_buckets=8192)
     dsir_fit_sec = round(time.perf_counter() - t0, 2)
     dsir_scored = dsir_logweights(sel, lam)
-    stage("dsir_score_1m_docs", lambda: force(dsir_scored))
+    stage("dsir_score_1m_docs", lambda: dsir_scored)
     stages["dsir_score_1m_docs"].update(
         n_buckets=8192,
         fit_sec=dsir_fit_sec,
@@ -2403,7 +2122,7 @@ def main() -> None:
     bl = bloom_decontam(
         sel.filter(F.col("doc_id") % 97 != 0), bloom_words, m_bits=1 << 19, k=4
     )
-    stage("bloom_decontam_1m_docs", lambda: force(bl))
+    stage("bloom_decontam_1m_docs", lambda: bl)
     stages["bloom_decontam_1m_docs"].update(
         m_bits=1 << 19,
         bitset_build_sec=bloom_build_sec,
@@ -2429,47 +2148,26 @@ def main() -> None:
 
     dim, n_latent, ann_k = 64, 32, 10
     n_vecs = max(100_000, total_rows // 10)
-    block = n_vecs // n_latent
-
-    def _h01(*cols):
-        # deterministic [0,1): xxhash64 folded to a positive residue
-        return ((F.xxhash64(*cols) % 1_000_003 + 1_000_003) % 1_000_003) / 1_000_003.0
-
     # contiguous-block cluster ids: the 100 queries (20 from each of the
     # first 5 blocks) then probe a strict subset of the 32 cells, so the
     # partition-pruned IVF read is visible in cells_read below
-    clus = F.floor(F.col("vec_id") / block).cast("int")
-    comps = [
-        (
-            (2.0 * _h01(clus, F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    ann = (
-        spark.range(n_vecs)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*comps))
-        .cache()
-    )
-    stage("ann_synthetic_corpus", lambda: force(ann))
-    annq = ann.filter(
-        (F.col("vec_id") % block < 20) & (F.col("vec_id") < 5 * block)
-    )
+    ann = clustered_vectors(spark, n_vecs, dim, n_latent).cache()
+    stage("ann_synthetic_corpus", lambda: ann)
+    annq = probe_queries(ann, n_vecs, n_latent)
 
     bf = brute_force_topk(ann, annq, k=ann_k)
-    stage("ann_brute_topk_100q", lambda: force(bf))
-    truth = {(r.q_id, r.neighbor_id) for r in bf.collect()}
+    stage("ann_brute_topk_100q", lambda: bf)
+    truth = topk_pairs(bf)
 
     def _recall(df):
-        found = {(r.q_id, r.neighbor_id) for r in df.collect()}
+        found = topk_pairs(df)
         return round(len(found & truth) / len(truth), 4)
 
     # 64 planes / 8 bands = 8 bits per band (256 buckets): at probe scale
     # the 2-bit bands the sf-scale demo uses flood every bucket with a
     # quarter of the corpus — bucket capacity must grow with |corpus|
     lsh = lsh_topk(ann, annq, dim=dim, k=ann_k, n_planes=64, bands=8)
-    stage("ann_lsh_topk_100q", lambda: force(lsh))
+    stage("ann_lsh_topk_100q", lambda: lsh)
     stages["ann_lsh_topk_100q"]["recall_at_10"] = _recall(lsh)
     stages["ann_lsh_topk_100q"]["shuffle_exchanges"] = exchange_count(lsh)
 
@@ -2500,7 +2198,7 @@ def main() -> None:
         })
         cells_df = spark.read.parquet(aroot).filter(F.col("cell").isin(probed))
         ivf = ivf_topk(cells_df, annq, cents, k=ann_k, nprobe=nprobe)
-        stage("ann_ivf_topk_100q_pruned", lambda: force(ivf))
+        stage("ann_ivf_topk_100q_pruned", lambda: ivf)
         stages["ann_ivf_topk_100q_pruned"]["recall_at_10"] = _recall(ivf)
         stages["ann_ivf_topk_100q_pruned"]["cells_read"] = f"{len(probed)}/{n_latent}"
         stages["ann_ivf_topk_100q_pruned"]["shuffle_exchanges"] = exchange_count(ivf)
@@ -2514,7 +2212,7 @@ def main() -> None:
             cells_df.select(F.col("id").alias("vec_id"), F.col("vec").alias("embedding")),
             annq, k=ann_k,
         )
-        stage("ann_ivf_pruned_gemm_100q", lambda: force(gemm))
+        stage("ann_ivf_pruned_gemm_100q", lambda: gemm)
         stages["ann_ivf_pruned_gemm_100q"]["recall_at_10"] = _recall(gemm)
         stages["ann_ivf_pruned_gemm_100q"]["cells_read"] = f"{len(probed)}/{n_latent}"
     finally:
@@ -2538,7 +2236,7 @@ def main() -> None:
     sd_cents = fixed_point_cents(ivf_train_centroids(ann, num_cells=sd_cells, seed=7))
     sd_train_sec = round(time.perf_counter() - t0, 2)
     sd = semantic_dedup_gemm(ann, sd_cents, threshold=0.92)
-    stage("semantic_dedup_gemm", lambda: force(sd))
+    stage("semantic_dedup_gemm", lambda: sd)
     stages["semantic_dedup_gemm"].update(
         num_cells=sd_cells,
         centroid_train_sec=sd_train_sec,
@@ -2565,14 +2263,14 @@ def main() -> None:
     books = pq_codebooks_lloyd(ann, n_sub=16, ks=256, iters=2)
     pq_train_sec = round(time.perf_counter() - t0, 2)
     pq = pq_adc_topk(ann, annq, books, k=ann_k)
-    stage("pq_adc_topk_100q", lambda: force(pq))
+    stage("pq_adc_topk_100q", lambda: pq)
     stages["pq_adc_topk_100q"].update(
         codebook_sec=pq_train_sec,
         recall_at_10=_recall(pq),
         shuffle_exchanges=exchange_count(pq),
     )
     pqr = pq_rerank_topk(ann, annq, books, k=ann_k, shortlist=1000)
-    stage("pq_rerank_topk_100q", lambda: force(pqr))
+    stage("pq_rerank_topk_100q", lambda: pqr)
     stages["pq_rerank_topk_100q"]["recall_at_10"] = _recall(pqr)
     stages["pq_rerank_topk_100q"]["shuffle_exchanges"] = exchange_count(pqr)
 
@@ -2595,17 +2293,12 @@ def main() -> None:
     # build INSIDE the timed thunk: the operator runs eager work while
     # constructing (checkpoint materialization + CC jobs), so timing
     # only the final force would claim 2 s for a ~90 s stage
-    _kg = {}
-
-    def _build_kg():
-        _kg["df"] = knn_graph_components(ann, sd_cents, kk=2, threshold=0.92)
-        return force(_kg["df"])
-
-    stage("knn_graph_components_1m", _build_kg)
+    kg = stage(
+        "knn_graph_components_1m",
+        lambda: knn_graph_components(ann, sd_cents, kk=2, threshold=0.92),
+    )
     stages["knn_graph_components_1m"].update(
-        n_clustered=_kg["df"].filter(
-            F.col("component") != F.col("vec_id")
-        ).count(),
+        n_clustered=kg.filter(F.col("component") != F.col("vec_id")).count(),
     )
     # 10M-vector PQ encode+ADC probe (r8, VERDICT r7 #7): the compressed
     # scan one order above the 1M tier. Codebooks train on a 1M sample
@@ -2614,19 +2307,7 @@ def main() -> None:
     # zero-shuffle pass. Recall is gauged at the 1M tier above (same
     # generator); this stage's claim is the flat-exchange scan slope.
     big_n = max(1_000_000, total_rows)
-    big_comps = [
-        (
-            (2.0 * _h01(F.floor(F.col("vec_id") / (big_n // n_latent)).cast("int"),
-                        F.lit(f"c{j}")) - 1.0)
-            + 0.35 * (2.0 * _h01(F.col("vec_id"), F.lit(f"n{j}")) - 1.0)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    big_ann = (
-        spark.range(big_n)
-        .select(F.col("id").alias("vec_id"))
-        .withColumn("embedding", F.array(*big_comps))
-    )
+    big_ann = clustered_vectors(spark, big_n, dim, n_latent)
     t0 = time.perf_counter()
     train_step = max(1, big_n // 1_000_000)
     big_books = pq_codebooks_lloyd(
@@ -2635,7 +2316,7 @@ def main() -> None:
     )
     big_train_sec = round(time.perf_counter() - t0, 2)
     big_pq = pq_adc_topk(big_ann, annq, big_books, k=ann_k)
-    stage("pq_adc_scan_10m", lambda: force(big_pq))
+    stage("pq_adc_scan_10m", lambda: big_pq)
     stages["pq_adc_scan_10m"].update(
         n_vectors=big_n,
         codebook_train_on=-(-big_n // train_step),  # actual sample size
@@ -2657,22 +2338,13 @@ def main() -> None:
 
     n_cc = max(1_000_000, total_rows)
     chain = 10_000
-    cc_edges = (
-        spark.range(n_cc)
-        .filter(F.col("id") % chain != chain - 1)
-        .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
+    cc_edges = chain_edges(spark, n_cc, chain)
+    # eager loop inside the operator — time the build, not just the force
+    cc = stage(
+        "contraction_cc_10m_chains",
+        lambda: connected_components(cc_edges, max_iters=30),
     )
-    _cc = {}
-
-    def _build_cc():
-        # eager loop inside the operator — time the build, not the force
-        _cc["df"] = connected_components(cc_edges, max_iters=30)
-        return force(_cc["df"])
-
-    stage("contraction_cc_10m_chains", _build_cc)
-    mislabeled = _cc["df"].filter(
-        F.col("comp") != (F.col("id") - F.col("id") % chain)
-    ).count()
+    mislabeled = chain_mislabels(cc, chain)
     stages["contraction_cc_10m_chains"].update(
         n_nodes=n_cc, chain_len=chain, mislabeled=mislabeled,
     )
@@ -2691,23 +2363,11 @@ def main() -> None:
         hamming_near_pairs,
     )
 
-    n_fp = 10_000_000
-    member = F.col("id") % 10
-    base = F.xxhash64(
-        F.when(F.col("id") < 100_000, F.floor(F.col("id") / 10))
-        .otherwise(F.col("id"))
-        .cast("long")
-    )
-    # F.shiftleft needs a literal bit count — expression form takes a column
-    flip = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(((id % 10) * 7) % 64 AS INT))")
-    fp_col = F.when(
-        (F.col("id") < 100_000) & (member >= 5), base.bitwiseXOR(flip)
-    ).otherwise(base)
-    fps = spark.range(n_fp).select(F.col("id").alias("doc_id"), fp_col.alias("fp"))
+    fps = planted_fingerprints(spark, 10_000_000)
     ham_pairs = hamming_near_pairs(
         fps, "fp", max_hamming=3, bits=64, n_bands=4
     ).persist()
-    stage("hamming_band_join_10m", lambda: force(ham_pairs))
+    stage("hamming_band_join_10m", lambda: ham_pairs)
     stages["hamming_band_join_10m"]["shuffle_exchanges"] = exchange_count(ham_pairs)
     ham_pairs.unpersist()
 
@@ -2743,7 +2403,7 @@ def main() -> None:
     ]
     stage(
         "config_sweep_4cfg",
-        lambda: force(sweep_stats(run_sweep(frame, cfgs))),
+        lambda: sweep_stats(run_sweep(frame, cfgs)),
     )
     frame.unpersist()
 

@@ -15,62 +15,46 @@ Decomposition (bench session, sf0.1):
 
 Conf A/B (fresh SparkContext per variant, same 30-query warm serial total
 as bench.py): baseline bench confs vs locality.wait=0 vs shuffle
-partitions 4 vs both. Prints one JSON line.
+partitions 4 vs both. Reads ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1). Prints one JSON line.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = "/root/testdata/sf0.1"
-
-BENCH_OVERRIDES = {
-    "spark.sql.adaptive.enabled": "false",
-    "spark.sql.files.maxPartitionBytes": "1m",
-    "spark.sql.files.openCostInBytes": "65536",
-    "spark.sql.constraintPropagation.enabled": "false",
-}
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def best_and_p50(fn, n=20):
-    xs = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        xs.append(time.perf_counter() - t0)
-    return round(min(xs) * 1000, 2), round(statistics.median(xs) * 1000, 2)
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
+    from binance_futures_data_lake_spark import obs
     from binance_futures_data_lake_spark.plans import driver_queries as DQ
-    from binance_futures_data_lake_spark.session import get_spark
+    from binance_futures_data_lake_spark.session import BENCH_CONFS, get_spark
 
     out: dict = {}
 
-    spark = get_spark("bfdl-floor", shuffle_partitions=8, overrides=BENCH_OVERRIDES)
+    spark = get_spark("bfdl-floor", overrides=BENCH_CONFS)
+
+    def best_and_p50_ms(label, thunk, n=20):
+        rec = obs.run(spark, label, thunk, repeat=n)
+        return round(rec["best_s"] * 1000, 2), round(rec["median_s"] * 1000, 2)
 
     r1 = spark.range(1)
-    force(r1)  # warm noop source + codegen
-    out["range1_noop_ms"] = best_and_p50(lambda: force(r1))
+    obs.force(r1)  # warm noop source + codegen
+    out["range1_noop_ms"] = best_and_p50_ms("range1_noop", lambda: r1)
     r1.count()
-    out["range1_count_ms"] = best_and_p50(lambda: r1.count())
+    out["range1_count_ms"] = best_and_p50_ms("range1_count", r1.count)
     li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
     li.count()
-    out["scan_count_ms"] = best_and_p50(lambda: li.count())
+    out["scan_count_ms"] = best_and_p50_ms("scan_count", li.count)
     q = DQ.QUERIES["top_orders"](spark, SF_DIR)
-    force(q)
-    out["cached_plan_rerun_ms"] = best_and_p50(lambda: force(q), n=10)
+    obs.force(q)
+    out["cached_plan_rerun_ms"] = best_and_p50_ms("cached_plan_rerun", lambda: q, n=10)
 
     spark.stop()
 
@@ -86,25 +70,22 @@ def main() -> int:
     variants = {
         "baseline": {},
         "locality0": {"spark.locality.wait": "0"},
-        "shufpart4": {"__sp": 4},
-        "locality0_shufpart4": {"spark.locality.wait": "0", "__sp": 4},
+        "shufpart4": {"spark.sql.shuffle.partitions": "4"},
+        "locality0_shufpart4": {
+            "spark.locality.wait": "0", "spark.sql.shuffle.partitions": "4",
+        },
     }
     out["suite20_serial_ms"] = {}
     for label, extra in variants.items():
-        sp = int(extra.pop("__sp", 8))
-        spark = get_spark(
-            f"bfdl-floor-{label}", shuffle_partitions=sp,
-            overrides={**BENCH_OVERRIDES, **extra},
-        )
+        spark = get_spark(f"bfdl-floor-{label}", overrides={**BENCH_CONFS, **extra})
         for n in names:  # warm pass: plan build + JIT
-            force(DQ.QUERIES[n](spark, SF_DIR))
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            for n in names:
-                force(DQ.QUERIES[n](spark, SF_DIR))
-            best = min(best, time.perf_counter() - t0)
-        out["suite20_serial_ms"][label] = round(best * 1000, 1)
+            obs.force(DQ.QUERIES[n](spark, SF_DIR))
+        rec = obs.run(
+            spark, f"suite20-{label}",
+            lambda: [obs.force(DQ.QUERIES[n](spark, SF_DIR)) for n in names],
+            repeat=3,
+        )
+        out["suite20_serial_ms"][label] = round(rec["best_s"] * 1000, 1)
         spark.stop()
 
     print(json.dumps(out))

@@ -4,9 +4,10 @@ For every benched query (HEADLINE + LLM_PIPELINE) this captures, in ONE
 session configured exactly like bench.py's sf0.1 section:
 
 - best-of-3 noop-sink wall (same methodology as bench.py),
-- number of Spark jobs / stages / tasks the action runs (statusTracker,
-  scoped by job group) — the per-job scheduling floor is ~45 ms, so job
-  and stage counts ARE the cost model at this SF,
+- number of Spark jobs / stages / tasks the action runs, and its shuffle
+  and spill bytes (``obs.run``, scoped by job group) — the per-job
+  scheduling floor is ~45 ms, so job and stage counts ARE the cost model
+  at this SF,
 - ``explain("formatted")`` written to ``plans/<round>/<query>_<tag>.txt``
   (round dir from ``$BFDL_PLANS_ROUND``, default r13)
   plus one-line plan-shape stats (Exchange / Sort / BatchEvalPython /
@@ -24,7 +25,6 @@ import json
 import os
 import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -54,21 +54,11 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import bench as B
+    from binance_futures_data_lake_spark import obs
     from binance_futures_data_lake_spark.plans import driver_queries as DQ
-    from binance_futures_data_lake_spark.session import get_spark
+    from binance_futures_data_lake_spark.session import BENCH_CONFS, get_spark
 
-    spark = get_spark(
-        "bfdl-profile",
-        shuffle_partitions=8,
-        overrides={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.files.maxPartitionBytes": "1m",
-            "spark.sql.files.openCostInBytes": "65536",
-            "spark.sql.constraintPropagation.enabled": "false",
-        },
-    )
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    spark = get_spark("bfdl-profile", overrides=BENCH_CONFS)
 
     names = only or (B.HEADLINE + B.LLM_PIPELINE)
     plans_dir = os.path.join(
@@ -77,8 +67,8 @@ def main() -> int:
     os.makedirs(plans_dir, exist_ok=True)
 
     # warmup (same as bench)
-    B.force(DQ.QUERIES["ohlcv_5m"](spark, sf_dir))
-    B.force(DQ.QUERIES["ema_per_user"](spark, sf_dir))
+    obs.force(DQ.QUERIES["ohlcv_5m"](spark, sf_dir))
+    obs.force(DQ.QUERIES["ema_per_user"](spark, sf_dir))
 
     out: dict[str, dict] = {}
     for name in names:
@@ -90,43 +80,24 @@ def main() -> int:
             f.write(plan)
         stats = plan_stats(plan)
 
-        sc.setJobGroup(f"prof-{name}-warm", name)
-        B.force(DQ.QUERIES[name](spark, sf_dir))  # warm pass (JIT)
-        best = float("inf")
-        group = f"prof-{name}-{tag}"
-        sc.setJobGroup(group, name)
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            B.force(DQ.QUERIES[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        best = min(runs)
-        sc.setJobGroup("idle", "idle")
-
-        job_ids = sorted(tracker.getJobIdsForGroup(group))
-        n_stages = 0
-        n_tasks = 0
-        for j in job_ids:
-            ji = tracker.getJobInfo(j)
-            if ji is None:
-                continue
-            for s in ji.stageIds:
-                si = tracker.getStageInfo(s)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
-        per_run_jobs = len(job_ids) / 3.0
+        obs.force(DQ.QUERIES[name](spark, sf_dir))  # warm pass (JIT)
+        rec = obs.run(
+            spark, name, lambda name=name: DQ.QUERIES[name](spark, sf_dir), repeat=3
+        )
+        per_run_jobs = rec["jobs"] / 3.0
         out[name] = {
-            "best_sec": round(best, 4),
-            "median_sec": round(sorted(runs)[1], 4),
+            "best_sec": round(rec["best_s"], 4),
+            "median_sec": round(rec["median_s"], 4),
             "jobs_per_run": round(per_run_jobs, 1),
-            "stages_3runs": n_stages,
-            "tasks_3runs": n_tasks,
+            "stages_3runs": rec["stages"],
+            "tasks_3runs": rec["tasks"],
+            "shuffle_write_bytes_3runs": rec["shuffle_write_bytes"],
+            "spill_bytes_3runs": rec["memory_spilled_bytes"] + rec["disk_spilled_bytes"],
             **stats,
         }
         print(
-            f"{name:32s} {best:7.3f}s  jobs/run {per_run_jobs:5.1f} "
-            f"stages {n_stages:4d} tasks {n_tasks:5d}  "
+            f"{name:32s} {rec['best_s']:7.3f}s  jobs/run {per_run_jobs:5.1f} "
+            f"stages {rec['stages']:4d} tasks {rec['tasks']:5d}  "
             f"ex {stats['exchanges']} sorts {stats['sorts']} "
             f"py {stats['batch_eval_python']}/{stats['arrow_eval_python']}"
             f"/{stats['map_in_arrow']}/{stats['flatmap_groups']}",

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -89,44 +90,54 @@ def build_scaled(src: str, dst: str) -> None:
         con.execute(f"COPY ({sql}) TO '{dst}/{t}.parquet' (FORMAT PARQUET)")
 
 
-def time_duckdb(sf_dir: str, names: list[str]) -> dict[str, float]:
-    from binance_futures_data_lake_spark.plans import driver_queries as DQ
+def duck_views(sf_dir: str, threads: int):
+    """A DuckDB connection with ``threads`` threads and one view per
+    ``sf_dir`` table."""
     from tests.oracle_utils import TABLES
 
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.cpu_count()}")
+    con.execute(f"SET threads TO {threads}")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def time_duckdb(sf_dir: str, names: list[str], threads: int) -> dict[str, dict]:
+    """Per query: one warm run, then best and median of 3 (machine-load
+    noise swamps single shots) with ``threads`` DuckDB threads."""
+    from binance_futures_data_lake_spark.plans import driver_queries as DQ
+
+    con = duck_views(sf_dir, threads)
     out = {}
     for n in names:
         con.sql(DQ.ORACLE[n]).fetchall()  # warm
-        best = float("inf")
-        for _ in range(3):  # best-of-3: machine-load noise swamps single shots
+        runs = []
+        for _ in range(3):
             t0 = time.perf_counter()
             con.sql(DQ.ORACLE[n]).fetchall()
-            best = min(best, time.perf_counter() - t0)
-        out[n] = round(best, 4)
+            runs.append(time.perf_counter() - t0)
+        out[n] = {"best_s": min(runs), "median_s": statistics.median(runs)}
+    con.close()
     return out
 
 
-def time_spark(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
+def time_spark(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
+    """Per query: one warm run (plan JIT + caches), then the run record of
+    3 more (same best-of-3 policy as the DuckDB side)."""
+    from binance_futures_data_lake_spark import obs
     from binance_futures_data_lake_spark.plans import driver_queries as DQ
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
 
     out = {}
     for n in names:
-        force(DQ.QUERIES[n](spark, sf_dir))  # warm (plan JIT + caches)
-        best = float("inf")
-        for _ in range(3):  # best-of-3, same policy as the DuckDB side
-            t0 = time.perf_counter()
-            force(DQ.QUERIES[n](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        out[n] = round(best, 4)
+        obs.force(DQ.QUERIES[n](spark, sf_dir))
+        out[n] = obs.run(spark, n, lambda n=n: DQ.QUERIES[n](spark, sf_dir), repeat=3)
     return out
+
+
+def best_walls(records: dict[str, dict]) -> dict[str, float]:
+    return {n: round(r["best_s"], 4) for n, r in records.items()}
 
 
 def duck_suite_wall(sf_dir: str, names: list[str], reps: int) -> dict:
@@ -139,14 +150,8 @@ def duck_suite_wall(sf_dir: str, names: list[str], reps: int) -> dict:
     from concurrent.futures import ThreadPoolExecutor
 
     from binance_futures_data_lake_spark.plans import driver_queries as DQ
-    from tests.oracle_utils import TABLES
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    con.execute(f"SET threads TO {os.cpu_count()}")
+    con = duck_views(sf_dir, os.cpu_count())
     for n in names:
         con.sql(DQ.ORACLE[n]).fetchall()  # one warm pass (page cache + pool)
     best = {"wall": float("inf"), "threads": None, "workers": None}
@@ -170,20 +175,21 @@ def spark_suite_wall(spark, sf_dir: str, names: list[str], reps: int) -> dict:
     the shape a real deployment runs a query suite in."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from binance_futures_data_lake_spark import obs
     from binance_futures_data_lake_spark.plans import driver_queries as DQ
 
-    def force(n):
-        DQ.QUERIES[n](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    def run_query(n):
+        obs.force(DQ.QUERIES[n](spark, sf_dir))
 
     for n in names:
-        force(n)  # warm plans + codegen
+        run_query(n)  # warm plans + codegen
     best = {"wall": float("inf"), "workers": None}
     for workers in (16, len(names)):
         wall = float("inf")
         for _ in range(reps):
             t0 = time.perf_counter()
             with ThreadPoolExecutor(workers) as ex:
-                list(ex.map(force, names))
+                list(ex.map(run_query, names))
             wall = min(wall, time.perf_counter() - t0)
         if wall < best["wall"]:
             best = {"wall": round(wall, 3), "workers": workers}
@@ -208,25 +214,16 @@ def main() -> None:
         print("building scaled copy ...", file=sys.stderr)
         build_scaled(SRC, DST)
 
+    from binance_futures_data_lake_spark.session import BENCH_CONFS, get_spark
+
     names = list(HEADLINE)
-    duck1 = time_duckdb(SRC, names)
-    duck10 = time_duckdb(DST, names)
-
-    from binance_futures_data_lake_spark.session import get_spark
-
-    spark = get_spark(
-        "bfdl-scale-ratio",
-        shuffle_partitions=8,
-        overrides={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.files.maxPartitionBytes": "1m",
-            "spark.sql.files.openCostInBytes": "65536",
-            "spark.sql.constraintPropagation.enabled": "false",
-            "spark.scheduler.mode": "FAIR",
-        },
-    )
-    spark1 = time_spark(spark, SRC, names)
-    spark10 = time_spark(spark, DST, names)
+    spark = get_spark("bfdl-scale-ratio", overrides=BENCH_CONFS)
+    # one core count for both engines: the Spark session's
+    threads = spark.sparkContext.defaultParallelism
+    duck1 = best_walls(time_duckdb(SRC, names, threads))
+    duck10 = best_walls(time_duckdb(DST, names, threads))
+    spark1 = best_walls(time_spark(spark, SRC, names))
+    spark10 = best_walls(time_spark(spark, DST, names))
 
     # engine-best concurrent suite throughput, both SFs
     suite_wall = {
@@ -245,13 +242,13 @@ def main() -> None:
     # LLM-pipeline family
     llm_rows = []
     for n in LLM_EXTRA:
-        s1 = time_spark(spark, SRC, [n])[n]
-        d1 = time_duckdb(SRC, [n])[n]
+        s1 = best_walls(time_spark(spark, SRC, [n]))[n]
+        d1 = best_walls(time_duckdb(SRC, [n], threads))[n]
         if n in LLM_10X_CAPPED:
             s10 = d10 = None
         else:
-            s10 = time_spark(spark, DST, [n])[n]
-            d10 = time_duckdb(DST, [n])[n]
+            s10 = best_walls(time_spark(spark, DST, [n]))[n]
+            d10 = best_walls(time_duckdb(DST, [n], threads))[n]
         llm_rows.append({
             "query": n, "spark_1x": s1, "duck_1x": d1,
             "spark_10x": s10, "duck_10x": d10,
