@@ -7,15 +7,13 @@ build_mtf_context_h4_v1.py:85-117) and ``ewm(alpha=1/n, adjust=False)``
 the recursion ``y_t = (1-a)·y_{t-1} + a·x_t`` seeded with the first non-null
 value.
 
-The recursion is not a bounded-frame aggregate, so two implementations:
-
-- ``ewm_apply`` (default): per-key ``applyInPandas`` calling pandas ``ewm``
-  for bit-parity. Arrow-vectorized, embarrassingly parallel across keys —
-  at 100 TB each symbol's history is one group; with thousands of symbols
-  that is thousands-wide parallelism, and per-group state is O(1).
-- ``ewm_closedform``: pure-SQL closed form, SEGMENTED so it is total —
-  overflow-free for any series length (see its docstring). Used by
-  oracle-checked queries, since DuckDB can express the same formula.
+The recursion is not a bounded-frame aggregate, so ``ewm_apply`` runs it in
+per-key ``applyInPandas`` kernels calling pandas ``ewm`` for bit-parity.
+Arrow-vectorized, embarrassingly parallel across keys — at 100 TB each
+symbol's history is one group; with thousands of symbols that is
+thousands-wide parallelism, and per-group state is O(1). The DuckDB
+oracles of EWM queries use a segmented closed form instead (see
+``ema_per_user`` in plans/driver_queries.py).
 """
 
 from __future__ import annotations
@@ -24,7 +22,7 @@ from collections.abc import Sequence
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -83,84 +81,3 @@ def ewm_apply(
     )
     return bucketed.groupBy("__ewm_bucket").applyInPandas(kernel, schema=out_schema_b)
 
-
-def segment_len(alpha: float) -> int:
-    """Renormalization block length: (1-a)^W ≈ 1e-60, so a block's tail is
-    ~44 decimal orders below double ulp, and every exponent the segmented
-    form evaluates stays within ±2W·|log10(q)| = ±120 orders — comfortably
-    inside double range for ANY series length."""
-    import math
-
-    q = 1.0 - alpha
-    return max(2, math.ceil(60.0 / -math.log10(q)))
-
-
-def ewm_closedform(
-    df: DataFrame,
-    cols: dict[str, tuple[str, float]],
-    by: Sequence[str],
-    order: Sequence[str],
-) -> DataFrame:
-    """Closed-form adjust=False EWM (assumes the source has no interior
-    nulls, true for price series), with SEGMENTED renormalization:
-
-        y_t = (1-a)^t·x_0 + a·Σ_{j=1..t} (1-a)^(t-j)·x_j
-
-    The naive expansion — a running sum of ``x_j·(1-a)^(-j)`` scaled by
-    ``(1-a)^t`` — overflows once ``(1-a)^(-rn)`` exceeds DBL_MAX
-    (rn ≳ 700/|ln(1-a)|), silently poisoning long per-key series with
-    inf/NaN. Here exponents are RELATIVE to the row's block of
-    ``W = segment_len(alpha)`` rows:
-
-        pos  = (rn-1) mod W,  block = (rn-1) div W
-        u_j  = x_j·coef_j·(1-a)^(-pos_j)
-        y_t  = (1-a)^(pos_t)·Σ_{j ≤ t, same block} u_j
-             + (1-a)^(pos_t+W)·T_prev                (previous block's Σu)
-
-    ``T_prev`` arrives via ``lag(T, W)`` — the row exactly W back sits at
-    the same pos of the previous block. Blocks older than the previous
-    one carry weight ≤ (1-a)^W ≈ 1e-60 relative — 44 orders below double
-    ulp, so dropping them leaves the result bit-indistinguishable.
-    Every exponent is bounded by 2W, so the form is TOTAL: no length
-    cliff (property-tested on a 10k-row single-key series, which the
-    naive form fails at rn ≈ 3.1k for span=10). DuckDB can express the
-    identical staging, which is what keeps EWM queries oracle-checkable.
-
-    Same ``cols`` contract as ``ewm_apply``: output name → (source col,
-    alpha).
-    """
-    by, order = list(by), list(order)
-    w_key = Window.partitionBy(*by).orderBy(*order)
-    df = df.withColumn("__cf_rn", F.row_number().over(w_key))
-    scratch = ["__cf_rn"]
-    for name, (src, alpha) in cols.items():
-        if not (0.0 < alpha < 1.0):
-            raise ValueError(f"alpha must be in (0, 1), got {alpha}")
-        q = 1.0 - alpha
-        wlen = segment_len(alpha)
-        pos_c, blk_c, u_c, s_c, t_c = (f"__cf_{p}_{name}" for p in ("pos", "blk", "u", "s", "t"))
-        pos = (F.col("__cf_rn") - 1) % wlen
-        blk = F.floor((F.col("__cf_rn") - 1) / wlen)
-        # weight at position j (1-based rn): seed j=1 → coefficient 1, else alpha
-        coef = F.when(F.col("__cf_rn") == 1, F.lit(1.0)).otherwise(F.lit(alpha))
-        df = (
-            df.withColumn(pos_c, pos)
-            .withColumn(blk_c, blk)
-            .withColumn(u_c, F.col(src) * coef * F.pow(F.lit(q), -F.col(pos_c)))
-        )
-        w_blk = Window.partitionBy(*by, blk_c)
-        df = (
-            df.withColumn(
-                s_c,
-                F.sum(u_c).over(w_blk.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)),
-            )
-            .withColumn(t_c, F.sum(u_c).over(w_blk))
-        )
-        t_prev = F.lag(t_c, wlen).over(w_key)
-        df = df.withColumn(
-            name,
-            F.pow(F.lit(q), F.col(pos_c)) * F.col(s_c)
-            + F.coalesce(F.pow(F.lit(q), F.col(pos_c) + wlen) * t_prev, F.lit(0.0)),
-        )
-        scratch += [pos_c, blk_c, u_c, s_c, t_c]
-    return df.drop(*scratch)

@@ -6,22 +6,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def nullif_zero(c: Column) -> Column:
-    """Null-guard division denominator: pandas ``.replace(0.0, np.nan)``
-    (build_mtf_context_h4_v1.py:75-106)."""
-    return F.nullif(c, F.lit(0.0))
-
-
-def clip(c: Column, lo: float, hi: float) -> Column:
-    """np.clip (build_h1_regime_router_v2.py:121)."""
-    return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
-
-
-def sigmoid(c: Column) -> Column:
-    """Logistic sigmoid (run_ml_m15_v1.py:62-64)."""
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-c))
-
-
 def round_half_away(c: Column, scale: int) -> Column:
     """Round-half-away-from-zero on the exact binary double:
     sign·floor(|x·10^scale| + 0.5)/10^scale.

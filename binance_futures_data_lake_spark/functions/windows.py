@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -96,10 +96,6 @@ def rolling_agg(
 
 def rolling_mean(col, n, by, order, min_periods=None, exclude_current=False) -> Column:
     return rolling_agg("avg", col, n, by, order, min_periods, exclude_current)
-
-
-def rolling_sum(col, n, by, order, min_periods=None, exclude_current=False) -> Column:
-    return rolling_agg("sum", col, n, by, order, min_periods, exclude_current)
 
 
 def rolling_max(col, n, by, order, min_periods=None, exclude_current=False) -> Column:

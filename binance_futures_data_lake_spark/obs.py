@@ -5,12 +5,13 @@ runs through ``run`` and ``stage_totals`` instead of its own timer loop or
 a REST scrape. Stages come from the application status store, which Spark
 keeps whether or not the UI runs. The store retains only the last
 ``spark.ui.retainedJobs``/``retainedStages`` (1000 each), so read a
-record right after its runs.
+record right after its runs. ``exchange_count`` audits a plan's shuffles.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import statistics
 import time
 import uuid
@@ -140,3 +141,47 @@ def run(spark: SparkSession, label: str, thunk, repeat: int = 1) -> dict:
         "tasks": sum(r["num_tasks"] for r in totals["stage_rows"]),
         **totals,
     }
+
+
+def exchange_count(df: DataFrame, execute: bool = True) -> int:
+    """Number of SHUFFLE Exchange operators in the final physical plan —
+    the plan audit behind the zero- and one-shuffle pins in tests and
+    scale_check.py.
+
+    Two sharp edges this helper handles explicitly:
+
+    * With AQE on, ``executedPlan().toString()`` on an un-executed frame
+      prints the *initial* ``AdaptiveSparkPlan (isFinalPlan=false)`` — the
+      plan AQE may still rewrite. ``execute=True`` (default) materializes
+      the plan first (``executedPlan().execute().count()`` runs the query
+      JVM-side without copying rows to Python), so the string inspected is
+      the final plan.
+    * Only shuffle exchanges are counted (``Exchange hashpartitioning`` /
+      ``rangepartitioning`` / ``SinglePartition``). ``BroadcastExchange``
+      is not a shuffle — a broadcast join moves only the small side — and
+      ``ReusedExchange`` references don't re-shuffle. Neither matches
+      ``\\bExchange (hash…``.
+
+    Intended for tests and plan audits on bounded frames (``execute=True``
+    runs the whole query); pass ``execute=False`` only to inspect a plan
+    you have already executed through this exact DataFrame object.
+    """
+    jqe = df._jdf.queryExecution()
+    if execute:
+        jqe.executedPlan().execute().count()
+    plan = jqe.executedPlan().toString()
+    # an executed AdaptiveSparkPlan prints "== Final Plan ==" followed by
+    # "== Initial Plan ==" — count only the plan that actually ran
+    plan = plan.split("== Initial Plan ==")[0]
+    # Count every Exchange form: hash/range/single for joins+aggs+sorts,
+    # RoundRobinPartitioning for plain repartition(n)/rebalance, and
+    # PartitioningCollection for composite requirements — a zero-shuffle
+    # assertion must not pass just because the shuffle used an unlisted
+    # partitioning scheme.
+    return len(
+        re.findall(
+            r"\bExchange (?:hashpartitioning|rangepartitioning|SinglePartition"
+            r"|RoundRobinPartitioning|PartitioningCollection)",
+            plan,
+        )
+    )

@@ -868,39 +868,6 @@ def with_drawdown(
     return equity.withColumn("drawdown_r", F.max(eq_col).over(w) - F.col(eq_col))
 
 
-def backtest_metrics(
-    trades: DataFrame,
-    equity: DataFrame,
-    by: Sequence[str] = ("cfg",),
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Event-simulator summary metrics (backtest_router_event_v1_1.py:
-    440-453): n_trades, winrate, avg/median/sum R, profit factor from the
-    trades; max_drawdown_r from the per-bar equity curve. Two plain
-    aggregations broadcast-joined on the (small) per-key grain."""
-    by = list(by)
-    r = F.col("r_mult")
-    gains = F.sum(F.when(r > 0, r).otherwise(0.0))
-    losses = -F.sum(F.when(r < 0, r).otherwise(0.0))
-    pf = F.when(losses <= 0, F.when(gains > 0, float("inf")).otherwise(0.0)).otherwise(
-        gains / losses
-    )
-    n = F.count(F.lit(1))
-    t = trades.groupBy(*by).agg(
-        n.alias("n_trades"),
-        (F.sum(F.when(r > 0, 1).otherwise(0)) / n).alias("winrate"),
-        F.avg(r).alias("avg_r"),
-        F.expr("percentile(r_mult, 0.5)").alias("median_r"),
-        pf.alias("profit_factor"),
-        F.sum(r).alias("sum_r"),
-        F.sum("pnl_r").alias("sum_r_net"),
-    )
-    dd = with_drawdown(equity, by, ts_col).groupBy(*by).agg(
-        F.max("drawdown_r").alias("max_drawdown_r")
-    )
-    return t.join(dd, by, "left")
-
-
 def mae_mfe(
     bars: DataFrame,
     horizon: int,

@@ -33,7 +33,6 @@ to document corpora):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -196,41 +195,6 @@ def shard_manifest(
         F.bit_xor(h).alias("key_checksum"),
     ]
     return sharded.groupBy("shard").agg(*aggs)
-
-
-def write_shards(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    n_shards: int,
-    size_col: str | None = None,
-    sort_within: Sequence[str] | None = None,
-) -> DataFrame:
-    """Materialize a training export: ``partitionBy(shard)`` parquet under
-    ``path`` plus a ``_manifest`` parquet directory next to it; returns
-    the manifest DataFrame (read back from disk, so it describes what was
-    actually written).
-
-    ``repartition(shard)`` before the write gives one writer task per
-    shard (each shard directory holds one file per shard at this scale;
-    a 100 TB export raises n_shards, not files-per-shard, so loaders can
-    keep claiming whole directories). ``sort_within`` orders rows inside
-    each shard file (e.g. by doc id) — sortWithinPartitions, no extra
-    shuffle beyond the repartition.
-    """
-    sharded = with_shard(df, key_col, n_shards).repartition(n_shards, F.col("shard"))
-    if sort_within:
-        sharded = sharded.sortWithinPartitions(*sort_within)
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(
-        os.path.join(path, "data")
-    )
-    spark = df.sparkSession
-    written = spark.read.parquet(os.path.join(path, "data"))
-    manifest = shard_manifest(written, key_col, size_col)
-    manifest.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "_manifest")
-    )
-    return spark.read.parquet(os.path.join(path, "_manifest"))
 
 
 def pack_sequences(

@@ -61,22 +61,6 @@ def _prio(x) -> int:
     )
 
 
-def _prio_vec(ids):
-    """Vectorized :func:`_prio` for an int64 numpy array — identical
-    bits: uint64 wraparound ≡ the scalar path's ``& 0xFFFF...``, and a
-    view (not a cast) reinterprets negative ids as the same
-    two's-complement bit pattern the scalar path masks to."""
-    import numpy as np
-
-    z = ids.astype(np.int64, copy=False).view(np.uint64) + np.uint64(
-        0x9E3779B97F4A7C15
-    )
-    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    z = (z ^ (z >> np.uint64(31))) & np.uint64(0x7FFFFFFFFFFFFFFF)
-    return z.astype(np.int64)
-
-
 def _mix64_vec(ids):
     """BIJECTIVE 64-bit priority key for integer ids (r12): the full
     splitmix64 finalizer (no 63-bit mask — every xorshift/odd-multiply

@@ -29,7 +29,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from binance_futures_data_lake_spark.operators.gaps import grid_steps, missing_ranges
+from binance_futures_data_lake_spark.operators.gaps import grid_steps
 
 REPORT_COUNTS = (
     "n_rows",
@@ -107,36 +107,6 @@ def audit_klines(
         and report["n_rows"] == report["expected_rows"]
     )
     return report
-
-
-def gaps_report(
-    df: DataFrame,
-    step_minutes: float,
-    by: Sequence[str] = ("symbol",),
-    top_n: int = 10,
-) -> dict:
-    """Gap summary (gaps_report.py:32-68): totals, largest, top-N ranges."""
-    ranges = missing_ranges(df.select(*by, "ts"), step_minutes, by).cache()
-    try:
-        agg = ranges.agg(
-            F.count(F.lit(1)).alias("n_gaps"),
-            F.sum("n_missing").alias("total_missing"),
-            F.max("n_missing").alias("largest_gap"),
-            F.expr("percentile(n_missing, 0.5)").alias("median_gap"),
-        ).first()
-        top = [
-            r.asDict()
-            for r in ranges.orderBy(F.col("n_missing").desc(), "gap_start").limit(top_n).collect()
-        ]
-        return {
-            "n_gaps": int(agg["n_gaps"] or 0),
-            "total_missing": int(agg["total_missing"] or 0),
-            "largest_gap": int(agg["largest_gap"] or 0) if agg["largest_gap"] is not None else 0,
-            "median_gap": float(agg["median_gap"]) if agg["median_gap"] is not None else 0.0,
-            "top_gaps": top,
-        }
-    finally:
-        ranges.unpersist()
 
 
 REQUIRED_META_KEYS = ("symbol", "exchange", "market", "interval")

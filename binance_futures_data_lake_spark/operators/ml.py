@@ -7,8 +7,7 @@ vector, deterministic hash-based splits instead of RNG so results are
 reproducible under any partitioning, and evaluation as plain DataFrame
 aggregations (confusion counts / per-class precision-recall — SURVEY M9).
 
-Everything distributed-friendly: feature standardization fits on the TRAIN
-split only (M5's train-stats rule), transforms are narrow, and the returned
+Everything distributed-friendly: transforms are narrow, and the returned
 evaluation is a tiny aggregate — no driver-side materialization of the
 training data beyond what spark.ml itself does.
 """
@@ -18,15 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from binance_futures_data_lake_spark.functions.scalars import round_half_away
-
-
-def temporal_split(df: DataFrame, ts_col: str, train_end, val_end):
-    """SURVEY M4 (run_ml_m15_v1.py:280-285): temporal train/val/test split —
-    no shuffling, no leakage; pure partition-prunable filters."""
-    train = df.filter(F.col(ts_col) < F.lit(train_end))
-    val = df.filter((F.col(ts_col) >= F.lit(train_end)) & (F.col(ts_col) < F.lit(val_end)))
-    test = df.filter(F.col(ts_col) >= F.lit(val_end))
-    return train, val, test
 
 
 def deterministic_split(df: DataFrame, id_col: str, train_frac: float = 0.8):
@@ -101,48 +91,6 @@ def lr_on_embeddings(
         round_half_away(rec, 4).alias("recall"),
         round_half_away(f1, 4).alias("f1"),
     ).orderBy("label")
-
-
-def platt_calibrate(scores: DataFrame, score_col: str, label_col: str):
-    """SURVEY M2 (run_ml_m15_v1.py:78-85): Platt scaling — a 1-D logistic
-    regression on raw scores. Fit via spark.ml on a single feature."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    va = VectorAssembler(inputCols=[score_col], outputCol="features")
-    lr = LogisticRegression(maxIter=100, regParam=0.0)
-    model = lr.fit(va.transform(scores.withColumnRenamed(label_col, "label")))
-    a = float(model.coefficients[0])
-    b = float(model.intercept)
-
-    def apply(df: DataFrame, col: str = score_col, out: str = "p_cal") -> DataFrame:
-        return df.withColumn(out, F.lit(1.0) / (F.lit(1.0) + F.exp(-(a * F.col(col) + b))))
-
-    return apply, (a, b)
-
-
-def train_standardize(train: DataFrame, df: DataFrame, cols: list[str]):
-    """SURVEY M5 (run_ml_m15_v1.py:287-306): median-impute + z-standardize
-    with statistics computed on the TRAIN split only, applied to any split.
-    Uses approx medians (exact percentile would collect per-column)."""
-    medians = dict(
-        zip(cols, (train.approxQuantile(c, [0.5], 1e-4)[0] for c in cols))
-    )
-    imputed = train.select(
-        *[F.coalesce(F.col(c), F.lit(medians[c])).alias(c) for c in cols]
-    )
-    stats = imputed.agg(
-        *[F.avg(c).alias(f"{c}__mu") for c in cols],
-        *[F.stddev_pop(c).alias(f"{c}__sd") for c in cols],
-    ).first()
-    out = df
-    for c in cols:
-        mu, sd = stats[f"{c}__mu"], stats[f"{c}__sd"]
-        sd = sd if sd else 1.0
-        out = out.withColumn(
-            f"{c}_z", (F.coalesce(F.col(c), F.lit(medians[c])) - F.lit(mu)) / F.lit(sd)
-        )
-    return out
 
 
 def lr_gd_weights(

@@ -4,7 +4,7 @@ The image path uses a REAL codec (r4 — the r1-r3 ``_fake_decode`` stub is
 gone): 8-bit grayscale PNG implemented on stdlib ``zlib`` + ``struct``
 per the public PNG spec (signature, IHDR/IDAT/IEND chunks, CRC32, all
 five scanline filters). ``synthetic_media`` ENCODES deterministic pixels
-into real PNG payloads and ``image_features``/``resize_images`` DECODE
+into real PNG payloads and ``image_features`` DECODES
 them — so the driver oracle can hash-check the whole roundtrip: pixels
 are an arithmetic function of (text, dims) that DuckDB recomputes in
 SQL, and any codec bug (chunk parse, inflate, defilter) breaks the
@@ -19,8 +19,7 @@ derived from the document text into real WAV containers and
 zero-crossing count) — again fully SQL-replayable, so the oracle
 attests the container roundtrip including the 44-byte header size.
 Video payloads remain opaque bytes with typed metadata; their decode is
-a real libav boundary and stays out of scope (stated honestly) — the
-frame-sampling fan-out plumbing is real (``sample_frames``).
+a real libav boundary and stays out of scope.
 
 Scale design:
 - payloads stay opaque `binary` end-to-end — Spark never interprets them,
@@ -252,13 +251,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType([
     T.StructField("mean_intensity", T.DoubleType()),
     T.StructField("std_intensity", T.DoubleType()),
     T.StructField("phash", T.LongType()),
-])
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("frame_ts_ms", T.LongType()),
-    T.StructField("frame_payload", T.BinaryType()),
 ])
 
 
@@ -610,90 +602,6 @@ def audio_features(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real thumbnail job: PNG decode → vectorized nearest-neighbor
-    downsample → PNG re-encode with updated metadata. Binary-in/
-    binary-out ``mapInPandas``; the heavy source payload never crosses a
-    shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    out_schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ])
-
-    def resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            metas = pdf["meta"].tolist()
-            payloads = pdf["payload"].tolist()
-            decoded = [
-                _decode_image(p, m["format"]) for p, m in zip(payloads, metas)
-            ]
-            ws = np.array([d[0] for d in decoded])
-            hs = np.array([d[1] for d in decoded])
-            px = np.frombuffer(b"".join(d[2] for d in decoded), dtype=np.uint8)
-            off = np.zeros(len(pdf), dtype=np.int64)
-            np.cumsum((ws * hs)[:-1], out=off[1:])
-            # one fancy-gather for the whole batch: nearest-neighbor sample
-            # grid per image as flat indices into the concatenated pixels
-            yi = (np.arange(out_h)[None, :] * hs[:, None]) // out_h  # (n, out_h)
-            xi = (np.arange(out_w)[None, :] * ws[:, None]) // out_w  # (n, out_w)
-            idx = (off[:, None, None] + yi[:, :, None] * ws[:, None, None]
-                   + xi[:, None, :])                                 # (n, out_h, out_w)
-            small = px[idx].reshape(len(pdf), out_h * out_w)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].astype(np.int64),
-                # re-encode: thumbnails come back out as real PNGs
-                "payload": [
-                    png_encode_gray(r.tobytes(), out_w, out_h) for r in small
-                ],
-                "width": np.int32(out_w),
-                "height": np.int32(out_h),
-            })
-
-    return media.select("media_id", "payload", "meta").mapInPandas(resize, out_schema)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000, max_frames: int = 8) -> DataFrame:
-    """Video frame sampling plumbing: one input row fans out to N frame
-    rows (timestamps from metadata duration; frame payload stub = sliced
-    source bytes). Real decoders drop in at the payload-slicing line."""
-    import pandas as pd
-
-    import numpy as np
-
-    def sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            payloads = [p or b"" for p in pdf["payload"].tolist()]
-            durs = np.array([int(m["duration_ms"] or 0) for m in pdf["meta"].tolist()])
-            ids = pdf["media_id"].to_numpy(dtype=np.int64)
-            # vectorized fan-out bookkeeping; only the bytes slicing (an
-            # object op by nature) runs per frame
-            ns = np.minimum(max_frames, np.maximum(1, durs // every_ms)).astype(np.int64)
-            steps = np.maximum(1, np.array([len(p) for p in payloads]) // ns)
-            rep = np.repeat(np.arange(len(pdf)), ns)          # source row per frame
-            fidx = np.arange(ns.sum()) - np.repeat(np.cumsum(ns) - ns, ns)
-            starts = fidx * steps[rep]
-            yield pd.DataFrame({
-                "media_id": ids[rep],
-                "frame_idx": fidx.astype(np.int32),
-                "frame_ts_ms": (fidx * every_ms).astype(np.int64),
-                "frame_payload": [
-                    payloads[r][s: s + steps[r]]
-                    for r, s in zip(rep.tolist(), starts.tolist())
-                ],
-            })
-
-    return media.select("media_id", "payload", "meta").mapInPandas(sample, FRAME_SCHEMA)
-
-
 AUDIO_FINGERPRINT_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("afp", T.LongType()),
@@ -718,7 +626,7 @@ def audio_fingerprint(media: DataFrame, n_frames: int = 64) -> DataFrame:
     consumed in-kernel and never shuffled; per-clip results are
     independent of batch composition. Energy stays inside int64 up to
     ~1.6e6-sample frames at full PCM16 amplitude — hour-scale mono
-    clips; beyond that, chunk the clip first (sample_frames)."""
+    clips; beyond that, chunk the clip first."""
     import numpy as np
     import pandas as pd
 

@@ -17,11 +17,13 @@ Three tiers, all over ``array<float>`` columns (the `embeddings` table):
   near-zero dots, so bucket bits match the SQL fold bit-for-bit).
   Hyperplanes are derived deterministically from md5, so signatures are
   reproducible across runs, partitionings, and engines (no RNG state).
-- **IVF** (`ivf_assign` / `ivf_topk`): k-means coarse quantizer; each
-  vector is assigned to its nearest centroid (one narrow pass, centroids
-  broadcast), queries probe the `nprobe` nearest cells. At scale the cell
-  id doubles as a partition key: write the corpus `partitionBy(cell)` and a
-  probe reads nprobe/num_cells of the data (partition pruning on cell).
+- **IVF** (`ivf_lloyd_centroids` / `ivf_lloyd_topk`, and the seed-only
+  `ivf_seeded_topk`): a deterministic fixed-point k-means coarse
+  quantizer; each vector is assigned to its nearest centroid (one narrow
+  pass, centroids broadcast), queries probe the `nprobe` nearest cells. At
+  scale the cell id doubles as a partition key: write the corpus
+  `partitionBy(cell)` and a probe reads nprobe/num_cells of the data
+  (partition pruning on cell).
 
 Recall of both approximate tiers against the brute-force baseline is
 pytest-checked (tests/test_similarity.py).
@@ -252,10 +254,10 @@ def lsh_topk(
     the unit-scale behavior unchanged, large-scale embeddings safe.
     Scoring uses the 6-dp-rounded cosine with an id tiebreak, as in
     every other tier, and is ALSO boundary-proofed (unlike
-    :func:`brute_force_topk` / :func:`semantic_dedup_gemm`, which
-    document the residual exposure): a GEMM-reassociated dot landing
-    within ~1 ulp of a ``round6`` half-boundary could round differently
-    from the oracle's sequential ``list_dot_product`` fold, so any
+    :func:`brute_force_topk`, which documents the residual exposure): a
+    GEMM-reassociated dot landing within ~1 ulp of a ``round6``
+    half-boundary could round differently from the oracle's sequential
+    ``list_dot_product`` fold, so any
     candidate whose scaled cosine falls within 1e-5 of a ``.5``
     boundary (~2e-5 of candidates, error bound ≈ dim·eps·1e6 ≈ 1e-7)
     has its three folds — a·b, a·a, b·b — recomputed with the exact
@@ -415,11 +417,11 @@ def ivf_seed_centroids(corpus: DataFrame, num_cells: int = 16,
     ids have the SMALLEST md5-derived hash are the cell centers, in hash
     order (cell i = i-th smallest). A deterministic uniform draw — the
     same centers on every run, partitioning, and engine — which is what
-    makes an IVF index SQL-oracle-checkable end-to-end (the kmeans
-    quantizer in :func:`ivf_train_centroids` gives tighter cells but its
-    RNG-seeded training is not replayable in SQL). Seed-sampled centers
-    are standard IVF practice when training cost matters (k-means init IS
-    a uniform draw); recall vs brute force is pytest-gauged like the
+    makes an IVF index SQL-oracle-checkable end-to-end (an RNG-seeded
+    k-means quantizer gives tighter cells but its training is not
+    replayable in SQL). Seed-sampled centers are standard IVF practice
+    when training cost matters (k-means init IS a uniform draw); recall
+    vs brute force is pytest-gauged like the
     other tiers. The ``num_cells``-row collect is bounded by contract —
     centroids must broadcast as plan literals regardless of quantizer.
     """
@@ -469,8 +471,8 @@ def ivf_seeded_topk(
     :func:`ivf_seed_centroids`): corpus vectors land in their top-cosine
     cell, queries probe their ``nprobe`` top-cosine cells, and the shared
     cell-scoped GEMM kernel scores candidates (:func:`_cell_scored_topk`).
-    Same scale shape as :func:`ivf_topk` — at 100 TB the cell id is the
-    partition key and a probe reads nprobe/num_cells of the corpus via
+    Same scale shape as :func:`ivf_lloyd_topk` — at 100 TB the cell id is
+    the partition key and a probe reads nprobe/num_cells of the corpus via
     partition pruning into one zero-shuffle scoring pass."""
     base = normalized(corpus, id_col, vec_col)
     cells = base.withColumn(
@@ -531,11 +533,10 @@ def ivf_lloyd_centroids(corpus: DataFrame, num_cells: int = 8, iters: int = 2,
     1e-6 fixed-point arithmetic — integer distances, integer-sum centroid
     means rounded half-away-from-zero — so training is bit-identical across
     engines, partitionings, and runs, and a SQL oracle can replay the WHOLE
-    index build (the RNG-seeded Spark-ML quantizer in
-    :func:`ivf_train_centroids` cannot). Each step is one shuffle:
-    groupBy(cell) over (count, 64 per-dim long sums); centroids collect as
-    plan literals (num_cells × dim longs, bounded by contract). A cell that
-    empties drops out on both engines identically.
+    index build (an RNG-seeded k-means quantizer cannot). Each step is one
+    shuffle: groupBy(cell) over (count, 64 per-dim long sums); centroids
+    collect as plan literals (num_cells × dim longs, bounded by contract).
+    A cell that empties drops out on both engines identically.
 
     Returns ``[(cell_id, scaled_long_vec), ...]`` for
     :func:`ivf_lloyd_topk`. Reference: the IVF tier of the similarity stack
@@ -588,7 +589,7 @@ def ivf_lloyd_centroids(corpus: DataFrame, num_cells: int = 8, iters: int = 2,
             # Grid values ≤ 1e6 keep every d² term and every per-batch
             # partial sum far below 2^53, so the kernel's float64 IS the
             # integer arithmetic the SQL oracle replays (the
-            # semantic_dedup_gemm argument); np.argmin's first-min matches
+            # assign_cells_arrow argument); np.argmin's first-min matches
             # the min-cell-id tiebreak because cents stay sorted.
             cell_ids = np.array([c for c, _ in cents], dtype=np.int64)
             c_mat = np.array([v for _, v in cents], dtype=np.float64)
@@ -715,39 +716,6 @@ def ivf_lloyd_topk(
         .select("id", "vec", _nearest_cells_int(F.col("s"), cents, nprobe).alias("cells"))
     )
     return _cell_scored_topk(cells.select("id", "vec", "cell"), qb, k)
-
-
-def ivf_train_centroids(corpus: DataFrame, num_cells: int = 16, seed: int = 7,
-                        id_col: str = "vec_id", vec_col: str = "embedding"):
-    """K-means coarse quantizer; returns centroids as a plain list of lists
-    (tiny — num_cells × dim — always broadcastable)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = normalized(corpus, id_col, vec_col).select(array_to_vector("vec").alias("features"))
-    model = KMeans(k=num_cells, seed=seed, maxIter=20).fit(feat)
-    return [list(map(float, c)) for c in model.clusterCenters()]
-
-
-def _nearest_cells(vec_col, centroids: list[list[float]], n: int):
-    """Array of the n nearest centroid ids by L2 — computed as a literal
-    expression chain (centroids are plan literals, no join)."""
-    dists = []
-    for i, c in enumerate(centroids):
-        lit = F.array(*[F.lit(x) for x in c])
-        d2 = F.aggregate(F.zip_with(vec_col, lit, lambda x, y: (x - y) * (x - y)),
-                         F.lit(0.0), lambda a, x: a + x)
-        dists.append(F.struct(d2.alias("d"), F.lit(i).alias("cell")))
-    ranked = F.array_sort(F.array(*dists))  # struct sort: by d, then cell
-    return F.transform(F.slice(ranked, 1, n), lambda s: s["cell"])
-
-
-def ivf_assign(corpus: DataFrame, centroids: list[list[float]],
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(id, vec, nrm, cell) — at scale, write this partitionBy("cell") so a
-    probe is a partition-pruned read."""
-    base = normalized(corpus, id_col, vec_col)
-    return base.withColumn("cell", _nearest_cells(F.col("vec"), centroids, 1)[0])
 
 
 #: Hard cap on the collected query side of :func:`_cell_scored_topk`
@@ -956,27 +924,6 @@ def _cell_scored_topk(
     )
 
 
-def ivf_topk(
-    corpus_cells: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k probing the nprobe nearest cells per query over a
-    pre-assigned corpus (:func:`ivf_assign`). Probe selection stays the
-    exact ``_nearest_cells`` expression on the (small) query side; the
-    candidate scoring runs through the shared cell-scoped GEMM kernel —
-    at 100 TB the cell id is a partition key, so a probe is a
-    partition-pruned read feeding one zero-shuffle scoring pass."""
-    qb = normalized(queries, id_col, vec_col).select(
-        "id", "vec", _nearest_cells(F.col("vec"), centroids, nprobe).alias("cells")
-    )
-    return _cell_scored_topk(corpus_cells.select("id", "vec", "cell"), qb, k)
-
-
 def retrieval_eval(
     results: DataFrame,
     gold: DataFrame,
@@ -1122,11 +1069,9 @@ def semantic_dedup(
 
 
 def fixed_point_cents(cents: list[list[float]]) -> list[tuple[int, list[int]]]:
-    """Project float centroids (e.g. from the Spark-ML quantizer
-    :func:`ivf_train_centroids`) onto the 1e-6 unit grid the fixed-point
+    """Project float centroids onto the 1e-6 unit grid the fixed-point
     machinery uses: L2-normalize, scale by 1e6, round half away from
-    zero. Lets :func:`semantic_dedup_gemm` run over ANY quantizer's
-    centroids, not just the Lloyd-replayable build."""
+    zero."""
     import math
 
     out = []
@@ -1140,111 +1085,6 @@ def fixed_point_cents(cents: list[list[float]]) -> list[tuple[int, list[int]]]:
             scaled.append(int(math.copysign(math.floor(abs(v) + 0.5), v)))
         out.append((i, scaled))
     return out
-
-
-def semantic_dedup_gemm(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[int]]],
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The 100 TB kernel path for :func:`semantic_dedup` — same output
-    (pytest-pinned frame equality on int AND string ids), two orders
-    faster per row:
-
-    - **Assignment** is one zero-shuffle ``mapInArrow`` pass: vectors
-      land on the 1e-6 integer grid exactly like ``_scaled_unit``, then
-      ``d² = |s|² − 2·s·Cᵀ + |C|²`` runs as a float64 BLAS GEMM that is
-      BIT-EXACT — grid values ≤ 1e6 keep every product ≤ 1e12 and every
-      64-term partial sum ≤ 6.4e13, all below 2^53, so the doubles ARE
-      the integers ``_nearest_cells_int`` folds in SQL expressions
-      (which cost O(num_cells · dim) codegen per row and stop being
-      viable past ~tens of cells). ``np.argmin`` keeps the first
-      minimum = the lowest cell id, the same tiebreak. The d² rows are
-      chunked so the (chunk × num_cells) distance block stays a few MB —
-      monolithic per-batch blocks page-fault this kernel 100× slower.
-    - **Within-cell dedup** is one shuffle by ``cell`` + a grouped
-      ``applyInPandas`` GEMM: members sort by id, the lower-triangle
-      cosine block rounds onto the 6-dp grid, and each row takes its
-      FIRST (= min-id) over-threshold predecessor. Cell size is bounded
-      by the SemDeDup num_cells contract, so the |cell|² block is too.
-
-    Use :func:`fixed_point_cents` to feed centroids from the Spark-ML
-    quantizer when Lloyd-build oracle replay isn't needed (the Lloyd
-    ``iters`` scans are themselves expression-bound at large num_cells).
-
-    Equality fine print: norms are computed by the SAME sequential fold
-    as the SQL ``aggregate`` (bit-identical); the residual exposure is
-    (a) ``F.round`` shortest-repr ties in the grid projection and (b) a
-    1-ulp GEMM-vs-fold dot landing exactly on a round6 boundary in the
-    cell dedup — both ~1e-14/value, caught by the frame-equality test
-    when they occur, and the consequence is one vector's cell/status,
-    never corruption.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    if not cents:
-        raise ValueError("cents must be non-empty")
-    cents = sorted(cents)  # argmin first-min tiebreak needs ascending ids
-    id_type = dict(corpus.dtypes)[id_col]
-
-    def _fold_sq_norm(mat):
-        # SEQUENTIAL left fold of x*x, column by column — the exact
-        # rounding order of the SQL ``aggregate`` in ``_norm``, so the
-        # kernel's norms are BIT-IDENTICAL to the expression path's
-        # (einsum's pairwise/SIMD accumulation can differ by 1 ulp,
-        # which a .5 grid boundary would amplify into a different cell)
-        acc = np.zeros(mat.shape[0])
-        for jj in range(mat.shape[1]):
-            acc = acc + mat[:, jj] * mat[:, jj]
-        return np.sqrt(acc)
-    # assignment: the shared zero-shuffle kernel pass (extracted late r7
-    # as assign_cells_arrow so knn_graph_mutual_edges shares it; bit
-    # identity argument in its docstring)
-    assigned = assign_cells_arrow(corpus, cents, id_col=id_col, vec_col=vec_col)
-
-    thr = float(threshold)
-
-    def _dedup(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("id").reset_index(drop=True)
-        ids = pdf["id"].to_numpy()
-        mat = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        nrm = _fold_sq_norm(mat)
-        scaled = (mat @ mat.T) / (nrm[:, None] * nrm[None, :]) * 1e6
-        cos = np.sign(scaled) * np.floor(np.abs(scaled) + 0.5) / 1e6  # round6
-        hit = cos >= thr
-        hit[np.triu_indices(len(ids))] = False  # predecessors only (j < i)
-        first = hit.argmax(axis=1)  # first True = min-id match
-        has = hit.any(axis=1)
-        hs = pd.Series(has)
-        # convert_dtypes keeps the id's own type nullable (Int64 for
-        # ints — a plain .where would round-trip through float64 and
-        # corrupt ids past 2^53 — pandas string dtype for string ids)
-        match = pd.Series(ids[first]).convert_dtypes().where(hs)
-        return pd.DataFrame(
-            {
-                "vec_id": ids,
-                "cell": pdf["cell"].to_numpy(),
-                "status": np.where(has, "near_dup", "kept"),
-                "match_id": match,
-                "cosine": pd.Series(
-                    cos[np.arange(len(ids)), first]
-                ).where(hs),
-            }
-        )
-
-    out = assigned.groupBy("cell").applyInPandas(
-        _dedup,
-        f"vec_id {id_type}, cell int, status string, "
-        f"match_id {id_type}, cosine double",
-    )
-    return out.withColumnRenamed("vec_id", id_col) if id_col != "vec_id" else out
 
 
 def hard_negatives(
@@ -1458,10 +1298,10 @@ def knn_graph_mutual_edges(
     (threshold first, then rank, cosine-desc/id-asc) — so the mutual
     self-join sees only ≤ kk·|corpus| narrow rows. The expression-join
     formulation (pair join + interpreted per-dim dot folds + rank
-    window) costs 52 s at sf0.1's 4M within-cell pairs; the kernel is
-    the semantic_dedup_gemm move and runs the same block in well under
-    a second. Cosines are 6-dp rounded before the rank, the threshold,
-    and the mutual test; GEMM entries within 1e-5 of a round6
+    window) costs 52 s at sf0.1's 4M within-cell pairs; the kernel runs
+    the same block in well under a second. Cosines are 6-dp rounded
+    before the rank, the threshold, and the mutual test; GEMM entries
+    within 1e-5 of a round6
     half-boundary are recomputed with the exact sequential fold (norms
     already are), so the ranking is boundary-proof AND cos(a,b) =
     cos(b,a) exactly — mutuality is engine-stable.
@@ -1616,7 +1456,7 @@ def _fold_sq_norms(mat):
     """Sequential left fold of Σx² column-by-column — the exact rounding
     order of the SQL ``aggregate`` in :func:`_norm`, shared by every
     kernel that must scale vectors bit-identically to the expression
-    path (see semantic_dedup_gemm's fine print)."""
+    path."""
     import numpy as np
 
     acc = np.zeros(mat.shape[0])
@@ -1644,11 +1484,10 @@ def assign_cells_arrow(
     dominant cost of every consumer. Zero-norm vectors are dropped
     (out of cosine domain), matching ``normalized().filter(nrm > 0)``.
 
-    Output: ``id, cell (int), vec`` — the grouped-kernel input shape
-    shared by :func:`semantic_dedup_gemm` and
-    :func:`knn_graph_mutual_edges`. The d² chunking keeps the
-    (chunk × num_cells) block a few MB (monolithic blocks page-fault
-    ~100× slower — the semantic_dedup_gemm lesson).
+    Output: ``id, cell (int), vec`` — the input shape of
+    :func:`ivf_lloyd_topk` and :func:`knn_graph_mutual_edges`. The d²
+    chunking keeps the (chunk × num_cells) block a few MB (monolithic
+    blocks page-fault ~100× slower).
     """
     import numpy as np
     import pyarrow as pa

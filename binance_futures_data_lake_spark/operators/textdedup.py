@@ -85,17 +85,6 @@ def words(col, lowercase: bool = True):
     return F.filter(F.split(c, r"\s+"), lambda t: t != "")
 
 
-def shingles(col, n: int = 3):
-    """Word n-gram shingles as strings ("a b c").
-
-    Prefer ``shingles_of_tokens`` over a MATERIALIZED token column for the
-    hot path: any expression passed here is re-evaluated a handful of
-    times per row (size + the shifted slices), which for raw text means
-    that many regex splits per document.
-    """
-    return shingles_of_tokens(words(col), n)
-
-
 def shingles_of_tokens(toks, n: int = 3):
     """Shingles from a token-array column (see ``words``).
 

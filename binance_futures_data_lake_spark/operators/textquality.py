@@ -547,56 +547,6 @@ def perplexity_bucket_mix(
     )
 
 
-def perplexity_bucket_mix_approx(
-    docs: DataFrame,
-    n_buckets: int = 3,
-    keep_rates: tuple[float, ...] = (1.0, 0.5, 0.1),
-    accuracy: int = 10000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """The 100 TB production path for :func:`perplexity_bucket_mix`: tier
-    boundaries come from ``percentile_approx`` (one aggregate pass — a
-    mergeable KLL-style sketch, no per-language global sort), broadcast
-    back onto a narrow bucket-assignment filter. Same output contract;
-    tier membership can differ from the exact ntile only for documents
-    within the sketch's rank-error band of a boundary (pytest pins the
-    agreement rate and the keep-rule equivalence). The exact sibling
-    stays the oracle-checked form; this is the same exact→sketch trade
-    as ``kmv_quantiles`` for A11."""
-    from binance_futures_data_lake_spark.operators.sketch import uniform_hash
-
-    if n_buckets < 1 or len(keep_rates) != n_buckets:
-        raise ValueError("keep_rates must supply one rate per bucket")
-    scored = unigram_logprob(docs, id_col=id_col, text_col=text_col)
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")
-    ).join(scored, "doc_id")
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    thr = base.groupBy("lang").agg(
-        F.percentile_approx("logprob_avg", qs, accuracy).alias("__thr")
-    )
-    # ascending thresholds; tier 1 (head) = above the top boundary
-    ranked = base.join(F.broadcast(thr), "lang").withColumn(
-        "bucket",
-        F.lit(n_buckets)
-        - F.aggregate(
-            "__thr",
-            F.lit(0),
-            lambda acc, t: acc + F.when(F.col("logprob_avg") >= t, 1).otherwise(0),
-        ),
-    ).drop("__thr")
-    rate = F.lit(float(keep_rates[-1]))
-    for i in range(n_buckets - 1, 0, -1):
-        rate = F.when(F.col("bucket") == i, F.lit(float(keep_rates[i - 1]))).otherwise(
-            rate
-        )
-    return ranked.withColumn(
-        "kept", (uniform_hash(F.col("doc_id")) < rate).cast("int")
-    )
-
-
 def c4_flags(
     docs: DataFrame,
     id_col: str = "doc_id",

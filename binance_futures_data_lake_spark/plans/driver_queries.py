@@ -28,7 +28,7 @@ from binance_futures_data_lake_spark.functions.ewm import ewm_apply, span_to_alp
 from binance_futures_data_lake_spark.operators.asof import asof_join_backward
 from binance_futures_data_lake_spark.operators.dedup import dedup_keep_last
 from binance_futures_data_lake_spark.operators.gaps import missing_ranges
-from binance_futures_data_lake_spark.operators.resample import bucket_start, tick_ohlcv
+from binance_futures_data_lake_spark.operators.resample import tick_ohlcv
 from binance_futures_data_lake_spark.session import configure_session
 from binance_futures_data_lake_spark.sources.testdata import load_events, load_table
 
@@ -307,9 +307,9 @@ def q_rolling_pctl_of_last(spark, sf_dir):
              row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
       FROM events
     ), t AS (
-      -- segmented closed form (W = 689 = functions/ewm.segment_len for
-      -- span=10): exponents relative to 689-row blocks, so the expansion
-      -- cannot overflow on long per-user series
+      -- segmented closed form (W = 689 = ceil(60 / -log10(1 - a)) for
+      -- span=10, so (1-a)^W ~ 1e-60): exponents relative to 689-row
+      -- blocks, so the expansion cannot overflow on long per-user series
       SELECT *, (rn - 1) % 689 AS pos,
              value * (CASE WHEN rn = 1 THEN 1.0 ELSE 2.0 / 11.0 END)
                    * power(9.0 / 11.0, -((rn - 1) % 689)) AS u
@@ -332,7 +332,7 @@ def q_rolling_pctl_of_last(spark, sf_dir):
 def q_ema_per_user(spark, sf_dir):
     """SURVEY W6: pandas ewm(span=10, adjust=False) parity via the per-key
     applyInPandas kernel; oracle uses the segmented closed-form expansion
-    (overflow-free at any series length — functions/ewm.ewm_closedform)."""
+    (overflow-free at any series length)."""
     ev = load_events(spark, sf_dir).select("event_id", "user_id", "ts", "value")
     out = ewm_apply(ev, {"ema10": ("value", span_to_alpha(10.0))}, ["user_id"], ["ts"])
     return out.withColumn("ema10", F.round("ema10", 4))
@@ -462,8 +462,10 @@ def q_dedup_keep_last(spark, sf_dir):
     """,
 )
 def q_gap_ranges_hourly(spark, sf_dir):
-    """SURVEY J6/J7: generated-grid anti-join + gaps-and-islands
-    consolidation (backfill_gaps.py:104-122, gaps_report.py:13-29)."""
+    """SURVEY J6/J7: missing hours consolidated into ranges by
+    ``gaps.missing_ranges`` (one lag per user over the present hours); the
+    oracle takes the generated-grid anti-join + gaps-and-islands route of
+    the reference's backfill_gaps.py:104-122 and gaps_report.py:13-29."""
     ev = load_events(spark, sf_dir)
     present = ev.select("user_id", F.date_trunc("hour", "ts").alias("ts")).distinct()
     return missing_ranges(present, 60, ["user_id"])
@@ -786,17 +788,14 @@ def q_events_pivot_daily(spark, sf_dir):
 )
 def q_funnel_click_purchase(spark, sf_dir):
     """Keyed time-bounded funnel join (click → purchase within 30 min per
-    user) — the batch twin of streaming/pipeline.funnel_join_stream, whose
-    stream-stream form carries the identical join condition (the time
-    bound is what lets streaming state expire). Batch/stream parity over a
-    finite input is asserted in tests/test_streaming.py.
+    user).
 
     The join goes through interval_join (time-bucketized, by=key): a plain
     equi-join on user_id evaluates every click x purchase pair in a
     user's HISTORY — quadratic in per-user density, 100x pair evals when
     the timeline grows 10x. Bucketizing on 30-min grains bounds candidates
-    to adjacent windows, the batch analogue of the watermark state bound
-    the streaming twin already relies on: pair count grows linearly with
+    to adjacent windows, the batch analogue of a streaming watermark's
+    state bound: pair count grows linearly with
     the timeline (0.80 s -> 0.35 s at 10x sf0.1).
 
     The click side is pinned shuffle_hash: it is a FACT stream, and left
@@ -1789,7 +1788,7 @@ def q_mae_mfe_hourly(spark, sf_dir):
         row_number() OVER wo AS rn
       FROM bars WINDOW wo AS (PARTITION BY event_type ORDER BY bucket_ts)
     ), t AS (
-      -- segmented closed form, W = 1865 (= segment_len(1/14)): see
+      -- segmented closed form, W = 1865 (a = 1/14): see
       -- ema_per_user — overflow-free at any series length
       SELECT *, (rn - 1) % 1865 AS pos,
              true_range * (CASE WHEN rn = 1 THEN 1.0 ELSE 1.0/14.0 END)
@@ -3027,10 +3026,8 @@ def q_ann_ivf_topk(spark, sf_dir):
     (operators/similarity.py ivf_lloyd_centroids), integer-L2 cell
     assignment, 3-cell probe, exact cosine re-rank. The oracle replays the
     ENTIRE index build — seeds, both Lloyd steps, assignment, probe — in
-    SQL; recall vs brute force is pytest-gauged. The RNG-seeded Spark-ML
-    kmeans quantizer (ivf_train_centroids/ivf_assign/ivf_topk) remains the
-    library path when bit-replayability doesn't matter. At scale the cell
-    id is a partition key so a probe is a partition-pruned read."""
+    SQL; recall vs brute force is pytest-gauged. At scale the cell id is a
+    partition key so a probe is a partition-pruned read."""
     from binance_futures_data_lake_spark.operators.similarity import (
         ivf_lloyd_centroids, ivf_lloyd_topk,
     )
@@ -4869,44 +4866,6 @@ def q_range_boxes(spark, sf_dir):
     return out.orderBy("event_type", "cand_id")
 
 
-# Retired from the registry in r6 (VERDICT r5 next-steps #6): the reduced
-# twin ``sweep_pipeline`` hash-attests the same B1-B3 composition against a
-# recursive-CTE oracle, so this unreduced rows-only registry row was pure
-# SELFCHECK noise. The function stays importable (and exercised by the
-# backtest pytest family) as the synthetic-source end-to-end twin.
-def q_research_sweep_stats(spark, sf_dir):
-    """SURVEY B1-B3 + A12 end-to-end: the reference's full research chain
-    (M1 features → M15 direction regime → M5 vol regime → as-of joins →
-    H1 router → vectorized signals → per-(symbol, config) position kernel →
-    trade statistics) as ONE lazy DataFrame DAG over the deterministic
-    synthetic kline source. Embarrassingly parallel across symbols × configs."""
-    from binance_futures_data_lake_spark.operators.backtest import Cfg, run_sweep, sweep_stats
-    from binance_futures_data_lake_spark.operators.regime import VolRegimeParams
-    from binance_futures_data_lake_spark.plans.pipeline import joined_research_frame
-    from binance_futures_data_lake_spark.sources.synthetic import synthetic_klines_m1
-
-    m1 = synthetic_klines_m1(spark, symbols=("AAA", "BBB"), n_minutes=5 * 1440, trend_amp=0.08)
-    frame = joined_research_frame(m1, vol_params=VolRegimeParams(lookback=48))
-    all_hours = ",".join(str(h) for h in range(24))
-    # thresholds sized to the synthetic walk's compressed ranges (real-data
-    # defaults gate on range_rel levels this generator rarely reaches)
-    loose = dict(session_hours=all_hours, minute_guard=0, mr_d=0.10,
-                 mr_rr=0.20, mr_mean_dist=0.05, mr_cp_low=0.45, mr_cp_high=0.55)
-    trades = run_sweep(frame, [
-        Cfg(name="base", **loose),
-        Cfg(name="tight", mr_sl_atr=1.2, mr_time_stop=10, **loose),
-    ])
-    out = sweep_stats(trades).orderBy("cfg")
-    keep = ["cfg", "n_trades", "n_trend", "n_range", "winrate", "avg_r", "sum_r", "pf"]
-    return out.select(
-        "cfg", "n_trades", "n_trend", "n_range",
-        r6(F.col("winrate")).alias("winrate"),
-        r6(F.col("avg_r")).alias("avg_r"),
-        r6(F.col("sum_r")).alias("sum_r"),
-        r6(F.col("pf")).alias("pf"),
-    )
-
-
 def _sweep_pipeline_sql() -> str:
     """Recursive-CTE oracle for the FULL research-sweep composition
     (VERDICT r4 next-steps #2): regime-case walk → router gate →
@@ -5240,8 +5199,7 @@ def q_sweep_pipeline(spark, sf_dir):
     TP2/flip/vol-kill/time-stop; TREND_FIRST vs MR_FIRST priority,
     gate-sized qty, 5-bar cooldown on gross loss, 0.02 R roundtrip cost)
     → ``sweep_stats`` per (event_type, cfg). Retires the rows-only
-    status of the B3 composition: research_sweep_stats remains as the
-    unreduced synthetic-source twin. Per-trade r_mult/pnl_r are 6-dp
+    status of the B3 composition. Per-trade r_mult/pnl_r are 6-dp
     rounded BEFORE aggregation on both sides so the float sums are
     order-stable at hash precision.
 
@@ -5392,7 +5350,6 @@ def q_ml_confidence_keep(spark, sf_dir):
     """SURVEY M7 (run_ml_m15_v1.py:167-214): confidence-keep-fraction
     selection — exact quantile thresholds on a momentum score, keep the
     top/bottom 20%, evaluate directional forward return and winrate."""
-    from pyspark.sql import Window as SW
 
     bars = _hourly_bars(spark, sf_dir)
     by, order = ["event_type"], ["bucket_ts"]

@@ -228,65 +228,3 @@ def read_checkpoint(root: str, key: str = "next_start_time_ms") -> int | None:
         return None
     with open(p) as f:
         return json.load(f).get(key)
-
-
-# --- CSV surface (S7 read, S8 multi-format fallback, S10 mirror write) -----
-
-def write_csv_mirror(df: DataFrame, root: str) -> None:
-    """S10 (compact_staging.py:97-98, backfill_range.py:93-101): optional
-    CSV mirror alongside the canonical parquet. Same partition layout, one
-    file per partition; timestamps serialize as ISO-8601 UTC."""
-    (
-        with_partition_cols(df)
-        .repartition(*[F.col(c) for c in PARTITION_COLS])
-        .write.mode("overwrite")
-        .partitionBy(*PARTITION_COLS)
-        .option("header", True)
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-        .csv(os.path.join(root, "csv_mirror"))
-    )
-
-
-def read_csv_normalized(
-    spark: SparkSession,
-    path: str,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """S7 (run_sweep_router_v2.py:188-215, audit_regime_cases_v1.py:26-39):
-    header CSV read with tolerant timestamp normalization — epoch-ms ints,
-    epoch-seconds, and ISO strings all land as TimestampType UTC."""
-    df = spark.read.option("header", True).option("inferSchema", True).csv(path)
-    if ts_col not in df.columns:
-        return df
-    dt = dict(df.dtypes)[ts_col]
-    c = F.col(ts_col)
-    if dt in ("bigint", "int", "double"):
-        # epoch-ms if plausibly ms-scale (> 10^11 ≈ 1973 in ms), else seconds
-        # (cast to long BEFORE scaling: int·1000 overflows 32-bit)
-        cl = c.cast("long")
-        ms = F.when(F.abs(cl) > 100_000_000_000, cl).otherwise(cl * 1000)
-        df = df.withColumn(ts_col, F.timestamp_millis(ms))
-    elif dt == "string":
-        df = df.withColumn(ts_col, F.to_timestamp(c))
-    return df
-
-
-def read_table_auto(
-    spark: SparkSession,
-    root: str,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """S8 (build_m15_direction_regime.py:100-227): parquet-dir-else-CSV
-    fallback loader with timestamp normalization."""
-    canon = canonical_path(root)
-    if _exists(spark, canon):
-        return spark.read.parquet(canon)
-    csv_root = os.path.join(root, "csv_mirror")
-    if _exists(spark, csv_root):
-        return read_csv_normalized(spark, csv_root, ts_col)
-    if _exists(spark, root):
-        try:
-            return spark.read.parquet(root)
-        except Exception:
-            return read_csv_normalized(spark, root, ts_col)
-    raise FileNotFoundError(f"no parquet or CSV table at {root}")

@@ -4,12 +4,13 @@ Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file per table under
 ``/root/testdata/sf{0.001,0.01,0.1}``.
 
-The only special case is ``events``: its ``ts`` is parquet TIMESTAMP(NANOS),
-which Spark's reader rejects unless ``spark.sql.legacy.parquet.nanosAsLong``
-is set. We set that conf at runtime and convert nanos → microsecond
-timestamps (identical truncation to DuckDB's ns→µs read, so oracle
-comparisons agree), with an explicit-schema fallback if the conf cannot be
-set on the hosting session.
+The only special case is ``events``: its ``ts`` is parquet TIMESTAMP(NANOS).
+With ``spark.sql.legacy.parquet.nanosAsLong`` set (``session.RUNTIME_CONFS``
+sets it) Spark reads it as a long; without it, Spark 4 reads it as
+TIMESTAMP_NTZ. ``load_events`` takes the session as it finds it, changes
+none of its confs, and normalizes either form to microsecond timestamps
+(identical truncation to DuckDB's ns→µs read, so oracle comparisons agree),
+with an explicit-schema fallback for readers that reject the column.
 """
 
 from __future__ import annotations
@@ -42,7 +43,6 @@ def load_events(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """events with ``ts`` as a proper (µs) TimestampType column."""
     path = os.path.join(sf_dir, "events.parquet")
     try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
     except Exception:
         df = spark.read.schema(EVENTS_SCHEMA).parquet(path)

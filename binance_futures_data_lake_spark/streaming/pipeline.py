@@ -10,7 +10,6 @@ Reference → Spark mapping implemented here:
 - staged append + compaction + checkpoint
   (klines_m1.py:146-185, compact_staging.py)      → ``foreachBatch`` upsert +
                                                      streaming checkpointLocation
-- sticky regime state machine (W17)               → ``applyInPandasWithState``
 
 Every ``run_*`` entry point starts its query through one helper,
 ``_start_available_now`` (append mode, availableNow trigger, foreachBatch
@@ -119,73 +118,6 @@ def windowed_ohlcv_stream(
             F.col("win.start").alias("bucket_ts"),
             "open", "high", "low", "close", "volume", "n_ticks",
         )
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Exactly-once on the ingest key within the safe lag: the streaming
-    form of dedup-keep-last (compact_staging.py:89-93). State for a key is
-    dropped once the watermark passes it, so state size is bounded by
-    (arrival rate × watermark), not history length."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(keys))
-
-
-def funnel_join_stream(
-    events: DataFrame,
-    first_type: str,
-    then_type: str,
-    key_col: str = "user_id",
-    within: str = "30 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Stream-stream time-bounded self-join: for each ``first_type`` event,
-    every ``then_type`` event by the same key within ``within`` afterwards
-    (the funnel/conversion pattern — e.g. signal fired → order filled).
-
-    Both sides carry a watermark and the join condition bounds event time
-    (0 ≤ then.ts − first.ts ≤ within), which is what lets Spark EXPIRE
-    buffered state: a first-side row is dropped once the watermark passes
-    its ts + within, so state is (arrival rate × horizon), not history.
-    An unbounded-time stream-stream join would buffer forever — the time
-    bound is the scale contract, not a convenience.
-
-    Inner-join semantics: matches emit as soon as both rows arrive (no
-    window-close latency); batch/stream parity over a finite input is
-    exact and tested (tests/test_streaming.py).
-    """
-    a = (
-        events.filter(F.col("event_type") == first_type)
-        .select(
-            F.col(key_col).alias("key"),
-            F.col(ts_col).alias("first_ts"),
-            F.col("event_id").alias("first_id"),
-            F.col("value").alias("first_value"),
-        )
-        .withWatermark("first_ts", watermark)
-    )
-    b = (
-        events.filter(F.col("event_type") == then_type)
-        .select(
-            F.col(key_col).alias("key_b"),
-            F.col(ts_col).alias("then_ts"),
-            F.col("event_id").alias("then_id"),
-            F.col("value").alias("then_value"),
-        )
-        .withWatermark("then_ts", watermark)
-    )
-    cond = (
-        (F.col("key") == F.col("key_b"))
-        & (F.col("then_ts") >= F.col("first_ts"))
-        & (F.col("then_ts") <= F.col("first_ts") + F.expr(f"INTERVAL {within}"))
-    )
-    return a.join(b, cond, "inner").select(
-        "key", "first_id", "first_ts", "first_value", "then_id", "then_ts", "then_value"
     )
 
 
@@ -322,59 +254,6 @@ def run_session_ingest(
         foreach_batch_upsert(
             sink_root, keys=("user_id", "session_start"), part_ts_col="session_start"
         ),
-    )
-
-
-def sticky_counter_stream(
-    events: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    threshold: float = 100.0,
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """W17's shape as a custom stateful streaming operator: per key, a
-    running (count, consecutive-above-threshold streak) carried across
-    micro-batches via ``applyInPandasWithState``. The streak state is the
-    minimal sticky-regime kernel — persistence counting over an unbounded
-    stream with bounded (per-key constant) state."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    out_schema = StructType([
-        StructField("key", StringType()),
-        StructField("n_events", LongType()),
-        StructField("streak_above", LongType()),
-        StructField("max_streak", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("n_events", LongType()),
-        StructField("streak", LongType()),
-        StructField("max_streak", LongType()),
-    ])
-
-    def update(key, pdfs, state: GroupState):
-        n, streak, mx = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for v in pdf[value_col]:
-                n += 1
-                streak = streak + 1 if v > threshold else 0
-                mx = max(mx, streak)
-        state.update((n, streak, mx))
-        yield pd.DataFrame(
-            {"key": [str(key[0])], "n_events": [n], "streak_above": [streak], "max_streak": [mx]}
-        )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
     )
 
 

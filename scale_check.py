@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import sys
 import tempfile
@@ -190,7 +189,7 @@ def flagship_main() -> None:
     """One-order-higher probe (VERDICT r5 #9): the 3 flagship shapes —
     OHLCV resample, backward as-of join, banded-hamming near-dup — at
     ``--rows`` (default 100M), each with its FINAL-plan shuffle-exchange
-    count (AQE-final via exchange_count(execute=True), which re-runs the
+    count (AQE-final via obs.exchange_count(execute=True), which re-runs the
     stage untimed) and JVM heap headroom after the stage. The claim under
     test: exchange counts are identical to the 10M probe's — the plans
     scale by partition width, not by new shuffles."""
@@ -203,7 +202,6 @@ def flagship_main() -> None:
     from binance_futures_data_lake_spark.operators.textdedup import (
         hamming_near_pairs,
     )
-    from binance_futures_data_lake_spark.sources.bucketed import exchange_count
 
     stages: dict[str, dict] = {}
 
@@ -214,7 +212,7 @@ def flagship_main() -> None:
             "sec": round(dt, 2),
             "rows": n,
             "rows_per_sec": int(n / dt) if dt else None,
-            "shuffle_exchanges": exchange_count(df, execute=True),
+            "shuffle_exchanges": obs.exchange_count(df, execute=True),
             **heap_gb(spark),
         }
 
@@ -388,129 +386,6 @@ def pq_recall_main() -> None:
     print(json.dumps({
         "mode": "pq_recall", "n_vectors": n_vecs, "dim": dim,
         "n_queries": 100, "k": ann_k, "n_sub": 16, "ks": 256, "rows": rows,
-    }))
-    spark.stop()
-
-
-def pq_opq_main() -> None:
-    """OPQ-lite coordinate-permutation experiment (VERDICT r9 #6): does
-    re-ordering coordinates before the contiguous subspace slice lift
-    trained-book ADC recall? Two deterministic permutations against the
-    identity baseline, same clustered generator as ``--pq-recall``:
-
-    - ``splitmix``: coordinates ordered by splitmix64(j) — a fixed
-      pseudo-random deal that decorrelates subspaces from any
-      coordinate-block structure (the cheap half of OPQ's rotation);
-    - ``varbalance``: per-coordinate corpus variance (one aggregation
-      pass), coordinates sorted by variance descending and LPT-dealt so
-      every subspace carries equal energy (OPQ's eigenvalue-allocation
-      heuristic without the rotation).
-
-    A permutation is orthogonal, so cosine ranks are unchanged — truth
-    is computed once on the identity layout and recall is measured in id
-    space. Expected outcome on THIS generator is a NULL: every
-    coordinate is built from the same (cluster, noise) recipe, so the
-    layout is exchangeable and no permutation can beat identity by more
-    than sampling noise — committing the measured row either way is the
-    point (the r9 width-sweep negative is the model). The probe exists
-    because production embeddings are NOT exchangeable (PCA-rotated or
-    Matryoshka-truncated models front-load variance), and there the
-    varbalance deal is the documented first lever."""
-    n_vecs = _arg("--rows", 1_000_000)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-    spark = get_spark("bfdl-pq-opq")
-    from binance_futures_data_lake_spark.operators.similarity import (
-        brute_force_topk,
-        pq_adc_topk,
-        pq_codebooks_lloyd,
-        pq_rerank_topk,
-    )
-
-    dim, ann_k, n_sub = 64, 10, 16
-    ann = clustered_vectors(spark, n_vecs, dim).cache()
-    ann.count()
-    annq = probe_queries(ann, n_vecs)
-    truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
-
-    def _splitmix(x: int) -> int:
-        z = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-        return (z ^ (z >> 31)) & 0x7FFFFFFFFFFFFFFF
-
-    # per-coordinate variance: one posexplode + 64-group agg. Sums are
-    # float64 (ordering input only, never a result): variances are
-    # rounded to 1e-9 with index tiebreak, so only a tie at that
-    # granularity could flip the deal — and any such near-tie means the
-    # two layouts are equivalent anyway.
-    vr = (
-        ann.select(F.posexplode("embedding").alias("j", "x"))
-        .groupBy("j")
-        .agg(
-            F.avg(F.col("x") * F.col("x")).alias("ex2"),
-            F.avg("x").alias("ex"),
-        )
-        .select("j", (F.col("ex2") - F.col("ex") * F.col("ex")).alias("var"))
-        .collect()
-    )
-    variances = {int(r.j): round(float(r.var), 9) for r in vr}
-
-    def _varbalance_perm() -> list[int]:
-        order = sorted(range(dim), key=lambda j: (-variances[j], j))
-        sub = dim // n_sub
-        groups: list[list[int]] = [[] for _ in range(n_sub)]
-        loads = [0.0] * n_sub
-        for j in order:  # LPT: next-largest coord -> lightest open subspace
-            m = min(
-                (i for i in range(n_sub) if len(groups[i]) < sub),
-                key=lambda i: (loads[i], i),
-            )
-            groups[m].append(j)
-            loads[m] += variances[j]
-        return [j for g in groups for j in sorted(g)]
-
-    perms = {
-        "identity": list(range(dim)),
-        "splitmix": sorted(range(dim), key=lambda j: (_splitmix(j), j)),
-        "varbalance": _varbalance_perm(),
-    }
-
-    rows: list[dict] = []
-    for name, perm in perms.items():
-        if perm == perms["identity"] and name != "identity":
-            rows.append({"layout": name, "note": "degenerated to identity"})
-            continue
-        pc = ann.withColumn(
-            "embedding", F.array(*[F.col("embedding")[p] for p in perm])
-        ).cache()
-        pc.count()
-        pq = probe_queries(pc, n_vecs)
-        t0 = time.perf_counter()
-        books = pq_codebooks_lloyd(pc, n_sub=n_sub, ks=256, iters=2)
-        book_sec = round(time.perf_counter() - t0, 2)
-        for stage_name, thunk in (
-            ("pq_adc", lambda: pq_adc_topk(pc, pq, books, k=ann_k)),
-            ("pq_rerank_1000",
-             lambda: pq_rerank_topk(pc, pq, books, k=ann_k, shortlist=1000)),
-        ):
-            t0 = time.perf_counter()
-            found = topk_pairs(thunk())
-            rows.append({
-                "layout": name, "stage": stage_name,
-                "recall_at_10": round(len(found & truth) / len(truth), 4),
-                "sec": round(time.perf_counter() - t0, 2),
-                "codebook_sec": book_sec,
-            })
-        if pc is not ann:
-            pc.unpersist()
-
-    print(json.dumps({
-        "mode": "pq_opq", "n_vectors": n_vecs, "dim": dim, "n_sub": n_sub,
-        "ks": 256, "n_queries": 100, "k": ann_k,
-        "variance_spread": {
-            "min": min(variances.values()), "max": max(variances.values()),
-        },
-        "rows": rows,
     }))
     spark.stop()
 
@@ -1698,106 +1573,9 @@ def streaming_dedup_main() -> None:
     spark.stop()
 
 
-def trading_bucketed_main() -> None:
-    """The storage-side answer to the generic-layout window-sort spill
-    (SCALE_PROBE_r10 trading_100m: 12.7 GB mem + 5.2 GB disk in
-    window_features at 1M-row symbol runs): write the same ``--rows``
-    bars bucketBy(symbol) + sortBy(symbol, ts) with ONE file per bucket
-    (repartition on the bucket key — the bucketing hash IS the
-    repartition hash), read under
-    spark.sql.legacy.bucketedTableScan.outputOrdering=true, and run the
-    window-feature pass. Expected: ZERO exchanges, ZERO sorts, ZERO
-    spill — the pass degrades to a streaming map over pre-sorted runs
-    (pytest pins the plan shape at test scale:
-    tests/test_bucketed.py::test_bucket_sorted_window_zero_exchange_zero_sort).
-
-    r11 (VERDICT r10 #7): the day-anchored VWAP's required ordering is
-    (symbol, day, ts); with day DERIVED from ts the file order
-    satisfies it but not PROVABLY (r10 measured the 8.9 s re-sort that
-    costs at 100M). The layout now MATERIALIZES the day column into
-    sortBy(symbol, ds, ts) — same physical row order, since ds is
-    monotone in ts per symbol — and every window references the stored
-    ``ds``: the anchored VWAP partitions on it, the feature windows
-    lead their order with it. Both stages are then provably ordered:
-    zero exchanges, zero Sort nodes, zero spill."""
-    total_rows = _arg("--rows", 100_000_000)
-    n_symbols = 100
-    n_buckets = 32
-    n_minutes = max(1440, total_rows // n_symbols)
-    os.environ.setdefault(
-        "SPARK_DRIVER_MEMORY", "64g" if total_rows > 20_000_000 else "32g"
-    )
-    spark = get_spark("bfdl-scale-bucketed", overrides={
-        "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
-    })
-    from binance_futures_data_lake_spark.sources.bucketed import (
-        exchange_count, read_bucketed, write_bucketed,
-    )
-
-    stages: dict[str, dict] = {}
-
-    def stage(name: str, df, extra=None):
-        rec = obs.run(spark, name, lambda: df)
-        dt = rec["best_s"]
-        n = df.count()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        stages[name] = {
-            "sec": round(dt, 2),
-            "rows_per_sec": int(n / dt) if dt else None,
-            "rows": n,
-            "shuffle_exchanges": exchange_count(df, execute=False),
-            "sort_nodes": len(re.findall(r"\bSort\b", plan)),
-            **gb(rec),
-            **(extra or {}),
-        }
-
-    symbols = tuple(f"SYM{i:03d}" for i in range(n_symbols))
-    m1 = synthetic_klines_m1(
-        spark, symbols=symbols, n_minutes=n_minutes, trend_amp=0.05
-    ).withColumn("ds", F.to_date("ts"))
-    table = "bfdl_scale_m1_bsorted"
-    path = tempfile.mkdtemp(prefix="bfdl_bsorted_")
-    try:
-        t0 = time.perf_counter()
-        write_bucketed(
-            m1.repartition(n_buckets, "symbol"), table, "symbol", n_buckets,
-            sort_cols=["symbol", "ds", "ts"], path=path,
-        )
-        write_sec = round(time.perf_counter() - t0, 2)
-        t = read_bucketed(spark, table)
-
-        # leading the order with the STORED ds keeps the required
-        # ordering (symbol, ds, ts) == the file order — provable, so no
-        # Sort node; semantics unchanged (ds is monotone in ts)
-        by, order = ["symbol"], ["ds", "ts"]
-        stage("window_features_bucketed", window_features(t, by, order),
-              {"write_sec": write_sec})
-        vwap = t.withColumn(
-            "vwap_d",
-            W.anchored_vwap("close", "volume_base", by, ["ts"],
-                            anchor=F.col("ds")),
-        )
-        stage("vwap_day_anchored_bucketed", vwap)
-        print(json.dumps({
-            "mode": "trading_bucketed", "rows": total_rows,
-            "n_symbols": n_symbols, "n_buckets": n_buckets,
-            "stages": stages,
-        }))
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(path, ignore_errors=True)
-    spark.stop()
-
-
 def main() -> None:
     if "--flagship" in sys.argv:
         flagship_main()
-        return
-    if "--trading-bucketed" in sys.argv:
-        trading_bucketed_main()
-        return
-    if "--pq-opq" in sys.argv:
-        pq_opq_main()
         return
     if "--pq-recipe" in sys.argv:
         pq_recipe_main()
@@ -1958,49 +1736,6 @@ def main() -> None:
 
     stage("interval_join_bucketed", rjoin)
 
-    # bucketed-table co-located join: pay the shuffle ONCE at write time,
-    # then the fact-fact join on the bucket key plans with ZERO shuffle
-    # exchanges (the 100 TB lever sources/bucketed.py documents; asserted
-    # green in tests/test_bucketed.py, recorded per-run here)
-    from binance_futures_data_lake_spark.sources.bucketed import (
-        exchange_count,
-        write_bucketed,
-    )
-
-    broot = tempfile.mkdtemp(prefix="bfdl_buckets_")
-    try:
-        t0 = time.perf_counter()
-        # bucket on the FULL join key set: Spark's co-partition rule
-        # (requireAllClusterKeysForCoPartition) does not elide exchanges
-        # for a subset bucketing
-        write_bucketed(
-            m1c.select("symbol", "open_time_ms", "close", "volume_base"),
-            "sc_klines_b", ["symbol", "open_time_ms"], 32,
-            path=f"{broot}/klines",
-        )
-        write_bucketed(
-            m1c.select(
-                "symbol", "open_time_ms",
-                (F.col("close") * 1.0001).alias("mark_price"),
-            ),
-            "sc_mark_b", ["symbol", "open_time_ms"], 32,
-            path=f"{broot}/mark",
-        )
-        stages["bucketed_write_both_sides"] = {
-            "sec": round(time.perf_counter() - t0, 2), "rows": 2 * n,
-        }
-
-        bj = spark.table("sc_klines_b").join(
-            spark.table("sc_mark_b"), on=["symbol", "open_time_ms"]
-        )
-        stage("bucketed_colocated_join", lambda: bj)
-        # executes once more (untimed) so AQE's FINAL plan is inspected
-        stages["bucketed_colocated_join"]["shuffle_exchanges"] = exchange_count(bj)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS sc_klines_b")
-        spark.sql("DROP TABLE IF EXISTS sc_mark_b")
-        shutil.rmtree(broot, ignore_errors=True)
-
     stage(
         "kmv_distinct_sketch",
         lambda: kmv_distinct(
@@ -2112,7 +1847,7 @@ def main() -> None:
     stages["dsir_score_1m_docs"].update(
         n_buckets=8192,
         fit_sec=dsir_fit_sec,
-        scoring_shuffle_exchanges=exchange_count(dsir_scored),
+        scoring_shuffle_exchanges=obs.exchange_count(dsir_scored),
     )
     t0 = time.perf_counter()
     bloom_words = bloom_bitset(
@@ -2126,31 +1861,21 @@ def main() -> None:
     stages["bloom_decontam_1m_docs"].update(
         m_bits=1 << 19,
         bitset_build_sec=bloom_build_sec,
-        scoring_shuffle_exchanges=exchange_count(bl),
+        scoring_shuffle_exchanges=obs.exchange_count(bl),
     )
     sel.unpersist()
 
     # ANN probe (r5, VERDICT next-steps #5): the similarity tier at probe
     # scale — 1M x 64d clustered corpus, 100 queries, k=10. Brute force is
     # the exact baseline AND the ground truth for the approximate tiers'
-    # recall; IVF additionally demonstrates the "cell id = partition key"
-    # claim with a wall-clock number: the corpus is written
-    # partitionBy(cell) once at index-build time and the probe reads ONLY
-    # the probed cells via partition pruning.
+    # recall.
     from binance_futures_data_lake_spark.operators.similarity import (
         brute_force_topk,
-        ivf_assign,
-        ivf_topk,
-        ivf_train_centroids,
         lsh_topk,
-        _nearest_cells,
     )
 
     dim, n_latent, ann_k = 64, 32, 10
     n_vecs = max(100_000, total_rows // 10)
-    # contiguous-block cluster ids: the 100 queries (20 from each of the
-    # first 5 blocks) then probe a strict subset of the 32 cells, so the
-    # partition-pruned IVF read is visible in cells_read below
     ann = clustered_vectors(spark, n_vecs, dim, n_latent).cache()
     stage("ann_synthetic_corpus", lambda: ann)
     annq = probe_queries(ann, n_vecs, n_latent)
@@ -2169,80 +1894,7 @@ def main() -> None:
     lsh = lsh_topk(ann, annq, dim=dim, k=ann_k, n_planes=64, bands=8)
     stage("ann_lsh_topk_100q", lambda: lsh)
     stages["ann_lsh_topk_100q"]["recall_at_10"] = _recall(lsh)
-    stages["ann_lsh_topk_100q"]["shuffle_exchanges"] = exchange_count(lsh)
-
-    aroot = tempfile.mkdtemp(prefix="bfdl_ann_ivf_")
-    try:
-        # index build: kmeans quantizer (the production path) + assign +
-        # ONE partitionBy(cell) write — the scale story's amortized cost
-        t0 = time.perf_counter()
-        cents = ivf_train_centroids(ann, num_cells=n_latent, seed=7)
-        ivf_assign(ann, cents).write.mode("overwrite").partitionBy("cell").parquet(aroot)
-        stages["ann_ivf_index_build_write"] = {
-            "sec": round(time.perf_counter() - t0, 2), "rows": n_vecs,
-        }
-
-        # probe: partition-pruned read of ONLY the probed cells
-        nprobe = 4
-        probed = sorted({
-            c
-            for r in annq.select(
-                F.explode(
-                    _nearest_cells(
-                        F.transform(F.col("embedding"), lambda x: x.cast("double")),
-                        cents, nprobe,
-                    )
-                ).alias("cell")
-            ).distinct().collect()
-            for c in [r.cell]
-        })
-        cells_df = spark.read.parquet(aroot).filter(F.col("cell").isin(probed))
-        ivf = ivf_topk(cells_df, annq, cents, k=ann_k, nprobe=nprobe)
-        stage("ann_ivf_topk_100q_pruned", lambda: ivf)
-        stages["ann_ivf_topk_100q_pruned"]["recall_at_10"] = _recall(ivf)
-        stages["ann_ivf_topk_100q_pruned"]["cells_read"] = f"{len(probed)}/{n_latent}"
-        stages["ann_ivf_topk_100q_pruned"]["shuffle_exchanges"] = exchange_count(ivf)
-
-        # composition: partition-pruned READ + brute GEMM rerank over the
-        # union of probed cells — I/O bounded by nprobe/cells like the
-        # join-based probe, CPU at BLAS speed like the brute tier (recall
-        # can only exceed the per-query probe: every query scores against
-        # the probed-cell union)
-        gemm = brute_force_topk(
-            cells_df.select(F.col("id").alias("vec_id"), F.col("vec").alias("embedding")),
-            annq, k=ann_k,
-        )
-        stage("ann_ivf_pruned_gemm_100q", lambda: gemm)
-        stages["ann_ivf_pruned_gemm_100q"]["recall_at_10"] = _recall(gemm)
-        stages["ann_ivf_pruned_gemm_100q"]["cells_read"] = f"{len(probed)}/{n_latent}"
-    finally:
-        shutil.rmtree(aroot, ignore_errors=True)
-
-    # SemDeDup probe (r6): cluster-scoped semantic dedup over the SAME
-    # clustered corpus through the GEMM kernel path — Spark-ML centroids
-    # projected onto the fixed-point grid (fixed_point_cents), BLAS-exact
-    # integer-grid assignment in one zero-shuffle corpus pass, then ONE
-    # shuffle by cell and a grouped lower-triangle GEMM. num_cells is the
-    # quadratic-work knob: 512 cells ≈ 2k-row cells at 1M vectors, and the
-    # per-cell cos block stays ~30 MB. The expression path (semantic_dedup)
-    # is the oracle-replayable twin; frame equality is pytest-pinned.
-    from binance_futures_data_lake_spark.operators.similarity import (
-        fixed_point_cents,
-        semantic_dedup_gemm,
-    )
-
-    sd_cells = 512
-    t0 = time.perf_counter()
-    sd_cents = fixed_point_cents(ivf_train_centroids(ann, num_cells=sd_cells, seed=7))
-    sd_train_sec = round(time.perf_counter() - t0, 2)
-    sd = semantic_dedup_gemm(ann, sd_cents, threshold=0.92)
-    stage("semantic_dedup_gemm", lambda: sd)
-    stages["semantic_dedup_gemm"].update(
-        num_cells=sd_cells,
-        centroid_train_sec=sd_train_sec,
-        n_near_dup=sd.filter(F.col("status") == "near_dup").count(),
-        shuffle_exchanges=exchange_count(sd),
-    )
+    stages["ann_lsh_topk_100q"]["shuffle_exchanges"] = obs.exchange_count(lsh)
 
     # PQ-ADC probe (r7): the compressed-ANN tier at 1M vectors, the
     # PRODUCTION configuration — per-subspace Lloyd-trained codebooks
@@ -2267,12 +1919,12 @@ def main() -> None:
     stages["pq_adc_topk_100q"].update(
         codebook_sec=pq_train_sec,
         recall_at_10=_recall(pq),
-        shuffle_exchanges=exchange_count(pq),
+        shuffle_exchanges=obs.exchange_count(pq),
     )
     pqr = pq_rerank_topk(ann, annq, books, k=ann_k, shortlist=1000)
     stage("pq_rerank_topk_100q", lambda: pqr)
     stages["pq_rerank_topk_100q"]["recall_at_10"] = _recall(pqr)
-    stages["pq_rerank_topk_100q"]["shuffle_exchanges"] = exchange_count(pqr)
+    stages["pq_rerank_topk_100q"]["shuffle_exchanges"] = obs.exchange_count(pqr)
 
     # mutual-kNN graph + components probe (r7): cell-scoped grouped-GEMM
     # top-kk lists over the 512-cell index, mutual filter, then
@@ -2287,15 +1939,19 @@ def main() -> None:
     # row - 35.6 s per 200k rows), and a lazy checkpoint on the mutual
     # edge list (the plan tree referenced the GEMM stage ~5 times).
     from binance_futures_data_lake_spark.operators.similarity import (
+        ivf_lloyd_centroids,
         knn_graph_components,
     )
 
+    # 512 deterministic Lloyd cells ≈ 2k-row cells at 1M vectors, so the
+    # per-cell cosine block stays ~30 MB
+    kg_cents = ivf_lloyd_centroids(ann, num_cells=512, iters=2, partition_reduce=True)
     # build INSIDE the timed thunk: the operator runs eager work while
     # constructing (checkpoint materialization + CC jobs), so timing
     # only the final force would claim 2 s for a ~90 s stage
     kg = stage(
         "knn_graph_components_1m",
-        lambda: knn_graph_components(ann, sd_cents, kk=2, threshold=0.92),
+        lambda: knn_graph_components(ann, kg_cents, kk=2, threshold=0.92),
     )
     stages["knn_graph_components_1m"].update(
         n_clustered=kg.filter(F.col("component") != F.col("vec_id")).count(),
@@ -2321,7 +1977,7 @@ def main() -> None:
         n_vectors=big_n,
         codebook_train_on=-(-big_n // train_step),  # actual sample size
         codebook_sec=big_train_sec,
-        shuffle_exchanges=exchange_count(big_pq),
+        shuffle_exchanges=obs.exchange_count(big_pq),
     )
     ann.unpersist()
 
@@ -2368,7 +2024,7 @@ def main() -> None:
         fps, "fp", max_hamming=3, bits=64, n_bands=4
     ).persist()
     stage("hamming_band_join_10m", lambda: ham_pairs)
-    stages["hamming_band_join_10m"]["shuffle_exchanges"] = exchange_count(ham_pairs)
+    stages["hamming_band_join_10m"]["shuffle_exchanges"] = obs.exchange_count(ham_pairs)
     ham_pairs.unpersist()
 
     # backtest kernel probe (r4): the full research pipeline -> 4-config

@@ -210,13 +210,12 @@ def test_cost_nets_pnl_r(spark):
 
 
 def test_equity_curve_and_metrics_match_reference_loop(spark):
-    """equity_curve/with_drawdown/backtest_metrics reproduce the in-loop
+    """equity_curve/with_drawdown reproduce the in-loop
     accounting of backtest_router_event_v1_1.run_backtest on a hand case:
     equity at bar i is the value BEFORE bar i's events."""
     import datetime as dt
 
     from binance_futures_data_lake_spark.operators.backtest import (
-        backtest_metrics,
         equity_curve,
         with_drawdown,
     )
@@ -244,12 +243,6 @@ def test_equity_curve_and_metrics_match_reference_loop(spark):
     }
     dd = with_drawdown(eq, ["cfg"]).collect()
     assert max(r["drawdown_r"] for r in dd) == pytest.approx(1.1)  # 2.9 -> 1.8
-    m = backtest_metrics(trades, eq, by=["cfg"]).collect()[0]
-    assert m["n_trades"] == 2 and m["winrate"] == pytest.approx(0.5)
-    assert m["sum_r"] == pytest.approx(1.0)
-    assert m["sum_r_net"] == pytest.approx(0.8)
-    assert m["max_drawdown_r"] == pytest.approx(1.1)
-    assert m["profit_factor"] == pytest.approx(2.0)
 
 
 def test_router_gate_derivation_and_sweep_consumption(spark):

@@ -1,5 +1,5 @@
 """Corpus-curation operators: mixture rebalancing, per-domain caps,
-sharded training export, and the seeded-IVF ANN tier."""
+shard assignment, and the seeded-IVF ANN tier."""
 
 import math
 
@@ -10,9 +10,7 @@ from binance_futures_data_lake_spark.operators.curation import (
     domain_cap,
     mixture_rates,
     mixture_sample,
-    shard_manifest,
     with_shard,
-    write_shards,
 )
 from binance_futures_data_lake_spark.operators.sketch import uniform_hash
 from binance_futures_data_lake_spark.sources.testdata import load_table
@@ -107,29 +105,6 @@ def test_shard_assignment_stable_and_bounded(spark, docs):
     assert a == b
     with pytest.raises(ValueError):
         with_shard(docs, "doc_id", 0)
-
-
-def test_write_shards_roundtrip_manifest(spark, docs, tmp_path):
-    out = str(tmp_path / "export")
-    manifest = write_shards(
-        docs, out, "doc_id", n_shards=4, size_col="n_chars",
-        sort_within=("doc_id",),
-    ).collect()
-    assert {r["shard"] for r in manifest} <= set(range(4))
-    assert sum(r["n_rows"] for r in manifest) == docs.count()
-    # manifest describes what a reader recomputes from the written files
-    back = spark.read.parquet(out + "/data")
-    re_manifest = {
-        r["shard"]: r
-        for r in shard_manifest(back, "doc_id", "n_chars").collect()
-    }
-    for r in manifest:
-        rb = re_manifest[r["shard"]]
-        for c in ("n_rows", "n_bytes", "min_key", "max_key", "key_checksum"):
-            assert r[c] == rb[c], (r["shard"], c)
-    # shards are disjoint directories a loader can claim independently
-    one = spark.read.parquet(out + "/data/shard=0")
-    assert one.count() == re_manifest[0]["n_rows"]
 
 
 def test_seeded_ivf_recall_and_determinism(spark):

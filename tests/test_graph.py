@@ -96,14 +96,17 @@ def test_dedup_clusters_on_documents_transitive(spark):
 
 def test_exact_jaccard_pairs_matches_arrayop_truth(spark):
     """Inverted-index Jaccard == brute-force array-intersect Jaccard."""
-    from binance_futures_data_lake_spark.operators.textdedup import shingles
+    from binance_futures_data_lake_spark.operators.textdedup import (
+        shingles_of_tokens,
+        words,
+    )
 
     docs = load_table(spark, "documents", SF)
     got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in exact_jaccard_pairs(docs, threshold=0.5).collect()
     }
-    sh = docs.select("doc_id", shingles(F.col("text"), 3).alias("sh"))
+    sh = docs.select("doc_id", shingles_of_tokens(words(F.col("text")), 3).alias("sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
@@ -201,8 +204,6 @@ def test_vectorized_kernel_matches_reference():
     from binance_futures_data_lake_spark.operators.graph import (
         _minrank_nonroot_rows,
         _mix64_vec,
-        _prio,
-        _prio_vec,
         _unmix64_vec,
     )
 
@@ -252,5 +253,3 @@ def test_vectorized_kernel_matches_reference():
     ks = _mix64_vec(xs)
     unsigned = ks.view(np.uint64) ^ np.uint64(1 << 63)
     assert np.array_equal(np.argsort(ks), np.argsort(unsigned))
-    # the string-path priority stays bit-stable
-    assert [_prio(int(x)) for x in xs] == _prio_vec(xs).tolist()

@@ -7,7 +7,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from binance_futures_data_lake_spark.operators.maintenance import audit_klines, gaps_report
+from binance_futures_data_lake_spark.operators.gaps import missing_ranges
+from binance_futures_data_lake_spark.operators.maintenance import audit_klines
 from binance_futures_data_lake_spark.sources import lake
 from binance_futures_data_lake_spark.sources.synthetic import synthetic_klines_m1
 
@@ -83,10 +84,9 @@ def test_gap_detection_on_holed_grid(spark, tmp_root):
     report = audit_klines(holed)
     assert not report["ok"]
     assert report["n_missing_grid_rows"] == 13
-    g = gaps_report(holed, 1.0)
-    assert g["n_gaps"] == 2
-    assert g["largest_gap"] == 10
-    assert g["total_missing"] == 13
+    ranges = missing_ranges(holed.select("symbol", "ts"), 1.0, ["symbol"]).orderBy("gap_start")
+    got = [(r.n_missing, (r.gap_end - r.gap_start).total_seconds()) for r in ranges.collect()]
+    assert got == [(10, 9 * 60.0), (3, 2 * 60.0)]
 
 
 def test_checkpoint_sidecars(tmp_root):
@@ -94,48 +94,6 @@ def test_checkpoint_sidecars(tmp_root):
     assert lake.read_checkpoint(tmp_root) == 1700000000000
     lake.write_meta(tmp_root, {"symbol": "AAA", "interval": "m1", "anti_lookahead": True})
     assert lake.read_meta(tmp_root)["anti_lookahead"] is True
-
-
-def test_csv_mirror_roundtrip(spark, tmp_path):
-    """S7/S8/S10: CSV mirror write + normalized read + fallback loader."""
-    from binance_futures_data_lake_spark.sources.lake import (
-        read_csv_normalized, read_table_auto, write_csv_mirror,
-    )
-    from binance_futures_data_lake_spark.sources.synthetic import synthetic_klines_m1
-
-    root = str(tmp_path / "csvlake")
-    m1 = synthetic_klines_m1(spark, symbols=("AAA",), n_minutes=120)
-    write_csv_mirror(m1, root)
-    back = read_csv_normalized(spark, root + "/csv_mirror", "ts")
-    assert back.count() == 120
-    assert dict(back.dtypes)["ts"].startswith("timestamp")
-    # values survive the round trip (CSV is lossy only beyond double repr)
-    a = {r.open_time_ms: round(r.close, 8) for r in m1.select("open_time_ms", "close").collect()}
-    b = {r.open_time_ms: round(r.close, 8) for r in back.select("open_time_ms", "close").collect()}
-    assert a == b
-    # fallback loader picks the csv mirror when no canonical parquet exists
-    auto = read_table_auto(spark, root)
-    assert auto.count() == 120
-
-
-def test_csv_epoch_normalization(spark, tmp_path):
-    import pandas as pd
-    from binance_futures_data_lake_spark.sources.lake import read_csv_normalized
-
-    p = tmp_path / "gates"
-    p.mkdir()
-    pd.DataFrame({"ts": [1700000000000, 1700000060000], "allow_long": [1, 0]}).to_csv(
-        p / "g.csv", index=False
-    )
-    df = read_csv_normalized(spark, str(p), "ts")
-    rows = sorted(r.ts for r in df.collect())
-    assert rows[0].year == 2023  # epoch-ms detected, not seconds
-    # seconds-scale column normalizes too
-    pd.DataFrame({"ts": [1700000000, 1700000060], "allow_long": [1, 0]}).to_csv(
-        p / "g.csv", index=False
-    )
-    df2 = read_csv_normalized(spark, str(p), "ts")
-    assert sorted(r.ts for r in df2.collect())[0].year == 2023
 
 
 # --- fix_meta repair tool (reference fix_meta.py:1-33) ----------------------

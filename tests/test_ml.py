@@ -1,28 +1,7 @@
-"""ML surface helpers: temporal/deterministic splits, Platt calibration,
-train-stat standardization (SURVEY M2, M4, M5)."""
-
-import math
+"""ML surface helpers: deterministic splits, net-confidence evaluation and
+the quality classifier."""
 
 import pytest
-from pyspark.sql import functions as F
-
-
-def test_temporal_split_no_overlap(spark):
-    from binance_futures_data_lake_spark.operators.ml import temporal_split
-
-    df = spark.range(100).withColumn(
-        "ts", F.timestamp_millis((F.col("id") * 3600_000 + 1700000000000).cast("long"))
-    )
-    t1 = df.selectExpr("max(ts)").first()[0]
-    import datetime
-    train_end = datetime.datetime(2023, 11, 15)
-    val_end = datetime.datetime(2023, 11, 16, 12)
-    tr, va, te = temporal_split(df, "ts", train_end, val_end)
-    n = df.count()
-    assert tr.count() + va.count() + te.count() == n
-    assert tr.agg(F.max("ts")).first()[0] < train_end
-    assert va.agg(F.min("ts")).first()[0] >= train_end
-    assert te.agg(F.min("ts")).first()[0] >= val_end
 
 
 def test_deterministic_split_stable_and_disjoint(spark):
@@ -38,45 +17,6 @@ def test_deterministic_split_stable_and_disjoint(spark):
     assert sa1.isdisjoint(sb1)
     assert len(sa1) + len(sb1) == 1000
     assert 0.7 < len(sa1) / 1000 < 0.9
-
-
-def test_platt_calibration_recovers_monotone_map(spark):
-    from binance_futures_data_lake_spark.operators.ml import platt_calibrate
-
-    # labels generated from a logistic of the score: p = sigmoid(2s - 1)
-    rows = []
-    for i in range(400):
-        s = (i % 100) / 25.0 - 2.0  # scores in [-2, 2)
-        p = 1.0 / (1.0 + math.exp(-(2.0 * s - 1.0)))
-        y = 1.0 if (i * 2654435761 % 1000) / 1000.0 < p else 0.0
-        rows.append((float(s), y))
-    df = spark.createDataFrame(rows, "score double, label double")
-    apply_fn, (a, b) = platt_calibrate(df, "score", "label")
-    assert a > 0  # recovered slope is positive (monotone calibration)
-    out = apply_fn(df).collect()
-    ps = sorted((r.score, r.p_cal) for r in out)
-    assert all(0.0 < p < 1.0 for _, p in ps)
-    # monotone in score
-    vals = [p for _, p in ps]
-    assert all(x <= y + 1e-12 for x, y in zip(vals, vals[1:]))
-
-
-def test_train_standardize_uses_train_stats_only(spark):
-    from binance_futures_data_lake_spark.operators.ml import train_standardize
-
-    train = spark.createDataFrame(
-        [(1.0,), (3.0,), (None,), (5.0,)], "x double"
-    )
-    full = spark.createDataFrame(
-        [(1.0,), (3.0,), (5.0,), (100.0,), (None,)], "x double"
-    )
-    out = train_standardize(train, full, ["x"]).collect()
-    # train median = 3 → null imputes to 3; train mean/std from {1,3,3,5}
-    mu, sd = 3.0, math.sqrt(2.0)
-    got = {(r.x if r.x is not None else "null"): r.x_z for r in out}
-    assert abs(got[1.0] - (1.0 - mu) / sd) < 1e-6
-    assert abs(got[100.0] - (100.0 - mu) / sd) < 1e-6  # test outlier uses TRAIN stats
-    assert abs(got["null"] - 0.0) < 1e-6  # imputed to train median = mean here
 
 
 def test_net_confidence_eval_cost_arithmetic(spark):

@@ -75,3 +75,37 @@ def test_caller_job_group_is_restored(spark):
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
     obs.run(spark, "inner", lambda: spark.range(5))
     assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+def _fact_and_dim(spark):
+    fact = spark.range(20_000).select((F.col("id") % 5_000).alias("k"), "id")
+    dim = spark.range(5_000).select(F.col("id").alias("dk"))
+    return fact, dim
+
+
+def test_plain_join_does_shuffle(spark):
+    """A sort-merge join shuffles both sides, and the counter sees both."""
+    fact, dim = _fact_and_dim(spark)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        j = fact.join(dim, fact.k == dim.dk)
+        assert obs.exchange_count(j) >= 2
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_exchange_count_ignores_broadcast(spark):
+    """BroadcastExchange must not be counted as a shuffle."""
+    fact, dim = _fact_and_dim(spark)
+    j = fact.join(F.broadcast(dim), fact.k == dim.dk)
+    # one side may still pre-shuffle under AQE coalescing rules, but the
+    # broadcast itself must contribute zero
+    assert obs.exchange_count(j) <= 1
+
+
+def test_exchange_count_sees_round_robin(spark):
+    """A plain repartition(n) shuffles via RoundRobinPartitioning — the
+    counter must see it, or a zero-shuffle assertion could pass falsely."""
+    df = spark.range(1000).repartition(4)
+    assert obs.exchange_count(df) == 1

@@ -125,7 +125,7 @@ def test_cascade_one_shuffle_and_equals_chained(spark):
         tick_ohlcv,
         tick_ohlcv_cascade,
     )
-    from binance_futures_data_lake_spark.sources.bucketed import exchange_count
+    from binance_futures_data_lake_spark.obs import exchange_count
     from binance_futures_data_lake_spark.sources.testdata import load_events
 
     ev = load_events(spark, "/root/testdata/sf0.001")

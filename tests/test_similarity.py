@@ -10,9 +10,6 @@ from pyspark.sql import functions as F
 
 from binance_futures_data_lake_spark.operators.similarity import (
     brute_force_topk,
-    ivf_assign,
-    ivf_topk,
-    ivf_train_centroids,
     lsh_topk,
     rh_signatures,
     hyperplanes,
@@ -81,26 +78,6 @@ def test_lsh_precision_of_found(spark, emb, truth):
         key = (r.q_id, r.neighbor_id)
         if key in bf:
             assert abs(bf[key] - r.cosine) < 1e-9
-
-
-def test_ivf_recall(spark, emb, truth):
-    q = emb.filter(F.col("vec_id") < N_QUERIES)
-    cents = ivf_train_centroids(emb, num_cells=8, seed=7)
-    cells = ivf_assign(emb, cents)
-    found = {
-        (r.q_id, r.neighbor_id)
-        for r in ivf_topk(cells, q, cents, k=K, nprobe=4).collect()
-    }
-    assert _recall(found, truth) >= 0.6
-
-
-def test_ivf_cells_cover_corpus(spark, emb):
-    cents = ivf_train_centroids(emb, num_cells=8, seed=7)
-    cells = ivf_assign(emb, cents)
-    assert cells.count() == emb.count()
-    assert cells.filter(F.col("cell").isNull()).count() == 0
-    n_cells = cells.select("cell").distinct().count()
-    assert 2 <= n_cells <= 8
 
 
 def test_ivf_lloyd_recall_and_determinism(spark, emb, truth):
@@ -308,46 +285,6 @@ def test_semantic_dedup_planted_twins(spark):
                for r in rows if r["vec_id"] >= 20000)  # decoys kept
 
 
-def test_semantic_dedup_gemm_matches_expression(spark):
-    """The 100 TB kernel path (fixed-point BLAS assignment + grouped
-    lower-triangle GEMM) must produce FRAME-IDENTICAL output to the
-    oracle-replayable expression path — same cells, same statuses, same
-    min-id matches, same 6-dp cosines — on the planted-twin corpus."""
-    from binance_futures_data_lake_spark.operators.similarity import (
-        fixed_point_cents, ivf_lloyd_centroids, semantic_dedup,
-        semantic_dedup_gemm,
-    )
-
-    emb = load_table(spark, "embeddings", SF)
-    dbl = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    tw = emb.filter(F.col("vec_id") < 30).select(
-        (F.col("vec_id") + 10000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: x.cast("double") + F.lit(0.05)
-        ).alias("embedding"),
-    )
-    corpus = dbl.unionByName(tw)
-    cents = ivf_lloyd_centroids(corpus, num_cells=8, iters=2)
-    a = semantic_dedup(corpus, cents, 0.9).orderBy("vec_id").collect()
-    b = semantic_dedup_gemm(corpus, cents, 0.9).orderBy("vec_id").collect()
-    assert len(a) == len(b) > 0
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert any(r["status"] == "near_dup" for r in a)
-    # float32 corpus through fixed_point_cents-projected ML centroids:
-    # both paths must still agree (the grid projection is shared)
-    from binance_futures_data_lake_spark.operators.similarity import (
-        ivf_train_centroids,
-    )
-
-    fcents = fixed_point_cents(ivf_train_centroids(emb, num_cells=4, seed=7))
-    a32 = semantic_dedup(emb, fcents, 0.5).orderBy("vec_id").collect()
-    b32 = semantic_dedup_gemm(emb, fcents, 0.5).orderBy("vec_id").collect()
-    assert [tuple(r) for r in a32] == [tuple(r) for r in b32]
-
-
 def test_hard_negatives_excludes_positives_and_caps(spark):
     from binance_futures_data_lake_spark.operators.similarity import hard_negatives
 
@@ -376,34 +313,6 @@ def test_hard_negatives_excludes_positives_and_caps(spark):
     out2 = hard_negatives(res, gold, n_neg=2, max_cos=None).collect()
     top = sorted((r for r in out2 if r["q_id"] == 1), key=lambda r: r["neg_rank"])
     assert [r["neg_id"] for r in top] == [11, 12]
-
-
-def test_semantic_dedup_gemm_string_ids(spark):
-    """The kernel path must honor a non-default, non-numeric id column —
-    typed match_id, aliased output — identically to the expression path."""
-    from binance_futures_data_lake_spark.operators.similarity import (
-        ivf_lloyd_centroids, semantic_dedup, semantic_dedup_gemm,
-    )
-
-    emb = load_table(spark, "embeddings", SF)
-    base = emb.select(
-        F.concat(F.lit("doc-"), F.format_string("%05d", "vec_id")).alias("doc_key"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    twins = emb.filter(F.col("vec_id") < 10).select(
-        F.concat(F.lit("dup-"), F.format_string("%05d", "vec_id")).alias("doc_key"),
-        F.transform(
-            "embedding", lambda x: x.cast("double") + F.lit(0.01)
-        ).alias("embedding"),
-    )
-    named = base.unionByName(twins)
-    cents = ivf_lloyd_centroids(named, num_cells=4, iters=1, id_col="doc_key")
-    a = semantic_dedup(named, cents, 0.5, id_col="doc_key").orderBy("doc_key").collect()
-    b = semantic_dedup_gemm(named, cents, 0.5, id_col="doc_key").orderBy("doc_key").collect()
-    assert len(a) == len(b) > 0
-    assert a[0].__fields__ == b[0].__fields__ == ["doc_key", "cell", "status", "match_id", "cosine"]
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert any(r["status"] == "near_dup" for r in a)
 
 
 def test_semantic_match_existing_frozen_index(spark):

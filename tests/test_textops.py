@@ -15,9 +15,10 @@ from binance_futures_data_lake_spark.operators.textdedup import (
     lsh_candidate_pairs,
     minhash_dedup_pairs,
     minhash_signatures,
-    shingles,
+    shingles_of_tokens,
     simhash,
     simhash_near_pairs,
+    words,
 )
 from binance_futures_data_lake_spark.sources.testdata import load_table
 
@@ -32,7 +33,7 @@ def docs(spark):
 
 
 def _exact_pairs(spark, docs, threshold):
-    sh = docs.select("doc_id", shingles(F.col("text"), 3).alias("sh"))
+    sh = docs.select("doc_id", shingles_of_tokens(words(F.col("text")), 3).alias("sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     joined = a.join(b, F.col("doc_a") < F.col("doc_b"))

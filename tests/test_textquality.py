@@ -292,35 +292,6 @@ def test_perplexity_bucket_mix_validation(spark, docs):
         perplexity_bucket_mix(docs, n_buckets=3, keep_rates=(1.0, 0.5))
 
 
-def test_perplexity_buckets_approx_agrees_with_exact(spark, docs):
-    """The sketch path assigns the same tier as the exact ntile for all
-    but boundary-band documents, and applies the identical keep rule."""
-    from binance_futures_data_lake_spark.operators.textquality import (
-        perplexity_bucket_mix,
-        perplexity_bucket_mix_approx,
-    )
-
-    exact = {
-        r["doc_id"]: (r["bucket"], r["kept"])
-        for r in perplexity_bucket_mix(docs).collect()
-    }
-    approx = {
-        r["doc_id"]: (r["bucket"], r["kept"])
-        for r in perplexity_bucket_mix_approx(docs).collect()
-    }
-    assert set(exact) == set(approx)
-    agree = sum(1 for d in exact if exact[d][0] == approx[d][0])
-    assert agree / len(exact) >= 0.9, agree / len(exact)
-    # keep decision is a pure function of (bucket, doc_id) in both paths
-    for d in exact:
-        if exact[d][0] == approx[d][0]:
-            assert exact[d][1] == approx[d][1], d
-    # every tier exists and the head keeps everything
-    buckets = {b for b, _ in approx.values()}
-    assert buckets == {1, 2, 3}
-    assert all(k == 1 for b, k in approx.values() if b == 1)
-
-
 def test_c4_flags_hand_case(spark):
     """Every C4 rule on a hand-built page: line punctuation/word-count/
     javascript filters, lorem-ipsum and curly-brace page kills, the

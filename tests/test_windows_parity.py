@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from binance_futures_data_lake_spark.functions import windows as W
-from binance_futures_data_lake_spark.functions.ewm import ewm_apply, ewm_closedform, span_to_alpha
+from binance_futures_data_lake_spark.functions.ewm import ewm_apply, span_to_alpha
 from binance_futures_data_lake_spark.sources.synthetic import synthetic_klines_m1
 
 BY, ORDER = ["symbol"], ["ts"]
@@ -96,44 +96,6 @@ def test_ewm_apply_matches_pandas(spark, m1, pdf):
     want14 = pdf.groupby("symbol")["close"].transform(lambda s: s.ewm(alpha=1 / 14, adjust=False).mean())
     _close(out["ema20"], want20, 1e-9)
     _close(out["rma14"], want14, 1e-9)
-
-
-def test_ewm_closedform_matches_pandas(m1, pdf):
-    out = (
-        ewm_closedform(m1.select("symbol", "ts", "close"),
-                       {"x": ("close", span_to_alpha(20))}, BY, ORDER)
-        .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True)["x"]
-    )
-    want = pdf.groupby("symbol")["close"].transform(lambda s: s.ewm(span=20, adjust=False).mean())
-    # closed form amplifies float error by the weight range — coarser tol
-    _close(out, want, 1e-5)
-
-
-def test_ewm_closedform_long_series_no_overflow(spark):
-    """The naive closed form overflows (1-a)^(-rn) at rn ≈ 700/|ln(1-a)|
-    (≈3.1k rows for span=10) and poisons the tail with inf/NaN. The
-    segmented form must stay finite AND pandas-exact over a 10k-row
-    single-key series — past the old cliff, across several blocks."""
-    n = 10_000
-    rng = np.random.default_rng(7)
-    vals = 100.0 + np.cumsum(rng.normal(0, 0.5, n))
-    pdf_in = pd.DataFrame({"k": "K", "i": np.arange(n), "x": vals})
-    df = spark.createDataFrame(pdf_in)
-    for alpha in (span_to_alpha(10.0), 1.0 / 14.0):
-        out = (
-            ewm_closedform(df, {"y": ("x", alpha)}, ["k"], ["i"])
-            .toPandas().sort_values("i").reset_index(drop=True)["y"]
-        )
-        assert np.isfinite(out).all(), "segmented closed form produced inf/NaN"
-        want = pdf_in["x"].ewm(alpha=alpha, adjust=False).mean()
-        _close(out, want, 1e-6)
-
-
-def test_ewm_closedform_rejects_degenerate_alpha(spark):
-    df = spark.createDataFrame(pd.DataFrame({"k": ["K"], "i": [0], "x": [1.0]}))
-    for bad in (0.0, 1.0, 1.5, -0.1):
-        with pytest.raises(ValueError):
-            ewm_closedform(df, {"y": ("x", bad)}, ["k"], ["i"])
 
 
 def test_rolling_pctl_of_last(m1, pdf):
