@@ -498,34 +498,17 @@ def connected_components(
         batch) vs ~2 s collecting Arrow column buffers directly —
         ``to_numpy(zero_copy_only=False)`` on an Arrow int64 array is a
         buffer view (plus a null-check), not a per-row conversion."""
-        import os as _os
-        import time as _time
-
         import numpy as np
         import pyarrow as pa
 
-        t0 = _time.perf_counter()
         us, vs = [], []
-        nb = 0
         for rb in batches:
-            nb += 1
             if rb.num_rows:
                 us.append(rb.column(0).to_numpy(zero_copy_only=False))
                 vs.append(rb.column(1).to_numpy(zero_copy_only=False))
         if not us:
             return
-        t1 = _time.perf_counter()
-        u = np.concatenate(us)
-        v = np.concatenate(vs)
-        out = _minrank_nonroot_rows(u, v)
-        if _os.environ.get("BFDL_CC_KERNEL_DEBUG"):
-            import sys as _sys
-
-            print(
-                f"CCKERNEL feed={t1 - t0:.2f}s batches={nb} "
-                f"edges={u.size} kernel={_time.perf_counter() - t1:.2f}s",
-                file=_sys.stderr,
-            )
+        out = _minrank_nonroot_rows(np.concatenate(us), np.concatenate(vs))
         yield pa.record_batch(
             [
                 pa.array(out["node"].to_numpy()),

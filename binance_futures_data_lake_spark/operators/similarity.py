@@ -1,12 +1,12 @@
 """Approximate-nearest-neighbor similarity search over embedding columns.
 
-Three tiers, all over ``array<float>`` columns (the `embeddings` table):
+Four tiers, all over ``array<float>`` columns (the `embeddings` table):
 
-- **Brute force** (`brute_force_topk`): broadcast the query set, scan the
-  corpus once, window top-k. Exact; O(|Q|·|C|) similarity evaluations but
-  only ONE pass over the corpus and no corpus shuffle — at 100 TB this is
-  the right baseline when |Q| is small (the query side broadcasts, the
-  corpus side streams).
+- **Brute force** (`brute_force_topk`): ship the query set to every task,
+  scan the corpus once, window top-k. Exact up to float reassociation
+  (see its docstring); O(|Q|·|C|) similarity evaluations but only ONE
+  pass over the corpus and no corpus shuffle — the right baseline when
+  |Q| is small.
 - **Random-hyperplane LSH** (`rh_signatures` / `lsh_topk`): sign-of-dot-
   product bit signatures banded into buckets; candidates = corpus vectors
   sharing ≥1 band bucket with the query, then exact cosine on candidates
@@ -24,9 +24,20 @@ Three tiers, all over ``array<float>`` columns (the `embeddings` table):
   scale the cell id doubles as a partition key: write the corpus
   `partitionBy(cell)` and a probe reads nprobe/num_cells of the data
   (partition pruning on cell).
+- **Product quantization** (IVFADC, Jégou et al. 2011 §IV-B): one path.
+  Coarse cells come from `seed_cells` or `ivf_lloyd_centroids`; each
+  vector's residual after its cell is encoded to ``n_sub`` codes against
+  `pq_residual_codebooks` (seeded) or `pq_residual_codebooks_lloyd`
+  (trained); queries rank probed-cell candidates by table-lookup
+  distances, from raw vectors (`pq_ivf_adc_topk`) or from a persisted
+  code index (`pq_encode` → `pq_ivf_adc_codes_topk`), optionally with an
+  exact re-rank (`pq_ivf_rerank_topk` / `pq_ivf_rerank_codes_topk`).
+  Flat PQ is the one-cell case: pass ``cents = [(0, [0] * dim)]`` and
+  the residual is the vector itself.
 
-Recall of both approximate tiers against the brute-force baseline is
-pytest-checked (tests/test_similarity.py).
+Recall of the approximate tiers against the brute-force baseline is
+pytest-checked (tests/test_similarity.py, tests/test_r7_ops.py,
+tests/test_pq_ivf.py).
 """
 
 from __future__ import annotations
@@ -101,6 +112,14 @@ def brute_force_topk(
     Ranking uses the 6-dp-rounded similarity (numpy twin of
     functions/scalars.round6 — identical IEEE op sequence) with an id
     tiebreak so the result set is deterministic and engine-comparable.
+
+    Residual exposure: norms are einsum folds and dots come from the
+    GEMM, both reassociated against the SQL oracle's sequential
+    ``list_dot_product`` fold, and there is NO round6 half-boundary
+    recompute here (unlike :func:`lsh_topk` and
+    :func:`_cell_scored_topk`). A scaled cosine landing within float
+    reassociation error (≈ dim·eps·1e6) of a ``.5`` boundary can
+    therefore round to a different 6th decimal than the oracle.
     """
     import numpy as np
     import pyarrow as pa
@@ -254,7 +273,8 @@ def lsh_topk(
     the unit-scale behavior unchanged, large-scale embeddings safe.
     Scoring uses the 6-dp-rounded cosine with an id tiebreak, as in
     every other tier, and is ALSO boundary-proofed (unlike
-    :func:`brute_force_topk`, which documents the residual exposure): a
+    :func:`brute_force_topk`, whose docstring states the residual
+    exposure): a
     GEMM-reassociated dot landing within ~1 ulp of a ``round6``
     half-boundary could round differently from the oracle's sequential
     ``list_dot_product`` fold, so any
@@ -525,16 +545,41 @@ def _nearest_cells_int(svec_col, cents: list[tuple[int, list[int]]], n: int):
     return F.transform(F.slice(ranked, 1, n), lambda s: s["cell"])
 
 
+def grid_vectors(corpus: DataFrame, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
+    """``(id, s)``: every non-zero vector as its :func:`_scaled_unit` grid
+    vector — the input of every fixed-point IVF and PQ build. Zero-norm
+    vectors are out of cosine domain and dropped."""
+    base = normalized(corpus, id_col, vec_col).filter(F.col("nrm") > 0)
+    return base.select("id", _scaled_unit(F.col("vec"), F.col("nrm")).alias("s"))
+
+
+def seed_cells(sv: DataFrame, n: int) -> list[tuple[int, list[int]]]:
+    """The RNG-free seed draw of every fixed-point build: the ``n`` rows
+    of a :func:`grid_vectors` frame whose ids have the SMALLEST
+    md5-derived hash, in hash order, as ``[(i, grid_vec), ...]`` — the
+    centroid shape :func:`ivf_lloyd_topk` and the PQ tier take. Seeded
+    coarse cells, the start of Lloyd refinement, and the residual
+    codebook draw all come from here, and the SQL oracles replay it
+    (``ORDER BY h, vec_id LIMIT n``). The collect is ``n`` rows, bounded
+    by contract: cells and codewords ship as plan literals."""
+    from binance_futures_data_lake_spark.operators.sketch import uniform_hash
+
+    rows = (
+        sv.withColumn("hv", uniform_hash(F.col("id")))
+        .orderBy("hv", "id").limit(n).select("s").collect()
+    )
+    return [(i, [int(x) for x in r.s]) for i, r in enumerate(rows)]
+
+
 def ivf_lloyd_centroids(corpus: DataFrame, num_cells: int = 8, iters: int = 2,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        partition_reduce: bool = False):
+                        id_col: str = "vec_id", vec_col: str = "embedding"):
     """DETERMINISTIC Lloyd-refined coarse quantizer: smallest-hash seed
-    cells (:func:`ivf_seed_centroids`) refined by ``iters`` k-means steps in
+    cells (:func:`seed_cells`) refined by ``iters`` k-means steps in
     1e-6 fixed-point arithmetic — integer distances, integer-sum centroid
     means rounded half-away-from-zero — so training is bit-identical across
     engines, partitionings, and runs, and a SQL oracle can replay the WHOLE
-    index build (an RNG-seeded k-means quantizer cannot). Each step is one
-    shuffle: groupBy(cell) over (count, 64 per-dim long sums); centroids
+    index build (an RNG-seeded k-means quantizer cannot). Centroids
     collect as plan literals (num_cells × dim longs, bounded by contract).
     A cell that empties drops out on both engines identically.
 
@@ -543,70 +588,53 @@ def ivf_lloyd_centroids(corpus: DataFrame, num_cells: int = 8, iters: int = 2,
     (SURVEY §2 similarity search); quality vs brute force is pytest-gauged
     like the other tiers.
 
-    ``partition_reduce`` (r12 — VERDICT r11 #4): the default emits one
-    partial row per (Arrow batch, live cell), so the bounded driver
-    collect is batches × num_cells rows — hundreds at query-registry
-    scale (num_cells ≤ 8), but ~1M rows at deploy-index scale (a 1M
-    training sample in 10k-row batches × 10k cells), where the
-    driver-side PYTHON reduce dominates the training wall. With
-    ``partition_reduce=True`` the kernel accumulates across all of a
-    partition's batches first (collect ≤ partitions × num_cells rows)
-    and the driver reduces in vectorized int64 numpy. BIT-IDENTICAL
-    output either way — integer sums are associative, every float64
-    partial stays under 2^53 (grid values ≤ 1e6 need > 9e9 rows per
-    partition to overflow), and the rounding step is shared — pinned by
-    tests/test_similarity.py::test_lloyd_partition_reduce_bit_equal.
-    Default False so every oracle-replayed plan is byte-for-byte the
-    attested one; index builds at thousands of cells SHOULD pass True
-    (the ``--pq-build`` probe does)."""
-    from binance_futures_data_lake_spark.operators.sketch import uniform_hash
-
+    Each step is ONE ``mapInArrow`` pass that assigns and sums per
+    partition, so the driver collect is partitions × num_cells rows and
+    reduces in vectorized int64 numpy. Integer sums are associative and
+    every float64 partial stays under 2^53 (grid values ≤ 1e6 need
+    > 9e9 rows per partition to overflow), so the centroids do not
+    depend on the partitioning."""
     import numpy as np
     import pyarrow as pa
 
-    base = normalized(corpus, id_col, vec_col).filter(F.col("nrm") > 0)
-    sv = base.select("id", _scaled_unit(F.col("vec"), F.col("nrm")).alias("s"))
     # cache (id, s) BEFORE the seed collect (r12): the seed job then
     # populates the cache the iterations read, instead of the seed pass
     # and iteration 1 each running the scan→normalize→scale pipeline
     # from source — one fewer full pass per training call for 8 extra
     # bytes/row of cached id (guide §5 persist-when-reused; cache scope
     # is this call, released in the finally below).
-    svc = sv.cache()
-    seeds = (
-        svc.withColumn("hv", uniform_hash(F.col("id")))
-        .orderBy("hv", "id").limit(num_cells).select("s").collect()
-    )
-    cents = [(i, [int(x) for x in r.s]) for i, r in enumerate(seeds)]
+    svc = grid_vectors(corpus, id_col, vec_col).cache()
+    cents = seed_cells(svc, num_cells)
     dim = len(cents[0][1])
     try:
         for _ in range(iters):
-            # Assignment + per-batch partial sums as ONE mapInArrow kernel:
-            # the expression form (_nearest_cells_int + 64 per-dim sum
+            # Assignment + partial sums as ONE mapInArrow kernel: the
+            # expression form (_nearest_cells_int + 64 per-dim sum
             # columns) is bit-identical but costs seconds of Catalyst
             # ANALYSIS per iteration — the num_cells × dim literal tree is
             # rebuilt every step because the centroids are new literals.
-            # Grid values ≤ 1e6 keep every d² term and every per-batch
-            # partial sum far below 2^53, so the kernel's float64 IS the
-            # integer arithmetic the SQL oracle replays (the
-            # assign_cells_arrow argument); np.argmin's first-min matches
-            # the min-cell-id tiebreak because cents stay sorted.
+            # Grid values ≤ 1e6 keep every d² term and every partial sum
+            # far below 2^53, so the kernel's float64 IS the integer
+            # arithmetic the SQL oracle replays; cents stay sorted, so
+            # _argmin_l2's first minimum is the min-cell-id tiebreak.
             cell_ids = np.array([c for c, _ in cents], dtype=np.int64)
             c_mat = np.array([v for _, v in cents], dtype=np.float64)
-            c2 = np.einsum("ij,ij->i", c_mat, c_mat)
 
-            def _partials(batches, _ct=c_mat.T, _c2=c2, _ids=cell_ids,
-                          _acc=partition_reduce):
-                n_c = _ids.size
-                acc_cnt = np.zeros(n_c, dtype=np.int64) if _acc else None
-                acc_sum = np.zeros((n_c, dim)) if _acc else None
-
-                def _emit(cnt, sums):
-                    live = np.flatnonzero(cnt)
-                    return pa.record_batch(
+            def _partials(batches, _c=c_mat, _ids=cell_ids):
+                cnt = np.zeros(_ids.size, dtype=np.int64)
+                sums = np.zeros((_ids.size, dim))
+                for rb in batches:
+                    mat = np.asarray(rb.column(0).flatten(), dtype=np.float64)
+                    mat = mat.reshape(rb.num_rows, dim)
+                    code = _argmin_l2(mat, _c)
+                    cnt += np.bincount(code, minlength=_ids.size)
+                    np.add.at(sums, code, mat)
+                live = np.flatnonzero(cnt)
+                if live.size:
+                    yield pa.record_batch(
                         [
                             pa.array(_ids[live]),
-                            pa.array(cnt[live].astype(np.int64)),
+                            pa.array(cnt[live]),
                             pa.array(
                                 [r.astype(np.int64) for r in sums[live]],
                                 type=pa.list_(pa.int64()),
@@ -615,76 +643,17 @@ def ivf_lloyd_centroids(corpus: DataFrame, num_cells: int = 8, iters: int = 2,
                         names=["cell", "cnt", "sums"],
                     )
 
-                # same 64 MB d² transient bound as _grid_assign_residual
-                chunk = max(1, 8_000_000 // max(1, n_c))
-                for rb in batches:
-                    n = rb.num_rows
-                    if n == 0:
-                        continue
-                    flat = np.asarray(rb.column(0).flatten(), dtype=np.float64)
-                    mat = flat.reshape(n, dim)
-                    code = np.empty(n, dtype=np.int64)
-                    for lo in range(0, n, chunk):
-                        sm = mat[lo:lo + chunk]
-                        d2 = (
-                            np.einsum("ij,ij->i", sm, sm)[:, None]
-                            - 2.0 * (sm @ _ct)
-                            + _c2[None, :]
-                        )
-                        code[lo:lo + chunk] = np.argmin(d2, axis=1)
-                    if _acc:
-                        acc_cnt += np.bincount(code, minlength=n_c)
-                        np.add.at(acc_sum, code, mat)
-                        continue
-                    cnt = np.bincount(code, minlength=n_c)
-                    sums = np.zeros((n_c, dim))
-                    np.add.at(sums, code, mat)
-                    yield _emit(cnt, sums)
-                if _acc and acc_cnt.any():
-                    yield _emit(acc_cnt, acc_sum)
-
-            # Reduce the per-batch partials ON THE DRIVER: the kernel
-            # emits ≤ num_cells rows per Arrow batch, so the collect is
-            # bounded by batches·num_cells (hundreds of rows at any
-            # corpus size — same bounded-collect contract as the seed
-            # step) and skips the posexplode+groupBy shuffle JOB the
-            # relational reduce paid per iteration (~0.4 s of job floor
-            # per step at local scale). Integer sums in Python are exact
-            # and order-independent — centroids are bit-identical.
-            partials_df = svc.select("s").mapInArrow(
+            pdf = svc.select("s").mapInArrow(
                 _partials, "cell long, cnt long, sums array<long>"
-            )
-            if partition_reduce:
-                # vectorized exact-int64 reduce: the collect is bounded
-                # by partitions × num_cells rows, and numpy integer adds
-                # are the same associative sums the Python loop computes
-                pdf = partials_df.toPandas()
-                cells_arr = pdf["cell"].to_numpy()
-                ucells, inv = np.unique(cells_arr, return_inverse=True)
-                cnt_tot = np.zeros(ucells.size, dtype=np.int64)
-                np.add.at(cnt_tot, inv, pdf["cnt"].to_numpy())
-                sums_tot = np.zeros((ucells.size, dim), dtype=np.int64)
-                np.add.at(sums_tot, inv, np.stack(pdf["sums"].to_numpy()))
-                cents = sorted(
-                    (int(c), [_round_half_away_int(int(s), int(n))
-                              for s in row])
-                    for c, n, row in zip(ucells, cnt_tot, sums_tot)
-                )
-                continue
-            rows = partials_df.collect()
-            cnts: dict[int, int] = {}
-            acc: dict[int, list[int]] = {}
-            for r in rows:
-                cell = int(r["cell"])
-                cnts[cell] = cnts.get(cell, 0) + int(r["cnt"])
-                if cell not in acc:
-                    acc[cell] = [0] * dim
-                dst = acc[cell]
-                for i, v in enumerate(r["sums"]):
-                    dst[i] += int(v)
+            ).toPandas()
+            ucells, inv = np.unique(pdf["cell"].to_numpy(), return_inverse=True)
+            cnt_tot = np.zeros(ucells.size, dtype=np.int64)
+            np.add.at(cnt_tot, inv, pdf["cnt"].to_numpy())
+            sums_tot = np.zeros((ucells.size, dim), dtype=np.int64)
+            np.add.at(sums_tot, inv, np.stack(pdf["sums"].to_numpy()))
             cents = sorted(
-                (cell, [_round_half_away_int(s, cnts[cell]) for s in sums])
-                for cell, sums in acc.items()
+                (int(c), [_round_half_away_int(int(s), int(n)) for s in row])
+                for c, n, row in zip(ucells, cnt_tot, sums_tot)
             )
     finally:
         svc.unpersist()
@@ -718,13 +687,30 @@ def ivf_lloyd_topk(
     return _cell_scored_topk(cells.select("id", "vec", "cell"), qb, k)
 
 
-#: Hard cap on the collected query side of :func:`_cell_scored_topk`
-#: (rows). The query frame rides the driver and every task closure
-#: (q_mat is |Q|·dim float64 + the cell->query map), so it must stay
+#: Hard cap on the collected query side of every IVF tier, flat PQ
+#: included (rows; :func:`_collect_queries`). The query frame rides the
+#: driver and every task (q_mat is |Q|·dim float64 + the cell->query
+#: map, or the IVFADC distance tables), so it must stay
 #: broadcast-sized; 65 536 queries × 128 dims ≈ 67 MB, the edge of
-#: comfortable. Override with BFDL_IVF_MAX_QUERIES for wider rigs —
-#: beyond that, batch the query set or flip it into the corpus role.
+#: comfortable. Beyond that, batch the query set or flip it into the
+#: corpus role.
 IVF_MAX_QUERIES = 65_536
+
+
+def _collect_queries(queries: DataFrame):
+    """Collect an IVF query side to pandas behind :data:`IVF_MAX_QUERIES`:
+    the ``limit(cap+1)`` collect lets an oversized side fail loudly
+    BEFORE it can occupy driver memory (r9 / ADVICE r8)."""
+    q_pdf = queries.limit(IVF_MAX_QUERIES + 1).toPandas()
+    if len(q_pdf) > IVF_MAX_QUERIES:
+        raise ValueError(
+            f"IVF query side exceeds {IVF_MAX_QUERIES} rows; it is collected "
+            "to the driver and shipped to every task, so it must stay "
+            "broadcast-sized. Batch the query set or swap the roles "
+            "(score the smaller side as queries)."
+        )
+    return q_pdf
+
 
 #: Live query-table broadcasts created by the IVFADC query tiers
 #: (:func:`pq_ivf_adc_topk` / :func:`pq_ivf_adc_codes_topk`). Each call
@@ -785,31 +771,19 @@ def _cell_scored_topk(
 
     ``corpus_cells`` columns: ``id, vec, cell``; ``queries_df`` columns:
     ``id, vec, cells`` (probed cell list). The query side is collected
-    HERE behind a hard row cap (:data:`IVF_MAX_QUERIES`, enforced via a
-    ``limit(cap+1)`` collect so an oversized side fails loudly BEFORE it
-    can occupy driver memory, r9 / ADVICE r8). Output id types are
-    derived per side — ``q_id`` from the query frame, ``neighbor_id``
-    from the corpus frame — so mixed-typed id columns can never yield
-    batches that mismatch the declared mapInArrow schema.
+    HERE behind the :data:`IVF_MAX_QUERIES` cap (:func:`_collect_queries`).
+    Output id types are derived per side — ``q_id`` from the query
+    frame, ``neighbor_id`` from the corpus frame — so mixed-typed id
+    columns can never yield batches that mismatch the declared
+    mapInArrow schema.
     """
-    import os
-
     import numpy as np
     import pyarrow as pa
 
     spark = corpus_cells.sparkSession
     q_id_type = dict(queries_df.dtypes)["id"]
     n_id_type = dict(corpus_cells.dtypes)["id"]
-    max_q = int(os.environ.get("BFDL_IVF_MAX_QUERIES", IVF_MAX_QUERIES))
-    q_pdf = queries_df.limit(max_q + 1).toPandas()
-    if len(q_pdf) > max_q:
-        raise ValueError(
-            f"IVF query side exceeds {max_q} rows; it is collected to the "
-            "driver and shipped in every task closure, so it must stay "
-            "broadcast-sized. Batch the query set, swap the roles "
-            "(score the smaller side as queries), or raise "
-            "BFDL_IVF_MAX_QUERIES if the rig has the memory."
-        )
+    q_pdf = _collect_queries(queries_df)
     if not q_pdf.empty:
         # zero-norm vectors are out of cosine domain on BOTH sides (the
         # assign_cells_arrow convention): corpus rows drop in-kernel,
@@ -1465,6 +1439,87 @@ def _fold_sq_norms(mat):
     return np.sqrt(acc)
 
 
+def _grid_batch(rb, dim: int):
+    """Shared preamble of every kernel that reads a raw ``(id, vec)``
+    Arrow batch onto the 1e-6 grid: reject a ragged embedding column,
+    fold the norms in the SQL order (:func:`_fold_sq_norms`), drop
+    zero-norm vectors (out of cosine domain, matching
+    :func:`grid_vectors`) and round half away from zero — the numpy twin
+    of :func:`_scaled_unit`. Returns ``(live, s)``: the surviving row
+    indices and their grid vectors (exact integers in float64)."""
+    import numpy as np
+
+    n = rb.num_rows
+    flat = np.asarray(rb.column(1).flatten(), dtype=np.float64)
+    if flat.size != n * dim:
+        raise ValueError(
+            f"ragged embedding column: {flat.size} values for {n} rows × dim {dim}"
+        )
+    mat = flat.reshape(n, dim)
+    nrm = _fold_sq_norms(mat)
+    live = np.flatnonzero(nrm > 0)
+    v = mat[live] / nrm[live, None] * 1e6
+    return live, np.sign(v) * np.floor(np.abs(v) + 0.5)
+
+
+def _argmin_l2(x, c):
+    """Per row of ``x``, the index of the nearest row of ``c`` by squared
+    L2 — cell assignment and per-subspace PQ encoding alike. On the grid
+    (components ≤ 2e6) every d² term and every sum stays below 2^53, so
+    float64 IS exact integer arithmetic, and ``np.argmin``'s first
+    minimum is the smallest-index tiebreak the SQL oracles replay. Rows
+    are chunked so the (rows × len(c)) distance block stays ~1 MB (at
+    least 256 rows). On one 10k-row × 64-dim batch (4-vCPU host) that
+    encoded 16 subspaces × 256 codewords in 0.24 s vs 0.42 s unchunked,
+    and assigned 10k cells in 0.74 s vs 1.23 s with 64 MB blocks; an
+    unchunked batch at 10k cells would allocate 800 MB per worker.
+    Chunking is pure per-row math."""
+    import numpy as np
+
+    c2 = np.einsum("ij,ij->i", c, c)
+    chunk = max(256, 125_000 // c.shape[0])
+    idx = np.empty(x.shape[0], dtype=np.int64)
+    for lo in range(0, x.shape[0], chunk):
+        xs = x[lo:lo + chunk]
+        d2 = np.einsum("ij,ij->i", xs, xs)[:, None] - 2.0 * (xs @ c.T) + c2[None, :]
+        idx[lo:lo + chunk] = np.argmin(d2, axis=1)
+    return idx
+
+
+def _pq_codes(x, C):
+    """The subspace encoder: ``(rows × n_sub)`` nearest-codeword ids of
+    grid vectors ``x`` against per-subspace codebooks ``C`` (float64
+    arrays, ``ks × sub`` each)."""
+    import numpy as np
+
+    sub = C[0].shape[1]
+    return np.stack(
+        [_argmin_l2(x[:, m * sub:(m + 1) * sub], c) for m, c in enumerate(C)],
+        axis=1,
+    )
+
+
+def _grid_assign_residual(cents: list[tuple[int, list[int]]]):
+    """Closure pieces for IVFADC kernels: given fixed-point centroids,
+    return ``(cell_ids, c_mat, assign)`` where ``assign(smat)`` maps a
+    grid-scaled batch (n × dim float64 holding exact ints) to
+    ``(cent_index, residual)`` via :func:`_argmin_l2` — cents are sorted
+    by cell id HERE (not assumed of the caller), so first-min IS the
+    min-cell-id tiebreak the SQL oracle replays regardless of input
+    order."""
+    import numpy as np
+
+    cents = sorted(cents, key=lambda c: c[0])
+    cell_ids = np.array([c for c, _ in cents], dtype=np.int64)
+    c_mat = np.array([v for _, v in cents], dtype=np.float64)
+
+    def assign(smat):
+        idx = _argmin_l2(smat, c_mat)
+        return idx, smat - c_mat[idx]
+
+    return cell_ids, c_mat, assign
+
+
 def assign_cells_arrow(
     corpus: DataFrame,
     cents: list[tuple[int, list[int]]],
@@ -1474,8 +1529,8 @@ def assign_cells_arrow(
     """Nearest-cell assignment as ONE zero-shuffle ``mapInArrow`` pass —
     the kernel twin of the ``_nearest_cells_int`` SQL expression, and
     BIT-IDENTICAL to it: grid values ≤ 1e6 keep every d² term exact in
-    float64 (< 2^53), norms use the sequential fold, and ``np.argmin``'s
-    first minimum is the min-cell-id tiebreak (``cents`` sorted here).
+    float64 (< 2^53), norms use the sequential fold, and the first
+    minimum is the min-cell-id tiebreak (:func:`_grid_assign_residual`).
 
     Exists because the expression form folds an O(num_cells · dim)
     literal tree PER ROW — measured 35.6 s for 200k rows × 128 cells
@@ -1485,278 +1540,34 @@ def assign_cells_arrow(
     (out of cosine domain), matching ``normalized().filter(nrm > 0)``.
 
     Output: ``id, cell (int), vec`` — the input shape of
-    :func:`ivf_lloyd_topk` and :func:`knn_graph_mutual_edges`. The d²
-    chunking keeps the (chunk × num_cells) block a few MB (monolithic
-    blocks page-fault ~100× slower).
+    :func:`ivf_lloyd_topk` and :func:`knn_graph_mutual_edges`.
     """
     import numpy as np
     import pyarrow as pa
 
     if not cents:
         raise ValueError("cents must be non-empty")
-    cents = sorted(cents)  # NOT widened — see the normalized() negative
+    cell_ids, c_mat, _ = _grid_assign_residual(cents)
     id_type = dict(corpus.dtypes)[id_col]
     vec_type = dict(corpus.dtypes)[vec_col]
-    cell_ids = np.array([c for c, _ in cents], dtype=np.int64)
-    c_mat = np.array([v for _, v in cents], dtype=np.float64)
-    c2 = np.einsum("ij,ij->i", c_mat, c_mat)
-    c_t = c_mat.T
-    dim = c_t.shape[0]
-    chunk = max(256, int(4_000_000 / (8 * max(1, len(cents)))))
+    dim = c_mat.shape[1]
 
     def _assign(batches):
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            live, s = _grid_batch(rb, dim)
+            if live.size == 0:
                 continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            flat = np.asarray(rb.column(1).flatten(), dtype=np.float64)
-            if flat.size != n * dim:
-                raise ValueError(
-                    f"ragged embedding column: {flat.size} values for "
-                    f"{n} rows × dim {dim}"
-                )
-            mat = flat.reshape(n, dim)
-            nrm = _fold_sq_norms(mat)
-            live = np.flatnonzero(nrm > 0)
-            for s0 in range(0, live.size, chunk):
-                sel = live[s0 : s0 + chunk]
-                v = mat[sel] / nrm[sel, None] * 1e6
-                s = np.sign(v) * np.floor(np.abs(v) + 0.5)  # _scaled_unit
-                s2 = np.einsum("ij,ij->i", s, s)
-                d2 = s2[:, None] - 2.0 * (s @ c_t) + c2[None, :]  # exact
-                cell = cell_ids[np.argmin(d2, axis=1)]  # first-min = min id
-                yield pa.record_batch(
-                    [pa.array(ids[sel]), pa.array(cell.astype(np.int32)),
-                     rb.column(1).take(pa.array(sel))],
-                    names=["id", "cell", "vec"],
-                )
+            yield pa.record_batch(
+                [pa.array(rb.column(0).to_numpy(zero_copy_only=False)[live]),
+                 pa.array(cell_ids[_argmin_l2(s, c_mat)].astype(np.int32)),
+                 rb.column(1).take(pa.array(live))],
+                names=["id", "cell", "vec"],
+            )
 
+    # NOT widened — see the normalized() negative
     return corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     ).mapInArrow(_assign, f"id {id_type}, cell int, vec {vec_type}")
-
-
-def pq_codebooks(
-    corpus: DataFrame,
-    n_sub: int = 4,
-    ks: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[int]]]:
-    """Product-quantization codebooks on the 1e-6 unit grid, seeded RNG-
-    free: the ``ks`` corpus vectors with the smallest md5-derived id
-    hashes (the :func:`ivf_seed_centroids` draw) are grid-scaled and
-    split into ``n_sub`` contiguous sub-vectors — codeword j of subspace
-    m is seed j's m-th slice. Seed-sampled codebooks trade a little
-    quantization error for a deterministic, SQL-replayable index build
-    (k-means codebooks are the library path when bit-replay doesn't
-    matter — same trade as the IVF tiers). The collect is ``ks`` rows,
-    bounded by contract: codebooks must ship as plan literals.
-
-    Returns ``books[m][j] = list[int]`` of length dim // n_sub.
-    """
-    import math
-
-    from binance_futures_data_lake_spark.operators.sketch import uniform_hash
-
-    base = normalized(corpus, id_col, vec_col).filter(F.col("nrm") > 0)
-    rows = (
-        base.withColumn("hv", uniform_hash(F.col("id")))
-        .orderBy("hv", "id")
-        .limit(ks)
-        .select("vec", "nrm")
-        .collect()
-    )
-    if not rows:
-        raise ValueError("pq_codebooks: empty corpus")
-    dim = len(rows[0].vec)
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub = dim // n_sub
-    books: list[list[list[int]]] = [[] for _ in range(n_sub)]
-    for r in rows:
-        s = [
-            int(math.copysign(math.floor(abs(x / r.nrm * 1e6) + 0.5), x))
-            for x in r.vec
-        ]
-        for m in range(n_sub):
-            books[m].append(s[m * sub : (m + 1) * sub])
-    return books
-
-
-def pq_codebooks_lloyd(
-    corpus: DataFrame,
-    n_sub: int = 8,
-    ks: int = 256,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[int]]]:
-    """PRODUCTION-QUALITY PQ codebooks: per-subspace Lloyd (k-means)
-    refinement of the seeded draw, all ``n_sub`` subspaces trained in
-    ONE ``mapInArrow`` corpus pass per iteration.
-
-    Why it exists: seed-sampled codebooks (:func:`pq_codebooks`) slice
-    whole corpus vectors, so on CLUSTERED data every codeword inherits
-    the cluster structure and sub-codes collapse onto cluster identity —
-    the 1M-vector probe measured recall ≈ 0 because within-cluster
-    neighbors tie on identical codes and the id-tiebreak wins. Lloyd
-    iterations move codewords into the residual/noise structure of each
-    subspace independently, which is exactly what gives PQ its
-    discrimination (Jégou et al. 2011 train per-subspace k-means; at
-    ks=256 a code stays one byte).
-
-    Same fixed-point determinism contract as :func:`ivf_lloyd_centroids`:
-    sub-vectors live on the 1e-6 unit grid, per-batch partial sums are
-    exact integers in float64 (< 2^53), the driver reduce is bounded
-    (≤ batches·n_sub·ks rows) and integer-exact, new codewords round
-    half-away-from-zero, ``np.argmin`` first-min = smallest-code-id
-    tiebreak, and empty codewords keep their previous value — codebooks
-    are a pure function of (corpus, n_sub, ks, iters), bit-identical
-    across runs and partitionings. Returns the :func:`pq_codebooks`
-    shape, directly consumable by :func:`pq_adc_topk` /
-    :func:`pq_rerank_topk`.
-    """
-    books = pq_codebooks(corpus, n_sub=n_sub, ks=ks, id_col=id_col,
-                         vec_col=vec_col)
-    base = normalized(corpus, id_col, vec_col).filter(F.col("nrm") > 0)
-    sv = base.select(_scaled_unit(F.col("vec"), F.col("nrm")).alias("s")).cache()
-    try:
-        books = _pq_lloyd_refine(sv, books, n_sub, iters)
-    finally:
-        sv.unpersist()
-    return books
-
-
-def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    books: list[list[list[int]]],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization ANN with asymmetric distance computation
-    (Jégou et al. 2011): corpus vectors are encoded to ``n_sub`` 1-byte
-    codes (nearest codeword per subspace, exact integer squared-L2 on
-    the 1e-6 unit grid, code-id tiebreak); a query precomputes its
-    ``n_sub × ks`` distance table once and every corpus vector's
-    approximate distance is ``Σ_m table[m][code_m]`` — table lookups,
-    never a dim-length dot. THE memory-compression scale path: 64-dim
-    float64 vectors become n_sub bytes (64× smaller), so a 100 TB
-    corpus's codes fit a fraction of executor memory and the ADC scan
-    is one zero-shuffle ``mapInArrow`` pass (encode + lookup + per-batch
-    partial top-k fused; only ≈ #batches·|Q|·k triples reach the final
-    ranking window).
-
-    Bit-exactness: grid values ≤ 1e6 keep every d² product ≤ 4e12 and
-    every 16-term sum ≤ 6.4e13 — below 2^53, so the kernel's float64
-    arithmetic IS the BIGINT arithmetic the DuckDB oracle runs; norms
-    use the sequential fold (``_fold_sq_norms``) and ``np.argmin``'s
-    first-min matches the smallest-code-id tiebreak. ADC distances are
-    exact integers — no rounding boundary exists anywhere in this tier.
-
-    Output: ``q_id, neighbor_id, adc_dist (BIGINT), rnk`` (ascending
-    distance, neighbor-id tiebreak; self-matches excluded).
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    n_sub = len(books)
-    ks = len(books[0])
-    sub = len(books[0][0])
-    dim = n_sub * sub
-    C = [np.array(b, dtype=np.float64) for b in books]  # ks × sub each
-    id_type = dict(corpus.dtypes)[id_col]
-
-    q_pdf = (
-        normalized(queries, id_col, vec_col)
-        .filter(F.col("nrm") > 0)
-        .select("id", "vec")
-        .toPandas()
-    )
-    if q_pdf.empty:
-        return corpus.sparkSession.createDataFrame(
-            [], f"q_id {id_type}, neighbor_id {id_type}, adc_dist long, rnk int"
-        )
-    q_ids = q_pdf["id"].to_numpy()
-    qmat = np.array(q_pdf["vec"].tolist(), dtype=np.float64)
-    qn = _fold_sq_norms(qmat)
-    qv = qmat / qn[:, None] * 1e6
-    qs = np.sign(qv) * np.floor(np.abs(qv) + 0.5)
-    # per-subspace query distance tables, |Q| × ks exact ints in float64
-    qdt = [
-        ((qs[:, m * sub : (m + 1) * sub][:, None, :] - C[m][None, :, :]) ** 2).sum(
-            axis=2
-        )
-        for m in range(n_sub)
-    ]
-    nq = q_ids.size
-    chunk = max(256, int(4_000_000 / (8 * max(1, ks))))
-
-    def _kernel(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            flat = np.asarray(rb.column(1).flatten(), dtype=np.float64)
-            if flat.size != n * dim:
-                raise ValueError(
-                    f"ragged embedding column: {flat.size} values for "
-                    f"{n} rows × dim {dim}"
-                )
-            mat = flat.reshape(n, dim)
-            nrm = _fold_sq_norms(mat)
-            live = np.flatnonzero(nrm > 0)
-            for s0 in range(0, live.size, chunk):
-                sel = live[s0 : s0 + chunk]
-                v = mat[sel] / nrm[sel, None] * 1e6
-                s = np.sign(v) * np.floor(np.abs(v) + 0.5)
-                ad = np.zeros((nq, sel.size))
-                for m in range(n_sub):
-                    sm = s[:, m * sub : (m + 1) * sub]
-                    d2 = (
-                        np.einsum("ij,ij->i", sm, sm)[:, None]
-                        - 2.0 * (sm @ C[m].T)
-                        + np.einsum("ij,ij->i", C[m], C[m])[None, :]
-                    )
-                    codes = np.argmin(d2, axis=1)  # first-min = smallest j
-                    ad += qdt[m][:, codes]
-                cids = ids[sel]
-                q_out, n_out, d_out = [], [], []
-                for i in range(nq):
-                    row = ad[i]
-                    keep = cids != q_ids[i]
-                    cand_d, cand_id = row[keep], cids[keep]
-                    if cand_d.size > k:
-                        thr = np.partition(cand_d, k - 1)[k - 1]
-                        kp = cand_d <= thr  # k-th ties kept; window breaks
-                        cand_d, cand_id = cand_d[kp], cand_id[kp]
-                    q_out.append(np.full(cand_id.size, q_ids[i]))
-                    n_out.append(cand_id)
-                    d_out.append(cand_d.astype(np.int64))
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(q_out)),
-                        pa.array(np.concatenate(n_out)),
-                        pa.array(np.concatenate(d_out)),
-                    ],
-                    names=["q_id", "neighbor_id", "adc_dist"],
-                )
-
-    partial = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).mapInArrow(_kernel, f"q_id {id_type}, neighbor_id {id_type}, adc_dist long")
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "neighbor_id", "adc_dist", "rnk")
-    )
 
 
 def _exact_rerank_topk(
@@ -1767,14 +1578,12 @@ def _exact_rerank_topk(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Shared exact-rerank tail of every compressed-ANN recipe: the
-    ``(q_id, neighbor_id)`` shortlist broadcasts back onto the corpus
-    scan (map-side semi-join, no corpus shuffle) and exact cosine runs
-    on |Q|·shortlist rows only — corpus-size-independent. Scoring
-    matches the other ANN tiers: SQL-fold dots, round6, id tiebreak.
-    ONE copy (r11) — it was duplicated verbatim across the flat and
-    IVFADC rerank tiers, the same silent-divergence risk ADVICE r10
-    flagged on the query side."""
+    """Shared exact-rerank tail of the IVFADC recipes (inline and
+    stored-codes): the ``(q_id, neighbor_id)`` shortlist broadcasts back
+    onto the corpus scan (map-side semi-join, no corpus shuffle) and
+    exact cosine runs on |Q|·shortlist rows only — corpus-size-
+    independent. Scoring matches the other ANN tiers: SQL-fold dots,
+    round6, id tiebreak."""
     nb = normalized(corpus, id_col, vec_col).select(
         F.col("id").alias("neighbor_id"),
         F.col("vec").alias("n_vec"), F.col("nrm").alias("n_nrm"),
@@ -1793,70 +1602,6 @@ def _exact_rerank_topk(
         .filter(F.col("rnk") <= k)
         .select("q_id", "neighbor_id", "cosine", "rnk")
     )
-
-
-def pq_rerank_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    books: list[list[list[int]]],
-    k: int = 5,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The production PQ recipe (Jégou et al. 2011 §V): ADC ranks a
-    ``shortlist`` of candidates from the compressed codes
-    (:func:`pq_adc_topk` — one zero-shuffle scan of 4-byte codes), then
-    EXACT cosine re-ranks only those |Q|·shortlist survivors
-    (:func:`_exact_rerank_topk`) — the tier keeps PQ's 64× memory
-    compression while recovering exact-scoring precision on everything
-    the codes surface.
-
-    Output: ``q_id, neighbor_id, cosine, rnk``.
-    """
-    cand = pq_adc_topk(
-        corpus, queries, books, k=shortlist, id_col=id_col, vec_col=vec_col
-    ).select("q_id", "neighbor_id")
-    return _exact_rerank_topk(corpus, queries, cand, k, id_col, vec_col)
-
-
-def _grid_assign_residual(cents: list[tuple[int, list[int]]]):
-    """Closure pieces for IVFADC kernels: given fixed-point centroids,
-    return ``(cell_ids, c_mat, assign)`` where ``assign(smat)`` maps a
-    grid-scaled batch (n × dim float64 holding exact ints) to
-    ``(cent_index, residual)`` by exact integer squared-L2 with
-    ``np.argmin`` first-min — cents are sorted by cell id HERE (not
-    assumed of the caller), so first-min IS the min-cell-id tiebreak
-    the SQL oracle replays regardless of input order. Grid components
-    are ≤ 1e6 in magnitude, so every d² term ≤ 4e12 and every 64-dim sum
-    ≤ 2.6e14 — float64 is exact throughout."""
-    import numpy as np
-
-    cents = sorted(cents, key=lambda c: c[0])
-    cell_ids = np.array([c for c, _ in cents], dtype=np.int64)
-    c_mat = np.array([v for _, v in cents], dtype=np.float64)
-    c2 = np.einsum("ij,ij->i", c_mat, c_mat)
-    # bound the (rows × num_cells) distance transient to ~64 MB: at
-    # deploy cell counts (10k cells) a full 10k-row Arrow batch would
-    # allocate an 800 MB d² per WORKER — 32 local workers is an OOM,
-    # and a cluster executor should never need batch × cells floats
-    # either. Chunking is pure per-row math: identical idx/residuals.
-    chunk = max(1, 8_000_000 // max(1, c_mat.shape[0]))
-
-    def assign(smat):
-        n = smat.shape[0]
-        idx = np.empty(n, dtype=np.int64)
-        for lo in range(0, n, chunk):
-            sm = smat[lo:lo + chunk]
-            d2 = (
-                np.einsum("ij,ij->i", sm, sm)[:, None]
-                - 2.0 * (sm @ c_mat.T)
-                + c2[None, :]
-            )
-            idx[lo:lo + chunk] = np.argmin(d2, axis=1)
-        return idx, smat - c_mat[idx]
-
-    return cell_ids, c_mat, assign
 
 
 def _ivf_query_probe_tables(
@@ -1881,26 +1626,10 @@ def _ivf_query_probe_tables(
     the packed payload ``(q_ids, probes, qidx, qdt_arr)`` — feed it to
     :func:`_ivf_unpack_tables` on the consumer side.
     """
-    import os
-
     import numpy as np
 
     n_sub = len(C)
-    max_q = int(os.environ.get("BFDL_IVF_MAX_QUERIES", IVF_MAX_QUERIES))
-    q_pdf = (
-        normalized(queries, id_col, vec_col)
-        .filter(F.col("nrm") > 0)
-        .select("id", _scaled_unit(F.col("vec"), F.col("nrm")).alias("s"))
-        .limit(max_q + 1)
-        .toPandas()
-    )
-    if len(q_pdf) > max_q:
-        raise ValueError(
-            f"IVF query side exceeds {max_q} rows; it is collected to the "
-            "driver and shipped in every task closure, so it must stay "
-            "broadcast-sized. Batch the query set or raise "
-            "BFDL_IVF_MAX_QUERIES if the rig has the memory."
-        )
+    q_pdf = _collect_queries(grid_vectors(queries, id_col, vec_col))
     if q_pdf.empty:
         return None
     q_ids = q_pdf["id"].to_numpy()
@@ -2022,55 +1751,46 @@ def pq_residual_codebooks(
     which cluster a vector sits in (the cell id already says so);
     subtracting the assigned centroid leaves only the within-cell
     offset, which is where the neighbors-within-a-cluster information
-    lives. Same deterministic draw as :func:`pq_codebooks`: the ``ks``
-    smallest-hash corpus vectors, grid-scaled, assigned to their nearest
-    centroid by exact integer L2 (min-cell-id tiebreak), residual-sliced
-    into ``n_sub`` sub-vectors. The collect is ``ks`` rows, bounded by
-    contract; every arithmetic step is exact integers, so a SQL oracle
-    replays the build bit-for-bit.
+    lives. The draw is :func:`seed_cells`: the ``ks`` smallest-hash
+    grid vectors, assigned to their nearest centroid by exact integer L2
+    (min-cell-id tiebreak), residual-sliced into ``n_sub`` contiguous
+    sub-vectors — codeword j of subspace m is seed j's m-th slice. The
+    collect is ``ks`` rows, bounded by contract; every arithmetic step is
+    exact integers, so a SQL oracle replays the build bit-for-bit. With
+    ``cents = [(0, [0] * dim)]`` the residual is the vector and these
+    are flat PQ codebooks.
 
     Residual components are ≤ 2e6 on the grid (difference of two unit-
-    grid vectors), so ADC sums stay ≤ ~1e15 < 2^53 — the exactness
-    argument of the flat tier survives the residual shift.
-    """
-    from binance_futures_data_lake_spark.operators.sketch import uniform_hash
+    grid vectors), so ADC sums stay ≤ ~1e15 < 2^53.
 
+    Returns ``books[m][j] = list[int]`` of length dim // n_sub.
+    """
     import numpy as np
 
-    base = normalized(corpus, id_col, vec_col).filter(F.col("nrm") > 0)
-    rows = (
-        base.withColumn("hv", uniform_hash(F.col("id")))
-        .orderBy("hv", "id")
-        .limit(ks)
-        .select(_scaled_unit(F.col("vec"), F.col("nrm")).alias("s"))
-        .collect()
-    )
-    if not rows:
+    seeds = seed_cells(grid_vectors(corpus, id_col, vec_col), ks)
+    if not seeds:
         raise ValueError("pq_residual_codebooks: empty corpus")
-    dim = len(rows[0].s)
+    dim = len(seeds[0][1])
     if dim % n_sub:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     sub = dim // n_sub
-    smat = np.array([[int(x) for x in r.s] for r in rows], dtype=np.float64)
     _, _, assign = _grid_assign_residual(cents)
-    _, res = assign(smat)
-    books: list[list[list[int]]] = [[] for _ in range(n_sub)]
-    for row in res:
-        for m in range(n_sub):
-            books[m].append([int(v) for v in row[m * sub : (m + 1) * sub]])
-    return books
+    _, res = assign(np.array([s for _, s in seeds], dtype=np.float64))
+    return [
+        [[int(v) for v in row[m * sub : (m + 1) * sub]] for row in res]
+        for m in range(n_sub)
+    ]
 
 
 def _pq_lloyd_refine(sv, books, n_sub: int, iters: int):
-    """Shared per-subspace Lloyd loop over a cached frame whose single
-    column is a grid-integer vector (``pq_codebooks_lloyd`` passes
-    scaled-unit vectors; the residual tier passes residuals). One
-    ``mapInArrow`` corpus pass per iteration trains all subspaces;
-    per-batch partial sums are exact integers in float64, the driver
-    reduce is bounded (≤ batches·n_sub·ks rows) and integer-exact, new
-    codewords round half-away-from-zero, ``np.argmin`` first-min =
-    smallest-code-id tiebreak, empty codewords keep their previous
-    value — bit-identical across runs and partitionings."""
+    """Per-subspace Lloyd loop over a cached frame whose single column is
+    a grid-integer residual vector. One ``mapInArrow`` corpus pass per
+    iteration trains all subspaces; per-batch partial sums are exact
+    integers in float64, the driver reduce is bounded (≤ batches·n_sub·ks
+    rows) and integer-exact, new codewords round half-away-from-zero,
+    :func:`_pq_codes` first-min = smallest-code-id tiebreak, empty
+    codewords keep their previous value — bit-identical across runs and
+    partitionings."""
     import numpy as np
     import pyarrow as pa
 
@@ -2078,26 +1798,20 @@ def _pq_lloyd_refine(sv, books, n_sub: int, iters: int):
     dim = n_sub * sub
     for _ in range(iters):
         C = [np.array(b, dtype=np.float64) for b in books]
-        kcur = [c.shape[0] for c in C]
 
-        def _partials(batches, _C=C, _k=kcur):
+        def _partials(batches, _C=C):
             for rb in batches:
                 n = rb.num_rows
                 if n == 0:
                     continue
                 flat = np.asarray(rb.column(0).flatten(), dtype=np.float64)
                 mat = flat.reshape(n, dim)
+                codes = _pq_codes(mat, _C)
                 for m in range(n_sub):
-                    sm = mat[:, m * sub : (m + 1) * sub]
-                    d2 = (
-                        np.einsum("ij,ij->i", sm, sm)[:, None]
-                        - 2.0 * (sm @ _C[m].T)
-                        + np.einsum("ij,ij->i", _C[m], _C[m])[None, :]
-                    )
-                    code = np.argmin(d2, axis=1)
-                    cnt = np.bincount(code, minlength=_k[m])
-                    sums = np.zeros((_k[m], sub))
-                    np.add.at(sums, code, sm)
+                    ksm = _C[m].shape[0]
+                    cnt = np.bincount(codes[:, m], minlength=ksm)
+                    sums = np.zeros((ksm, sub))
+                    np.add.at(sums, codes[:, m], mat[:, m * sub : (m + 1) * sub])
                     live = np.flatnonzero(cnt)
                     yield pa.record_batch(
                         [
@@ -2151,14 +1865,27 @@ def pq_residual_codebooks_lloyd(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[list[int]]]:
-    """Lloyd-refined RESIDUAL codebooks — the deploy-quality IVFADC
-    build (the :func:`pq_codebooks_lloyd` treatment applied to
-    residuals). One ``mapInArrow`` pass materializes each vector's
-    residual against its nearest centroid (exact integer grid, min-cell
-    tiebreak); the cached residual frame then feeds the shared
-    per-subspace Lloyd loop (:func:`_pq_lloyd_refine`). Same fixed-point
-    determinism contract as every trained tier: codebooks are a pure
-    function of (corpus, cents, n_sub, ks, iters)."""
+    """PRODUCTION-QUALITY residual codebooks: per-subspace Lloyd (k-means)
+    refinement of the :func:`pq_residual_codebooks` draw. One
+    ``mapInArrow`` pass materializes each vector's residual against its
+    nearest centroid (exact integer grid, min-cell tiebreak); the cached
+    residual frame then feeds the per-subspace Lloyd loop
+    (:func:`_pq_lloyd_refine`), all ``n_sub`` subspaces trained in one
+    corpus pass per iteration.
+
+    Why training matters: seeded codewords slice whole corpus vectors,
+    so on CLUSTERED data every codeword inherits the cluster structure
+    and sub-codes collapse onto cluster identity — the 1M-vector probe
+    measured flat seeded recall ≈ 0 because within-cluster neighbors tie
+    on identical codes and the id-tiebreak wins. Lloyd iterations move
+    codewords into the residual/noise structure of each subspace
+    independently, which is what gives PQ its discrimination (Jégou et
+    al. 2011 train per-subspace k-means; at ks=256 a code stays one
+    byte). ``cents = [(0, [0] * dim)]`` trains flat PQ codebooks.
+
+    Same fixed-point determinism contract as :func:`ivf_lloyd_centroids`:
+    codebooks are a pure function of (corpus, cents, n_sub, ks, iters),
+    bit-identical across runs and partitionings."""
     import numpy as np
     import pyarrow as pa
 
@@ -2182,9 +1909,8 @@ def pq_residual_codebooks_lloyd(
                 names=["r"],
             )
 
-    base = normalized(corpus, id_col, vec_col).filter(F.col("nrm") > 0)
     rv = (
-        base.select(_scaled_unit(F.col("vec"), F.col("nrm")).alias("s"))
+        grid_vectors(corpus, id_col, vec_col).select("s")
         .mapInArrow(_residuals, "r array<long>")
         .cache()
     )
@@ -2222,7 +1948,11 @@ def pq_ivf_adc_topk(
     (k-th ties kept, the window breaks them). At 100 TB the cell id is
     the partition key, so a probe reads nprobe/num_cells of the corpus
     via partition pruning — the scan shape of :func:`ivf_lloyd_topk`
-    with the candidate arithmetic of :func:`pq_adc_topk`.
+    with product-quantized candidate arithmetic.
+
+    Flat PQ is the one-cell case: with ``cents = [(0, [0] * dim)]`` every
+    vector's residual is the vector itself, every query probes the one
+    cell, and the scan ranks the whole corpus by plain ADC.
 
     Exactness: residual components ≤ 2e6 ⇒ per-term d² ≤ 1.6e13, ADC
     sums ≤ ~1e15 < 2^53 — float64 IS the BIGINT arithmetic the oracle
@@ -2238,11 +1968,10 @@ def pq_ivf_adc_topk(
         raise ValueError(f"k must be >= 1, got {k}")
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    n_sub = len(books)
     sub = len(books[0][0])
-    dim = n_sub * sub
     C = [np.array(b, dtype=np.float64) for b in books]
     cell_ids, c_mat, assign = _grid_assign_residual(cents)
+    dim = c_mat.shape[1]
     q_id_type = dict(queries.dtypes)[id_col]
     n_id_type = dict(corpus.dtypes)[id_col]
     spark = corpus.sparkSession
@@ -2267,35 +1996,13 @@ def pq_ivf_adc_topk(
     def _kernel(batches):
         q_ids, probes, qdt = _ivf_unpack_tables(bc.value)
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            flat = np.asarray(rb.column(1).flatten(), dtype=np.float64)
-            if flat.size != n * dim:
-                raise ValueError(
-                    f"ragged embedding column: {flat.size} values for "
-                    f"{n} rows × dim {dim}"
-                )
-            mat = flat.reshape(n, dim)
-            nrm = _fold_sq_norms(mat)
-            live = np.flatnonzero(nrm > 0)
+            live, s = _grid_batch(rb, dim)
             if live.size == 0:
                 continue
-            v = mat[live] / nrm[live, None] * 1e6
-            s = np.sign(v) * np.floor(np.abs(v) + 0.5)
+            ids = rb.column(0).to_numpy(zero_copy_only=False)[live]
             cidx, res = assign(s)
-            codes = np.empty((live.size, n_sub), dtype=np.int64)
-            for m in range(n_sub):
-                rm = res[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    np.einsum("ij,ij->i", rm, rm)[:, None]
-                    - 2.0 * (rm @ C[m].T)
-                    + np.einsum("ij,ij->i", C[m], C[m])[None, :]
-                )
-                codes[:, m] = np.argmin(d2, axis=1)
             out = _ivf_accumulate_partial_topk(
-                ids[live], cell_ids[cidx], codes, q_ids, probes, qdt, k
+                ids, cell_ids[cidx], _pq_codes(res, C), q_ids, probes, qdt, k
             )
             if out is None:
                 continue
@@ -2398,45 +2105,22 @@ def pq_encode(
     import numpy as np
     import pyarrow as pa
 
-    n_sub = len(books)
-    sub = len(books[0][0])
-    dim = n_sub * sub
     C = [np.array(b, dtype=np.float64) for b in books]
-    cell_ids, _, assign = _grid_assign_residual(cents)
+    cell_ids, c_mat, assign = _grid_assign_residual(cents)
+    dim = c_mat.shape[1]
     id_type = dict(corpus.dtypes)[id_col]
 
     def _kernel(batches):
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            flat = np.asarray(rb.column(1).flatten(), dtype=np.float64)
-            if flat.size != n * dim:
-                raise ValueError(
-                    f"ragged embedding column: {flat.size} values for "
-                    f"{n} rows × dim {dim}"
-                )
-            mat = flat.reshape(n, dim)
-            nrm = _fold_sq_norms(mat)
-            live = np.flatnonzero(nrm > 0)
+            live, s = _grid_batch(rb, dim)
             if live.size == 0:
                 continue
-            v = mat[live] / nrm[live, None] * 1e6
-            s = np.sign(v) * np.floor(np.abs(v) + 0.5)
+            ids = rb.column(0).to_numpy(zero_copy_only=False)[live]
             cidx, res = assign(s)
-            codes = np.empty((live.size, n_sub), dtype=np.int16)
-            for m in range(n_sub):
-                rm = res[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    np.einsum("ij,ij->i", rm, rm)[:, None]
-                    - 2.0 * (rm @ C[m].T)
-                    + np.einsum("ij,ij->i", C[m], C[m])[None, :]
-                )
-                codes[:, m] = np.argmin(d2, axis=1)
+            codes = _pq_codes(res, C).astype(np.int16)
             yield pa.record_batch(
                 [
-                    pa.array(ids[live]),
+                    pa.array(ids),
                     pa.array(cell_ids[cidx].astype(np.int32)),
                     pa.array(list(codes), type=pa.list_(pa.int16())),
                 ],

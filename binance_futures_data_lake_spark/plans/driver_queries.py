@@ -7729,24 +7729,28 @@ _PQ_ADC_CTES = """
     """,
 )
 def q_pq_ann_topk(spark, sf_dir):
-    """Product-quantization ANN with asymmetric distance computation
+    """Flat product-quantization ANN with asymmetric distance computation
     (Jégou et al. 2011): 4 subspaces × 8 seeded codewords on the 1e-6
     unit grid, corpus encoded to 4 one-byte codes (64× memory
     compression — the codes of a 100 TB corpus fit executor memory),
     queries precompute 4×8 distance tables and rank by table-lookup
-    sums (operators/similarity.py pq_codebooks / pq_adc_topk; encode +
-    lookup + partial top-k fused in one zero-shuffle mapInArrow pass).
-    Every distance is an exact integer, so the oracle replays codebook
-    selection, encoding, and ADC ranking bit-for-bit — no rounding
-    boundary exists in this tier. Recall vs brute force is
-    pytest-gauged like the other ANN tiers."""
+    sums. Flat PQ is IVFADC with ONE all-zero coarse cell, so the
+    residual is the vector itself (operators/similarity.py
+    pq_residual_codebooks / pq_ivf_adc_topk; encode + lookup + partial
+    top-k fused in one zero-shuffle mapInArrow pass). Every distance is
+    an exact integer, so the oracle replays codebook selection,
+    encoding, and ADC ranking bit-for-bit — no rounding boundary exists
+    in this tier. Recall vs brute force is pytest-gauged like the other
+    ANN tiers."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_adc_topk, pq_codebooks,
+        pq_ivf_adc_topk, pq_residual_codebooks,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
-    books = pq_codebooks(emb, n_sub=4, ks=8)
-    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 10), books, k=5)
+    cents = [(0, [0] * 64)]  # one zero cell over the 64-dim embeddings
+    books = pq_residual_codebooks(emb, cents, n_sub=4, ks=8)
+    return pq_ivf_adc_topk(emb, emb.filter(F.col("vec_id") < 10), cents,
+                           books, k=5, nprobe=1)
 
 
 @register(
@@ -7770,22 +7774,24 @@ def q_pq_ann_topk(spark, sf_dir):
     """,
 )
 def q_pq_rerank_topk(spark, sf_dir):
-    """The production PQ recipe: ADC shortlist (top-50 from the
+    """The production PQ recipe: flat-PQ ADC shortlist (top-50 from the
     compressed codes) → EXACT cosine re-rank of only those survivors
-    (operators/similarity.py pq_rerank_topk). The shortlist broadcasts
+    (operators/similarity.py pq_ivf_rerank_topk over one all-zero
+    coarse cell — the `pq_ann_topk` codes). The shortlist broadcasts
     back onto the corpus scan — no corpus shuffle — so the tier keeps
     PQ's 64× memory compression while re-ranking with exact scores;
     recall on the structureless synthetic embeddings is the honest
     worst case and is pytest-gauged. The oracle replays codes, ADC
     shortlist, and the exact re-rank."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_codebooks, pq_rerank_topk,
+        pq_ivf_rerank_topk, pq_residual_codebooks,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
-    books = pq_codebooks(emb, n_sub=4, ks=8)
-    return pq_rerank_topk(emb, emb.filter(F.col("vec_id") < 10), books,
-                          k=5, shortlist=50)
+    cents = [(0, [0] * 64)]  # one zero cell over the 64-dim embeddings
+    books = pq_residual_codebooks(emb, cents, n_sub=4, ks=8)
+    return pq_ivf_rerank_topk(emb, emb.filter(F.col("vec_id") < 10), cents,
+                              books, k=5, shortlist=50, nprobe=1)
 
 
 # IVFADC CTE chain (r10, shared by pq_ivf_adc_topk and its re-ranked
@@ -7895,14 +7901,13 @@ def q_pq_ivf_adc_topk(spark, sf_dir):
     assignment, residual codebooks, encoding, and probed-cell ADC
     bit-for-bit."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_codebooks, pq_ivf_adc_topk, pq_residual_codebooks,
+        grid_vectors, pq_ivf_adc_topk, pq_residual_codebooks, seed_cells,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
-    # the 4 smallest-hash grid vectors ARE the seeded coarse cells
-    # (pq_codebooks with n_sub=1 returns whole scaled vectors in hash
-    # order — the same draw the ct CTE replays)
-    cents = list(enumerate(pq_codebooks(emb, n_sub=1, ks=4)[0]))
+    # the 4 smallest-hash grid vectors ARE the seeded coarse cells — the
+    # same draw the ct CTE replays
+    cents = seed_cells(grid_vectors(emb), 4)
     books = pq_residual_codebooks(emb, cents, n_sub=4, ks=8)
     return pq_ivf_adc_topk(emb, emb.filter(F.col("vec_id") < 10), cents,
                            books, k=5, nprobe=2)
@@ -7925,12 +7930,12 @@ def q_pq_ivf_codes_topk(spark, sf_dir):
     hash pins the index build + codes round trip end-to-end
     (operators/similarity.py pq_encode / pq_ivf_adc_codes_topk)."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_codebooks, pq_encode, pq_ivf_adc_codes_topk,
-        pq_residual_codebooks,
+        grid_vectors, pq_encode, pq_ivf_adc_codes_topk,
+        pq_residual_codebooks, seed_cells,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
-    cents = list(enumerate(pq_codebooks(emb, n_sub=1, ks=4)[0]))
+    cents = seed_cells(grid_vectors(emb), 4)
     books = pq_residual_codebooks(emb, cents, n_sub=4, ks=8)
     codes = pq_encode(emb, cents, books)
     return pq_ivf_adc_codes_topk(
@@ -7968,11 +7973,11 @@ def q_pq_ivf_rerank_topk(spark, sf_dir):
     pruning while recovering exact-scoring precision on everything the
     codes surface."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_codebooks, pq_ivf_rerank_topk, pq_residual_codebooks,
+        grid_vectors, pq_ivf_rerank_topk, pq_residual_codebooks, seed_cells,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
-    cents = list(enumerate(pq_codebooks(emb, n_sub=1, ks=4)[0]))
+    cents = seed_cells(grid_vectors(emb), 4)
     books = pq_residual_codebooks(emb, cents, n_sub=4, ks=8)
     return pq_ivf_rerank_topk(emb, emb.filter(F.col("vec_id") < 10), cents,
                               books, k=5, shortlist=50, nprobe=2)
@@ -8012,12 +8017,12 @@ def q_pq_ivf_rerank_codes_topk(spark, sf_dir):
     build + round trip + rerank in one row
     (operators/similarity.py pq_ivf_rerank_codes_topk)."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_codebooks, pq_encode, pq_ivf_rerank_codes_topk,
-        pq_residual_codebooks,
+        grid_vectors, pq_encode, pq_ivf_rerank_codes_topk,
+        pq_residual_codebooks, seed_cells,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
-    cents = list(enumerate(pq_codebooks(emb, n_sub=1, ks=4)[0]))
+    cents = seed_cells(grid_vectors(emb), 4)
     books = pq_residual_codebooks(emb, cents, n_sub=4, ks=8)
     codes = pq_encode(emb, cents, books)
     return pq_ivf_rerank_codes_topk(

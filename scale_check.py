@@ -297,22 +297,24 @@ def pq_recall_main() -> None:
     """Seeded-vs-trained PQ recall at probe scale (VERDICT r8 #2): the
     committed artifact behind every recall claim in OPERATORS.md. Same
     clustered generator as the main ANN probe (64d, 32 latent blocks,
-    100 queries, k=10), BOTH book types (seeded ``pq_codebooks`` — the
+    100 queries, k=10), flat PQ (IVFADC over one all-zero cell) with
+    BOTH book types (seeded ``pq_residual_codebooks`` — the
     SQL-replayable registry contract — and Lloyd-trained
-    ``pq_codebooks_lloyd`` n_sub=16 × ks=256, the deploy config), ADC and
-    shortlist-reranked recall each, plus a shortlist SWEEP
-    (1000/2000/5000) on the trained books so the deploy story states how
-    recall is bought with shortlist instead of advertising one number.
-    ``--rows`` is the vector count (default 1M)."""
+    ``pq_residual_codebooks_lloyd`` n_sub=16 × ks=256, the deploy
+    config), ADC and shortlist-reranked recall each, plus a shortlist
+    SWEEP (1000/2000/5000) on the trained books so the deploy story
+    states how recall is bought with shortlist instead of advertising
+    one number. ``--rows`` is the vector count (default 1M)."""
     n_vecs = _arg("--rows", 1_000_000)
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     spark = get_spark("bfdl-pq-recall")
     from binance_futures_data_lake_spark.operators.similarity import (
         brute_force_topk,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_codebooks_lloyd,
-        pq_rerank_topk,
+        ivf_lloyd_centroids,
+        pq_ivf_adc_topk,
+        pq_ivf_rerank_topk,
+        pq_residual_codebooks,
+        pq_residual_codebooks_lloyd,
     )
 
     dim, ann_k = 64, 10
@@ -332,35 +334,32 @@ def pq_recall_main() -> None:
             "sec": round(time.perf_counter() - t0, 2), **extra,
         })
 
+    flat = [(0, [0] * dim)]  # flat PQ: one zero cell, residual = vector
     t0 = time.perf_counter()
-    seeded = pq_codebooks(ann, n_sub=16, ks=256)
+    seeded = pq_residual_codebooks(ann, flat, n_sub=16, ks=256)
     seeded_sec = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    trained = pq_codebooks_lloyd(ann, n_sub=16, ks=256, iters=2)
+    trained = pq_residual_codebooks_lloyd(ann, flat, n_sub=16, ks=256, iters=2)
     trained_sec = round(time.perf_counter() - t0, 2)
 
-    measure("pq_adc", "seeded", lambda: pq_adc_topk(ann, annq, seeded, k=ann_k),
-            {"codebook_sec": seeded_sec})
-    measure("pq_rerank_1000", "seeded",
-            lambda: pq_rerank_topk(ann, annq, seeded, k=ann_k, shortlist=1000), {})
-    measure("pq_adc", "trained", lambda: pq_adc_topk(ann, annq, trained, k=ann_k),
-            {"codebook_sec": trained_sec})
+    def flat_adc(books):
+        return lambda: pq_ivf_adc_topk(ann, annq, flat, books, k=ann_k, nprobe=1)
+
+    def flat_rerank(books, sl):
+        return lambda: pq_ivf_rerank_topk(
+            ann, annq, flat, books, k=ann_k, shortlist=sl, nprobe=1)
+
+    measure("pq_adc", "seeded", flat_adc(seeded), {"codebook_sec": seeded_sec})
+    measure("pq_rerank_1000", "seeded", flat_rerank(seeded, 1000), {})
+    measure("pq_adc", "trained", flat_adc(trained), {"codebook_sec": trained_sec})
     for sl in (1000, 2000, 5000):
-        measure(f"pq_rerank_{sl}", "trained",
-                lambda sl=sl: pq_rerank_topk(ann, annq, trained, k=ann_k, shortlist=sl),
+        measure(f"pq_rerank_{sl}", "trained", flat_rerank(trained, sl),
                 {"shortlist_pct_of_corpus": round(100.0 * sl / n_vecs, 3)})
 
     # IVFADC rows (r10): residual encoding against Lloyd cell MEANS —
     # the tier where raw ADC recall is bought with arithmetic instead
     # of shortlist. Same 16×256 code budget as the flat trained books;
     # nprobe sweeps the probe-vs-recall trade.
-    from binance_futures_data_lake_spark.operators.similarity import (
-        ivf_lloyd_centroids,
-        pq_ivf_adc_topk,
-        pq_ivf_rerank_topk,
-        pq_residual_codebooks_lloyd,
-    )
-
     t0 = time.perf_counter()
     cents = ivf_lloyd_centroids(ann, num_cells=32, iters=2)
     cents_sec = round(time.perf_counter() - t0, 2)
@@ -404,10 +403,12 @@ def pq_ivf_scan_main() -> None:
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "64g")
     spark = get_spark("bfdl-pq-ivf-scan")
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_codebooks,
+        grid_vectors,
+        pq_encode,
+        pq_ivf_adc_codes_topk,
         pq_ivf_adc_topk,
         pq_residual_codebooks,
+        seed_cells,
     )
 
     dim, ann_k = 64, 10
@@ -415,13 +416,10 @@ def pq_ivf_scan_main() -> None:
     ann.count()
     annq = probe_queries(ann, n_vecs)
 
-    from binance_futures_data_lake_spark.operators.similarity import (
-        pq_encode, pq_ivf_adc_codes_topk,
-    )
-
     t0 = time.perf_counter()
-    flat_books = pq_codebooks(ann, n_sub=16, ks=256)
-    cents = list(enumerate(pq_codebooks(ann, n_sub=1, ks=32)[0]))
+    flat = [(0, [0] * dim)]  # flat PQ: one zero cell, residual = vector
+    flat_books = pq_residual_codebooks(ann, flat, n_sub=16, ks=256)
+    cents = seed_cells(grid_vectors(ann), 32)
     res_books = pq_residual_codebooks(ann, cents, n_sub=16, ks=256)
     books_sec = round(time.perf_counter() - t0, 2)
 
@@ -453,7 +451,8 @@ def pq_ivf_scan_main() -> None:
             "codes_parquet_mb": du_mb_and_files(idx_dir)[0],
         }
         run("pq_adc_full_scan_raw",
-            lambda: pq_adc_topk(raw, annq, flat_books, k=ann_k))
+            lambda: pq_ivf_adc_topk(raw, annq, flat, flat_books, k=ann_k,
+                                    nprobe=1))
         run("pq_ivfadc_inline_encode_nprobe4",
             lambda: pq_ivf_adc_topk(raw, annq, cents, res_books, k=ann_k,
                                     nprobe=4))
@@ -828,13 +827,6 @@ def pq_build_main() -> None:
       resident; the generator is deterministic hash math, so each of
       the three passes — train filter, encode, truth — recomputes it
       column-side for ~a minute instead),
-    * centroids train with ``partition_reduce=True`` (the default
-      per-batch partial emit collects batches × num_cells ≈ 1M rows at
-      this shape and the driver-side Python reduce dominates training;
-      the partition-level accumulate + vectorized int64 reduce is
-      bit-identical — pinned by
-      test_lloyd_partition_reduce_bit_equal — and collects only
-      partitions × num_cells rows),
     * only the grouped layout is written (10k one-file-per-cell
       directories is a filesystem antipattern; cell % --groups with
       cells sorted inside each file was the r11 nprobe≥16 winner).
@@ -865,9 +857,7 @@ def pq_build_main() -> None:
     n_train = train.count()
 
     t0 = time.perf_counter()
-    cents = ivf_lloyd_centroids(
-        train, num_cells=num_cells, iters=2, partition_reduce=True
-    )
+    cents = ivf_lloyd_centroids(train, num_cells=num_cells, iters=2)
     cents_sec = round(time.perf_counter() - t0, 2)
     print(json.dumps({"stage": "centroids", "sec": cents_sec,
                       "live_cells": len(cents)}), file=sys.stderr)
@@ -1897,31 +1887,34 @@ def main() -> None:
     stages["ann_lsh_topk_100q"]["shuffle_exchanges"] = obs.exchange_count(lsh)
 
     # PQ-ADC probe (r7): the compressed-ANN tier at 1M vectors, the
-    # PRODUCTION configuration — per-subspace Lloyd-trained codebooks
-    # (pq_codebooks_lloyd; seeded books collapse onto cluster identity
-    # on clustered data and measured recall ≈ 0 here), 16 subspaces ×
+    # PRODUCTION configuration — flat PQ (IVFADC over one zero cell) with
+    # per-subspace Lloyd-trained codebooks (pq_residual_codebooks_lloyd;
+    # seeded books collapse onto cluster identity on clustered data and
+    # measured recall ≈ 0 here), 16 subspaces ×
     # 256 codewords → 16 one-byte codes/vector (32× compression vs
     # float64), ADC scan in one zero-shuffle kernel pass, shortlist-1000
     # exact re-rank on top. Recall claims live in the dedicated
     # ``--pq-recall`` mode (seeded-vs-trained + shortlist sweep at 1M);
     # this stage's claim is the wall/exchange shape.
     from binance_futures_data_lake_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_codebooks_lloyd,
-        pq_rerank_topk,
+        pq_ivf_adc_topk,
+        pq_ivf_rerank_topk,
+        pq_residual_codebooks_lloyd,
     )
 
+    flat = [(0, [0] * dim)]
     t0 = time.perf_counter()
-    books = pq_codebooks_lloyd(ann, n_sub=16, ks=256, iters=2)
+    books = pq_residual_codebooks_lloyd(ann, flat, n_sub=16, ks=256, iters=2)
     pq_train_sec = round(time.perf_counter() - t0, 2)
-    pq = pq_adc_topk(ann, annq, books, k=ann_k)
+    pq = pq_ivf_adc_topk(ann, annq, flat, books, k=ann_k, nprobe=1)
     stage("pq_adc_topk_100q", lambda: pq)
     stages["pq_adc_topk_100q"].update(
         codebook_sec=pq_train_sec,
         recall_at_10=_recall(pq),
         shuffle_exchanges=obs.exchange_count(pq),
     )
-    pqr = pq_rerank_topk(ann, annq, books, k=ann_k, shortlist=1000)
+    pqr = pq_ivf_rerank_topk(ann, annq, flat, books, k=ann_k, shortlist=1000,
+                             nprobe=1)
     stage("pq_rerank_topk_100q", lambda: pqr)
     stages["pq_rerank_topk_100q"]["recall_at_10"] = _recall(pqr)
     stages["pq_rerank_topk_100q"]["shuffle_exchanges"] = obs.exchange_count(pqr)
@@ -1945,7 +1938,7 @@ def main() -> None:
 
     # 512 deterministic Lloyd cells ≈ 2k-row cells at 1M vectors, so the
     # per-cell cosine block stays ~30 MB
-    kg_cents = ivf_lloyd_centroids(ann, num_cells=512, iters=2, partition_reduce=True)
+    kg_cents = ivf_lloyd_centroids(ann, num_cells=512, iters=2)
     # build INSIDE the timed thunk: the operator runs eager work while
     # constructing (checkpoint materialization + CC jobs), so timing
     # only the final force would claim 2 s for a ~90 s stage
@@ -1966,12 +1959,12 @@ def main() -> None:
     big_ann = clustered_vectors(spark, big_n, dim, n_latent)
     t0 = time.perf_counter()
     train_step = max(1, big_n // 1_000_000)
-    big_books = pq_codebooks_lloyd(
-        big_ann.filter(F.col("vec_id") % F.lit(train_step) == 0),
+    big_books = pq_residual_codebooks_lloyd(
+        big_ann.filter(F.col("vec_id") % F.lit(train_step) == 0), flat,
         n_sub=16, ks=256, iters=2,
     )
     big_train_sec = round(time.perf_counter() - t0, 2)
-    big_pq = pq_adc_topk(big_ann, annq, big_books, k=ann_k)
+    big_pq = pq_ivf_adc_topk(big_ann, annq, flat, big_books, k=ann_k, nprobe=1)
     stage("pq_adc_scan_10m", lambda: big_pq)
     stages["pq_adc_scan_10m"].update(
         n_vectors=big_n,

@@ -25,11 +25,12 @@ from pyspark.sql import functions as F
 
 from binance_futures_data_lake_spark.operators.similarity import (
     brute_force_topk,
-    pq_codebooks,
+    grid_vectors,
     pq_ivf_adc_topk,
     pq_ivf_rerank_topk,
     pq_residual_codebooks,
     pq_residual_codebooks_lloyd,
+    seed_cells,
 )
 
 DIM, N_SUB, KS, NCELLS = 8, 2, 4, 3
@@ -60,7 +61,7 @@ def _clustered(spark, n_per=40, n_clusters=3, noise=0.08, dim=DIM):
 
 
 def _seed_cents(emb, ncells=NCELLS):
-    return list(enumerate(pq_codebooks(emb, n_sub=1, ks=ncells)[0]))
+    return seed_cells(grid_vectors(emb), ncells)
 
 
 def _numpy_ivfadc(pdf, cents, books, q_ids, k, nprobe):
@@ -179,7 +180,7 @@ def test_residual_codes_beat_flat_on_clustered(spark):
     advantage disappears; that negative is probed, not asserted, in
     SCALE_PROBE_r10 pq_opq/ivfadc rows."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        ivf_lloyd_centroids, pq_adc_topk, pq_codebooks_lloyd,
+        ivf_lloyd_centroids,
     )
 
     emb = _clustered(spark, n_per=30, n_clusters=8).cache()
@@ -189,10 +190,14 @@ def test_residual_codes_beat_flat_on_clustered(spark):
         (r.q_id, r.neighbor_id)
         for r in brute_force_topk(emb, q, k=5).collect()
     }
-    flat_books = pq_codebooks_lloyd(emb, n_sub=N_SUB, ks=16, iters=2)
+    one_cell = [(0, [0] * DIM)]  # flat PQ: the residual is the vector
+    flat_books = pq_residual_codebooks_lloyd(emb, one_cell, n_sub=N_SUB,
+                                             ks=16, iters=2)
     flat = {
         (r.q_id, r.neighbor_id)
-        for r in pq_adc_topk(emb, q, flat_books, k=5).collect()
+        for r in pq_ivf_adc_topk(
+            emb, q, one_cell, flat_books, k=5, nprobe=1
+        ).collect()
     }
     cents = ivf_lloyd_centroids(emb, num_cells=8, iters=2)
     res_books = pq_residual_codebooks_lloyd(emb, cents, n_sub=N_SUB, ks=16,

@@ -136,8 +136,10 @@ def test_knn_graph_mutual_edges_are_mutual_and_undirected(spark):
 
 
 def test_pq_adc_recall_and_contract(spark):
+    """Flat PQ: IVFADC over one all-zero coarse cell."""
     from binance_futures_data_lake_spark.operators.similarity import (
-        brute_force_topk, pq_adc_topk, pq_codebooks, pq_rerank_topk,
+        brute_force_topk, pq_ivf_adc_topk, pq_ivf_rerank_topk,
+        pq_residual_codebooks,
     )
     from binance_futures_data_lake_spark.sources.testdata import load_table
 
@@ -145,9 +147,10 @@ def test_pq_adc_recall_and_contract(spark):
     emb.count()
     q = emb.filter(F.col("vec_id") < 20)
     truth = {(r.q_id, r.neighbor_id) for r in brute_force_topk(emb, q, k=5).collect()}
-    books = pq_codebooks(emb, n_sub=4, ks=8)
+    flat = [(0, [0] * 64)]
+    books = pq_residual_codebooks(emb, flat, n_sub=4, ks=8)
     assert len(books) == 4 and len(books[0]) == 8 and len(books[0][0]) == 16
-    out = pq_adc_topk(emb, q, books, k=5).collect()
+    out = pq_ivf_adc_topk(emb, q, flat, books, k=5, nprobe=1).collect()
     # raw ADC on STRUCTURELESS near-random embeddings is the worst case
     # (all pairwise distances concentrate; 8 codewords can't separate
     # them) — it must still beat the ~0.05 random-pick baseline, while
@@ -155,7 +158,8 @@ def test_pq_adc_recall_and_contract(spark):
     # recall bar.
     found = {(r.q_id, r.neighbor_id) for r in out}
     assert len(found & truth) / len(truth) > 0.05
-    rr = pq_rerank_topk(emb, q, books, k=5, shortlist=100).collect()
+    rr = pq_ivf_rerank_topk(emb, q, flat, books, k=5, shortlist=100,
+                            nprobe=1).collect()
     rfound = {(r.q_id, r.neighbor_id) for r in rr}
     assert len(rfound & truth) / len(truth) >= 0.3
     # contract: exactly k rows per query, integer distances, ranked ascending
@@ -169,9 +173,9 @@ def test_pq_adc_recall_and_contract(spark):
         assert dists == sorted(dists)
         assert all(isinstance(d, int) for d in dists)
     # determinism: a second build returns identical codebooks
-    assert books == pq_codebooks(emb, n_sub=4, ks=8)
+    assert books == pq_residual_codebooks(emb, flat, n_sub=4, ks=8)
     with pytest.raises(ValueError):
-        pq_codebooks(emb, n_sub=5)  # 64 % 5 != 0
+        pq_residual_codebooks(emb, flat, n_sub=5)  # 64 % 5 != 0
 
 
 def test_connected_components_driver_vs_distributed_parity(spark):
@@ -304,13 +308,14 @@ def test_snapshot_diff_statuses(spark):
 
 
 def test_pq_codebooks_lloyd_recall_and_determinism(spark):
+    """Flat PQ (one all-zero cell): Lloyd-trained vs seeded codebooks."""
     from pyspark.sql import functions as F
 
     from binance_futures_data_lake_spark.operators.similarity import (
         brute_force_topk,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_codebooks_lloyd,
+        pq_ivf_adc_topk,
+        pq_residual_codebooks,
+        pq_residual_codebooks_lloyd,
     )
 
     # clustered corpus: 8 latent centers + noise — the shape where seeded
@@ -337,22 +342,25 @@ def test_pq_codebooks_lloyd_recall_and_determinism(spark):
     q = ann.filter(F.col("vec_id") < 20)
     truth = {(r.q_id, r.neighbor_id) for r in brute_force_topk(ann, q, k=5).collect()}
 
+    flat = [(0, [0] * 16)]
+
     def recall(books):
         got = {
             (r.q_id, r.neighbor_id)
-            for r in pq_adc_topk(ann, q, books, k=5).collect()
+            for r in pq_ivf_adc_topk(ann, q, flat, books, k=5, nprobe=1).collect()
         }
         return len(got & truth) / len(truth)
 
-    seeded = pq_codebooks(ann, n_sub=4, ks=16)
-    trained = pq_codebooks_lloyd(ann, n_sub=4, ks=16, iters=2)
-    # shape contract: same as pq_codebooks, consumable by the same tiers
+    seeded = pq_residual_codebooks(ann, flat, n_sub=4, ks=16)
+    trained = pq_residual_codebooks_lloyd(ann, flat, n_sub=4, ks=16, iters=2)
+    # shape contract: same as the seeded books, consumable by the same tiers
     assert len(trained) == 4 and len(trained[0]) == 16
     assert all(len(cw) == 4 for b in trained for cw in b)
     # Lloyd training must beat the seeded draw on clustered data
     assert recall(trained) > recall(seeded)
     # pure function of (corpus, params): bit-identical on re-run
-    assert trained == pq_codebooks_lloyd(ann, n_sub=4, ks=16, iters=2)
+    assert trained == pq_residual_codebooks_lloyd(ann, flat, n_sub=4, ks=16,
+                                                  iters=2)
     ann.unpersist()
 
 
@@ -372,9 +380,9 @@ def test_pq_rerank_recall_floor_shortlist_scaled(spark):
 
     from binance_futures_data_lake_spark.operators.similarity import (
         brute_force_topk,
-        pq_adc_topk,
-        pq_codebooks_lloyd,
-        pq_rerank_topk,
+        pq_ivf_adc_topk,
+        pq_ivf_rerank_topk,
+        pq_residual_codebooks_lloyd,
     )
 
     def h01(*cols):
@@ -398,15 +406,20 @@ def test_pq_rerank_recall_floor_shortlist_scaled(spark):
     )
     q = ann.filter(F.col("vec_id") < 20)
     truth = {(r.q_id, r.neighbor_id) for r in brute_force_topk(ann, q, k=5).collect()}
-    trained = pq_codebooks_lloyd(ann, n_sub=4, ks=16, iters=2)
+    flat = [(0, [0] * 16)]
+    trained = pq_residual_codebooks_lloyd(ann, flat, n_sub=4, ks=16, iters=2)
 
     def recall(df):
         got = {(r.q_id, r.neighbor_id) for r in df.collect()}
         return len(got & truth) / len(truth)
 
-    adc = recall(pq_adc_topk(ann, q, trained, k=5))
-    rr1000 = recall(pq_rerank_topk(ann, q, trained, k=5, shortlist=1000))
-    rr2000 = recall(pq_rerank_topk(ann, q, trained, k=5, shortlist=2000))
+    def rerank(sl):
+        return recall(pq_ivf_rerank_topk(ann, q, flat, trained, k=5,
+                                         shortlist=sl, nprobe=1))
+
+    adc = recall(pq_ivf_adc_topk(ann, q, flat, trained, k=5, nprobe=1))
+    rr1000 = rerank(1000)
+    rr2000 = rerank(2000)
     # rerank recovers far above raw ADC at a 2% shortlist
     assert adc <= 0.2 and rr1000 >= 0.5 and rr1000 >= adc + 0.3
     # recall is bought with shortlist — the deploy knob is monotone

@@ -28,13 +28,11 @@ KEEP = {
         "pinned under fault injection by tests/test_state_compaction.py",
     ("streaming/pipeline.py", "compact_state_dir"):
         "compact_state's per-family worker, pinned by the same tests",
-    ("operators/similarity.py", "pq_codebooks_lloyd"):
-        "OPERATORS.md's measured PQ deploy recommendation; run by the "
-        "scale_check.py --pq-* probes",
     ("operators/similarity.py", "pq_residual_codebooks_lloyd"):
-        "residual-codebook half of that recommendation, same probes",
+        "OPERATORS.md's measured PQ deploy recommendation (flat PQ is its "
+        "one-cell case); run by the scale_check.py --pq-* probes",
     ("operators/similarity.py", "_pq_lloyd_refine"):
-        "the Lloyd refinement both PQ trainers above share",
+        "the per-subspace Lloyd loop of the trainer above",
     ("operators/similarity.py", "release_query_table_broadcasts"):
         "the --pq-* probe sweeps free query-table broadcasts between runs",
     ("operators/similarity.py", "fixed_point_cents"):

@@ -353,15 +353,22 @@ def test_semantic_match_existing_frozen_index(spark):
 
 def test_ivf_query_side_cap_fails_loudly(spark, emb, monkeypatch):
     """Oversized query sides must raise before occupying the driver
-    (the collected frame rides every task closure)."""
+    (the collected frame rides every task closure) — on the cell-scored
+    IVF tiers and on flat PQ, the one-cell IVFADC case."""
+    from binance_futures_data_lake_spark.operators import similarity
     from binance_futures_data_lake_spark.operators.similarity import (
-        ivf_seed_centroids, ivf_seeded_topk,
+        ivf_seed_centroids, ivf_seeded_topk, pq_ivf_adc_topk,
+        pq_residual_codebooks,
     )
 
-    monkeypatch.setenv("BFDL_IVF_MAX_QUERIES", "5")
+    monkeypatch.setattr(similarity, "IVF_MAX_QUERIES", 5)
     cents = ivf_seed_centroids(emb, num_cells=4)
     with pytest.raises(ValueError, match="query side exceeds 5 rows"):
         ivf_seeded_topk(emb, emb.limit(6), cents, k=2).collect()
+    flat = [(0, [0] * 64)]
+    books = pq_residual_codebooks(emb, flat, n_sub=4, ks=8)
+    with pytest.raises(ValueError, match="query side exceeds 5 rows"):
+        pq_ivf_adc_topk(emb, emb.limit(6), flat, books, k=2, nprobe=1)
 
 
 def test_ivf_mixed_id_types(spark, emb):
@@ -385,29 +392,25 @@ def test_ivf_mixed_id_types(spark, emb):
     assert rows and all(r.q_id.startswith("q") for r in rows)
 
 
-def test_lloyd_partition_reduce_bit_equal(spark, emb):
-    """r12 (VERDICT r11 #4): partition_reduce=True swaps the per-batch
-    partial emit + Python driver reduce for a per-partition accumulate
-    + vectorized int64 numpy reduce. Integer sums are associative and
-    every float64 partial is exact under 2^53, so the trained centroids
-    must be BIT-IDENTICAL — across partitionings too."""
+def test_lloyd_centroids_partitioning_invariant(spark, emb):
+    """Lloyd steps accumulate per partition and reduce in int64 numpy.
+    Integer sums are associative and every float64 partial is exact
+    under 2^53, so the trained centroids must be BIT-IDENTICAL across
+    partitionings."""
     from binance_futures_data_lake_spark.operators.similarity import (
         ivf_lloyd_centroids,
     )
 
     a = ivf_lloyd_centroids(emb, num_cells=8, iters=2)
-    b = ivf_lloyd_centroids(emb, num_cells=8, iters=2,
-                            partition_reduce=True)
-    c = ivf_lloyd_centroids(emb.repartition(13), num_cells=8, iters=2,
-                            partition_reduce=True)
-    assert a == b == c
+    b = ivf_lloyd_centroids(emb.repartition(13), num_cells=8, iters=2)
+    assert a == b
 
 
 def test_grid_assign_chunking_exact():
     """r12: _grid_assign_residual bounds its (rows × cells) distance
     transient by chunking rows at deploy cell counts. Chunking is pure
     per-row math — idx and residuals must equal the single-shot
-    computation on a multi-chunk config (9k cells → chunk ≈ 888)."""
+    computation on a multi-chunk config (9k cells → chunk 256)."""
     import numpy as np
 
     from binance_futures_data_lake_spark.operators.similarity import (
