@@ -49,7 +49,9 @@ def read_symbols_file(path: str) -> list[str]:
         return []
     out: list[str] = []
     seen: set[str] = set()
-    for raw in open(path, encoding="utf-8").read().splitlines():
+    with open(path, encoding="utf-8") as fh:
+        lines = fh.read().splitlines()
+    for raw in lines:
         line = raw.strip()
         if not line or line.startswith("#") or not line.startswith("- "):
             continue

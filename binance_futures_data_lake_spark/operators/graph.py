@@ -8,32 +8,17 @@ A~B and B~C, keeping "one of each pair" would keep two of {A,B,C}. The
 standard fix is connected components with the min id as the cluster
 label, then keep ``doc_id == cluster_id``.
 
-Algorithm (r7 rewrite, r8 hash priorities, r10 local pre-contraction):
-a ZERO-SHUFFLE round 0 runs an in-partition union-find over the
-UNSHUFFLED directed edge list (the standard two-level CC move),
-emitting one ``(node, local_root)`` row per node per partition; a
-single ``groupBy(node)`` resolves each node's minimum local root AND
-derives the quotient "conflict" edges that link a node's other local
-roots to it. Only that conflict-edge list — sized by the CROSS-
-partition structure, not the input — enters the ITERATIVE EDGE
-CONTRACTION loop: each round hash-partitions the symmetric edge list
-by source and runs an in-partition union-find (one ``mapInPandas``
-pass, the (splitmix64-priority, id)-min member as local root), giving
-a strictly-(prio, id)-decreasing node→root mapping; edges relabel
-through the mapping and self-loops vanish, so the edge list SHRINKS
-geometrically on any id layout (a neighborhood contracts to its
-priority-min in one round — the large-star move of Kiveris et al.,
+One vectorized union-find kernel, :func:`_fragment_roots`, does every
+in-memory step: it labels each node of a numpy edge list with its
+fragment's root under the bijective splitmix64 order of
+:func:`_mix64_vec`. It runs in three places: on the driver for small or
+fully contracted edge lists, in a zero-shuffle round 0 over each input
+partition, and in each round of an ITERATIVE EDGE CONTRACTION loop over
+the hash-partitioned symmetric edge list. Edges relabel through each
+round's node→root map and self-loops vanish, so the list SHRINKS
+geometrically on any id layout (the large-star move of Kiveris et al.,
 "Connected Components in MapReduce and Beyond", with the literature's
-random-mate priorities; plain min-id roots have a shift fixed point on
-monotone-id chains, see connected_components). A final node-sized agg
-normalizes labels to the component min id. As soon as
-the surviving edge list fits ``driver_max_edges`` a driver union-find
-finishes the job; with the short-circuit disabled the loop runs to an
-empty edge list. This replaced min-label propagation + path-halving,
-whose per-round join/agg/checkpoint jobs cost 1013 s at the 1M-node
-mutual-kNN probe — propagation moves labels one hop (log d with
-halving) but never shrinks the data; contraction removes the work
-itself.
+random-mate priorities).
 
 The result is deterministic — min id per component — regardless of
 iteration schedule or partitioning, which is what makes it
@@ -42,36 +27,30 @@ DuckDB-oracle-checkable (recursive-CTE transitive closure).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+# An edge list whose symmetric row count fits this bound is labelled on
+# the driver: the loop costs seconds of job floors for work one core does
+# in milliseconds (11 s -> 0.2 s for 1.2k edges at sf0.1).
+DRIVER_MAX_EDGES = 500_000
+# Contraction rounds before the non-convergence guard.
+MAX_ROUNDS = 30
+# The loop's shuffle width tracks the current edge count at this many
+# edges per partition (floored at defaultParallelism, capped at 1024).
+TARGET_EDGES_PER_PARTITION = 2_000_000
 
-def _prio(x) -> int:
-    """Deterministic 63-bit priority: splitmix64 for integral ids, md5
-    otherwise. Only used for ORDERING — the ordering must merely be a
-    fixed total order uncorrelated with id layout."""
-    if isinstance(x, int):
-        z = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-        return (z ^ (z >> 31)) & 0x7FFFFFFFFFFFFFFF
-    import hashlib
-
-    return (
-        int.from_bytes(hashlib.md5(str(x).encode()).digest()[:8], "big") >> 1
-    )
+_INT_TYPES = ("bigint", "int", "smallint", "tinyint")
 
 
 def _mix64_vec(ids):
-    """BIJECTIVE 64-bit priority key for integer ids (r12): the full
-    splitmix64 finalizer (no 63-bit mask — every xorshift/odd-multiply
-    step is invertible mod 2^64), sign-bit-flipped so SIGNED int64
-    ordering equals unsigned-mix ordering. Bijective ⇒ no ties ⇒ the
-    key alone is a total order AND uniquely determines the id — which
-    is what lets the cross-partition root resolution be a plain
-    codegen ``F.min(long)`` instead of a ``min(struct)`` object
-    aggregate, with the root id recovered by :func:`_unmix64_vec`."""
-    import numpy as np
-
+    """BIJECTIVE 64-bit priority key for integer ids: the full splitmix64
+    finalizer (no 63-bit mask — every xorshift/odd-multiply step is
+    invertible mod 2^64), sign-bit-flipped so SIGNED int64 ordering
+    equals unsigned-mix ordering. Bijective ⇒ no ties ⇒ the key alone is
+    a total order AND uniquely determines the id — which is what lets the
+    cross-partition root resolution be a plain codegen ``F.min(long)``,
+    with the root id recovered by :func:`_unmix64_vec`."""
     z = ids.astype(np.int64, copy=False).view(np.uint64) + np.uint64(
         0x9E3779B97F4A7C15
     )
@@ -88,8 +67,6 @@ def _unmix64_vec(keys):
     inverses of the odd constants (0x96DE1B173F119089 and
     0x319642B2D24D8EC3 = pow(C, -1, 2**64)), subtract the golden
     increment."""
-    import numpy as np
-
     z = keys.view(np.uint64) ^ np.uint64(1 << 63)
     z = z ^ (z >> np.uint64(31)) ^ (z >> np.uint64(62))
     z = z * np.uint64(0x319642B2D24D8EC3)
@@ -100,15 +77,12 @@ def _unmix64_vec(keys):
     return z.view(np.int64)
 
 
-def _minrank_nonroot_rows(u, v):
-    """Vectorized in-partition fragment labeling (r12 — the loop-round
-    kernel behind VERDICT r11 #2): label every node of the edge list
-    ``(u, v)`` with its connected fragment's key-minimum member under
-    the bijective :func:`_mix64_vec` order and return the non-root rows
-    ``(node, rkey)`` — ``rkey`` is the ROOT's mix key, which both
-    orders the cross-partition resolution (plain codegen
-    ``F.min(long)``) and uniquely identifies the root
-    (:func:`_unmix64_vec` recovers the id). Exactness is pinned by
+def _fragment_roots(u, v):
+    """The union-find kernel: label every node of the edge list ``(u, v)``
+    with its connected fragment's key-minimum member under the bijective
+    :func:`_mix64_vec` order. Returns ``(ids, keys, root_idx)`` — the
+    distinct node ids, their mix keys, and per node the index into
+    ``ids`` of its root. Exactness is pinned by
     tests/test_graph.py::test_vectorized_kernel_matches_reference
     against an independent keyed union-find.
 
@@ -125,19 +99,14 @@ def _minrank_nonroot_rows(u, v):
     Terminates when the contracted list is empty; at the fixpoint r[i]
     is the min rank in i's component — the same root a union-find
     keyed by the same order converges to."""
-    import numpy as np
-    import pandas as pd
-
     ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-    iu = inv[: u.shape[0]]
-    iv = inv[u.shape[0]:]
     keys = _mix64_vec(ids)
     m = int(ids.size)
     order = np.argsort(keys)
-    rank = np.empty(m, dtype=np.int64)
-    rank[order] = np.arange(m, dtype=np.int64)
-    r = rank.copy()
-    eu, ev = iu.astype(np.int64, copy=False), iv.astype(np.int64, copy=False)
+    r = np.empty(m, dtype=np.int64)
+    r[order] = np.arange(m, dtype=np.int64)
+    eu = inv[: u.shape[0]].astype(np.int64, copy=False)
+    ev = inv[u.shape[0]:].astype(np.int64, copy=False)
     while eu.size:
         np.minimum.at(r, eu, r[ev])
         np.minimum.at(r, ev, r[eu])
@@ -149,56 +118,97 @@ def _minrank_nonroot_rows(u, v):
         ea, eb = order[r[eu]], order[r[ev]]
         live = ea != eb
         if live.any():
-            # m ≤ 2·edges ≤ ~8M per partition, so ea·m + eb < 2^63
+            # ea·m + eb < m² < 2^63 for any m below 3e9 nodes
             key = np.unique(ea[live] * m + eb[live])
             eu, ev = key // m, key % m
         else:
             eu = ev = np.empty(0, dtype=np.int64)
-    root_idx = order[r]
-    nonroot = root_idx != np.arange(m, dtype=np.int64)
-    return pd.DataFrame({
-        "node": ids[nonroot],
-        "rkey": keys[root_idx[nonroot]],
-    })
+    return ids, keys, order[r]
 
 
-def _dict_uf_nonroot_rows(us, vs):
-    """Dict union-find fallback for NON-INTEGER ids (md5 priorities
-    aren't vectorizable): same output contract as
-    :func:`_minrank_nonroot_rows`."""
+def _minrank_nonroot_rows(u, v):
+    """Loop-round rows: ``(node, rkey)`` for every non-root node, where
+    ``rkey`` is its ROOT's mix key — it both orders the cross-partition
+    resolution and identifies the root."""
+    ids, keys, root_idx = _fragment_roots(u, v)
+    nonroot = root_idx != np.arange(ids.size)
+    return ids[nonroot], keys[root_idx[nonroot]]
+
+
+def _component_min(u, v):
+    """Driver labels: every node of the edge list and the min id of its
+    component."""
+    ids, _, root_idx = _fragment_roots(u, v)
+    comp = ids.copy()
+    np.minimum.at(comp, root_idx, ids)
+    return ids, comp[root_idx]
+
+
+def _partition_edges(batches):
+    """One partition's Arrow batches as two numpy id arrays, or None when
+    it is empty. ``to_numpy`` on an Arrow int column is a buffer view, not
+    a per-row conversion (iterating pandas batches cost ~27 s/worker vs
+    ~2 s on the scattered-10M probe)."""
+    us, vs = [], []
+    for rb in batches:
+        if rb.num_rows:
+            us.append(rb.column(0).to_numpy(zero_copy_only=False))
+            vs.append(rb.column(1).to_numpy(zero_copy_only=False))
+    if not us:
+        return None
+    return np.concatenate(us), np.concatenate(vs)
+
+
+def _round0_rows(batches):
+    """``(node, fragment root)`` for every node of the partition, roots
+    included as identity rows."""
+    import pyarrow as pa
+
+    uv = _partition_edges(batches)
+    if uv is not None:
+        ids, _, root_idx = _fragment_roots(*uv)
+        yield pa.record_batch(
+            [pa.array(ids), pa.array(ids[root_idx])], names=["node", "root"]
+        )
+
+
+def _loop_rows(batches):
+    """:func:`_minrank_nonroot_rows` over one hash partition of the loop's
+    symmetric edge list."""
+    import pyarrow as pa
+
+    uv = _partition_edges(batches)
+    if uv is not None:
+        node, rkey = _minrank_nonroot_rows(*uv)
+        yield pa.record_batch(
+            [pa.array(node), pa.array(rkey)], names=["node", "rkey"]
+        )
+
+
+def _unmix_rows(batches):
+    import pyarrow as pa
+
+    for rb in batches:
+        if rb.num_rows:
+            keys = rb.column(1).to_numpy(zero_copy_only=False)
+            yield pa.record_batch(
+                [rb.column(0), pa.array(_unmix64_vec(keys))],
+                names=["node", "root"],
+            )
+
+
+def _driver_labels(
+    edges: DataFrame, id_type: str, node: str = "id", label: str = "comp"
+) -> DataFrame:
+    """Collect a bounded edge list as Arrow and label it on the driver:
+    one ``(node, label)`` row per node, ``label`` its component min id."""
     import pandas as pd
 
-    parent: dict = {}
-    prio: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    def key(x):
-        p = prio.get(x)
-        if p is None:
-            p = prio[x] = _prio(x)
-        return (p, x)
-
-    for su, sv in zip(us, vs):
-        for u, v in zip(su.tolist(), sv.tolist()):
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru == rv:
-                continue
-            if key(rv) < key(ru):
-                ru, rv = rv, ru
-            parent[rv] = ru
-    nodes = [n for n in parent if find(n) != n]
-    roots = [parent[n] for n in nodes]
-    return pd.DataFrame(
-        {"node": nodes, "root": roots, "root_prio": [key(r)[0] for r in roots]}
+    t = edges.toArrow()
+    ids, comp = _component_min(t.column(0).to_numpy(), t.column(1).to_numpy())
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({node: ids, label: comp}),
+        f"{node} {id_type}, {label} {id_type}",
     )
 
 
@@ -206,239 +216,79 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iters: int = 15,
-    driver_max_edges: int = 500_000,
-    target_edges_per_partition: int = 2_000_000,
-    prepass_flush_nodes: int = 8_000_000,
     prepass: bool = True,
     on_round=None,
-    on_stage=None,
 ) -> DataFrame:
     """Label every node reachable through ``edges`` with the min node id
     of its component. Output: ``id, comp`` — one row per node that
-    appears in at least one edge (callers union in isolated nodes).
+    appears in at least one edge (callers union in isolated nodes). Ids
+    must be integral; any other id type raises ``TypeError``.
 
-    Graphs whose RAW symmetric row count (2× the input rows, duplicate
-    pairs included — NOT the distinct edge count) fits
-    ``driver_max_edges`` short-circuit straight to a DRIVER union-find:
-    at local job-floor economics a multi-round distributed loop costs
-    seconds for work one core does in milliseconds (measured 11 s →
-    0.2 s for 1.2k edges at sf0.1), and a near-dup pair list is ~always
-    orders smaller than its corpus. The threshold bounds the collect
-    (~tens of MB). A dup-heavy list that misses the raw-count check is
-    not penalized much: the zero-shuffle round-0 pre-contraction below
-    collapses duplicates and local structure, and the loop entry
-    re-checks the threshold against the contracted conflict-edge list.
+    An edge list whose raw symmetric row count (2× the input rows,
+    duplicate pairs included) fits ``DRIVER_MAX_EDGES`` is labelled on
+    the driver; a near-dup pair list is almost always orders smaller than
+    its corpus. Larger lists take the distributed path:
 
-    The distributed path (``driver_max_edges=0`` forces it; it also
-    runs automatically above the threshold) is the 100 TB contract —
-    iterative CONTRACTION, see the module docstring: per round, ONE
-    shuffle of the edge list by source + an in-partition union-find
-    (mapInPandas, pure memory ops), a resolve of the emitted mapping,
-    and a relabel join. Fragment roots are chosen by HASH PRIORITY
-    (splitmix64 of the id; (prio, id)-min member wins), not by min id:
-    min-id contraction has an adversarial fixed point on monotone-id
-    paths — every node's best cross-partition candidate is always two
-    ids back, so a long consecutive-id chain relabels to ITSELF shifted
-    by 2 and sheds O(1) edges per round (measured: a 1M-node probe of
-    10k-long consecutive-id chains stalled at ~400 edges/round). Random
-    priorities break the monotone structure, restoring expected
-    geometric shrink on ANY id layout (the random-mate move of the
-    MapReduce-CC literature). The mapping strictly decreases
-    (prio, id), so it stays acyclic and progress is guaranteed. Once the
-    survivor list fits the driver threshold a driver union-find
-    finishes; composition of the per-round label tables recovers every
-    original node's final (hash-chosen) root, and one final node-sized
-    ``groupBy(root).min(id)`` + join normalizes labels to the component
-    MIN ID — so the result is identical on either path and independent
-    of partitioning, which is what keeps the operator
-    DuckDB-oracle-checkable (recursive-CTE transitive closure).
+    - **Round 0** (``prepass=True``): the kernel runs over each
+      UNSHUFFLED input partition and emits ``(node, fragment root)`` for
+      every node. ONE ``groupBy(node)`` resolves ``m0`` (node → min local
+      root) and, from ``collect_set(root)``, the CONFLICT edges linking a
+      node's other local roots to it. Components of the conflict graph
+      composed with m0 are exactly the input's components (two-level
+      union-find), so only the conflict list — sized by cross-partition
+      structure, not the input — enters the loop. This pays on dup-heavy
+      or locality-rich pair lists (banded LSH output; the 100M chain
+      probe went 747 → 373 s and its spill 37.6 GB → 0) but folds nothing
+      on a distinct scattered graph (+53% on a 1M-node/3M-edge random
+      graph), so ``similarity.knn_graph_components`` passes
+      ``prepass=False`` and the loop starts on the symmetric raw list.
+      Results are identical either way (parity pytest).
+    - **Contraction loop**: per round, ONE shuffle of the edge list by
+      source to ``n_edges / TARGET_EDGES_PER_PARTITION`` partitions, the
+      kernel emitting ``(node, root key)`` for non-roots, a codegen
+      ``F.min(long)`` resolving each node's root across partitions
+      (:func:`_unmix64_vec` recovers the id), and a relabel join. Roots
+      are chosen by hash priority, not min id: min-id contraction has a
+      fixed point on monotone-id chains (a consecutive chain relabels to
+      itself shifted by 2; a 1M-node probe of 10k-long chains stalled at
+      ~400 edges/round). The mapping strictly decreases the key, so it
+      stays acyclic. Each round's edge list persists MEMORY_AND_DISK and
+      the previous one unpersists. The loop stops once the list fits
+      ``DRIVER_MAX_EDGES`` and the driver labels the survivors; a list
+      still too large to collect after ``MAX_ROUNDS`` raises.
+    - **Labels**: the per-round maps compose BACKWARD from the last round
+      (geometrically shrinking joins), ONE node-sized join applies m0,
+      and one ``groupBy(root).min(id)`` normalizes the hash-chosen roots
+      to the component min id.
 
-    ``prepass`` (r10): round 0 below is ON by default — it pays for
-    itself whenever the input pair list has duplicate pairs (multi-band
-    LSH emitters), locality (banded near-dup groups, id-clustered
-    chains), or is large enough that the loop's first full-width
-    exchange would spill (the instrumented 100M probe: spill 37.6 GB →
-    zero). On a DISTINCT, scattered sparse graph it folds almost
-    nothing and its extra pass is pure overhead (measured +53% on a
-    1M-node/3M-edge random graph: conflict list 5.58M sym rows vs 6.0M
-    raw) — consumers that construct such lists (mutual-kNN:
-    similarity.knn_graph_components) pass ``prepass=False`` to take the
-    r9 shape, whose results are IDENTICAL (parity pytest). Both paths
-    share the loop, label composition, and min-id normalization.
-
-    r10 round-0 local pre-contraction (the remaining r9 lever — results
-    unchanged): the instrumented 100M probe showed 345 s of 747 s wall
-    and ALL the spill (30 GB mem + 7.6 GB disk) landing in round 1,
-    before the edge list ever shrank — the full raw list was exchanged
-    once for the repartition and twice more for the relabel joins. The
-    pre-pass removes all three: an in-partition union-find over the
-    UNSHUFFLED directed list (``mapInPandas``, memory-bounded by
-    ``prepass_flush_nodes`` — the state flushes as extra star rows and
-    resets, which only costs contraction quality, never correctness)
-    emits each partition's spanning stars ``(node, local_root)``
-    including identity rows for roots; ONE ``groupBy(node)`` over those
-    node-sized rows resolves ``m0`` (node → min local root) and, from
-    ``collect_set(root)``, the CONFLICT edges ``(other_root,
-    min_root)`` that encode every cross-partition identification. The
-    contraction loop then runs on the conflict list only. Correctness:
-    an original edge (u,v) in partition p gives both endpoints local
-    root r_p, so E1 links r_p to m0(u) and to m0(v) — components of the
-    conflict graph over root space, composed with m0, are exactly the
-    input's components (two-level union-find); no ordering discipline
-    is needed in round 0 because m0 is applied in ONE composition join,
-    never iterated. Self-loop-only nodes surface as identity rows, so
-    every node appearing in any edge still gets a label row.
-
-    r9 memory/wall shape (the 100M-probe lessons — results unchanged):
-
-    - **Backward-composed label maps.** The per-round node→root tables
-      compose from the LAST round backward (``g_i = m_i ∘ g_{i+1}`` on
-      ``dom(m_i) ∪ dom(g_{i+1})``), so label recovery is rounds−1 joins
-      of GEOMETRICALLY-SHRINKING maps plus ONE node-sized join — the r8
-      shape maintained a full |nodes|-row label table through every
-      round (K node-sized join jobs, each leaving a node-sized
-      checkpoint in the heap; at 100M nodes that final chain was both
-      the wall tail and most of the 48.5 GB heap floor).
-    - **Adaptive partition width.** The per-round union-find shuffle
-      repartitions to ``n_edges / target_edges_per_partition``
-      partitions (floored at defaultParallelism, capped at 1024): the
-      edge list shrinks geometrically, so any fixed round-1 width is
-      wrong by round 5 — and a too-wide round 1 puts multi-GB
-      neighbor-dicts in each Python worker.
-    - **Round eviction.** Each round's edge list persists
-      (MEMORY_AND_DISK) and the PREVIOUS round unpersists as soon as
-      the new round is materialized — only the current edge list, the
-      geometric mapping tables and ``sym`` stay resident, instead of
-      every round ever computed. (Block loss would recompute through
-      the evicted round — not a local-mode event, and on a cluster the
-      standard persist/recompute trade.)
-    - ``on_round`` (instrumentation only): called after each round with
-      ``{"round", "n_edges", "width", "sec"}`` — scale probes attach
-      ``obs.stage_totals`` shuffle/spill deltas per round; never affects
-      results.
-    - ``on_stage`` (instrumentation only, r12 — VERDICT r11 #2): when
-      set, each loop round's two halves are FORCED separately (an extra
-      ``m.count()`` materializes the node→root map before the relabel
-      join plan references it) and the hook is called with
-      ``{"round", "stage": "map"|"relabel", "sec", "n_rows"}`` so a
-      probe can attribute the round wall between (a) the edge shuffle +
-      in-partition union-find + root-resolution groupBy and (b) the
-      relabel joins + distinct. The extra count re-reads a checkpointed
-      map (no recompute); results are unchanged. Leave ``None`` in
-      production — the forced boundary costs one node-map traversal per
-      round.
+    ``on_round`` (instrumentation only) is called after round 0 and after
+    each loop round with ``{"round", "n_edges", "width", "sec"}``; scale
+    probes attach shuffle/spill deltas per round.
     """
     import time
 
-    import pandas as pd
     from pyspark import StorageLevel
 
-    # checkpoint the directed list BEFORE symmetrizing: the union
-    # references ``edges`` twice, and upstream pair generation (banded
-    # joins, GEMM stages) is usually the expensive part — one barrier
-    # halves it
+    # checkpoint the directed list: the plan below reads it more than
+    # once, and upstream pair generation (banded joins, GEMM stages) is
+    # usually the expensive part. Round 0 needs no .distinct() and no
+    # symmetrized copy: the kernel is duplicate- and direction-insensitive.
     base = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=False)
-    # NO .distinct() and NO symmetrized copy of the raw list (r9/r10):
-    # the in-partition union-find is duplicate- and direction-
-    # insensitive, so round 0 runs straight over the directed input —
-    # the initial distinct was a full symmetric-edge-list exchange
-    # (15+ GB shuffled AND spilled at 100M) bought for nothing, and the
-    # r10 pre-pass removed the need to ever materialize 2x raw rows.
     id_type = dict(base.dtypes)["u"]
-
-    def _driver_uf(edge_df) -> dict:
-        """Union-find over a collected edge list → {node: comp_min}."""
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        # collect(), not toLocalIterator (r12): the caller only enters
-        # this path under the driver_max_edges bound (≤ tens of MB), and
-        # toLocalIterator runs ONE SEQUENTIAL JOB PER PARTITION — ~8
-        # job floors of pure scheduling at local partition counts where
-        # one bounded collect job fetches everything (guide §1: job
-        # floors ARE the cost model at bench SF; the memory bound is
-        # unchanged because the iterator pinned whole partitions anyway).
-        for r in edge_df.collect():
-            u, v = r[0], r[1]
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[rv] = ru
-        comp_min: dict = {}
-        for node in parent:
-            root = find(node)
-            cur = comp_min.get(root)
-            if cur is None or node < cur:
-                comp_min[root] = node
-        return {node: comp_min[find(node)] for node in parent}
-
-    spark = base.sparkSession
-    n_raw = base.count()
-    # same threshold semantics as the historical symmetric-row count
-    # (sym held exactly 2x the raw rows); _driver_uf is undirected so
-    # collecting the directed list halves the transfer
-    if driver_max_edges > 0 and 2 * n_raw <= driver_max_edges:
-        comp = _driver_uf(base)
-        return spark.createDataFrame(
-            list(comp.items()), f"id {id_type}, comp {id_type}"
+    if id_type not in _INT_TYPES:
+        raise TypeError(
+            f"connected_components needs integral ids, got {src}/{dst}: {id_type}"
         )
 
-    # ---- round 0: zero-shuffle local pre-contraction (see docstring) ----
+    n_raw = base.count()
+    if 0 < DRIVER_MAX_EDGES and 2 * n_raw <= DRIVER_MAX_EDGES:
+        return _driver_labels(base, id_type)
+
     t0 = time.perf_counter()
-
-    def _local_star(batches):
-        """Plain in-partition union-find over the raw directed edges;
-        emits (node, local_root) for EVERY node seen, roots included as
-        identity rows. No priority discipline needed here — round 0 is
-        a single pass, never iterated, and its output is resolved by a
-        global min, so min-id union suffices. State flushes whenever the
-        dict exceeds ``prepass_flush_nodes`` (extra star rows, same
-        connectivity — a union of forests is still a forest cover)."""
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        def flush():
-            if parent:
-                nodes = list(parent)
-                yield pd.DataFrame(
-                    {"node": nodes, "root": [find(n) for n in nodes]}
-                )
-                parent.clear()
-
-        for pdf in batches:
-            for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru == rv:
-                    continue
-                if rv < ru:
-                    ru, rv = rv, ru
-                parent[rv] = ru
-            if len(parent) > prepass_flush_nodes:
-                yield from flush()
-        yield from flush()
-
     if prepass:
-        raw0 = base.mapInPandas(_local_star, f"node {id_type}, root {id_type}")
+        raw0 = base.mapInArrow(_round0_rows, f"node {id_type}, root {id_type}")
         # ONE node-sized exchange resolves the round-0 map AND derives the
         # conflict edges; dom(m0) is every node that appears in any edge
         res0 = (
@@ -457,14 +307,10 @@ def connected_components(
             e1.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).localCheckpoint(eager=False)
     else:
-        # prepass=False: the r9 shape — loop straight on the symmetric
-        # raw list; m0 degrades to the identity map over the node set,
-        # so label recovery below is unchanged. m0 is built AFTER the
-        # loop (r12): it is only read by the label composition, and a
-        # lazily-checkpointed DataFrame's materialization can overlap
-        # later jobs — created here, its node-sized distinct over the
-        # full symmetric list was free to grind concurrently with (and
-        # throttle) round 1's kernel stage.
+        # loop straight on the symmetric raw list; m0 is the identity map
+        # over the node set, built AFTER the loop — a lazily-checkpointed
+        # frame created here would materialize concurrently with (and
+        # throttle) round 1's kernel stage
         sym = base.union(
             base.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).localCheckpoint(eager=False)
@@ -477,122 +323,32 @@ def connected_components(
             "sec": round(time.perf_counter() - t0, 3),
         })
 
-    # In-partition fragment labeling, two statically-chosen kernels
-    # (r12 — VERDICT r11 #2). INTEGER ids: the vectorized min-key
-    # kernel emits (node, rkey) where rkey is the root's BIJECTIVE
-    # _mix64_vec key — the instrumented scattered-10M probe showed the
-    # round-1 map half dominated not by the Python union-find alone but
-    # by the 3-column shuffle + the non-codegen min(struct) OBJECT
-    # aggregate (~700 executor-core-seconds of pure JVM CPU in the
-    # final agg); a bijective key turns the resolution into a plain
-    # codegen F.min(long) with the root id recovered by one zero-shuffle
-    # Arrow pass. NON-integer ids (md5 priorities aren't invertible):
-    # the dict union-find emitting (node, root, root_prio) with the
-    # min(struct) resolution, as before.
-    int_ids = id_type in ("bigint", "int", "smallint", "tinyint")
-
-    def _local_uf_int(batches):
-        """Arrow-native feed (r12): the in-worker debug timing on the
-        scattered-10M probe measured ~27 s/worker spent merely ITERATING
-        188 pandas batches (mapInPandas materializes a DataFrame per
-        batch) vs ~2 s collecting Arrow column buffers directly —
-        ``to_numpy(zero_copy_only=False)`` on an Arrow int64 array is a
-        buffer view (plus a null-check), not a per-row conversion."""
-        import numpy as np
-        import pyarrow as pa
-
-        us, vs = [], []
-        for rb in batches:
-            if rb.num_rows:
-                us.append(rb.column(0).to_numpy(zero_copy_only=False))
-                vs.append(rb.column(1).to_numpy(zero_copy_only=False))
-        if not us:
-            return
-        out = _minrank_nonroot_rows(np.concatenate(us), np.concatenate(vs))
-        yield pa.record_batch(
-            [
-                pa.array(out["node"].to_numpy()),
-                pa.array(out["rkey"].to_numpy()),
-            ],
-            names=["node", "rkey"],
-        )
-
-    def _local_uf_obj(batches):
-        us, vs = [], []
-        for pdf in batches:
-            if len(pdf):
-                us.append(pdf["u"])
-                vs.append(pdf["v"])
-        if not us:
-            return
-        yield _dict_uf_nonroot_rows(us, vs)
-
-    def _unmix_rows(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            keys = rb.column(1).to_numpy(zero_copy_only=False)
-            yield pa.record_batch(
-                [rb.column(0), pa.array(_unmix64_vec(keys))],
-                names=["node", "root"],
-            )
-
     # per-round node->root mapping tables; composed BACKWARD after the
-    # loop (see docstring) instead of maintaining a node-sized label
-    # table through every round
+    # loop instead of maintaining a node-sized label table through every
+    # round
     maps: list[DataFrame] = []
-    min_width = spark.sparkContext.defaultParallelism
+    min_width = base.sparkSession.sparkContext.defaultParallelism
     cur = sym
     prev_persisted = None
     round_no = 0
-    # round 0 usually leaves a conflict list that already fits the
-    # driver (or is empty); the loop only runs when it does not
-    run_loop = n_edges > 0 and not (
-        0 < driver_max_edges and n_edges <= driver_max_edges
-    )
-    for _ in range(max_iters if run_loop else 0):
-        t0 = t_round = time.perf_counter()
+    while n_edges > DRIVER_MAX_EDGES and round_no < MAX_ROUNDS:
+        t0 = time.perf_counter()
         # one shuffle: all of a node's edges land together (sym holds
         # both directions, so partitioning by u co-locates full
-        # neighborhoods -> whole dense components contract in one pass);
-        # width tracks the CURRENT edge count, not round 1's
-        width = max(min_width, min(1024, -(-n_edges // target_edges_per_partition)))
-        if int_ids:
-            m = (
-                cur.repartition(width, "u")
-                .mapInArrow(_local_uf_int, f"node {id_type}, rkey long")
-                .groupBy("node")
-                .agg(F.min("rkey").alias("rkey"))
-                .mapInArrow(_unmix_rows, f"node {id_type}, root long")
-            )
-            if id_type != "bigint":
-                m = m.select(
-                    "node", F.col("root").cast(id_type).alias("root")
-                )
-            m = m.localCheckpoint(eager=False)
-        else:
-            m = (
-                cur.repartition(width, "u")
-                .mapInPandas(
-                    _local_uf_obj,
-                    f"node {id_type}, root {id_type}, root_prio long",
-                )
-                .groupBy("node")
-                .agg(
-                    F.min(F.struct("root_prio", "root"))["root"].alias("root")
-                )
-                .localCheckpoint(eager=False)
-            )
-        if on_stage is not None:
-            n_map_rows = m.count()  # forces shuffle + UF + groupBy
-            on_stage({
-                "round": round_no + 1, "stage": "map",
-                "sec": round(time.perf_counter() - t0, 3),
-                "n_rows": n_map_rows,
-            })
-            t0 = time.perf_counter()
+        # neighborhoods -> whole dense components contract in one pass)
+        width = max(
+            min_width, min(1024, -(-n_edges // TARGET_EDGES_PER_PARTITION))
+        )
+        m = (
+            cur.repartition(width, "u")
+            .mapInArrow(_loop_rows, f"node {id_type}, rkey long")
+            .groupBy("node")
+            .agg(F.min("rkey").alias("rkey"))
+            .mapInArrow(_unmix_rows, f"node {id_type}, root long")
+        )
+        if id_type != "bigint":
+            m = m.select("node", F.col("root").cast(id_type).alias("root"))
+        m = m.localCheckpoint(eager=False)
         maps.append(m)
         ru = m.withColumnRenamed("node", "u").withColumnRenamed("root", "ru")
         rv = m.select(F.col("node").alias("v"), F.col("root").alias("rv"))
@@ -608,12 +364,6 @@ def connected_components(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_edges = nxt.count()  # materializes nxt AND this round's m
-        if on_stage is not None:
-            on_stage({
-                "round": round_no + 1, "stage": "relabel",
-                "sec": round(time.perf_counter() - t0, 3),
-                "n_rows": n_edges,
-            })
         if prev_persisted is not None:
             prev_persisted.unpersist()
         prev_persisted = cur = nxt
@@ -621,33 +371,25 @@ def connected_components(
         if on_round is not None:
             on_round({
                 "round": round_no, "n_edges": n_edges, "width": width,
-                "sec": round(time.perf_counter() - t_round, 3),
+                "sec": round(time.perf_counter() - t0, 3),
             })
-        if n_edges == 0 or (0 < driver_max_edges and n_edges <= driver_max_edges):
-            break
     fin = None
     if n_edges:
-        # guard the post-loop collect: a non-converged run (max_iters
-        # exhausted, or driver_max_edges=0 forcing the loop dry on a
-        # graph it could not empty) must fail loudly, not OOM the driver
-        collect_cap = max(driver_max_edges, 5_000_000)
+        # a non-converged run must fail loudly, not OOM the driver
+        collect_cap = max(DRIVER_MAX_EDGES, 5_000_000)
         if n_edges > collect_cap:
             raise RuntimeError(
                 f"connected_components did not converge: {n_edges} edges"
-                f" remain after {round_no} rounds (max_iters={max_iters}),"
+                f" remain after {round_no} rounds (MAX_ROUNDS={MAX_ROUNDS}),"
                 f" above the driver collect bound {collect_cap}; raise"
-                " max_iters or driver_max_edges"
+                " graph.MAX_ROUNDS or graph.DRIVER_MAX_EDGES"
             )
-        comp = _driver_uf(cur)
-        fin = spark.createDataFrame(
-            list(comp.items()), f"cur {id_type}, fcomp {id_type}"
-        )
+        fin = _driver_labels(cur, id_type, "cur", "fcomp")
     if prev_persisted is not None:
         # the survivor edge list is collected (or empty); nothing reads it
         # again — the labels below derive from sym + maps + fin only
         prev_persisted.unpersist()
     if m0 is None:
-        # deferred prepass=False identity map (see the round-0 branch)
         m0 = (
             sym.select(F.col("u").alias("node"))
             .distinct()
@@ -674,9 +416,8 @@ def connected_components(
         rest = g.join(m.select("node"), "node", "left_anti")
         g = remapped.unionByName(rest).localCheckpoint(eager=False)
     # apply the round-0 map LAST. dom(m0) is exactly the node set
-    # (identity rows included), so labels come straight off m0 — the
-    # single node-sized composition join; no separate distinct-nodes
-    # extraction or left-coalesce pass. Loop-map domains are local
+    # (identity rows included), so labels come straight off m0 in the
+    # single node-sized composition join. Loop-map domains are local
     # roots, all of which appear in m0's node column, so no rest branch.
     if g is not None:
         labels = (

@@ -342,6 +342,48 @@ def simhash(
     return bit_sums.select("doc_id", fingerprint.alias("simhash"))
 
 
+def _pigeonhole_banded(
+    df: DataFrame, fp_col: str, max_hamming: int, bits: int, n_bands: int | None
+):
+    """Explode every row of ``df`` into one ``(band, bv)`` row per disjoint
+    bit band of its ``fp_col`` fingerprint. ``n_bands`` (default
+    ``max_hamming + 1``) bands over ``bits`` bits: by pigeonhole, two
+    fingerprints within ``max_hamming`` bits share at least one identical
+    band, so a ``(band, bv)`` equi-join loses no qualifying pair. Bit
+    extraction is unsigned shift + mask: ``floor(x / 2^k)`` goes through
+    doubles and drops low bits past 2^53, and full 64-bit fingerprints
+    (image aHash) use the sign bit. Returns ``(banded, widths, offsets)``."""
+    if not (1 <= bits <= 64):
+        raise ValueError(f"bits must be in [1, 64], got {bits}")
+    if n_bands is None:
+        n_bands = max_hamming + 1
+    if not (max_hamming < n_bands <= bits):
+        raise ValueError(
+            f"need max_hamming < n_bands <= bits for pigeonhole recall, "
+            f"got max_hamming={max_hamming}, n_bands={n_bands}, bits={bits}"
+        )
+    base, rem = divmod(bits, n_bands)
+    widths = [base + 1] * rem + [base] * (n_bands - rem)
+    offsets = [sum(widths[:i]) for i in range(n_bands)]
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.shiftrightunsigned(F.col(fp_col), offsets[i])
+                .bitwiseAND(F.lit((1 << widths[i]) - 1))
+                .alias("bv"),
+            )
+            for i in range(n_bands)
+        ]
+    )
+    cols = df.columns
+    banded = (
+        df.select(*cols, F.explode(bands).alias("bb"))
+        .select(*cols, "bb.band", "bb.bv")
+    )
+    return banded, widths, offsets
+
+
 def hamming_near_pairs(
     sims: DataFrame,
     value_col: str,
@@ -378,10 +420,6 @@ def hamming_near_pairs(
     same codegen stage and the plan's only exchanges are the band-key
     join shuffles themselves (8.1 -> 2.8 s at the 10x bench replica).
 
-    Bit extraction is unsigned shift + mask — ``floor(x / 2^k)`` goes
-    through doubles and silently drops low bits past 2^53, and full
-    64-bit fingerprints (image aHash) use the sign bit.
-
     **Skew guard** (``max_band_freq``): a band value shared by m rows is
     ONE join key carrying m² candidate comparisons — degenerate corpora
     (millions of empty/near-empty docs collapsing to the same fingerprint
@@ -400,39 +438,16 @@ def hamming_near_pairs(
     upstream (the simhash aggregation), persist it before calling with a
     cap — the frequency pass re-evaluates it once.
     """
-    if not (1 <= bits <= 64):
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    if not (max_hamming < n_bands <= bits):
-        raise ValueError(
-            f"need max_hamming < n_bands <= bits for pigeonhole recall, "
-            f"got max_hamming={max_hamming}, n_bands={n_bands}, bits={bits}"
-        )
-    base, rem = divmod(bits, n_bands)
-    widths = [base + 1] * rem + [base] * (n_bands - rem)
-    offsets = [sum(widths[:i]) for i in range(n_bands)]
+    banded, widths, offsets = _pigeonhole_banded(
+        sims.select(F.col(id_col).alias("doc_id"), F.col(value_col).alias("__fp")),
+        "__fp", max_hamming, bits, n_bands,
+    )
+    n_bands = len(widths)
 
     def _mask(i: int) -> int:
         m = ((1 << widths[i]) - 1) << offsets[i]
         return m - (1 << 64) if m >= (1 << 63) else m  # signed-long view
 
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("__fp"), offsets[i])
-                .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                .alias("bv"),
-            )
-            for i in range(n_bands)
-        ]
-    )
-    banded = (
-        sims.select(F.col(id_col).alias("doc_id"), F.col(value_col).alias("__fp"))
-        .select("doc_id", "__fp", F.explode(bands).alias("bb"))
-        .select("doc_id", "__fp", "bb.band", "bb.bv")
-    )
     hot_by_band: dict = {}
     if max_band_freq is not None:
         hot_by_band = _collect_hot_band_keys(
@@ -517,45 +532,13 @@ def hamming_match_existing(
 
     Output: one row per new doc that HAS a match —
     ``(doc_id, match_id, hamming)``."""
-    if not (1 <= bits <= 64):
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    if not (max_hamming < n_bands <= bits):
-        raise ValueError(
-            f"need max_hamming < n_bands <= bits for pigeonhole recall, "
-            f"got max_hamming={max_hamming}, n_bands={n_bands}, bits={bits}"
-        )
-    base, rem = divmod(bits, n_bands)
-    widths = [base + 1] * rem + [base] * (n_bands - rem)
-    offsets = [sum(widths[:i]) for i in range(n_bands)]
-
-    def _banded(df, idc, fpc):
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftrightunsigned(F.col(fpc), offsets[i])
-                    .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                    .alias("bv"),
-                )
-                for i in range(n_bands)
-            ]
-        )
-        return (
-            df.select(F.col(idc), F.col(fpc), F.explode(arr).alias("bb"))
-            .select(idc, fpc, "bb.band", "bb.bv")
-        )
-
-    e = _banded(
-        existing.select(
-            F.col(id_col).alias("e_id"), F.col(value_col).alias("e_fp")
-        ),
-        "e_id", "e_fp",
+    e, _, _ = _pigeonhole_banded(
+        existing.select(F.col(id_col).alias("e_id"), F.col(value_col).alias("e_fp")),
+        "e_fp", max_hamming, bits, n_bands,
     )
-    nn = _banded(
+    nn, _, _ = _pigeonhole_banded(
         new.select(F.col(id_col).alias("doc_id"), F.col(value_col).alias("n_fp")),
-        "doc_id", "n_fp",
+        "n_fp", max_hamming, bits, n_bands,
     )
     ham = F.bit_count(F.col("e_fp").bitwiseXOR(F.col("n_fp")))
     return (

@@ -935,16 +935,8 @@ def cc_main() -> None:
     store, read with the UI off), so the super-linear-wall question (spill vs plan re-materialization) is
     answered with numbers instead of an asserted analysis. Timing span
     matches the r8 probe (operator construction through label force), so
-    walls are comparable round over round.
-
-    ``--flush-nodes`` (default 8M, the operator default) sweeps the
-    round-0 pre-contraction's per-partition dict bound (VERDICT r10 #5:
-    round-0 heap peaked at 55.4/64 GB at 100M — the flush bounds it,
-    but the default was never sensitivity-swept; a skewed partition
-    would flush often and silently degrade the fold, so the sweep
-    records wall + conflict-edge count + heap per threshold)."""
+    walls are comparable round over round."""
     total_rows = _arg("--rows", 10_000_000)
-    flush_nodes = _arg("--flush-nodes", 8_000_000)
     # 64g, NOT 100g: the per-round union-find runs in 32 PYTHON workers
     # whose dicts are off-heap from the JVM's point of view (~1 GB each
     # at the 2M-edge target width) — a 100g JVM + 32 workers exceeds the
@@ -971,10 +963,7 @@ def cc_main() -> None:
         rounds.append(info)
 
     t0 = time.perf_counter()
-    df = connected_components(
-        cc_edges, max_iters=30, prepass_flush_nodes=flush_nodes,
-        on_round=on_round,
-    )
+    df = connected_components(cc_edges, on_round=on_round)
     obs.force(df)
     wall = round(time.perf_counter() - t0, 2)
     label_phase = gb(obs.stage_totals(spark), since=snap["prev"])
@@ -982,7 +971,6 @@ def cc_main() -> None:
     print(json.dumps({
         "mode": "cc", "stage": f"contraction_cc_{total_rows // 1_000_000}m_chains",
         "sec": wall, "n_nodes": n_cc, "chain_len": chain,
-        "prepass_flush_nodes": flush_nodes,
         "mislabeled": mislabeled,
         "rows_per_sec": int(n_cc / wall) if wall else None,
         **heap_gb(spark),
@@ -997,7 +985,7 @@ def cc_scattered_main() -> None:
     random graph — ``--rows`` nodes (default 10M) × ``--edges-per-node``
     (default 3) hash-random edges, near-one-giant-component — through
     the FULL distributed contraction loop (``prepass=False``,
-    ``driver_max_edges=0`` so neither the round-0 fold nor the driver
+    ``graph.DRIVER_MAX_EDGES = 0`` so neither the round-0 fold nor the driver
     short-circuit can hide the multi-round regime), with per-round
     edge counts and shuffle/spill deltas. This is the regime the 100M
     chain probe cannot see: chains collapse in round 0; a scattered
@@ -1015,42 +1003,9 @@ def cc_scattered_main() -> None:
         "SPARK_DRIVER_MEMORY", "64g" if total_rows > 2_000_000 else "32g"
     )
     spark = get_spark("bfdl-cc-scattered")
-    from binance_futures_data_lake_spark.operators.graph import (
-        connected_components,
-    )
+    from binance_futures_data_lake_spark.operators import graph
 
-    # --stage-detail (VERDICT r11 #2): attribute each loop round's wall
-    # between its two halves (map = edge shuffle + in-partition UF +
-    # root-resolution groupBy; relabel = the two label joins + distinct)
-    # and name the dominant SPARK stages inside each half from
-    # obs.stage_totals — executor run time separates Python-worker compute
-    # from exchange/scheduling cost, which the round wall alone can't see.
-    stage_detail = "--stage-detail" in sys.argv
-    seen_stage_ids: set = set()
-    stage_rows: list[dict] = []
-
-    def _new_stage_detail() -> list[dict]:
-        out = []
-        for r in obs.stage_totals(spark)["stage_rows"]:
-            if (r["stage_id"], r["attempt_id"]) in seen_stage_ids:
-                continue
-            seen_stage_ids.add((r["stage_id"], r["attempt_id"]))
-            out.append({
-                "stage_id": r["stage_id"],
-                "name": r["name"],
-                "num_tasks": r["num_tasks"],
-                "executor_run_sec": round(r["executor_run_ms"] / 1e3, 1),
-                "shuffle_read_gb": round(r["shuffle_read_bytes"] / 2**30, 3),
-                "shuffle_write_gb": round(r["shuffle_write_bytes"] / 2**30, 3),
-            })
-        out.sort(key=lambda r: -r["executor_run_sec"])
-        return out
-
-    def on_stage(info: dict) -> None:
-        info["spark_stages_top"] = _new_stage_detail()[:6]
-        stage_rows.append(info)
-        print(json.dumps(info), file=sys.stderr)
-
+    graph.DRIVER_MAX_EDGES = 0
     n = total_rows
     edges = (
         spark.range(n * epn)
@@ -1075,9 +1030,8 @@ def cc_scattered_main() -> None:
         print(json.dumps(info), file=sys.stderr)
 
     t0 = time.perf_counter()
-    df = connected_components(
-        edges, max_iters=30, driver_max_edges=0, prepass=False,
-        on_round=on_round, on_stage=on_stage if stage_detail else None,
+    df = graph.connected_components(
+        edges, prepass=False, on_round=on_round
     ).cache()
     obs.force(df)
     wall = round(time.perf_counter() - t0, 2)
@@ -1133,7 +1087,6 @@ def cc_scattered_main() -> None:
         "truth_replay_sec": truth_sec,
         "heap_max_gb": heap_gb(spark)["heap_max_gb"],
         "rounds": rounds,
-        **({"stages": stage_rows} if stage_detail else {}),
     }))
     spark.stop()
 
@@ -1250,7 +1203,7 @@ def ambient_main() -> None:
         spawned_before = spawns["n"]
         cpu_before = cpu_microbench()
         t0 = time.perf_counter()
-        df = connected_components(cc_edges, max_iters=30)
+        df = connected_components(cc_edges)
         obs.force(df)
         wall = round(time.perf_counter() - t0, 2)
         mislabeled = chain_mislabels(df, chain)
@@ -1976,7 +1929,7 @@ def main() -> None:
 
     # 10M-node contraction-CC probe (r8, VERDICT r7 #7): 10k-long chains
     # — the adversarial depth case for label propagation — with an edge
-    # list (~10M) far above driver_max_edges for the early rounds, so the
+    # list (~10M) far above DRIVER_MAX_EDGES for the early rounds, so the
     # DISTRIBUTED contraction loop does the work; the claim under test is
     # geometric edge shrink (wall grows ~linearly in |E|, not in chain
     # depth). Generation is in-plan; correctness is exact (every node's
@@ -1991,7 +1944,7 @@ def main() -> None:
     # eager loop inside the operator — time the build, not just the force
     cc = stage(
         "contraction_cc_10m_chains",
-        lambda: connected_components(cc_edges, max_iters=30),
+        lambda: connected_components(cc_edges),
     )
     mislabeled = chain_mislabels(cc, chain)
     stages["contraction_cc_10m_chains"].update(

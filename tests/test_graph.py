@@ -7,6 +7,7 @@ step a real dedup pipeline needs on top; see textdedup.py docstring)."""
 import pytest
 from pyspark.sql import functions as F
 
+from binance_futures_data_lake_spark.operators import graph
 from binance_futures_data_lake_spark.operators.graph import (
     connected_components,
     dedup_clusters,
@@ -50,18 +51,28 @@ def test_cc_star_and_cycle(spark):
     assert lab == {10: 10, 11: 10, 12: 10, 13: 10, 20: 20, 21: 20, 22: 20}
 
 
-def test_dedup_clusters_with_singletons(spark):
+def test_dedup_clusters_with_singletons(spark, monkeypatch):
+    """Pairs → clusters with singletons, and an empty pair list → all
+    singletons, on the driver path and on the distributed path."""
     docs = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
-    out = dedup_clusters(docs, _edges(spark, [(1, 2), (2, 3), (5, 6)]))
-    rows = {r.doc_id: r for r in out.collect()}
-    assert {d: r.cluster_id for d, r in rows.items()} == {
-        1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7,
-    }
-    assert {d: r.cluster_size for d, r in rows.items()} == {
-        1: 3, 2: 3, 3: 3, 4: 1, 5: 2, 6: 2, 7: 1,
-    }
-    canon = {d for d, r in rows.items() if r.is_canonical == 1}
-    assert canon == {1, 4, 5, 7}
+    cases = [
+        (
+            [(1, 2), (2, 3), (5, 6)],
+            {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7},
+            {1: 3, 2: 3, 3: 3, 4: 1, 5: 2, 6: 2, 7: 1},
+            {1, 4, 5, 7},
+        ),
+        ([], {d: d for d in range(1, 8)}, {d: 1 for d in range(1, 8)},
+         set(range(1, 8))),
+    ]
+    for dme in (graph.DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", dme)
+        for pairs, clusters, sizes, canon in cases:
+            out = dedup_clusters(docs, _edges(spark, pairs))
+            rows = {r.doc_id: r for r in out.collect()}
+            assert {d: r.cluster_id for d, r in rows.items()} == clusters
+            assert {d: r.cluster_size for d, r in rows.items()} == sizes
+            assert {d for d, r in rows.items() if r.is_canonical == 1} == canon
 
 
 def test_dedup_clusters_on_documents_transitive(spark):
@@ -122,11 +133,11 @@ def test_exact_jaccard_pairs_matches_arrayop_truth(spark):
         assert got[k] == pytest.approx(v, abs=1e-6)
 
 
-def test_cc_distributed_multi_round_composition(spark):
+def test_cc_distributed_multi_round_composition(spark, monkeypatch):
     """r9 rewrite contract: several contraction rounds + the BACKWARD
     label-map composition must reproduce the driver union-find exactly,
     on the adversarial monotone-consecutive-id chains, both with the
-    loop running dry (driver_max_edges=0) and with the mid-loop driver
+    loop running dry (DRIVER_MAX_EDGES=0) and with the mid-loop driver
     short-circuit finishing a partially-contracted survivor list."""
     edges = [
         (i, i + 1)
@@ -137,25 +148,24 @@ def test_cc_distributed_multi_round_composition(spark):
     truth = _labels(connected_components(df))
     assert truth[199] == 0 and truth[1199] == 1000 and truth[2199] == 2000
     # full distributed contraction (no short-circuit anywhere)
-    assert _labels(connected_components(df, driver_max_edges=0, max_iters=30)) == truth
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    assert _labels(connected_components(df)) == truth
     # several distributed rounds, then the driver finish on survivors
-    assert (
-        _labels(connected_components(df, driver_max_edges=50, max_iters=30))
-        == truth
-    )
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 50)
+    assert _labels(connected_components(df)) == truth
 
 
 def test_cc_distributed_string_ids(spark):
-    """Non-integral ids take the md5 priority path and the composed maps
-    must carry the string type end to end."""
+    """Ids must be integral (every caller passes int64 doc/vec ids): a
+    string id column is rejected up front rather than mislabelled."""
     df = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
     )
-    lab = _labels(connected_components(df, driver_max_edges=0))
-    assert lab == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    with pytest.raises(TypeError, match="integral ids"):
+        connected_components(df)
 
 
-def test_connected_components_prepass_parity(spark):
+def test_connected_components_prepass_parity(spark, monkeypatch):
     """prepass=True (round-0 local pre-contraction) and prepass=False
     (the r9 shape: loop straight on the symmetric raw list) must be
     bit-identical — same components, min-id labels, one row per node —
@@ -169,43 +179,53 @@ def test_connected_components_prepass_parity(spark):
         + [(300, 301)]
     )
     edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
-    from binance_futures_data_lake_spark.operators.graph import (
-        connected_components,
-    )
-
     for dme in (500_000, 0):  # driver short-circuit and distributed loop
-        on = {
-            r.id: r.comp
-            for r in connected_components(
-                edges, driver_max_edges=dme, prepass=True
-            ).collect()
-        }
-        off = {
-            r.id: r.comp
-            for r in connected_components(
-                edges, driver_max_edges=dme, prepass=False
-            ).collect()
-        }
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", dme)
+        on = _labels(connected_components(edges, prepass=True))
+        off = _labels(connected_components(edges, prepass=False))
         assert on == off
         assert on[40] == 0 and on[105] == 100 and on[201] == 200
         assert on[301] == 300
 
 
 def test_vectorized_kernel_matches_reference():
-    """r12 (VERDICT r11 #2): the integer-id loop-round kernel is
-    vectorized — min-rank propagation with edge contraction under the
-    bijective _mix64_vec order must emit EXACTLY the non-root row set
-    of an INDEPENDENT keyed union-find ((node, rkey of the fragment's
-    key-min member)) on every adversarial shape, including negative ids
-    and duplicate/self-loop rows; and _unmix64_vec must invert
-    _mix64_vec bit-exactly."""
+    """The one union-find kernel (min-rank propagation with edge
+    contraction under the bijective _mix64_vec order) must agree with an
+    INDEPENDENT keyed union-find on every adversarial shape, including
+    negative ids and duplicate/self-loop rows: the loop-round rows are
+    EXACTLY its non-root set ((node, rkey of the fragment's key-min
+    member)), and _fragment_roots gives every node its component's min
+    id. _unmix64_vec must invert _mix64_vec bit-exactly."""
     import numpy as np
 
     from binance_futures_data_lake_spark.operators.graph import (
+        _fragment_roots,
         _minrank_nonroot_rows,
         _mix64_vec,
         _unmix64_vec,
     )
+
+    def reference_mins(u, v):
+        ids = sorted(set(u.tolist()) | set(v.tolist()))
+        parent = {i: i for i in ids}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in zip(u.tolist(), v.tolist()):
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        return {n: find(n) for n in ids}
+
+    def kernel_mins(u, v):
+        ids, _, root_idx = _fragment_roots(u, v)
+        lo = {}
+        for n, r in zip(ids.tolist(), root_idx.tolist()):
+            lo[r] = min(lo.get(r, n), n)
+        return {n: lo[r] for n, r in zip(ids.tolist(), root_idx.tolist())}
 
     def reference_rows(u, v):
         ids = sorted(set(u.tolist()) | set(v.tolist()))
@@ -243,8 +263,9 @@ def test_vectorized_kernel_matches_reference():
     for name, (u, v) in cases.items():
         u = u.astype(np.int64)
         v = v.astype(np.int64)
-        got = set(map(tuple, _minrank_nonroot_rows(u, v).itertuples(index=False)))
-        assert got == reference_rows(u, v), name
+        node, rkey = _minrank_nonroot_rows(u, v)
+        assert set(zip(node.tolist(), rkey.tolist())) == reference_rows(u, v), name
+        assert kernel_mins(u, v) == reference_mins(u, v), name
     # mix/unmix bijection roundtrip incl. negatives and extremes
     xs = np.array([0, 1, -1, 2**62, -(2**62), 2**63 - 1, -(2**63),
                    12345, -98765], dtype=np.int64)

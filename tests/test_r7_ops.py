@@ -178,7 +178,8 @@ def test_pq_adc_recall_and_contract(spark):
         pq_residual_codebooks(emb, flat, n_sub=5)  # 64 % 5 != 0
 
 
-def test_connected_components_driver_vs_distributed_parity(spark):
+def test_connected_components_driver_vs_distributed_parity(spark, monkeypatch):
+    from binance_futures_data_lake_spark.operators import graph
     from binance_futures_data_lake_spark.operators.graph import connected_components
 
     # chain 1-2-3-4-5, triangle 10-11-12, pair (20, 21)
@@ -187,10 +188,8 @@ def test_connected_components_driver_vs_distributed_parity(spark):
         "doc_a long, doc_b long",
     )
     drv = {r.id: r.comp for r in connected_components(edges).collect()}
-    dist = {
-        r.id: r.comp
-        for r in connected_components(edges, driver_max_edges=0).collect()
-    }
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    dist = {r.id: r.comp for r in connected_components(edges).collect()}
     assert drv == dist
     assert drv[5] == 1 and drv[12] == 10 and drv[21] == 20
 
