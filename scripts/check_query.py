@@ -2,6 +2,8 @@
 
 Usage: python scripts/check_query.py [--sf DIR] name [name ...]
 
+Runs on local[$SPARK_GRAFT_CPUS] (default 8).
+
 The single-query loop of scripts/selfcheck.py — same comparison
 (tests/oracle_utils), for fast iteration while developing one operator.
 """
@@ -25,10 +27,11 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.shuffle.partitions", cpus)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

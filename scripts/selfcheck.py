@@ -9,7 +9,7 @@ sf0.01 and writes ``SELFCHECK.json`` at the repo root in the same shape as
 ``CORRECTNESS_r{N}.json``. Queries without an oracle record a rows-only
 entry, mirroring the driver's weaker check.
 
-Usage:  python scripts/selfcheck.py [sf_dir]
+Usage:  python scripts/selfcheck.py [sf_dir]   (local[$SPARK_GRAFT_CPUS], default 32)
 """
 
 from __future__ import annotations
@@ -30,10 +30,11 @@ def main() -> int:
 
     # Vanilla session on purpose: the driver builds its own (ANSI defaults,
     # none of our confs pre-set); every query wrapper must survive that.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", cpus)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -5,10 +5,14 @@ top-k — recall@k is the standard ANN quality gate. Ground truth is
 `brute_force_topk` on the same corpus.
 """
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from binance_futures_data_lake_spark.operators.similarity import (
+    _round6_scaled,
     brute_force_topk,
     lsh_topk,
     rh_signatures,
@@ -353,8 +357,9 @@ def test_semantic_match_existing_frozen_index(spark):
 
 def test_ivf_query_side_cap_fails_loudly(spark, emb, monkeypatch):
     """Oversized query sides must raise before occupying the driver
-    (the collected frame rides every task closure) — on the cell-scored
-    IVF tiers and on flat PQ, the one-cell IVFADC case."""
+    (the collected frame rides every task closure) — on brute force,
+    LSH, the cell-scored IVF tiers and flat PQ, the one-cell IVFADC
+    case."""
     from binance_futures_data_lake_spark.operators import similarity
     from binance_futures_data_lake_spark.operators.similarity import (
         ivf_seed_centroids, ivf_seeded_topk, pq_ivf_adc_topk,
@@ -365,6 +370,10 @@ def test_ivf_query_side_cap_fails_loudly(spark, emb, monkeypatch):
     cents = ivf_seed_centroids(emb, num_cells=4)
     with pytest.raises(ValueError, match="query side exceeds 5 rows"):
         ivf_seeded_topk(emb, emb.limit(6), cents, k=2).collect()
+    with pytest.raises(ValueError, match="query side exceeds 5 rows"):
+        brute_force_topk(emb, emb.limit(6), k=2).collect()
+    with pytest.raises(ValueError, match="query side exceeds 5 rows"):
+        lsh_topk(emb, emb.limit(6), dim=64, k=2).collect()
     flat = [(0, [0] * 64)]
     books = pq_residual_codebooks(emb, flat, n_sub=4, ks=8)
     with pytest.raises(ValueError, match="query side exceeds 5 rows"):
@@ -374,7 +383,8 @@ def test_ivf_query_side_cap_fails_loudly(spark, emb, monkeypatch):
 def test_ivf_mixed_id_types(spark, emb):
     """q_id types from the query frame, neighbor_id from the corpus —
     a string-id query set over a long-id corpus must not mismatch the
-    declared kernel schema (ADVICE r8)."""
+    declared kernel schema (ADVICE r8), on every tier of the shared
+    scorer."""
     from binance_futures_data_lake_spark.operators.similarity import (
         ivf_seed_centroids, ivf_seeded_topk,
     )
@@ -383,13 +393,104 @@ def test_ivf_mixed_id_types(spark, emb):
     q = emb.limit(3).select(
         F.concat(F.lit("q"), F.col("vec_id")).alias("vec_id"), "embedding"
     )
-    out = ivf_seeded_topk(emb, q, cents, k=2)
-    assert dict(out.dtypes) == {
-        "q_id": "string", "neighbor_id": "bigint",
-        "cosine": "double", "rnk": "int",
-    }
-    rows = out.collect()
-    assert rows and all(r.q_id.startswith("q") for r in rows)
+    for out in (
+        ivf_seeded_topk(emb, q, cents, k=2),
+        brute_force_topk(emb, q, k=2),
+        lsh_topk(emb, q, dim=64, k=2, n_planes=16, bands=8),
+    ):
+        assert dict(out.dtypes) == {
+            "q_id": "string", "neighbor_id": "bigint",
+            "cosine": "double", "rnk": "int",
+        }
+        rows = out.collect()
+        assert rows and all(r.q_id.startswith("q") for r in rows)
+
+
+def test_zero_norm_vectors_dropped_on_every_dense_tier(spark):
+    """A zero vector is out of cosine domain: as a corpus row it is never
+    a neighbour (its NaN cosine would rank above every real one), and as
+    a query it returns nothing. Brute force, LSH and IVF probing every
+    cell return the same k real neighbours."""
+    from binance_futures_data_lake_spark.operators.similarity import (
+        ivf_lloyd_centroids, ivf_lloyd_topk,
+    )
+
+    vecs = [
+        [1.0, 0.0, 0.0, 0.0],
+        [1.0, 0.1, 0.0, 0.0],
+        [1.0, 0.5, 0.0, 0.0],
+        [0.0, 0.0, 0.0, 0.0],
+        [1.0, 1.0, 0.0, 0.0],
+        [0.0, 1.0, 0.0, 0.0],
+    ]
+    emb6 = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+    q = emb6.filter(F.col("vec_id").isin(0, 3))
+    cents = ivf_lloyd_centroids(emb6, num_cells=2, iters=1)
+    for out in (
+        brute_force_topk(emb6, q, k=3),
+        lsh_topk(emb6, q, dim=4, k=3, n_planes=8, bands=8),
+        ivf_lloyd_topk(emb6, q, cents, k=3, nprobe=len(cents)),
+    ):
+        rows = sorted(out.collect(), key=lambda r: r.rnk)
+        assert [(r.q_id, r.neighbor_id) for r in rows] == [(0, 1), (0, 2), (0, 4)]
+
+
+def _seq_scaled(x, y):
+    """The SQL fold order: a·b, a·a, b·b accumulated per dim from 0.0."""
+    dab = daa = dbb = 0.0
+    for d in range(x.size):
+        dab = dab + float(x[d]) * float(y[d])
+        daa = daa + float(x[d]) * float(x[d])
+        dbb = dbb + float(y[d]) * float(y[d])
+    return dab / (math.sqrt(daa) * math.sqrt(dbb)) * 1e6
+
+
+def _round6_np(s):
+    return np.sign(s) * np.floor(np.abs(s) + 0.5) / 1e6
+
+
+def test_round6_guard_recomputes_half_boundary_entries():
+    """Entries within 1e-5 of a .5 boundary take the sequential-fold
+    value; entries outside the window keep their given value. Checked
+    on the block form and on the pairwise 1-D form."""
+    rng = np.random.RandomState(7)
+    a = rng.standard_normal((6, 32))
+    b = rng.standard_normal((5, 32))
+    exact = np.array([[_seq_scaled(x, y) for y in b] for x in a])
+    scaled = exact.copy()
+    planted = {(0, 0): 1e-6, (1, 3): -1e-6, (2, 1): 9e-6, (5, 4): -9e-6}
+    for (i, j), eps in planted.items():
+        scaled[i, j] = 123456.5 + eps
+    scaled[3, 2] = 123456.5 + 2e-5  # outside the window: left as given
+    want = _round6_np(exact)
+    want[3, 2] = _round6_np(123456.5 + 2e-5)
+    np.testing.assert_array_equal(_round6_scaled(scaled, a, b), want)
+
+    pa_, pb_ = a[[0, 1, 2, 5]], b[[0, 3, 1, 4]]
+    pairs = np.array([123456.5 + eps for eps in planted.values()])
+    np.testing.assert_array_equal(
+        _round6_scaled(pairs, pa_, pb_), _round6_np(exact[[0, 1, 2, 5], [0, 3, 1, 4]])
+    )
+
+
+def test_round6_guard_flags_what_float_modulo_flags():
+    """The floor boundary test flags exactly the entries ``% 1.0`` flags,
+    exact .5 values and both signs included. Every flagged entry is
+    recomputed from orthogonal vectors, so it reads 0.0 and no other
+    entry does (|value| >= 1)."""
+    rng = np.random.RandomState(11)
+    s = rng.uniform(1.0, 1e6, size=(40, 50)) * rng.choice([-1.0, 1.0], size=(40, 50))
+    s[::3, ::2] = np.floor(s[::3, ::2]) + 0.5
+    s[1::7, 1::3] = np.floor(s[1::7, 1::3]) + 0.5 + rng.choice([-9.9e-6, 9.9e-6], size=(6, 17))
+    s[2::9, ::4] = np.floor(s[2::9, ::4]) + 0.5 + 1.01e-5
+    flagged = np.abs(np.abs(s) % 1.0 - 0.5) < 1e-5
+    a = np.tile([1.0, 0.0], (40, 1))
+    b = np.tile([0.0, 1.0], (50, 1))
+    out = _round6_scaled(s.copy(), a, b)
+    assert flagged.sum() > 300
+    np.testing.assert_array_equal(out == 0.0, flagged)
 
 
 def test_lloyd_centroids_partitioning_invariant(spark, emb):
