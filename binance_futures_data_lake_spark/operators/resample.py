@@ -193,23 +193,28 @@ def resample_bars(
     """
     n_rows = n_minutes // base_minutes
     bucket_ms = n_minutes * 60_000
+    base_ms = base_minutes * 60_000
     order = F.col("open_time_ms")
     bkt = (F.floor(F.col("open_time_ms") / F.lit(bucket_ms)) * bucket_ms).cast("long")
 
-    # Distinct-minute check. count_distinct plans as Expand + a second
-    # aggregation pass (~2× the shuffle); for n ≤ 62 an exact slot-bitmask
-    # replaces it inside the ONE aggregation: with __cnt == n,
-    # sum(2^slot) == 2^n − 1 ⟺ every slot hit exactly once (a duplicate
-    # slot forces a missing slot, which breaks the bit sum).
-    use_bitmask = n_rows <= 62
-    slot = ((F.col("open_time_ms") - F.col("__bucket_ms")) / F.lit(base_minutes * 60_000)).cast("long")
-    uniq_agg = (
-        F.sum(F.call_function("shiftleft", F.lit(1).cast("long"), slot.cast("int"))).alias("__slot_bits")
-        if use_bitmask
-        else F.count_distinct(F.col("open_time_ms")).alias("__n_uniq")
-    )
+    # Distinct slots inside the one aggregation, for any n: the bucket's slot
+    # bitmask split into ceil(n/62) long words, word w summing
+    # 2^(slot mod 62) over the rows with slot div 62 == w. A bucket is
+    # complete iff count == n, the span is (n−1)·base and every word equals
+    # its full mask (its m_w = min(62, n − 62w) low bits set). Exact: a sum
+    # of r powers of two has popcount ≤ r, equal only when they are
+    # distinct, so a full word holds ≥ m_w rows; as the m_w add up to
+    # n == count, each word holds exactly m_w rows on m_w distinct slots,
+    # i.e. every slot once. A word whose sum overflows reads null and fails.
+    slot = ((F.col("open_time_ms") - F.col("__bucket_ms")) / F.lit(base_ms)).cast("long")
+    complete = (F.count(F.lit(1)) == n_rows) & ((F.max(order) - F.min(order)) == (n_rows - 1) * base_ms)
+    for w in range(-(-n_rows // 62)):
+        word = F.try_sum(F.when(F.col("__word") == w, F.col("__bit")))
+        complete = complete & (word == F.lit((1 << min(62, n_rows - 62 * w)) - 1))
     agg = (
         df.withColumn("__bucket_ms", bkt)
+        .withColumn("__word", F.floor(slot / 62))
+        .withColumn("__bit", F.call_function("shiftleft", F.lit(1).cast("long"), (slot % 62).cast("int")))
         .groupBy(*by, "__bucket_ms")
         .agg(
             F.min_by("open", order).alias("open"),
@@ -221,32 +226,18 @@ def resample_bars(
             F.sum("n_trades").alias("n_trades"),
             F.sum("taker_buy_base").alias("taker_buy_base"),
             F.sum("taker_buy_quote").alias("taker_buy_quote"),
-            F.count(F.lit(1)).alias("__cnt"),
-            uniq_agg,
-            F.min("open_time_ms").alias("__min_ms"),
-            F.max("open_time_ms").alias("__max_ms"),
+            F.count(F.lit(1)).alias("count_base"),
             F.max_by("exchange", order).alias("exchange"),
             F.max_by("market", order).alias("market"),
+            *([complete.alias("__complete")] if complete_only else []),
         )
     )
     if complete_only:
-        span_ms = (n_rows - 1) * base_minutes * 60_000
-        uniq_ok = (
-            F.col("__slot_bits") == F.lit((1 << n_rows) - 1).cast("long")
-            if use_bitmask
-            else F.col("__n_uniq") == n_rows
-        )
-        agg = agg.filter(
-            (F.col("__cnt") == n_rows)
-            & uniq_ok
-            & ((F.col("__max_ms") - F.col("__min_ms")) == span_ms)
-        )
+        agg = agg.filter(F.col("__complete"))
     out = (
         agg.withColumn("open_time_ms", F.col("__bucket_ms"))
         .withColumn("close_time_ms", F.col("__bucket_ms") + bucket_ms - 1)
         .withColumn("ts", F.timestamp_millis(F.col("open_time_ms")))
-        .withColumn("count_base", F.col("__cnt"))
-        .drop("__bucket_ms", "__cnt", "__n_uniq", "__slot_bits", "__min_ms", "__max_ms")
     )
     cols = [
         "ts", "open", "high", "low", "close", "volume_base", "volume_quote",

@@ -3,7 +3,10 @@
 The reference declares its 15-column M1 kline schema twice (construction:
 src/bfdl/collectors/klines_m1.py:108-134; validation contract:
 src/bfdl/transforms/verify_all.py:38-54). We declare it once as a Spark
-``StructType``.
+``StructType``: ``KLINES_M1_SCHEMA`` is the one declaration of the kline
+path. ``poll.page_to_df`` builds pages with it, and ``lake.read_lake`` and
+``lake.compact_staging`` read with it instead of inferring it from the
+files.
 """
 
 from __future__ import annotations

@@ -21,6 +21,11 @@ Spark-first redesign rather than translation:
   (``streaming.pipeline.parquet_upsert``) shares the same upsert;
 - "keep last" precedence is explicit (``__precedence`` column), fixing the
   reference's order-dependent ``keep="last"`` (SURVEY §7.2);
+- kline tables (canonical, staging and the derived timeframes) are read
+  with the declared ``schemas.KLINES_M1_SCHEMA``, never inferred, so a read
+  runs no Spark job; ``year``/``month`` come from partition discovery. The
+  one inferred read is ``upsert_partitions``' re-read of the table it
+  merges into, so a column mismatch there fails the union loudly;
 - checkpoints stay sidecar JSON for parity (a Delta table would subsume).
 """
 
@@ -32,11 +37,11 @@ import operator
 import os
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binance_futures_data_lake_spark.operators.dedup import dedup_keep_last
+from binance_futures_data_lake_spark.schemas import KLINES_M1_SCHEMA
 
 PARTITION_COLS = ("symbol", "year", "month")
 
@@ -54,16 +59,16 @@ def staging_path(root: str) -> str:
     return os.path.join(root, "_staging")
 
 
-def write_canonical(df: DataFrame, root: str, mode: str = "overwrite") -> None:
+def write_canonical(df: DataFrame, root: str) -> None:
     """Hive-partitioned canonical write (S9 + layout of §1.2).
 
-    ``overwrite`` replaces only the (symbol, year, month) partitions ``df``
-    covers (dynamic partition overwrite, as a writer option): re-aggregating
-    some symbols leaves the others in place, and a table can be rewritten
-    from a read of itself."""
+    Replaces only the (symbol, year, month) partitions ``df`` covers
+    (dynamic partition overwrite, as a writer option): re-aggregating some
+    symbols leaves the others in place, and a table can be rewritten from a
+    read of itself."""
     (
         with_partition_cols(df)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*PARTITION_COLS)
         .parquet(canonical_path(root))
@@ -82,31 +87,26 @@ def stage_append(df: DataFrame, root: str) -> None:
     )
 
 
-def read_lake(spark: SparkSession, root: str, with_staging: bool = False) -> DataFrame:
-    """Recursive scan with partition discovery (S4); staging union optional."""
-    parts = [_read_data(spark, canonical_path(root))]
-    if with_staging:
-        parts.append(_read_data(spark, staging_path(root)))
-    parts = [p for p in parts if p is not None]
-    if not parts:
+def read_lake(spark: SparkSession, root: str) -> DataFrame:
+    """Recursive scan of the canonical table with partition discovery (S4),
+    read with the declared ``KLINES_M1_SCHEMA``: no inference job, and
+    ``year``/``month`` appended from the partition directories. Raises
+    ``FileNotFoundError`` when the table is missing or holds no data
+    files."""
+    df = _read_klines(spark, canonical_path(root))
+    if df is None:
         raise FileNotFoundError(f"empty lake at {root}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    return df
 
 
-def _read_data(spark: SparkSession, path: str) -> DataFrame | None:
-    """The parquet table at ``path``, or None when it holds no data files
-    (staging keeps its directories after a compaction deletes the files)."""
+def _read_klines(spark: SparkSession, path: str) -> DataFrame | None:
+    """The kline table at ``path`` with the declared schema, or None when it
+    holds no data files (staging keeps its directories after a compaction
+    deletes the files). Listing the files runs no Spark job."""
     if not _exists(spark, path):
         return None
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-            raise
-        return None
+    df = spark.read.schema(KLINES_M1_SCHEMA).parquet(path)
+    return df if df.inputFiles() else None
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -170,7 +170,7 @@ def compact_staging(
     being lost. A crash between the canonical write and the delete leaves
     staging in place; the next compaction folds it again to the same rows.
     """
-    staged = _read_data(spark, staging_path(root))
+    staged = _read_klines(spark, staging_path(root))
     if staged is None:
         return 0
     files = staged.inputFiles()

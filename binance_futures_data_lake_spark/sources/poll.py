@@ -40,18 +40,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from binance_futures_data_lake_spark.schemas import KLINES_M1_SCHEMA
 from binance_futures_data_lake_spark.sources import lake
 
 PAGE_LIMIT = 1500
 SAFE_LAG_MS = 2 * 60 * 1000
-
-KLINE_SCHEMA = (
-    "ts timestamp, open double, high double, low double, close double, "
-    "volume_base double, volume_quote double, n_trades long, "
-    "taker_buy_base double, taker_buy_quote double, "
-    "open_time_ms long, close_time_ms long, "
-    "exchange string, market string, symbol string"
-)
 
 Transport = Callable[[str, int | None, int], Sequence[Sequence]]
 
@@ -92,8 +85,9 @@ def http_transport(base_url: str, endpoint: str, interval: str = "1m", timeout: 
 
 
 def page_to_df(spark: SparkSession, payload: Sequence[Sequence], symbol: str):
-    """Binance kline arrays → typed DataFrame (klines_m1.py:110-133 column
-    contract, incl. the string→float decimal casts)."""
+    """Binance kline arrays → a ``KLINES_M1_SCHEMA`` DataFrame
+    (klines_m1.py:110-133 column contract, incl. the string→float decimal
+    casts)."""
     from datetime import datetime, timezone
 
     rows = [
@@ -105,7 +99,7 @@ def page_to_df(spark: SparkSession, payload: Sequence[Sequence], symbol: str):
         )
         for k in payload
     ]
-    return spark.createDataFrame(rows, KLINE_SCHEMA)
+    return spark.createDataFrame(rows, KLINES_M1_SCHEMA)
 
 
 def poll_pages(

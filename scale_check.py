@@ -1902,13 +1902,13 @@ def main() -> None:
     stages["knn_graph_components_1m"].update(
         n_clustered=kg.filter(F.col("component") != F.col("vec_id")).count(),
     )
-    # 10M-vector PQ encode+ADC probe (r8, VERDICT r7 #7): the compressed
-    # scan one order above the 1M tier. Codebooks train on a 1M sample
+    # PQ encode+ADC probe over --rows (10M) vectors (r8, VERDICT r7 #7): the
+    # compressed scan one order above the 1M tier. Codebooks train on a 1M sample
     # (standard PQ practice — books are plan literals either way); the
     # timed stage is the full-corpus encode + ADC + partial-top-k, ONE
     # zero-shuffle pass. Recall is gauged at the 1M tier above (same
     # generator); this stage's claim is the flat-exchange scan slope.
-    big_n = max(1_000_000, total_rows)
+    big_n = total_rows
     big_ann = clustered_vectors(spark, big_n, dim, n_latent)
     t0 = time.perf_counter()
     train_step = max(1, big_n // 1_000_000)
@@ -1927,7 +1927,7 @@ def main() -> None:
     )
     ann.unpersist()
 
-    # 10M-node contraction-CC probe (r8, VERDICT r7 #7): 10k-long chains
+    # contraction-CC probe over --rows (10M) nodes (r8, VERDICT r7 #7): 10k-long chains
     # — the adversarial depth case for label propagation — with an edge
     # list (~10M) far above DRIVER_MAX_EDGES for the early rounds, so the
     # DISTRIBUTED contraction loop does the work; the claim under test is
@@ -1938,7 +1938,7 @@ def main() -> None:
         connected_components,
     )
 
-    n_cc = max(1_000_000, total_rows)
+    n_cc = total_rows
     chain = 10_000
     cc_edges = chain_edges(spark, n_cc, chain)
     # eager loop inside the operator — time the build, not just the force
@@ -1951,7 +1951,7 @@ def main() -> None:
         n_nodes=n_cc, chain_len=chain, mislabeled=mislabeled,
     )
 
-    # banded-hamming near-dup probe (r5): 10M 64-bit fingerprints through
+    # banded-hamming near-dup probe (r5): --rows (10M) 64-bit fingerprints through
     # the shared text/image/audio near-dup engine at its web-scale config
     # (4x16-bit bands, hamming<=3). Planted truth: ids < 100k form 10k
     # groups of 10 (5 identical + 5 one-distinct-bit members -> all 45
@@ -1965,7 +1965,7 @@ def main() -> None:
         hamming_near_pairs,
     )
 
-    fps = planted_fingerprints(spark, 10_000_000)
+    fps = planted_fingerprints(spark, total_rows)
     ham_pairs = hamming_near_pairs(
         fps, "fp", max_hamming=3, bits=64, n_bands=4
     ).persist()

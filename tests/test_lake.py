@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from binance_futures_data_lake_spark.operators.gaps import missing_ranges
 from binance_futures_data_lake_spark.operators.maintenance import audit_klines
+from binance_futures_data_lake_spark.schemas import KLINES_M1_SCHEMA
 from binance_futures_data_lake_spark.sources import lake
 from binance_futures_data_lake_spark.sources.synthetic import synthetic_klines_m1
 
@@ -41,7 +42,7 @@ def test_lake_roundtrip_compact_and_audit(spark, tmp_root):
     )
     n_patch = patch.count()
     lake.stage_append(patch, tmp_root)
-    merged_preview = lake.read_lake(spark, tmp_root, with_staging=True)
+    merged_preview = lake.read_lake(spark, tmp_root).unionByName(_staging(spark, tmp_root))
     assert merged_preview.count() == 2 * 2 * 1440 + n_patch
 
     folded = lake.compact_staging(spark, tmp_root)
@@ -55,6 +56,47 @@ def test_lake_roundtrip_compact_and_audit(spark, tmp_root):
 
     report2 = audit_klines(after.drop("year", "month"))
     assert report2["ok"], report2
+
+
+def _staging(spark, root):
+    return spark.read.schema(KLINES_M1_SCHEMA).parquet(lake.staging_path(root))
+
+
+def test_lake_reads_run_no_job_and_match_the_inferred_schema(spark, tmp_root, monkeypatch):
+    import uuid
+
+    df = synthetic_klines_m1(spark, symbols=("AAA", "BBB"), n_minutes=60)
+    lake.write_canonical(df, tmp_root)
+    lake.stage_append(df, tmp_root)
+    folded = []
+    monkeypatch.setattr(lake, "upsert_partitions", lambda _s, _p, staged, *a: folded.append(staged) or 0)
+    monkeypatch.setattr(lake, "_delete", lambda *a: None)
+    sc = spark.sparkContext
+    group = f"lake-reads-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_lake + compact_staging's staged read")
+    try:
+        back = lake.read_lake(spark, tmp_root)
+        lake.compact_staging(spark, tmp_root)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    inferred = spark.read.parquet(lake.canonical_path(tmp_root))
+    assert back.dtypes == folded[0].dtypes == inferred.dtypes
+    assert sorted(back.collect()) == sorted(inferred.collect())
+
+
+def test_read_lake_raises_without_data_files(spark, tmp_root):
+    import os
+
+    with pytest.raises(FileNotFoundError):
+        lake.read_lake(spark, tmp_root)
+    lake.write_canonical(synthetic_klines_m1(spark, symbols=("AAA",), n_minutes=60), tmp_root)
+    for d, _, names in os.walk(lake.canonical_path(tmp_root)):
+        for n in names:
+            if n.endswith(".parquet"):
+                os.remove(os.path.join(d, n))
+    with pytest.raises(FileNotFoundError):
+        lake.read_lake(spark, tmp_root)
 
 
 def test_write_canonical_replaces_only_covered_partitions(spark, tmp_root):
@@ -299,7 +341,10 @@ def test_compaction_keeps_rows_staged_during_the_fold(spark, tmp_root, monkeypat
     assert lake.compact_staging(spark, tmp_root) == 60  # the late page survived
     assert lake.read_lake(spark, tmp_root).count() == 120
     assert lake.compact_staging(spark, tmp_root) == 0   # no data files left
-    assert lake.read_lake(spark, tmp_root, with_staging=True).count() == 120
+    preview = lake.read_lake(spark, tmp_root).unionByName(
+        _staging(spark, tmp_root), allowMissingColumns=True
+    )
+    assert preview.count() == 120
 
 
 def test_compaction_converges_after_crash_before_staging_delete(spark, tmp_root, monkeypatch):

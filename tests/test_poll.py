@@ -6,8 +6,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from binance_futures_data_lake_spark.schemas import KLINES_M1_SCHEMA
 from binance_futures_data_lake_spark.sources import lake
-from binance_futures_data_lake_spark.sources.poll import PollConfig, poll_pages
+from binance_futures_data_lake_spark.sources.poll import PollConfig, page_to_df, poll_pages
 
 MIN_MS = 60_000
 T0 = 1_700_000_040_000  # aligned to a minute boundary
@@ -119,6 +120,8 @@ def test_page_budget_bounds_work(spark, tmp_path):
 
 def test_schema_and_values(spark, tmp_path):
     t1 = T0 + 5 * MIN_MS
+    page = page_to_df(spark, FakeKlines(T0, t1)("BTCUSDT", T0, 5), "BTCUSDT")
+    assert page.schema == KLINES_M1_SCHEMA
     cfg = PollConfig(symbol="BTCUSDT", root=str(tmp_path), start_ms=T0)
     poll_pages(spark, FakeKlines(T0, t1), cfg, now_ms=lambda: t1 + 10 * MIN_MS)
     lake.compact_staging(spark, str(tmp_path))

@@ -44,21 +44,34 @@ def test_resample_matches_pandas(spark, m1, n_min):
         assert (out[col] - ref[col]).abs().max() < 1e-9, col
 
 
-def test_completeness_filter_drops_partial_buckets(spark, m1):
-    # remove one minute inside the second 5-min bucket of AAA
-    t0 = m1.agg(F.min("open_time_ms")).first()[0]
-    holed = m1.filter(
-        ~((F.col("symbol") == "AAA") & (F.col("open_time_ms") == t0 + 7 * 60_000))
-    )
-    strict = resample_bars(holed, 5).filter(F.col("symbol") == "AAA")
-    loose = resample_bars(holed, 5, complete_only=False).filter(F.col("symbol") == "AAA")
-    assert strict.count() == 1440 // 5 - 1
-    assert loose.count() == 1440 // 5
-    # the dropped bucket is exactly the holed one
+@pytest.fixture(scope="module")
+def m1_3d(spark):
+    return synthetic_klines_m1(spark, symbols=("AAA", "BBB"), n_minutes=3 * 1440).cache()
+
+
+@pytest.mark.parametrize("n_min", [5, 240, 1440])
+def test_completeness_filter_drops_partial_buckets(spark, m1_3d, n_min):
+    from binance_futures_data_lake_spark.obs import exchange_count
+
+    t0 = m1_3d.agg(F.min("open_time_ms")).first()[0]
+    b1, b2 = t0 + n_min * 60_000, t0 + 2 * n_min * 60_000
+    aaa = F.col("symbol") == "AAA"
+    # bucket 1 misses one minute; bucket 2 repeats one minute and misses
+    # another, so its row count and span both pass
+    holed = m1_3d.filter(
+        ~(aaa & F.col("open_time_ms").isin(b1 + 2 * 60_000, b2 + 3 * 60_000))
+    ).unionByName(m1_3d.filter(aaa & (F.col("open_time_ms") == b2 + 60_000)))
+    strict = resample_bars(holed, n_min).filter(aaa)
+    loose = resample_bars(holed, n_min, complete_only=False).filter(aaa)
+    n_buckets = 3 * 1440 // n_min
+    assert strict.count() == n_buckets - 2
+    assert loose.count() == n_buckets
+    # the dropped buckets are exactly the defective ones
     missing = set(r[0] for r in loose.select("open_time_ms").collect()) - set(
         r[0] for r in strict.select("open_time_ms").collect()
     )
-    assert missing == {t0 + 5 * 60_000}
+    assert missing == {b1, b2}
+    assert exchange_count(resample_bars(m1_3d, n_min)) == 1
 
 
 def test_availability_columns_anti_lookahead(spark, m1):
