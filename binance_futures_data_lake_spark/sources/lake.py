@@ -19,6 +19,13 @@ Spark-first redesign rather than translation:
   (only partitions that received new keys are rewritten — at 100 TB a
   daily merge touches current-month partitions only). The streaming sink
   (``streaming.pipeline.parquet_upsert``) shares the same upsert;
+- the merge runs one exchange: it repartitions on the partition columns
+  and dedups within them, which is sound because every caller's partition
+  columns are a function of its key. The caller names the partitions it
+  touches: ``compact_staging`` reads them, and the staged row count, off
+  the staged files it lists (Hive paths and parquet footers, on the
+  driver), so nothing before the merge runs a Spark job. That file list is
+  the add-file set a Delta-style log would record;
 - "keep last" precedence is explicit (``__precedence`` column), fixing the
   reference's order-dependent ``keep="last"`` (SURVEY §7.2);
 - kline tables (canonical, staging and the derived timeframes) are read
@@ -35,8 +42,10 @@ import functools
 import json
 import operator
 import os
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -122,38 +131,44 @@ def upsert_partitions(
     new_df: DataFrame,
     keys: Sequence[str],
     partition_cols: Sequence[str],
-) -> int:
+    touched: Iterable[Sequence],
+) -> None:
     """Keyed upsert into a Hive-partitioned parquet table (S12/S13): the
-    table's partitions that ``new_df`` touches are unioned with it, deduped
+    table's ``touched`` partitions are unioned with ``new_df``, deduped
     new-wins (an explicit ``__precedence``, not union order), and replaced
     by dynamic partition overwrite, one file per partition. The merge cost
     is proportional to the new rows' partition span, not the table size.
 
+    ``touched`` comes from the caller: the value tuples, in
+    ``partition_cols`` order, of every partition ``new_df`` has rows in.
+    Every partition column must be a function of ``keys`` (kline
+    ``year``/``month`` of ``ts``, which equals ``open_time_ms``; streaming
+    ``p_day = to_date(bucket_ts)`` with ``bucket_ts`` in the key). Then the
+    dedup groups on ``partition_cols + keys`` are the groups on ``keys``,
+    and one exchange on the partition columns serves both the dedup and the
+    one-file-per-partition write.
+
     The overwrite mode is a writer option, so the session conf is left as
-    it was. Returns the number of rows in ``new_df``.
+    it was.
     """
-    touched = new_df.groupBy(*partition_cols).count().collect()
-    n_new = sum(r["count"] for r in touched)
-    if n_new == 0:
-        return 0
     merged = new_df.withColumn("__precedence", F.lit(1))
     if _exists(spark, path):
         in_touched = F.lit(False)
-        for r in touched:
+        for values in touched:
             in_touched = in_touched | functools.reduce(
-                operator.and_, (F.col(c).eqNullSafe(r[c]) for c in partition_cols)
+                operator.and_, (F.col(c).eqNullSafe(v) for c, v in zip(partition_cols, values))
             )
         existing = spark.read.parquet(path).filter(in_touched)
         merged = existing.withColumn("__precedence", F.lit(0)).unionByName(merged)
-    result = dedup_keep_last(merged, list(keys), ["__precedence"]).drop("__precedence")
+    clustered = merged.repartition(*[F.col(c) for c in partition_cols])
     (
-        result.repartition(*[F.col(c) for c in partition_cols])
+        dedup_keep_last(clustered, [*partition_cols, *keys], ["__precedence"])
+        .drop("__precedence")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(path)
     )
-    return n_new
 
 
 def compact_staging(
@@ -165,25 +180,45 @@ def compact_staging(
     (compact_staging.py:44-111; S14, one file per (symbol, year, month) as
     in compact_months.py:13-75). Returns the number of staged rows folded.
 
-    Only the staged files the fold read are deleted afterwards, so a page
-    staged while the fold runs waits for the next compaction instead of
-    being lost. A crash between the canonical write and the delete leaves
-    staging in place; the next compaction folds it again to the same rows.
+    The touched partitions come from the staged files' Hive paths and the
+    row count from their parquet footers, both read on the driver, so the
+    merge is the fold's only Spark work. Only the staged files the fold
+    read are deleted afterwards, so a page staged while the fold runs waits
+    for the next compaction instead of being lost. A crash between the
+    canonical write and the delete leaves staging in place; the next
+    compaction folds it again to the same rows.
     """
     staged = _read_klines(spark, staging_path(root))
     if staged is None:
         return 0
     files = staged.inputFiles()
-    n_staged = upsert_partitions(spark, canonical_path(root), staged, keys, PARTITION_COLS)
+    local = [unquote(urlparse(f).path) for f in files]
+    n_staged = sum(pq.read_metadata(p).num_rows for p in local)
+    if n_staged:
+        touched = dict.fromkeys(_staged_partition(p) for p in local)
+        upsert_partitions(spark, canonical_path(root), staged, keys, PARTITION_COLS, touched)
     _delete(spark, files)
     return n_staged
 
 
-def _delete(spark: SparkSession, paths: Sequence[str]) -> None:
+def _staged_partition(local_path: str) -> tuple:
+    """(symbol, year, month) of a staged file from its Hive directory
+    names, whose values are ``%XX``-escaped and null as Hive's default
+    partition name."""
+    dirs = dict(d.split("=", 1) for d in local_path.split("/")[-4:-1])
+
+    def value(c: str, cast):
+        v = dirs[c]
+        return None if v == "__HIVE_DEFAULT_PARTITION__" else cast(unquote(v))
+
+    return value("symbol", str), value("year", int), value("month", int)
+
+
+def _delete(spark: SparkSession, uris: Sequence[str]) -> None:
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for path in paths:
-        p = jvm.org.apache.hadoop.fs.Path(path)
+    for uri in uris:
+        p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri))
         p.getFileSystem(conf).delete(p, False)
 
 

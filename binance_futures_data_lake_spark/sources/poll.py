@@ -38,6 +38,8 @@ import time as _time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from binance_futures_data_lake_spark.schemas import KLINES_M1_SCHEMA
@@ -87,19 +89,25 @@ def http_transport(base_url: str, endpoint: str, interval: str = "1m", timeout: 
 def page_to_df(spark: SparkSession, payload: Sequence[Sequence], symbol: str):
     """Binance kline arrays → a ``KLINES_M1_SCHEMA`` DataFrame
     (klines_m1.py:110-133 column contract, incl. the string→float decimal
-    casts)."""
-    from datetime import datetime, timezone
+    casts, which parse exactly as ``float()`` does).
 
-    rows = [
-        (
-            datetime.fromtimestamp(int(k[0]) / 1000.0, tz=timezone.utc),
-            float(k[1]), float(k[2]), float(k[3]), float(k[4]),
-            float(k[5]), float(k[7]), int(k[8]), float(k[9]), float(k[10]),
-            int(k[0]), int(k[6]), "binance", "um_futures", symbol,
-        )
-        for k in payload
+    The page is built as one Arrow table, so ``createDataFrame`` hands it to
+    the JVM as Arrow batches: no Python rows, no Python worker."""
+
+    def col(i: int, dtype) -> np.ndarray:
+        return np.asarray([k[i] for k in payload], dtype=dtype)
+
+    open_ms, n = col(0, np.int64), len(payload)
+    columns = [
+        pa.array(open_ms).cast(pa.timestamp("ms", tz="UTC")),
+        *(col(i, np.float64) for i in (1, 2, 3, 4, 5, 7)),
+        col(8, np.int64),
+        *(col(i, np.float64) for i in (9, 10)),
+        open_ms, col(6, np.int64),
+        *(pa.array([v] * n) for v in ("binance", "um_futures", symbol)),
     ]
-    return spark.createDataFrame(rows, KLINES_M1_SCHEMA)
+    table = pa.Table.from_arrays(columns, names=KLINES_M1_SCHEMA.names)
+    return spark.createDataFrame(table, KLINES_M1_SCHEMA)
 
 
 def poll_pages(

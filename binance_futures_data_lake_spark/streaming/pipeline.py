@@ -130,10 +130,16 @@ def parquet_upsert(
 ) -> int:
     """Keyed new-wins upsert into a parquet table partitioned by the day of
     ``part_ts_col`` (``p_day``) — ``lake.upsert_partitions``, the same
-    merge the lake's staging compaction runs. Returns the rows upserted."""
-    return upsert_partitions(
-        spark, path, new_df.withColumn("p_day", F.to_date(part_ts_col)), keys, ["p_day"]
-    )
+    merge the lake's staging compaction runs, told the days the batch
+    touches by one count over them. ``part_ts_col`` must be in ``keys`` (or
+    a function of them), so each key lands in one day. Returns the rows
+    upserted."""
+    df = new_df.withColumn("p_day", F.to_date(part_ts_col))
+    days = df.groupBy("p_day").count().collect()
+    n_new = sum(r["count"] for r in days)
+    if n_new:
+        upsert_partitions(spark, path, df, keys, ["p_day"], [(r["p_day"],) for r in days])
+    return n_new
 
 
 def foreach_batch_upsert(

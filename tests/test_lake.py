@@ -69,7 +69,10 @@ def test_lake_reads_run_no_job_and_match_the_inferred_schema(spark, tmp_root, mo
     lake.write_canonical(df, tmp_root)
     lake.stage_append(df, tmp_root)
     folded = []
-    monkeypatch.setattr(lake, "upsert_partitions", lambda _s, _p, staged, *a: folded.append(staged) or 0)
+    monkeypatch.setattr(
+        lake, "upsert_partitions",
+        lambda _s, _p, staged, _keys, _cols, _touched: folded.append(staged),
+    )
     monkeypatch.setattr(lake, "_delete", lambda *a: None)
     sc = spark.sparkContext
     group = f"lake-reads-{uuid.uuid4().hex}"
@@ -388,3 +391,54 @@ def test_upserts_leave_session_conf_unchanged(spark, tmp_root):
                    ["symbol", "open_time_ms"])
     assert dict(spark.conf.getAll) == before
     assert spark.read.parquet(sink).count() == 60
+
+
+def test_compact_staging_runs_in_three_jobs(spark, tmp_root):
+    import uuid
+
+    df = synthetic_klines_m1(spark, symbols=("AAA", "BBB"), n_minutes=120)
+    lake.write_canonical(df, tmp_root)
+    lake.stage_append(df.filter(F.col("open_time_ms") % (7 * MIN_MS) == 0), tmp_root)
+    sc = spark.sparkContext
+    group = f"compact-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "compact_staging")
+    try:
+        lake.compact_staging(spark, tmp_root)
+    finally:
+        sc._jsc.clearJobGroup()
+    # the merge re-read's schema inference, the one shuffle, the write
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert lake.read_lake(spark, tmp_root).count() == 2 * 120
+
+
+def test_fold_across_a_month_boundary_rewrites_each_month_once(spark, tmp_path):
+    import os
+    from collections import Counter
+
+    # a root and a symbol that need URI and Hive path escaping
+    root = str(tmp_path / "lake root")
+    symbols = ("AAA", "B/B %C")
+    df = synthetic_klines_m1(spark, symbols=symbols, start="2024-01-31 23:00:00", n_minutes=120)
+    lake.write_canonical(df, root)
+    t0 = df.agg(F.min("open_time_ms")).first()[0]
+    patched = (F.col("open_time_ms") >= t0 + 30 * MIN_MS) & (F.col("open_time_ms") < t0 + 90 * MIN_MS)
+    lake.stage_append(df.filter(patched).withColumn("close", F.col("close") + 1.0), root)
+
+    assert lake.compact_staging(spark, root) == 2 * 60
+    files = Counter(
+        d for d, _, names in os.walk(lake.canonical_path(root)) for n in names if n.endswith(".parquet")
+    )
+    assert len(files) == 2 * 2 and set(files.values()) == {1}  # symbols x months, one file each
+    old = df.select("symbol", "open_time_ms", F.col("close").alias("old"), patched.alias("patched"))
+    rows = (
+        lake.read_lake(spark, root).join(old, ["symbol", "open_time_ms"])
+        .select("symbol", "month", "patched", (F.col("close") == F.col("old") + 1.0).alias("won"))
+        .collect()
+    )
+    assert len(rows) == 2 * 120
+    assert all(r.won == r.patched for r in rows)  # staging won, and only where it was staged
+    assert Counter((r.symbol, r.month) for r in rows if r.won) == {
+        (s, m): 30 for s in symbols for m in (1, 2)
+    }
+    staged_left = [n for _, _, names in os.walk(lake.staging_path(root)) for n in names]
+    assert not [n for n in staged_left if n.endswith(".parquet")]

@@ -3,6 +3,8 @@ idempotency (reference loop: src/bfdl/collectors/klines_m1.py:32-97)."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -132,3 +134,31 @@ def test_schema_and_values(spark, tmp_path):
     assert isinstance(row["open"], float) and row["n_trades"] == 7
     got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert got["ts"] == "timestamp" and got["volume_quote"] == "double"
+
+
+def test_page_to_df_matches_the_tuple_built_page(spark):
+    t = 2**41 // MIN_MS * MIN_MS
+    payload = [
+        [t, "65000.12345678", "65000.12345679", "0.00000001", "0.1", "1234567.89012345",
+         t + 59_999, "0.30000000000000004", 2**31 + 7, "3.3", "1e-8", "0"],
+        [t + MIN_MS, "0.00000001", "99999.99999999", "0.00000001", "65000.12345678", "0",
+         t + 119_999, "80.24691357", 0, "0.00000000", "7", "0"],
+        [1_706_745_600_000, "42", "42.5", "41.99999999", "42.00000001", "10.0",
+         1_706_745_659_999, "420.0", 7, "5", "210.00000002", "0"],
+    ]
+    # rows the per-row tuple construction (datetime.fromtimestamp(ms / 1000),
+    # float(), int()) produced for this payload
+    expected = [
+        (datetime(2039, 9, 7, 15, 47), 65000.12345678, 65000.12345679, 1e-08, 0.1,
+         1234567.89012345, 0.30000000000000004, 2147483655, 3.3, 1e-08,
+         2199023220000, 2199023279999, "binance", "um_futures", "BTCUSDT"),
+        (datetime(2039, 9, 7, 15, 48), 1e-08, 99999.99999999, 1e-08, 65000.12345678,
+         0.0, 80.24691357, 0, 0.0, 7.0,
+         2199023280000, 2199023339999, "binance", "um_futures", "BTCUSDT"),
+        (datetime(2024, 2, 1, 0, 0), 42.0, 42.5, 41.99999999, 42.00000001,
+         10.0, 420.0, 7, 5.0, 210.00000002,
+         1706745600000, 1706745659999, "binance", "um_futures", "BTCUSDT"),
+    ]
+    page = page_to_df(spark, payload, "BTCUSDT")
+    assert page.schema == KLINES_M1_SCHEMA
+    assert [tuple(r) for r in page.collect()] == expected
