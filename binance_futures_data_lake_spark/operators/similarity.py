@@ -543,38 +543,6 @@ def _collect_queries(queries: DataFrame):
     return q_pdf
 
 
-#: Live query-table broadcasts created by the IVFADC query tiers
-#: (:func:`pq_ivf_adc_topk` / :func:`pq_ivf_adc_codes_topk`). Each call
-#: broadcasts ~tens of MB of per-(query, cell) distance tables; in a
-#: long-lived sweep loop (e.g. the ``--pq-cells`` nprobe sweep builds
-#: ~14 of them) they accumulate on driver and executors until the plan
-#: objects are GC'd (ADVICE r11). Sweep loops should call
-#: :func:`release_query_table_broadcasts` after each action.
-_LIVE_QUERY_BROADCASTS: list = []
-
-
-def _track_query_broadcast(bc):
-    _LIVE_QUERY_BROADCASTS.append(bc)
-    return bc
-
-
-def release_query_table_broadcasts() -> int:
-    """Unpersist (non-blocking) every query-table broadcast created so
-    far and return how many were released. Safe to call after the
-    consuming DataFrame's action: ``Broadcast.unpersist`` drops the
-    executor-side copies but keeps the driver value, so a plan that is
-    re-executed later just re-ships it lazily."""
-    n = 0
-    while _LIVE_QUERY_BROADCASTS:
-        bc = _LIVE_QUERY_BROADCASTS.pop()
-        try:
-            bc.unpersist(blocking=False)
-            n += 1
-        except Exception:
-            pass  # already destroyed / context gone: nothing to free
-    return n
-
-
 def _round6_scaled(scaled, a, b):
     """round6 of scaled cosines (cosine·1e6), boundary-proof against the
     SQL oracle. ``scaled`` is the (rows of ``a`` × rows of ``b``) block
@@ -1798,9 +1766,8 @@ def pq_ivf_adc_topk(
     # ≈ 52 MB). BROADCAST them: closure capture re-ships that with
     # every task, which the r11 --pq-cells probe measured as the
     # dominant query cost once num_cells (= task count over a
-    # partitioned index) reaches the thousands. Tracked so sweep loops
-    # can release executor copies between runs (ADVICE r11).
-    bc = _track_query_broadcast(spark.sparkContext.broadcast(qp))
+    # partitioned index) reaches the thousands.
+    bc = spark.sparkContext.broadcast(qp)
 
     def _kernel(batches):
         q_ids, probes, qdt = _ivf_unpack_tables(bc.value)
@@ -1992,8 +1959,7 @@ def pq_ivf_adc_codes_topk(
     # broadcast, not closure capture: see pq_ivf_adc_topk — over a
     # cell-partitioned index the task count is the partition count, so
     # re-shipping the query tables per task dominates at 1k+ cells.
-    # Tracked for release_query_table_broadcasts (ADVICE r11).
-    bc = _track_query_broadcast(spark.sparkContext.broadcast(qp))
+    bc = spark.sparkContext.broadcast(qp)
 
     def _kernel(batches):
         q_ids, probes, qdt = _ivf_unpack_tables(bc.value)

@@ -144,12 +144,13 @@ def parquet_upsert(
 
 def foreach_batch_upsert(
     root: str,
-    keys: Sequence[str] = ("symbol", "open_time_ms"),
+    keys: Sequence[str],
     part_ts_col: str = "bucket_ts",
 ):
     """foreachBatch sink: keyed upsert per micro-batch — the collector's
     append/compact/checkpoint trio with the manual _checkpoint.json replaced
-    by the stream's checkpointLocation.
+    by the stream's checkpointLocation. ``keys`` must contain
+    ``part_ts_col`` (or determine it), as ``parquet_upsert`` requires.
 
     Idempotent on replay: a re-delivered micro-batch upserts the same keys
     to the same values, so at-least-once delivery + this sink = effectively

@@ -1,17 +1,29 @@
 #!/usr/bin/env python
-"""Scale probe: run the core operator pipeline on a generated dataset far
-larger than the driver testdata, and report per-stage throughput.
+"""Scale probe: run operators on generated data far larger than the driver
+testdata, and print one JSON line of per-stage walls and shuffle bytes.
 
-`--rows` controls total M1 bar count (default 10M across 100 symbols —
-~3 orders of magnitude above sf0.1). Generation is `spark.range`-based and
-distributed; nothing here collects more than aggregate scalars to the
-driver, so the same script is a valid cluster smoke test: the dataset that
-breaks a driver-side design has no place to hide.
+Generation is ``spark.range``-based and in-plan, and nothing collects more
+than aggregate scalars or top-k lists, so a dataset that breaks a
+driver-side design has no place to hide. Every timed region (plan build
+plus force) runs through ``obs.run``. One mode per run; each names the
+ROADMAP item it serves:
 
-Stages: synthetic generation → M5 resample with completeness → window
-feature pass (lag/rolling/ATR/VWAP/z-score) → bucketed EWM kernels →
-backward as-of join (M1 ← H1 regime) → dedup-keep-last. Prints one JSON
-line: {"rows": N, "stages": {name: {"sec": s, "rows_per_sec": r}}}.
+- default, ``--rows N`` (10M M1 bars over 100 symbols): the operator
+  pipeline — resample, window features, EWM, as-of join, dedup, rollup
+  cascade, gaps, interval join, KMV, media kernels, packing, scrubbing,
+  DSIR, Bloom, the ANN section (brute force, LSH, flat PQ ADC and
+  re-rank, kNN-graph components) and the banded-hamming join and
+  backtest sweep. The ANN section is the before/after for any similarity
+  change (item 8). ``--trading-only`` stops after dedup.
+- ``--cc --rows N``: connected components on 10k-long chains with
+  per-round shuffle and spill deltas (item 2, driver finish for small
+  iterations).
+- ``--bpe --docs N --merges M``: BPE merge learning and its marginal cost
+  per merge (item 2, the BPE merge loop).
+- ``--streaming`` / ``--streaming-dedup``, with ``--batches`` and
+  ``--rows-per-batch``: sketch and dedup delta state driven through the
+  real sinks, then the state fold with read equality asserted across it
+  (item 6, the streaming state protocol).
 """
 
 from __future__ import annotations
@@ -21,9 +33,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
-
-import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -91,26 +100,6 @@ def planted_fingerprints(spark, n: int):
     ).otherwise(base)
     return spark.range(n).select(F.col("id").alias("doc_id"), fp.alias("fp"))
 
-
-def train_sample(vecs, n_vecs: int, cap: int):
-    """Deterministic hash-mod training sample of about ``cap`` rows
-    (replayable, order-free): ``(mod, sample)``."""
-    mod = max(1, n_vecs // cap)
-    return mod, vecs.filter(F.xxhash64("vec_id") % mod == 0) if mod > 1 else vecs
-
-
-def write_grouped_codes(codes, n_groups: int, path: str) -> None:
-    """The grouped IVFPQ index layout: ``partitionBy(cell % n_groups)`` with
-    cells sorted inside each file — fewer, bigger files than one directory
-    per cell; parquet row-group stats skip non-probed cells."""
-    (
-        codes.withColumn("cell_grp", F.col("cell") % n_groups)
-        .repartition("cell_grp")
-        .sortWithinPartitions("cell_grp", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell_grp")
-        .parquet(path)
-    )
 
 
 def window_features(bars, by: list[str], order: list[str]):
@@ -185,747 +174,16 @@ def gb(totals: dict, since: dict | None = None) -> dict:
     }
 
 
-def flagship_main() -> None:
-    """One-order-higher probe (VERDICT r5 #9): the 3 flagship shapes —
-    OHLCV resample, backward as-of join, banded-hamming near-dup — at
-    ``--rows`` (default 100M), each with its FINAL-plan shuffle-exchange
-    count (AQE-final via obs.exchange_count(execute=True), which re-runs the
-    stage untimed) and JVM heap headroom after the stage. The claim under
-    test: exchange counts are identical to the 10M probe's — the plans
-    scale by partition width, not by new shuffles."""
-    total_rows = (
-        int(sys.argv[sys.argv.index("--rows") + 1])
-        if "--rows" in sys.argv else 100_000_000
-    )
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "100g")
-    spark = get_spark("bfdl-flagship")
-    from binance_futures_data_lake_spark.operators.textdedup import (
-        hamming_near_pairs,
-    )
-
-    stages: dict[str, dict] = {}
-
-    def stage(name: str, df) -> None:
-        dt = obs.run(spark, name, lambda: df)["best_s"]
-        n = df.count()
-        stages[name] = {
-            "sec": round(dt, 2),
-            "rows": n,
-            "rows_per_sec": int(n / dt) if dt else None,
-            "shuffle_exchanges": obs.exchange_count(df, execute=True),
-            **heap_gb(spark),
-        }
-
-    # 1000 symbols × total/1000 minutes; generation is in-plan (range +
-    # xxhash), so each stage regenerates instead of caching 100M wide rows
-    n_symbols = 1000
-    n_minutes = max(1440, total_rows // n_symbols)
-    symbols = tuple(f"SYM{i:04d}" for i in range(n_symbols))
-
-    def m1():
-        return synthetic_klines_m1(
-            spark, symbols=symbols, n_minutes=n_minutes, trend_amp=0.05
-        )
-
-    stage("flagship_resample_m5", resample_bars(m1(), 5, ["symbol"]))
-
-    base = m1().select("symbol", "ts", "close")
-    h1 = resample_bars(m1(), 60, ["symbol"]).select(
-        "symbol", "ts", F.col("close").alias("close_h1")
-    )
-    stage(
-        "flagship_asof_m1_from_h1",
-        asof_join_backward(base, h1, on="ts", by=["symbol"]),
-    )
-
-    fps = planted_fingerprints(spark, total_rows)
-    stage(
-        "flagship_hamming_band_join",
-        hamming_near_pairs(fps, "fp", max_hamming=3, bits=64, n_bands=4),
-    )
-
-    # DSIR scoring at 100M docs (r6): the selection tier's flagship shape.
-    # Generation is in-plan (range + md5 tokens, ~6 unigrams + 5 bigrams
-    # per doc ≈ 1.1B gram instances); the fit is one corpus scan ending
-    # in an 8192-row aggregate, scoring is the zero-exchange map-only
-    # literal-table pass — the claim under test is that BOTH plans keep
-    # their exchange counts from the 1M probe while rows scale 100×.
-    from binance_futures_data_lake_spark.operators.curation import (
-        dsir_fit, dsir_logweights,
-    )
-
-    # materialize the corpus to parquet first — that's the production
-    # shape (fit and scoring each scan storage once), and it keeps the
-    # gram expressions from re-inlining the md5 text generation on every
-    # reference (tokenizer expressions are evaluated per reference; a
-    # stored column is read once)
-    sel_dir = tempfile.mkdtemp(prefix="bfdl_dsir_")
-    try:
-        t0 = time.perf_counter()
-        spark.range(total_rows).select(
-            F.col("id").alias("doc_id"),
-            (F.col("id") % 50).cast("string").alias("source"),
-            F.concat_ws(
-                " ",
-                *[F.md5((F.col("id") * 17 + i).cast("string")) for i in range(6)],
-            ).alias("text"),
-        ).write.mode("overwrite").parquet(sel_dir)
-        gen_sec = round(time.perf_counter() - t0, 2)
-        sel_docs = spark.read.parquet(sel_dir)
-        t0 = time.perf_counter()
-        lam = dsir_fit(sel_docs, F.col("source") < "2", n_buckets=8192)
-        fit_sec = round(time.perf_counter() - t0, 2)
-        stage("flagship_dsir_score", dsir_logweights(sel_docs, lam))
-        stages["flagship_dsir_score"].update(
-            fit_sec=fit_sec, gen_write_sec=gen_sec, n_buckets=8192
-        )
-    finally:
-        shutil.rmtree(sel_dir, ignore_errors=True)
-
-    print(json.dumps({
-        "mode": "flagship", "rows": total_rows, "n_symbols": n_symbols,
-        "stages": stages,
-    }))
-    spark.stop()
-
-
 def _arg(flag: str, default: int) -> int:
     return int(sys.argv[sys.argv.index(flag) + 1]) if flag in sys.argv else default
 
 
-def pq_recall_main() -> None:
-    """Seeded-vs-trained PQ recall at probe scale (VERDICT r8 #2): the
-    committed artifact behind every recall claim in OPERATORS.md. Same
-    clustered generator as the main ANN probe (64d, 32 latent blocks,
-    100 queries, k=10), flat PQ (IVFADC over one all-zero cell) with
-    BOTH book types (seeded ``pq_residual_codebooks`` — the
-    SQL-replayable registry contract — and Lloyd-trained
-    ``pq_residual_codebooks_lloyd`` n_sub=16 × ks=256, the deploy
-    config), ADC and shortlist-reranked recall each, plus a shortlist
-    SWEEP (1000/2000/5000) on the trained books so the deploy story
-    states how recall is bought with shortlist instead of advertising
-    one number. ``--rows`` is the vector count (default 1M)."""
-    n_vecs = _arg("--rows", 1_000_000)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-    spark = get_spark("bfdl-pq-recall")
-    from binance_futures_data_lake_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_lloyd_centroids,
-        pq_ivf_adc_topk,
-        pq_ivf_rerank_topk,
-        pq_residual_codebooks,
-        pq_residual_codebooks_lloyd,
-    )
-
-    dim, ann_k = 64, 10
-    ann = clustered_vectors(spark, n_vecs, dim).cache()
-    ann.count()
-    annq = probe_queries(ann, n_vecs)
-    truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
-
-    rows: list[dict] = []
-
-    def measure(name: str, books_name: str, df_thunk, extra: dict) -> None:
-        t0 = time.perf_counter()
-        found = topk_pairs(df_thunk())
-        rows.append({
-            "stage": name, "books": books_name,
-            "recall_at_10": round(len(found & truth) / len(truth), 4),
-            "sec": round(time.perf_counter() - t0, 2), **extra,
-        })
-
-    flat = [(0, [0] * dim)]  # flat PQ: one zero cell, residual = vector
-    t0 = time.perf_counter()
-    seeded = pq_residual_codebooks(ann, flat, n_sub=16, ks=256)
-    seeded_sec = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    trained = pq_residual_codebooks_lloyd(ann, flat, n_sub=16, ks=256, iters=2)
-    trained_sec = round(time.perf_counter() - t0, 2)
-
-    def flat_adc(books):
-        return lambda: pq_ivf_adc_topk(ann, annq, flat, books, k=ann_k, nprobe=1)
-
-    def flat_rerank(books, sl):
-        return lambda: pq_ivf_rerank_topk(
-            ann, annq, flat, books, k=ann_k, shortlist=sl, nprobe=1)
-
-    measure("pq_adc", "seeded", flat_adc(seeded), {"codebook_sec": seeded_sec})
-    measure("pq_rerank_1000", "seeded", flat_rerank(seeded, 1000), {})
-    measure("pq_adc", "trained", flat_adc(trained), {"codebook_sec": trained_sec})
-    for sl in (1000, 2000, 5000):
-        measure(f"pq_rerank_{sl}", "trained", flat_rerank(trained, sl),
-                {"shortlist_pct_of_corpus": round(100.0 * sl / n_vecs, 3)})
-
-    # IVFADC rows (r10): residual encoding against Lloyd cell MEANS —
-    # the tier where raw ADC recall is bought with arithmetic instead
-    # of shortlist. Same 16×256 code budget as the flat trained books;
-    # nprobe sweeps the probe-vs-recall trade.
-    t0 = time.perf_counter()
-    cents = ivf_lloyd_centroids(ann, num_cells=32, iters=2)
-    cents_sec = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    res_books = pq_residual_codebooks_lloyd(ann, cents, n_sub=16, ks=256,
-                                            iters=2)
-    res_sec = round(time.perf_counter() - t0, 2)
-    for npb in (4, 8):
-        measure(
-            f"pq_ivfadc_nprobe{npb}", "residual",
-            lambda npb=npb: pq_ivf_adc_topk(
-                ann, annq, cents, res_books, k=ann_k, nprobe=npb),
-            {"codebook_sec": res_sec, "centroids_sec": cents_sec,
-             "num_cells": 32},
-        )
-    measure(
-        "pq_ivfadc_rerank_1000", "residual",
-        lambda: pq_ivf_rerank_topk(
-            ann, annq, cents, res_books, k=ann_k, shortlist=1000, nprobe=8),
-        {"num_cells": 32},
-    )
-
-    print(json.dumps({
-        "mode": "pq_recall", "n_vectors": n_vecs, "dim": dim,
-        "n_queries": 100, "k": ann_k, "n_sub": 16, "ks": 256, "rows": rows,
-    }))
-    spark.stop()
-
-
-def pq_ivf_scan_main() -> None:
-    """IVFADC scan economics at ``--rows`` (default 10M) vectors: the
-    headline scale property of the inverted file is that the ADC scan
-    touches ~nprobe/num_cells of the corpus (cell-id partition pruning
-    at 100 TB; an in-kernel cell mask here), so the compressed-tier
-    query cost drops by the pruning factor ON TOP of the recall lift
-    the 1M probe measured. Seeded books/cells both sides (throughput
-    row — recall is the 1M probe's job): flat full-scan ADC vs IVFADC
-    at nprobe 4 and 8 of 32 cells, same 16×256 code budget, 100
-    queries."""
-    n_vecs = _arg("--rows", 10_000_000)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "64g")
-    spark = get_spark("bfdl-pq-ivf-scan")
-    from binance_futures_data_lake_spark.operators.similarity import (
-        grid_vectors,
-        pq_encode,
-        pq_ivf_adc_codes_topk,
-        pq_ivf_adc_topk,
-        pq_residual_codebooks,
-        seed_cells,
-    )
-
-    dim, ann_k = 64, 10
-    ann = clustered_vectors(spark, n_vecs, dim).cache()
-    ann.count()
-    annq = probe_queries(ann, n_vecs)
-
-    t0 = time.perf_counter()
-    flat = [(0, [0] * dim)]  # flat PQ: one zero cell, residual = vector
-    flat_books = pq_residual_codebooks(ann, flat, n_sub=16, ks=256)
-    cents = seed_cells(grid_vectors(ann), 32)
-    res_books = pq_residual_codebooks(ann, cents, n_sub=16, ks=256)
-    books_sec = round(time.perf_counter() - t0, 2)
-
-    rows = []
-
-    def run(name, thunk, extra=None):
-        t0 = time.perf_counter()
-        n = thunk().count()
-        rows.append({
-            "stage": name, "sec": round(time.perf_counter() - t0, 2),
-            "result_rows": n, **(extra or {}),
-        })
-
-    raw_dir = tempfile.mkdtemp(prefix="bfdl_pqraw_")
-    idx_dir = tempfile.mkdtemp(prefix="bfdl_pqidx_")
-    try:
-        # the raw corpus as parquet — what the full-scan tier reads at
-        # deploy (the in-memory `ann` cache would flatter it)
-        ann.write.mode("overwrite").parquet(raw_dir)
-        raw = spark.read.parquet(raw_dir)
-        # the IVFPQ index: encode once, persist partitioned by cell
-        t0 = time.perf_counter()
-        pq_encode(ann, cents, res_books).write.mode("overwrite") \
-            .partitionBy("cell").parquet(idx_dir)
-        encode_sec = round(time.perf_counter() - t0, 2)
-        codes = spark.read.parquet(idx_dir)
-        sizes = {
-            "raw_parquet_mb": du_mb_and_files(raw_dir)[0],
-            "codes_parquet_mb": du_mb_and_files(idx_dir)[0],
-        }
-        run("pq_adc_full_scan_raw",
-            lambda: pq_ivf_adc_topk(raw, annq, flat, flat_books, k=ann_k,
-                                    nprobe=1))
-        run("pq_ivfadc_inline_encode_nprobe4",
-            lambda: pq_ivf_adc_topk(raw, annq, cents, res_books, k=ann_k,
-                                    nprobe=4))
-        run("codes_all_cells", lambda: pq_ivf_adc_codes_topk(
-            codes, annq, cents, res_books, k=ann_k, nprobe=32),
-            {"corpus_fraction_scored": 1.0})
-        for npb in (4, 8):
-            run(
-                f"codes_nprobe{npb}",
-                lambda npb=npb: pq_ivf_adc_codes_topk(
-                    codes, annq, cents, res_books, k=ann_k, nprobe=npb),
-                {"corpus_fraction_scored": round(npb / 32, 4)},
-            )
-        print(json.dumps({
-            "mode": "pq_ivf_scan", "n_vectors": n_vecs, "dim": dim,
-            "n_queries": 100, "k": ann_k, "n_sub": 16, "ks": 256,
-            "num_cells": 32, "codebooks_sec": books_sec,
-            "encode_write_sec": encode_sec, **sizes, "rows": rows,
-        }))
-    finally:
-        shutil.rmtree(raw_dir, ignore_errors=True)
-        shutil.rmtree(idx_dir, ignore_errors=True)
-    spark.stop()
-
-
-def pq_cells_main() -> None:
-    """IVFADC at REALISTIC cell counts (VERDICT r10 #2). The committed
-    r10 rows ran num_cells=32 at 1M/10M — each probe scans 3.1% of the
-    corpus per cell and nprobe 4 vs 8 TIE, so the recall/probe-cost
-    trade was unmeasured in the regime a deployment runs
-    (num_cells ≈ √N). This probe runs ``--cells`` (default 1024) cells
-    over ``--rows`` (default 1M) vectors with an nprobe sweep, plus the
-    code-index layout economics at thousands of partitions:
-
-    * TRAINING stays bounded by a deterministic hash-mod SAMPLE
-      (``--train-rows`` cap, FAISS-style ~64-256 points/cell): the
-      centroid/codebook builders take any DataFrame, so sampled Lloyd
-      is composition, not a new operator — the driver-side reduce is
-      batches×num_cells rows and would otherwise scale with the full
-      corpus at thousands of cells.
-    * RECALL-vs-nprobe on the trained index against brute-force truth
-      (same clustered generator as --pq-recall: 32 latent blocks, so at
-      1k+ cells each block spans ~cells/32 cells and nprobe must climb
-      to cover a block — the regime where the trade exists at all).
-    * LAYOUT: the materialized code index written (a) partitionBy(cell)
-      — nprobe/num_cells pruning but num_cells directories/files — vs
-      (b) partitionBy(cell_grp = cell % --groups) with cells SORTED
-      inside each partition file — fewer, bigger files; pruning reads
-      whole groups but parquet row-group stats skip non-probed cells
-      inside. File counts, written bytes, write wall, and per-nprobe
-      query wall for both.
-    """
-    n_vecs = _arg("--rows", 1_000_000)
-    num_cells = _arg("--cells", 1024)
-    train_cap = _arg("--train-rows", 262_144)
-    n_groups = _arg("--groups", 128)
-    os.environ.setdefault(
-        "SPARK_DRIVER_MEMORY", "64g" if n_vecs > 2_000_000 else "32g"
-    )
-    spark = get_spark("bfdl-pq-cells")
-    from binance_futures_data_lake_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_lloyd_centroids,
-        pq_encode,
-        pq_ivf_adc_codes_topk,
-        pq_residual_codebooks_lloyd,
-    )
-
-    dim, ann_k = 64, 10
-    ann = clustered_vectors(spark, n_vecs, dim).cache()
-    ann.count()
-    annq = probe_queries(ann, n_vecs)
-
-    mod, train = train_sample(ann, n_vecs, train_cap)
-    n_train = train.count()
-    t0 = time.perf_counter()
-    cents = ivf_lloyd_centroids(train, num_cells=num_cells, iters=2)
-    cents_sec = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    res_books = pq_residual_codebooks_lloyd(
-        train, cents, n_sub=16, ks=256, iters=2
-    )
-    books_sec = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
-    truth_sec = round(time.perf_counter() - t0, 2)
-
-    enc = pq_encode(ann, cents, res_books)
-    layouts: dict[str, dict] = {}
-    idx_cell = tempfile.mkdtemp(prefix="bfdl_pqcells_")
-    idx_grp = tempfile.mkdtemp(prefix="bfdl_pqgrp_")
-    try:
-        t0 = time.perf_counter()
-        # repartition ON the partition column: one task per cell group
-        # of the shuffle → exactly one file per cell directory instead
-        # of (tasks × cells) fragments
-        enc.repartition("cell").write.mode("overwrite") \
-            .partitionBy("cell").parquet(idx_cell)
-        w1 = round(time.perf_counter() - t0, 2)
-        mb1, nf1 = du_mb_and_files(idx_cell)
-        layouts["partition_per_cell"] = {
-            "write_sec": w1, "files": nf1, "mb": mb1,
-            "partitions": num_cells,
-        }
-        t0 = time.perf_counter()
-        write_grouped_codes(enc, n_groups, idx_grp)
-        w2 = round(time.perf_counter() - t0, 2)
-        mb2, nf2 = du_mb_and_files(idx_grp)
-        layouts["partition_per_group"] = {
-            "write_sec": w2, "files": nf2, "mb": mb2,
-            "partitions": n_groups,
-        }
-
-        codes_cell = spark.read.parquet(idx_cell)
-        codes_grp = spark.read.parquet(idx_grp)
-        rows: list[dict] = []
-        for npb in (1, 2, 4, 8, 16, 32):
-            if npb > num_cells:
-                continue
-            t0 = time.perf_counter()
-            found = topk_pairs(pq_ivf_adc_codes_topk(
-                codes_cell, annq, cents, res_books, k=ann_k, nprobe=npb
-            ))
-            sec_cell = round(time.perf_counter() - t0, 2)
-            t0 = time.perf_counter()
-            found_g = topk_pairs(pq_ivf_adc_codes_topk(
-                codes_grp.drop("cell_grp"), annq, cents, res_books,
-                k=ann_k, nprobe=npb
-            ))
-            sec_grp = round(time.perf_counter() - t0, 2)
-            assert found_g == found  # layout must not change results
-            rows.append({
-                "nprobe": npb,
-                "recall_at_10": round(len(found & truth) / len(truth), 4),
-                "sec_partition_per_cell": sec_cell,
-                "sec_partition_per_group": sec_grp,
-                "corpus_fraction": round(npb / num_cells, 5),
-            })
-            print(json.dumps(rows[-1]), file=sys.stderr)
-        # the full production recipe at deploy cell counts: ADC
-        # shortlist (0.1% of corpus) + exact cosine re-rank — the row
-        # that says what recall the deployed tier actually ships
-        from binance_futures_data_lake_spark.operators.similarity import (
-            pq_ivf_rerank_topk,
-        )
-
-        sl = max(1000, n_vecs // 1000)
-        t0 = time.perf_counter()
-        found_rr = topk_pairs(pq_ivf_rerank_topk(
-            ann, annq, cents, res_books, k=ann_k, shortlist=sl,
-            nprobe=16,
-        ))
-        rerank = {
-            "nprobe": 16, "shortlist": sl,
-            "shortlist_pct_of_corpus": round(100.0 * sl / n_vecs, 3),
-            "recall_at_10": round(len(found_rr & truth) / len(truth), 4),
-            "sec_inline_encode": round(time.perf_counter() - t0, 2),
-        }
-        # the deployed form: shortlist from the stored codes (no
-        # per-query encode), exact rerank over raw vectors — must be
-        # bit-equal and is the wall a deployment pays
-        from binance_futures_data_lake_spark.operators.similarity import (
-            pq_ivf_rerank_codes_topk,
-        )
-
-        t0 = time.perf_counter()
-        found_rc = topk_pairs(pq_ivf_rerank_codes_topk(
-            ann, codes_cell, annq, cents, res_books, k=ann_k,
-            shortlist=sl, nprobe=16,
-        ))
-        rerank["sec_codes_index"] = round(time.perf_counter() - t0, 2)
-        assert found_rc == found_rr  # deployed form is bit-equal
-        print(json.dumps({"rerank": rerank}), file=sys.stderr)
-        print(json.dumps({
-            "mode": "pq_cells", "n_vectors": n_vecs, "dim": dim,
-            "num_cells": num_cells, "n_train": n_train,
-            "train_mod": mod, "n_queries": 100, "k": ann_k,
-            "n_sub": 16, "ks": 256,
-            "centroids_sec": cents_sec, "res_books_sec": books_sec,
-            "truth_sec": truth_sec, "layouts": layouts, "rows": rows,
-            "rerank": rerank,
-        }))
-    finally:
-        shutil.rmtree(idx_cell, ignore_errors=True)
-        shutil.rmtree(idx_grp, ignore_errors=True)
-    spark.stop()
-
-
-def pq_recipe_main() -> None:
-    """High-recall deployed-ANN recipe at deploy cell counts (VERDICT
-    r11 #3). The r11 rerank row was a single point (nprobe=16,
-    shortlist 0.1% → recall 0.869 at 1M, 0.580 at 10M); a deployment
-    with a recall TARGET still has no committed (nprobe, shortlist)
-    pair at num_cells ≈ √N. This probe:
-
-    * builds the materialized IVFPQ index once (same clustered
-      generator, sampled-Lloyd training and grouped ``cell % --groups``
-      layout as ``--pq-cells`` — the layout r11 priced as the nprobe≥16
-      winner),
-    * computes the PROBE-COVERAGE CEILING per nprobe first (fraction of
-      brute-force-true neighbors whose cell is among the query's probed
-      cells — recall through any shortlist can never exceed it, and it
-      costs driver-side numpy only), so the sweep spends walls only on
-      nprobes that can reach ``--target-recall-pct`` plus the largest
-      sub-target one for the curve,
-    * sweeps nprobe × shortlist∈{0.1%, 0.3%, 1%} on
-      ``pq_ivf_rerank_codes_topk`` (single-run walls for grid cells),
-    * re-times the cheapest pair reaching the target best-of-3 with
-      spread (the pinned BASELINE.md methodology for committed walls),
-      or commits the measured ceiling curve if the target is
-      unreachable at sane cost.
-    """
-    n_vecs = _arg("--rows", 1_000_000)
-    num_cells = _arg("--cells", max(32, int(round(n_vecs ** 0.5))))
-    train_cap = _arg(
-        "--train-rows", 262_144 if n_vecs <= 2_000_000 else 1_000_000
-    )
-    n_groups = _arg("--groups", 256)
-    target = _arg("--target-recall-pct", 95) / 100.0
-    os.environ.setdefault(
-        "SPARK_DRIVER_MEMORY", "64g" if n_vecs > 2_000_000 else "32g"
-    )
-    spark = get_spark("bfdl-pq-recipe")
-    from binance_futures_data_lake_spark.operators.similarity import (
-        _grid_assign_residual,
-        _ivf_query_probe_tables,
-        brute_force_topk,
-        ivf_lloyd_centroids,
-        pq_encode,
-        pq_ivf_rerank_codes_topk,
-        pq_residual_codebooks_lloyd,
-        release_query_table_broadcasts,
-    )
-
-    dim, ann_k = 64, 10
-    ann = clustered_vectors(spark, n_vecs, dim).cache()
-    ann.count()
-    annq = probe_queries(ann, n_vecs)
-
-    mod, train = train_sample(ann, n_vecs, train_cap)
-    n_train = train.count()
-    t0 = time.perf_counter()
-    cents = ivf_lloyd_centroids(train, num_cells=num_cells, iters=2)
-    cents_sec = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    books = pq_residual_codebooks_lloyd(train, cents, n_sub=16, ks=256, iters=2)
-    books_sec = round(time.perf_counter() - t0, 2)
-    sub = len(books[0][0])
-
-    idx = tempfile.mkdtemp(prefix="bfdl_pqrecipe_")
-    try:
-        t0 = time.perf_counter()
-        write_grouped_codes(pq_encode(ann, cents, books), n_groups, idx)
-        encode_write_sec = round(time.perf_counter() - t0, 2)
-        codes_df = spark.read.parquet(idx).drop("cell_grp")
-
-        t0 = time.perf_counter()
-        truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
-        truth_sec = round(time.perf_counter() - t0, 2)
-        truth_ids = list({nid for _, nid in truth})
-        cell_of = {
-            r.id: r.cell
-            for r in codes_df.filter(F.col("id").isin(truth_ids))
-            .select("id", "cell").collect()
-        }
-
-        # --- probe-coverage ceiling per nprobe (driver-side numpy) ---
-        C = [np.array(b, dtype=np.float64) for b in books]
-        cell_ids, c_mat, _ = _grid_assign_residual(cents)
-        ceilings: list[dict] = []
-        candidate_nprobes = [
-            npb for npb in (16, 32, 64, 128, 256, 512) if npb <= num_cells
-        ]
-        for npb in candidate_nprobes:
-            qp = _ivf_query_probe_tables(
-                annq, C, cell_ids, c_mat, npb, "vec_id", "embedding", sub
-            )
-            q_ids, probes = qp[0], qp[1]
-            probed: dict[int, set] = {}
-            for cell, qis in probes.items():
-                for qi in qis:
-                    probed.setdefault(int(q_ids[qi]), set()).add(cell)
-            covered = sum(
-                1 for q, nid in truth if cell_of.get(nid) in probed.get(q, ())
-            )
-            ceilings.append({
-                "nprobe": npb,
-                "probe_coverage_ceiling": round(covered / len(truth), 4),
-                "codes_scan_fraction": round(npb / num_cells, 5),
-            })
-            print(json.dumps(ceilings[-1]), file=sys.stderr)
-
-        # sweep only nprobes that CAN reach the target, plus the
-        # largest sub-target one so the committed curve shows the knee
-        able = [c["nprobe"] for c in ceilings
-                if c["probe_coverage_ceiling"] >= target]
-        below = [c["nprobe"] for c in ceilings
-                 if c["probe_coverage_ceiling"] < target]
-        sweep_nprobes = sorted(set(able[:3] + below[-1:]))
-
-        def run_combo(npb: int, sl: int) -> tuple[set, float]:
-            t0 = time.perf_counter()
-            found = topk_pairs(pq_ivf_rerank_codes_topk(
-                ann, codes_df, annq, cents, books, k=ann_k,
-                shortlist=sl, nprobe=npb,
-            ))
-            sec = round(time.perf_counter() - t0, 2)
-            release_query_table_broadcasts()
-            return found, sec
-
-        grid: list[dict] = []
-        for npb in sweep_nprobes:
-            for frac in (0.001, 0.003, 0.01):
-                sl = max(ann_k, int(n_vecs * frac))
-                found, sec = run_combo(npb, sl)
-                grid.append({
-                    "nprobe": npb, "shortlist": sl,
-                    "shortlist_pct_of_corpus": round(100.0 * frac, 2),
-                    "recall_at_10": round(len(found & truth) / len(truth), 4),
-                    "codes_scan_fraction": round(npb / num_cells, 5),
-                    "sec_single_run": sec,
-                })
-                print(json.dumps(grid[-1]), file=sys.stderr)
-
-        reaching = [g for g in grid if g["recall_at_10"] >= target]
-        recipe = None
-        if reaching:
-            # cheapest by single-run wall; commit best-of-3 with spread
-            pick = min(reaching, key=lambda g: g["sec_single_run"])
-            walls, sets_ = [], []
-            for _ in range(3):
-                fnd, sec = run_combo(pick["nprobe"], pick["shortlist"])
-                walls.append(sec)
-                sets_.append(fnd)
-            assert sets_[0] == sets_[1] == sets_[2]  # deterministic
-            recipe = {
-                **{k: pick[k] for k in (
-                    "nprobe", "shortlist", "shortlist_pct_of_corpus",
-                    "recall_at_10", "codes_scan_fraction")},
-                "sec_best_of_3": min(walls),
-                "sec_spread": [min(walls), max(walls)],
-            }
-            print(json.dumps({"recipe": recipe}), file=sys.stderr)
-
-        print(json.dumps({
-            "mode": "pq_recipe", "n_vectors": n_vecs, "dim": dim,
-            "num_cells": num_cells, "n_train": n_train, "train_mod": mod,
-            "n_queries": 100, "k": ann_k, "n_sub": 16, "ks": 256,
-            "target_recall": target,
-            "centroids_sec": cents_sec, "res_books_sec": books_sec,
-            "encode_write_sec": encode_write_sec, "truth_sec": truth_sec,
-            "layout": f"partitionBy(cell % {n_groups}), cells sorted in file",
-            "probe_coverage_ceilings": ceilings,
-            "grid": grid,
-            "recipe": recipe,
-        }))
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-    spark.stop()
-
-
-def pq_build_main() -> None:
-    """Index BUILD priced at 100M × ~10k cells (VERDICT r11 #4): the
-    ``--pq-cells`` build half only — sampled-Lloyd centroids + residual
-    codebooks (both trained on a 1M hash-mod sample), full-corpus
-    encode, grouped-layout write — plus a recall spot-check at one
-    nprobe against brute-force truth. Differences from --pq-cells, all
-    of them the 100M-shape lessons:
-
-    * the corpus is NEVER cached (100M × 64 floats is ~30-80 GB
-      resident; the generator is deterministic hash math, so each of
-      the three passes — train filter, encode, truth — recomputes it
-      column-side for ~a minute instead),
-    * only the grouped layout is written (10k one-file-per-cell
-      directories is a filesystem antipattern; cell % --groups with
-      cells sorted inside each file was the r11 nprobe≥16 winner).
-    """
-    n_vecs = _arg("--rows", 100_000_000)
-    num_cells = _arg("--cells", 10_000)
-    train_cap = _arg("--train-rows", 1_000_000)
-    n_groups = _arg("--groups", 256)
-    npb = _arg("--nprobe", 16)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "64g")
-    spark = get_spark("bfdl-pq-build")
-    from binance_futures_data_lake_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_lloyd_centroids,
-        pq_encode,
-        pq_ivf_adc_codes_topk,
-        pq_ivf_rerank_codes_topk,
-        pq_residual_codebooks_lloyd,
-        release_query_table_broadcasts,
-    )
-
-    dim, ann_k = 64, 10
-    ann = clustered_vectors(spark, n_vecs, dim)
-    annq = probe_queries(ann, n_vecs)
-
-    mod, train = train_sample(ann, n_vecs, train_cap)
-    train = train.cache()  # the SAMPLE is cached (≤1M rows); the corpus never is
-    n_train = train.count()
-
-    t0 = time.perf_counter()
-    cents = ivf_lloyd_centroids(train, num_cells=num_cells, iters=2)
-    cents_sec = round(time.perf_counter() - t0, 2)
-    print(json.dumps({"stage": "centroids", "sec": cents_sec,
-                      "live_cells": len(cents)}), file=sys.stderr)
-    t0 = time.perf_counter()
-    books = pq_residual_codebooks_lloyd(
-        train, cents, n_sub=16, ks=256, iters=2
-    )
-    books_sec = round(time.perf_counter() - t0, 2)
-    print(json.dumps({"stage": "res_books", "sec": books_sec}),
-          file=sys.stderr)
-    train.unpersist()
-
-    idx = tempfile.mkdtemp(prefix="bfdl_pqbuild_")
-    try:
-        t0 = time.perf_counter()
-        write_grouped_codes(pq_encode(ann, cents, books), n_groups, idx)
-        encode_write_sec = round(time.perf_counter() - t0, 2)
-        mb, nf = du_mb_and_files(idx)
-        print(json.dumps({"stage": "encode_write", "sec": encode_write_sec,
-                          "mb": mb, "files": nf}), file=sys.stderr)
-        codes_df = spark.read.parquet(idx).drop("cell_grp")
-
-        t0 = time.perf_counter()
-        truth = topk_pairs(brute_force_topk(ann, annq, k=ann_k))
-        truth_sec = round(time.perf_counter() - t0, 2)
-        print(json.dumps({"stage": "truth", "sec": truth_sec}),
-              file=sys.stderr)
-
-        t0 = time.perf_counter()
-        found = topk_pairs(pq_ivf_adc_codes_topk(
-            codes_df, annq, cents, books, k=ann_k, nprobe=npb
-        ))
-        adc_sec = round(time.perf_counter() - t0, 2)
-        release_query_table_broadcasts()
-        adc_recall = round(len(found & truth) / len(truth), 4)
-        print(json.dumps({"stage": "adc_spot", "sec": adc_sec,
-                          "recall_at_10": adc_recall}), file=sys.stderr)
-        # deployed rerank spot: shortlist 10k/query (0.01% at 100M —
-        # |Q|·shortlist = 1M rerank rows, the broadcast-semi-join bound)
-        sl = 10_000
-        t0 = time.perf_counter()
-        found_rr = topk_pairs(pq_ivf_rerank_codes_topk(
-            ann, codes_df, annq, cents, books, k=ann_k,
-            shortlist=sl, nprobe=npb,
-        ))
-        rerank_sec = round(time.perf_counter() - t0, 2)
-        release_query_table_broadcasts()
-        rr_recall = round(len(found_rr & truth) / len(truth), 4)
-        print(json.dumps({
-            "mode": "pq_build", "n_vectors": n_vecs, "dim": dim,
-            "num_cells": num_cells, "live_cells": len(cents),
-            "n_train": n_train, "train_mod": mod,
-            "n_queries": 100, "k": ann_k, "n_sub": 16, "ks": 256,
-            "centroids_sec": cents_sec, "res_books_sec": books_sec,
-            "encode_write_sec": encode_write_sec,
-            "index_mb": mb, "index_files": nf,
-            "layout": f"partitionBy(cell % {n_groups}), cells sorted in file",
-            "truth_sec": truth_sec,
-            "spot_nprobe": npb,
-            "adc_spot": {"sec": adc_sec, "recall_at_10": adc_recall},
-            "rerank_spot": {"sec": rerank_sec, "recall_at_10": rr_recall,
-                            "shortlist": sl,
-                            "shortlist_pct_of_corpus":
-                                round(100.0 * sl / n_vecs, 3)},
-        }))
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-    spark.stop()
+def timed(spark, label: str, thunk):
+    """``thunk()`` run once under ``obs.run`` (a returned DataFrame is
+    forced inside the timer): its value, wall seconds and run record."""
+    box = {}
+    rec = obs.run(spark, label, lambda: box.setdefault("v", thunk()))
+    return box["v"], round(rec["best_s"], 2), rec
 
 
 def cc_main() -> None:
@@ -962,10 +220,9 @@ def cc_main() -> None:
         snap["prev"] = cur
         rounds.append(info)
 
-    t0 = time.perf_counter()
-    df = connected_components(cc_edges, on_round=on_round)
-    obs.force(df)
-    wall = round(time.perf_counter() - t0, 2)
+    df, wall, _ = timed(
+        spark, "cc", lambda: connected_components(cc_edges, on_round=on_round)
+    )
     label_phase = gb(obs.stage_totals(spark), since=snap["prev"])
     mislabeled = chain_mislabels(df, chain)
     print(json.dumps({
@@ -976,255 +233,6 @@ def cc_main() -> None:
         **heap_gb(spark),
         "rounds": rounds,
         "label_phase_deltas": label_phase,
-    }))
-    spark.stop()
-
-
-def cc_scattered_main() -> None:
-    """Adversarial-shape CC at depth (VERDICT r10 #4): a scattered
-    random graph — ``--rows`` nodes (default 10M) × ``--edges-per-node``
-    (default 3) hash-random edges, near-one-giant-component — through
-    the FULL distributed contraction loop (``prepass=False``,
-    ``graph.DRIVER_MAX_EDGES = 0`` so neither the round-0 fold nor the driver
-    short-circuit can hide the multi-round regime), with per-round
-    edge counts and shuffle/spill deltas. This is the regime the 100M
-    chain probe cannot see: chains collapse in round 0; a scattered
-    graph folds nothing locally and must shrink geometrically through
-    the shuffle loop.
-
-    Correctness is pinned against a DRIVER ground truth: the edge list
-    is collected (bounded: rows×epn×16 bytes, ~480 MB at 10M×3) and a
-    union-find replay computes every node's min-id component; the probe
-    asserts ZERO mislabels by exact comparison, plus zero cross-edge
-    label violations Spark-side."""
-    total_rows = _arg("--rows", 10_000_000)
-    epn = _arg("--edges-per-node", 3)
-    os.environ.setdefault(
-        "SPARK_DRIVER_MEMORY", "64g" if total_rows > 2_000_000 else "32g"
-    )
-    spark = get_spark("bfdl-cc-scattered")
-    from binance_futures_data_lake_spark.operators import graph
-
-    graph.DRIVER_MAX_EDGES = 0
-    n = total_rows
-    edges = (
-        spark.range(n * epn)
-        .select(
-            (((F.xxhash64(F.col("id"), F.lit("u")) % n) + n) % n).alias("doc_a"),
-            (((F.xxhash64(F.col("id"), F.lit("v")) % n) + n) % n).alias("doc_b"),
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .cache()
-    )
-    n_edges = edges.count()
-
-    rounds: list[dict] = []
-    snap = {"prev": obs.stage_totals(spark)}
-
-    def on_round(info: dict) -> None:
-        cur = obs.stage_totals(spark)
-        info.update(gb(cur, since=snap["prev"]))
-        info["heap_used_gb"] = heap_gb(spark)["heap_used_gb"]
-        snap["prev"] = cur
-        rounds.append(info)
-        print(json.dumps(info), file=sys.stderr)
-
-    t0 = time.perf_counter()
-    df = graph.connected_components(
-        edges, prepass=False, on_round=on_round
-    ).cache()
-    obs.force(df)
-    wall = round(time.perf_counter() - t0, 2)
-
-    # Spark-side consistency: no edge may cross components
-    lbl_a = df.select(F.col("id").alias("doc_a"), F.col("comp").alias("ca"))
-    lbl_b = df.select(F.col("id").alias("doc_b"), F.col("comp").alias("cb"))
-    violations = (
-        edges.join(lbl_a, "doc_a").join(lbl_b, "doc_b")
-        .filter(F.col("ca") != F.col("cb")).count()
-    )
-    n_comp_spark = df.select("comp").distinct().count()
-
-    # driver ground truth: exact union-find replay over the same edges
-    t0 = time.perf_counter()
-    epdf = edges.toPandas()
-    ua = epdf["doc_a"].to_numpy()
-    ub = epdf["doc_b"].to_numpy()
-    parent = np.arange(n, dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, int(parent[x])
-        return root
-
-    for i in range(ua.size):
-        ra, rb = find(int(ua[i])), find(int(ub[i]))
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    # resolve every edge-touched node to its min-id root (roots were
-    # always merged toward the smaller id, so the root IS the min id)
-    touched = np.union1d(np.unique(ua), np.unique(ub))
-    truth = {int(x): find(int(x)) for x in touched}
-    truth_sec = round(time.perf_counter() - t0, 2)
-
-    got = {int(r["id"]): int(r["comp"]) for r in df.toPandas().to_dict("records")}
-    mislabeled = sum(1 for k, v in truth.items() if got.get(k) != v)
-    n_comp_truth = len({v for v in truth.values()})
-
-    print(json.dumps({
-        "mode": "cc_scattered", "n_nodes": n, "n_edges": n_edges,
-        "edges_per_node": epn, "sec": wall,
-        "rows_per_sec": int(n / wall) if wall else None,
-        "mislabeled": mislabeled, "cross_edge_violations": violations,
-        "n_components_spark": n_comp_spark,
-        "n_components_truth": n_comp_truth,
-        "truth_replay_sec": truth_sec,
-        "heap_max_gb": heap_gb(spark)["heap_max_gb"],
-        "rounds": rounds,
-    }))
-    spark.stop()
-
-
-def ambient_main() -> None:
-    """Fork/exec-storm experiment (VERDICT r10 #3): two rounds of
-    ambient caveats named "fork/exec storms of 32 Python workers" as
-    the suspected cause of the 29.9/81.1/70.4 s spread on identical
-    CC-10M runs, but nothing tested it. This mode runs ``--reps``
-    (default 3) back-to-back CC probes at ``--rows`` (default 10M) in
-    ONE session, and for each rep records (a) wall, (b) the number of
-    DISTINCT pyspark worker/daemon processes observed via a 0.2 s
-    /proc ancestry sampler — the direct fork-storm signal — and (c) a
-    single-process CPU microbenchmark between reps (machine-load
-    control). ``--no-worker-reuse`` flips
-    ``spark.python.worker.reuse=false`` so the reuse hypothesis is
-    testable by diffing two invocations: if reuse=true pins worker
-    count near 32 and the spread persists, forks are exonerated; if
-    reuse=false multiplies spawns AND wall, the storm is confirmed
-    and probe/bench sessions adopt the pin."""
-    import threading
-
-    total_rows = _arg("--rows", 10_000_000)
-    reps = _arg("--reps", 3)
-    reuse = "false" if "--no-worker-reuse" in sys.argv else "true"
-    os.environ.setdefault(
-        "SPARK_DRIVER_MEMORY", "64g" if total_rows > 20_000_000 else "32g"
-    )
-    spark = get_spark(
-        "bfdl-ambient", overrides={"spark.python.worker.reuse": reuse}
-    )
-    from binance_futures_data_lake_spark.operators.graph import (
-        connected_components,
-    )
-
-    me = os.getpid()
-
-    def _ancestors(pid: int) -> list[int]:
-        out = []
-        for _ in range(32):
-            try:
-                with open(f"/proc/{pid}/status") as f:
-                    txt = f.read()
-            except OSError:
-                return out
-            ppid = None
-            for line in txt.splitlines():
-                if line.startswith("PPid:"):
-                    ppid = int(line.split()[1])
-                    break
-            if ppid is None or ppid == 0:
-                return out
-            out.append(ppid)
-            pid = ppid
-        return out
-
-    def _starttime(pid: int):
-        # field 22 of /proc/<pid>/stat — (pid, starttime) uniquely
-        # identifies a process incarnation, so PID reuse by an
-        # unrelated process can't inflate the live count (ADVICE r11)
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                stat = f.read()
-            return int(stat.rsplit(")", 1)[1].split()[19])
-        except (OSError, IndexError, ValueError):
-            return None
-
-    seen: dict[int, int] = {}  # pid -> starttime at first sighting
-    spawns = {"n": 0}  # total registrations, counting pid-reuse re-spawns
-    live_max = {"n": 0}
-    stop = threading.Event()
-
-    def _sampler():
-        while not stop.is_set():
-            live = 0
-            for d in os.listdir("/proc"):
-                if not d.isdigit():
-                    continue
-                pid = int(d)
-                st = _starttime(pid)
-                if st is None:
-                    continue
-                if seen.get(pid) == st:
-                    live += 1  # same incarnation still alive
-                    continue
-                try:
-                    with open(f"/proc/{pid}/comm") as f:
-                        comm = f.read().strip()
-                except OSError:
-                    continue
-                if not comm.startswith("python"):
-                    continue
-                if me in _ancestors(pid):
-                    seen[pid] = st
-                    spawns["n"] += 1
-                    live += 1
-            live_max["n"] = max(live_max["n"], live)
-            stop.wait(0.2)
-
-    th = threading.Thread(target=_sampler, daemon=True)
-    th.start()
-
-    def cpu_microbench() -> float:
-        a = np.arange(4_000_000, dtype=np.float64)
-        t0 = time.perf_counter()
-        for _ in range(20):
-            (a * 1.0000001).sum()
-        return round(time.perf_counter() - t0, 3)
-
-    chain = 10_000
-    cc_edges = chain_edges(spark, total_rows, chain)
-    rep_rows = []
-    for rep in range(reps):
-        spawned_before = spawns["n"]
-        cpu_before = cpu_microbench()
-        t0 = time.perf_counter()
-        df = connected_components(cc_edges)
-        obs.force(df)
-        wall = round(time.perf_counter() - t0, 2)
-        mislabeled = chain_mislabels(df, chain)
-        rep_rows.append({
-            "rep": rep, "sec": wall, "mislabeled": mislabeled,
-            "workers_spawned_this_rep": spawns["n"] - spawned_before,
-            "workers_spawned_total": spawns["n"],
-            "cpu_microbench_sec": cpu_before,
-        })
-        print(json.dumps(rep_rows[-1]), file=sys.stderr)
-    stop.set()
-    th.join(timeout=2)
-    walls = [r["sec"] for r in rep_rows]
-    print(json.dumps({
-        "mode": "ambient", "rows": total_rows,
-        "worker_reuse": reuse, "reps": reps,
-        "wall_best": min(walls), "wall_worst": max(walls),
-        "spread_pct": round(100.0 * (max(walls) - min(walls)) / min(walls), 1),
-        "workers_distinct_total": len(seen),
-        "workers_live_max": live_max["n"],
-        "rep_rows": rep_rows,
     }))
     spark.stop()
 
@@ -1273,9 +281,10 @@ def bpe_main() -> None:
         )
 
     def train(n: int, merges: int) -> tuple[float, int]:
-        t0 = time.perf_counter()
-        got = bpe_learn_merges(docs_frame(n), n_merges=merges).count()
-        return round(time.perf_counter() - t0, 2), got
+        learned, sec, _ = timed(
+            spark, "bpe", lambda: bpe_learn_merges(docs_frame(n), n_merges=merges)
+        )
+        return sec, learned.count()
 
     train(min(n_docs, 50_000), 3)  # untimed JVM/Arrow warmup
     base_sec, base_got = train(n_docs, 10)
@@ -1349,6 +358,29 @@ def streaming_main() -> None:
         "mode": "streaming", "n_batches": n_batches,
         "rows_per_batch": rows_per_batch,
     }
+
+    def ingest() -> None:
+        for bid in range(n_batches):
+            b = batch_frame(bid)
+            for s in sinks:
+                s(b, bid)
+
+    def reads() -> dict:
+        t = {}
+        cms, t["cms_read_sec"], _ = timed(spark, "cms_read", lambda: {
+            (r.seed, r.bucket): r.cnt
+            for r in read_sketch_state("cms", spark, root).collect()
+        })
+        hll, t["hll_read_sec"], _ = timed(spark, "hll_read", lambda: {
+            (r.event_type, r.bucket): r.mx
+            for r in read_sketch_state("hll", spark, root).collect()
+        })
+        kmv, t["kmv_read_sec"], _ = timed(spark, "kmv_read", lambda: sorted(
+            (r.event_type, r.hv)
+            for r in read_sketch_state("kmv", spark, root, k=1024).collect()
+        ))
+        return {"walls": t, "cms": cms, "hll": hll, "kmv": kmv}
+
     try:
         empty = spark.range(0).select(
             F.col("id").alias("event_id"),
@@ -1363,47 +395,15 @@ def streaming_main() -> None:
         for fam, p in params.items():
             init_sketch_state(fam, empty, root, **p)
         sinks = [sketch_delta_sink(fam, root, **p) for fam, p in params.items()]
-        t0 = time.perf_counter()
-        for bid in range(n_batches):
-            b = batch_frame(bid)
-            for s in sinks:
-                s(b, bid)
-        ingest_sec = round(time.perf_counter() - t0, 2)
+        _, ingest_sec, _ = timed(spark, "ingest", ingest)
         out["ingest_sec_all_families"] = ingest_sec
         out["ingest_rows_per_sec"] = int(n_batches * rows_per_batch / ingest_sec)
-
-        def reads() -> dict:
-            t = {}
-            t0 = time.perf_counter()
-            cms = {
-                (r.seed, r.bucket): r.cnt
-                for r in read_sketch_state("cms", spark, root).collect()
-            }
-            t["cms_read_sec"] = round(time.perf_counter() - t0, 2)
-            t0 = time.perf_counter()
-            hll = {
-                (r.event_type, r.bucket): r.mx
-                for r in read_sketch_state("hll", spark, root).collect()
-            }
-            t["hll_read_sec"] = round(time.perf_counter() - t0, 2)
-            t0 = time.perf_counter()
-            kmv = sorted(
-                (r.event_type, r.hv)
-                for r in read_sketch_state("kmv", spark, root, k=1024).collect()
-            )
-            t["kmv_read_sec"] = round(time.perf_counter() - t0, 2)
-            return {"walls": t, "cms": cms, "hll": hll, "kmv": kmv}
-
-    except Exception:
-        shutil.rmtree(root, ignore_errors=True)
-        raise
-    try:
         before = reads()
         out["state_parquet_files_before_fold"] = du_mb_and_files(root)[1]
         out["merge_on_read_before_fold"] = before["walls"]
-        t0 = time.perf_counter()
-        folded = compact_state(spark, root, kmv_k=1024)
-        out["fold_sec"] = round(time.perf_counter() - t0, 2)
+        folded, out["fold_sec"], _ = timed(
+            spark, "fold", lambda: compact_state(spark, root, kmv_k=1024)
+        )
         out["folded_families"] = sorted(folded)
         after = reads()
         out["state_parquet_files_after_fold"] = du_mb_and_files(root)[1]
@@ -1467,10 +467,12 @@ def streaming_dedup_main() -> None:
         )
         init_dedup_state(empty, root)
         sink = incremental_dedup_sink(root, out_dir)
-        t0 = time.perf_counter()
-        for bid in range(n_batches):
-            sink(batch_frame(bid), bid)
-        ingest_sec = round(time.perf_counter() - t0, 2)
+
+        def ingest() -> None:
+            for bid in range(n_batches):
+                sink(batch_frame(bid), bid)
+
+        _, ingest_sec, _ = timed(spark, "ingest", ingest)
         out["ingest_sec"] = ingest_sec
         out["ingest_docs_per_sec"] = int(n_batches * rows_per_batch / ingest_sec)
 
@@ -1481,14 +483,15 @@ def streaming_dedup_main() -> None:
             # collecting 48M sig rows to the driver
             walls, counts, sums = {}, {}, {}
             for fam in ("corpus", "sig", "exact"):
-                t0 = time.perf_counter()
-                st = _read_state(spark, os.path.join(root, fam))
-                row = st.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.xxhash64(*st.columns)).alias("cs"),
-                ).collect()[0]
+                def read(fam=fam):
+                    st = _read_state(spark, os.path.join(root, fam))
+                    return st.agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.sum(F.xxhash64(*st.columns)).alias("cs"),
+                    ).collect()[0]
+
+                row, walls[fam], _ = timed(spark, f"{fam}_read", read)
                 counts[fam], sums[fam] = row["n"], row["cs"]
-                walls[fam] = round(time.perf_counter() - t0, 2)
             return {"walls": walls, "counts": counts, "checksums": sums}
 
         before = reads()
@@ -1496,9 +499,9 @@ def streaming_dedup_main() -> None:
         out["merge_on_read_before_fold"] = {
             k: before[k] for k in ("walls", "counts")
         }
-        t0 = time.perf_counter()
-        folded = compact_state(spark, root)
-        out["fold_sec"] = round(time.perf_counter() - t0, 2)
+        folded, out["fold_sec"], _ = timed(
+            spark, "fold", lambda: compact_state(spark, root)
+        )
         out["folded_families"] = sorted(folded)
         after = reads()
         out["state_parquet_files_after_fold"] = du_mb_and_files(root)[1]
@@ -1517,30 +520,6 @@ def streaming_dedup_main() -> None:
 
 
 def main() -> None:
-    if "--flagship" in sys.argv:
-        flagship_main()
-        return
-    if "--pq-recipe" in sys.argv:
-        pq_recipe_main()
-        return
-    if "--pq-build" in sys.argv:
-        pq_build_main()
-        return
-    if "--pq-cells" in sys.argv:
-        pq_cells_main()
-        return
-    if "--pq-ivf-scan" in sys.argv:
-        pq_ivf_scan_main()
-        return
-    if "--pq-recall" in sys.argv:
-        pq_recall_main()
-        return
-    if "--cc-scattered" in sys.argv:
-        cc_scattered_main()
-        return
-    if "--ambient" in sys.argv:
-        ambient_main()
-        return
     if "--cc" in sys.argv:
         cc_main()
         return
@@ -1553,7 +532,7 @@ def main() -> None:
     if "--streaming" in sys.argv:
         streaming_main()
         return
-    total_rows = int(sys.argv[sys.argv.index("--rows") + 1]) if "--rows" in sys.argv else 10_000_000
+    total_rows = _arg("--rows", 10_000_000)
     n_symbols = 100
     n_minutes = max(1440, total_rows // n_symbols)
     # the 10M-row run caches several full-width frames while window sorts
@@ -1570,22 +549,15 @@ def main() -> None:
         """Time ``thunk`` (plan build + force) with its shuffle/spill
         totals — per-stage numbers name super-linear walls (sort spill vs
         plan change) instead of hypotheses. Returns the built frame."""
-        built = {}
-
-        def build():
-            built["df"] = thunk()
-            return built["df"]
-
-        rec = obs.run(spark, name, build)
-        dt = rec["best_s"]
-        n = built["df"].count()  # outside the timer; pruned count is cheap
+        df, dt, rec = timed(spark, name, thunk)
+        n = df.count()  # outside the timer; pruned count is cheap
         stages[name] = {
-            "sec": round(dt, 2),
+            "sec": dt,
             "rows_per_sec": int(n / dt) if dt else None,
             "rows": n,
             **gb(rec),
         }
-        return built["df"]
+        return df
 
     symbols = tuple(f"SYM{i:03d}" for i in range(n_symbols))
     m1 = synthetic_klines_m1(spark, symbols=symbols, n_minutes=n_minutes, trend_amp=0.05)
@@ -1782,9 +754,9 @@ def main() -> None:
         .cache()
     )
     sel.count()
-    t0 = time.perf_counter()
-    lam = dsir_fit(sel, F.col("source") < "2", n_buckets=8192)
-    dsir_fit_sec = round(time.perf_counter() - t0, 2)
+    lam, dsir_fit_sec, _ = timed(
+        spark, "dsir_fit", lambda: dsir_fit(sel, F.col("source") < "2", n_buckets=8192)
+    )
     dsir_scored = dsir_logweights(sel, lam)
     stage("dsir_score_1m_docs", lambda: dsir_scored)
     stages["dsir_score_1m_docs"].update(
@@ -1792,11 +764,9 @@ def main() -> None:
         fit_sec=dsir_fit_sec,
         scoring_shuffle_exchanges=obs.exchange_count(dsir_scored),
     )
-    t0 = time.perf_counter()
-    bloom_words = bloom_bitset(
+    bloom_words, bloom_build_sec, _ = timed(spark, "bloom_bitset", lambda: bloom_bitset(
         sel.filter(F.col("doc_id") % 97 == 0), m_bits=1 << 19, k=4
-    )
-    bloom_build_sec = round(time.perf_counter() - t0, 2)
+    ))
     bl = bloom_decontam(
         sel.filter(F.col("doc_id") % 97 != 0), bloom_words, m_bits=1 << 19, k=4
     )
@@ -1846,9 +816,8 @@ def main() -> None:
     # measured recall ≈ 0 here), 16 subspaces ×
     # 256 codewords → 16 one-byte codes/vector (32× compression vs
     # float64), ADC scan in one zero-shuffle kernel pass, shortlist-1000
-    # exact re-rank on top. Recall claims live in the dedicated
-    # ``--pq-recall`` mode (seeded-vs-trained + shortlist sweep at 1M);
-    # this stage's claim is the wall/exchange shape.
+    # exact re-rank on top. The seeded-vs-trained recall and shortlist
+    # sweep at 1M are committed in SCALE_PROBE_r9.json and _r10.json.
     from binance_futures_data_lake_spark.operators.similarity import (
         pq_ivf_adc_topk,
         pq_ivf_rerank_topk,
@@ -1856,9 +825,10 @@ def main() -> None:
     )
 
     flat = [(0, [0] * dim)]
-    t0 = time.perf_counter()
-    books = pq_residual_codebooks_lloyd(ann, flat, n_sub=16, ks=256, iters=2)
-    pq_train_sec = round(time.perf_counter() - t0, 2)
+    books, pq_train_sec, _ = timed(
+        spark, "pq_codebooks",
+        lambda: pq_residual_codebooks_lloyd(ann, flat, n_sub=16, ks=256, iters=2),
+    )
     pq = pq_ivf_adc_topk(ann, annq, flat, books, k=ann_k, nprobe=1)
     stage("pq_adc_topk_100q", lambda: pq)
     stages["pq_adc_topk_100q"].update(
@@ -1902,54 +872,7 @@ def main() -> None:
     stages["knn_graph_components_1m"].update(
         n_clustered=kg.filter(F.col("component") != F.col("vec_id")).count(),
     )
-    # PQ encode+ADC probe over --rows (10M) vectors (r8, VERDICT r7 #7): the
-    # compressed scan one order above the 1M tier. Codebooks train on a 1M sample
-    # (standard PQ practice — books are plan literals either way); the
-    # timed stage is the full-corpus encode + ADC + partial-top-k, ONE
-    # zero-shuffle pass. Recall is gauged at the 1M tier above (same
-    # generator); this stage's claim is the flat-exchange scan slope.
-    big_n = total_rows
-    big_ann = clustered_vectors(spark, big_n, dim, n_latent)
-    t0 = time.perf_counter()
-    train_step = max(1, big_n // 1_000_000)
-    big_books = pq_residual_codebooks_lloyd(
-        big_ann.filter(F.col("vec_id") % F.lit(train_step) == 0), flat,
-        n_sub=16, ks=256, iters=2,
-    )
-    big_train_sec = round(time.perf_counter() - t0, 2)
-    big_pq = pq_ivf_adc_topk(big_ann, annq, flat, big_books, k=ann_k, nprobe=1)
-    stage("pq_adc_scan_10m", lambda: big_pq)
-    stages["pq_adc_scan_10m"].update(
-        n_vectors=big_n,
-        codebook_train_on=-(-big_n // train_step),  # actual sample size
-        codebook_sec=big_train_sec,
-        shuffle_exchanges=obs.exchange_count(big_pq),
-    )
     ann.unpersist()
-
-    # contraction-CC probe over --rows (10M) nodes (r8, VERDICT r7 #7): 10k-long chains
-    # — the adversarial depth case for label propagation — with an edge
-    # list (~10M) far above DRIVER_MAX_EDGES for the early rounds, so the
-    # DISTRIBUTED contraction loop does the work; the claim under test is
-    # geometric edge shrink (wall grows ~linearly in |E|, not in chain
-    # depth). Generation is in-plan; correctness is exact (every node's
-    # component must be its chain head).
-    from binance_futures_data_lake_spark.operators.graph import (
-        connected_components,
-    )
-
-    n_cc = total_rows
-    chain = 10_000
-    cc_edges = chain_edges(spark, n_cc, chain)
-    # eager loop inside the operator — time the build, not just the force
-    cc = stage(
-        "contraction_cc_10m_chains",
-        lambda: connected_components(cc_edges),
-    )
-    mislabeled = chain_mislabels(cc, chain)
-    stages["contraction_cc_10m_chains"].update(
-        n_nodes=n_cc, chain_len=chain, mislabeled=mislabeled,
-    )
 
     # banded-hamming near-dup probe (r5): --rows (10M) 64-bit fingerprints through
     # the shared text/image/audio near-dup engine at its web-scale config

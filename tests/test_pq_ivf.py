@@ -370,34 +370,3 @@ def test_rerank_codes_recipe_bit_equal(spark):
         ).collect()
     }
     assert got == want
-
-
-def test_release_query_table_broadcasts(spark):
-    """ADVICE r11: sweep loops accumulate ~50 MB query-table broadcasts
-    per IVFADC invocation. release_query_table_broadcasts() must drain
-    the registry (one entry per query-tier call), and because unpersist
-    keeps the driver value, a plan executed AFTER the release must still
-    produce identical results (lazy re-broadcast)."""
-    from binance_futures_data_lake_spark.operators.similarity import (
-        _LIVE_QUERY_BROADCASTS,
-        release_query_table_broadcasts,
-    )
-
-    emb = _clustered(spark)
-    cents = _seed_cents(emb)
-    books = pq_residual_codebooks(emb, cents, n_sub=N_SUB, ks=KS)
-    queries = emb.filter(F.col("vec_id").isin([0, 40])).select(
-        "vec_id", "embedding"
-    )
-    release_query_table_broadcasts()  # drain leftovers from other tests
-    df1 = pq_ivf_adc_topk(emb, queries, cents, books, k=3, nprobe=2)
-    rows1 = {tuple(r) for r in df1.collect()}
-    assert len(_LIVE_QUERY_BROADCASTS) == 1
-    df2 = pq_ivf_adc_topk(emb, queries, cents, books, k=3, nprobe=2)
-    assert len(_LIVE_QUERY_BROADCASTS) == 2
-    assert release_query_table_broadcasts() == 2
-    assert not _LIVE_QUERY_BROADCASTS
-    # unpersist is non-destructive to the plan: re-execution re-ships
-    rows2 = {tuple(r) for r in df2.collect()}
-    assert rows2 == rows1
-    assert release_query_table_broadcasts() == 0

@@ -30,11 +30,11 @@ KEEP = {
         "compact_state's per-family worker, pinned by the same tests",
     ("operators/similarity.py", "pq_residual_codebooks_lloyd"):
         "OPERATORS.md's measured PQ deploy recommendation (flat PQ is its "
-        "one-cell case); run by the scale_check.py --pq-* probes",
+        "one-cell case); scale_check.py's ANN section runs it "
+        "(pq_adc_topk_100q, pq_rerank_topk_100q)",
     ("operators/similarity.py", "_pq_lloyd_refine"):
-        "the per-subspace Lloyd loop of the trainer above",
-    ("operators/similarity.py", "release_query_table_broadcasts"):
-        "the --pq-* probe sweeps free query-table broadcasts between runs",
+        "the per-subspace Lloyd loop of the trainer above, run by the same "
+        "scale_check.py ANN stages next to the deploy recommendation",
     ("operators/similarity.py", "fixed_point_cents"):
         "builds the centroids of the plan-shape pins in "
         "tests/test_r12_plan_shapes.py",
